@@ -894,19 +894,25 @@ def _q_streaming_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     must produce the batch/golden text BYTE-IDENTICALLY — the
     module's batch==stream contract made driver-falsifiable.  FULL
     oracle: the identical closed-form golden text
-    (kgp.oracle.extract_text_sql).  Temp dirs live under /tmp for
-    the run (small, corpus-sized)."""
+    (kgp.oracle.extract_text_sql).  The stream's source, sink and
+    checkpoint live in a temp dir that is removed before returning;
+    the sink rows are materialized first (localCheckpoint)."""
+    import shutil
     import tempfile
 
     from kgp import streaming as _st
     base = tempfile.mkdtemp(prefix="kgp-stream-gate-")
-    pages_dir = f"{base}/pages"
-    _corpus.synth_pages(spark, sf_dir).write.mode("overwrite") \
-        .parquet(pages_dir)
-    stream = _st.stream_docs(_st.stream_pages(spark, pages_dir))
-    _st.run_stream(stream.select("url", "text"),
-                   f"{base}/out", f"{base}/ckpt")
-    return spark.read.parquet(f"{base}/out").select("url", "text")
+    try:
+        pages_dir = f"{base}/pages"
+        _corpus.synth_pages(spark, sf_dir).write.mode("overwrite") \
+            .parquet(pages_dir)
+        stream = _st.stream_docs(_st.stream_pages(spark, pages_dir))
+        _st.run_stream(stream.select("url", "text"),
+                       f"{base}/out", f"{base}/ckpt")
+        return spark.read.parquet(f"{base}/out").select("url", "text") \
+            .localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

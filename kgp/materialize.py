@@ -18,7 +18,9 @@ The checksum is an order-insensitive 64-bit aggregate
 (bit_xor of xxhash64 over all columns per partition — no overflow under
 ANSI mode) so re-runs can be verified partition-by-partition without
 re-reading upstream stages.
-Everything is JVM-side column work — no Python in the lineage path.
+The default manifest reads only the parquet footers, on the driver with
+pyarrow, and needs no Spark job; the full-scan manifest
+(KGP_LINEAGE_FULL) is JVM-side column work.
 """
 
 from __future__ import annotations
@@ -126,7 +128,11 @@ def _append_lineage_rows(spark: SparkSession, out_dir: str,
     stage, which is real money at bench scale (7 stages) and pure
     waste at cluster scale where the driver should be scheduling the
     NEXT corpus stage instead.  Schema matches LINEAGE_SCHEMA so
-    spark.read.parquet sees one homogeneous table."""
+    spark.read.parquet sees one homogeneous table.
+
+    The append is atomic: the file is written under a dot-prefixed
+    temporary name, which Spark's reader skips, and renamed into place,
+    so a crash mid-write leaves no torn part file in the table."""
     import uuid
 
     import pyarrow as pa
@@ -149,8 +155,10 @@ def _append_lineage_rows(spark: SparkSession, out_dir: str,
     with _LINEAGE_LOCK:
         path = os.path.join(out_dir, "lineage")
         os.makedirs(path, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(path, name))
 
 
 def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,

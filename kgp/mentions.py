@@ -3,10 +3,10 @@
 Spark-first decomposition of the reference's PalladianNer
 (/root/reference/palladian-core/src/main/java/ws/palladian/extraction/entity/tagger/PalladianNer.java:459-565):
 
-  * model TRAINING = distributed DataFrame aggregations (groupBy counts)
-    over the corpus + seed dictionary — the trie the reference builds
-    per-JVM becomes `groupBy(term, category).count()` which Catalyst
-    executes as partial+final hash aggregation; the (pruned) result is
+  * model TRAINING = one two-phase aggregation over the corpus + seed
+    dictionary — the trie the reference builds per-JVM becomes partial
+    counts per Arrow batch in one Python scan, summed by one
+    groupBy(kind, key, tag) in the JVM; the (pruned) result is
     collected and broadcast;
   * TAGGING = one vectorized pandas UDF over (url, sentences) batches
     scoring candidates against the broadcast dictionaries.
@@ -26,6 +26,7 @@ NO_ENTITY grams to the annotation dictionary.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
@@ -274,20 +275,6 @@ def classify_surface(surface: str, model: NerModel) -> dict[str, float]:
     if total == 0:
         return dict(model.priors)
     return {k: v / total for k, v in scores.items()}
-
-
-def pick_tag(surface: str, model: NerModel) -> tuple[str, float]:
-    """Entity-dictionary exact match wins (dictionary 'switch',
-    PalladianNer.java:522-530); else char-gram classification; drop rule
-    P(NO_ENTITY) >= 0.5 (:446-456) applied by the caller."""
-    exact = model.entity_dict.get(surface.lower())
-    if exact is not None:
-        return exact, 1.0
-    scores = classify_surface(surface, model)
-    if not scores:
-        return NO_ENTITY, 1.0
-    tag = max(scores, key=lambda k: (scores[k], -_order(model, k)))
-    return tag, scores.get(tag, 0.0)
 
 
 def _order(model: NerModel, tag: str) -> int:
@@ -731,18 +718,29 @@ _CASE_PAIR_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("sig", T.StringType()),
 ]))
 
+# bounds the broadcast case dictionary at web scale (the reference has
+# no bound): the most frequent tokens win, ties by token
+CASE_DICT_MAX_SIZE = 200_000
 
-def _case_dict_from_pairs(pairs: DataFrame, min_count: int = 1,
-                          max_size: int = 200_000) -> DataFrame:
-    """The aggregation half of buildCaseDictionary over (token, sig)
-    occurrence rows: keep tokens with P(sig=='a') > 0.5. The reference
-    counts singleton documents per occurrence, so probability ==
-    occurrence fraction. min_count/max_size bound the broadcast at web
-    scale (the reference has no bounds)."""
+
+def build_case_dictionary(docs: DataFrame, min_count: int = 1,
+                          max_size: int = CASE_DICT_MAX_SIZE) -> DataFrame:
+    """buildCaseDictionary as an aggregation (PalladianNer.java:191-222):
+    WordTokenizer tokens NOT at sentence beginnings (skip flag reset
+    after [.?!] tokens), length > 1, keyed by lowercase form; keep
+    tokens whose occurrences carry lowercase signature with P > 0.5.
+    The reference counts singleton documents per occurrence, so the
+    probability is the occurrence fraction."""
+
+    @F.pandas_udf(_CASE_PAIR_SCHEMA)
+    def pairs_udf(texts: pd.Series) -> pd.Series:
+        return texts.map(lambda t: case_dictionary_pairs(t or ""))
+
     return (
-        pairs.groupBy("token")
+        docs.select(F.explode(pairs_udf("text")).alias("p"))
+        .groupBy(F.col("p.token").alias("token"))
         .agg(F.count("*").alias("n"),
-             F.sum(F.when(F.col("sig") == "a", 1)
+             F.sum(F.when(F.col("p.sig") == "a", 1)
                    .otherwise(0)).alias("n_lower"))
         .where(F.col("n") >= min_count)
         .where(F.col("n_lower") / F.col("n") > 0.5)
@@ -751,90 +749,33 @@ def _case_dict_from_pairs(pairs: DataFrame, min_count: int = 1,
     )
 
 
-def build_case_dictionary(docs: DataFrame, min_count: int = 1,
-                          max_size: int = 200_000) -> DataFrame:
-    """buildCaseDictionary as an aggregation (PalladianNer.java:191-222):
-    WordTokenizer tokens NOT at sentence beginnings (skip flag reset
-    after [.?!] tokens), length > 1, keyed by lowercase form; keep
-    tokens whose occurrences carry lowercase signature with P > 0.5."""
+def build_annotation_dictionary(seeds: DataFrame, min_count: int = 1,
+                                token_based: bool = False) -> DataFrame:
+    """(gram, tag, count) of the seeds' padded char-5-grams via explode
+    + groupBy — the reference's trie build
+    (DictionaryTrieModel.Builder.addDocument, :78-100) as a hash
+    aggregation. token_based=True trains on each surface's TOKENS
+    labelled with the surface's concept — trainLanguageIndependent's
+    getAnnotationsFromColumnTokenBased feed (PalladianNer.java:354-372).
+    ner_model_table adds the corpus NO_ENTITY grams of trainEnglish's
+    second pass."""
+    if token_based:
+        @F.pandas_udf(T.ArrayType(T.StringType()))
+        def tok_udf(col: pd.Series) -> pd.Series:
+            return col.map(lambda v: tokenize(v or ""))
 
-    @F.pandas_udf(_CASE_PAIR_SCHEMA)
-    def pairs_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: case_dictionary_pairs(t or ""))
+        seeds = seeds.select("concept",
+                             F.explode(tok_udf("entity")).alias("entity"))
 
-    pairs = (docs.select(F.explode(pairs_udf("text")).alias("p"))
-             .select("p.token", "p.sig"))
-    return _case_dict_from_pairs(pairs, min_count, max_size)
-
-
-def _padded_gram_udf():
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def gram_udf(s: pd.Series) -> pd.Series:
         return s.map(lambda x: char_ngrams((x or "").lower(), GRAM_N,
                                            GRAM_N, padding=True))
-    return gram_udf
 
-
-def _annotation_dict_from_surfaces(seeds: DataFrame,
-                                   surfaces: DataFrame | None,
-                                   min_count: int = 1) -> DataFrame:
-    """(gram, tag, count) aggregation over seed grams plus (optional)
-    NO_ENTITY grams of pre-scanned corpus candidate surfaces."""
-    gram_udf = _padded_gram_udf()
-    seed_grams = seeds.select(F.col("concept").alias("tag"),
-                              F.explode(gram_udf("entity")).alias("gram"))
-    grams = seed_grams
-    if surfaces is not None:
-        grams = grams.unionByName(
-            _negative_grams(surfaces, seeds, gram_udf))
-    return (grams.groupBy("gram", "tag").count()
+    return (seeds.select(F.col("concept").alias("tag"),
+                         F.explode(gram_udf("entity")).alias("gram"))
+            .groupBy("gram", "tag").count()
             .where(F.col("count") >= min_count))
-
-
-def build_annotation_dictionary(seeds: DataFrame,
-                                docs: DataFrame | None = None,
-                                min_count: int = 1,
-                                token_based: bool = False) -> DataFrame:
-    """(gram, tag, count) via explode + groupBy — the reference's trie
-    build (DictionaryTrieModel.Builder.addDocument, :78-100) as a hash
-    aggregation. When `docs` is given, corpus candidates that are not
-    seed surfaces contribute NO_ENTITY rows (trainEnglish 2nd pass).
-    token_based=True trains on each surface's TOKENS labelled with the
-    surface's concept — trainLanguageIndependent's
-    getAnnotationsFromColumnTokenBased feed (PalladianNer.java:354-372)."""
-    if token_based:
-        from kgp.tokenize import tokenize as _tok
-
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def tok_udf(col: pd.Series) -> pd.Series:
-            return col.map(lambda v: _tok(v or ""))
-
-        seeds = seeds.select("concept",
-                             F.explode(tok_udf("entity")).alias("entity"))
-    surfaces = None
-    if docs is not None:
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def cand_udf(col: pd.Series) -> pd.Series:
-            return col.map(lambda sents: list(
-                {c.value for s in (sents if sents is not None else [])
-                 for c in candidate_annotations(s["text"])}))
-        surfaces = docs.select(
-            F.explode(cand_udf("sentences")).alias("surface"))
-    return _annotation_dict_from_surfaces(seeds, surfaces, min_count)
-
-
-def _negative_grams(surfaces: DataFrame, seeds: DataFrame, gram_udf):
-    """Corpus candidates that are not seed surfaces → NO_ENTITY grams
-    (trainEnglish 2nd pass). Dot-stripped comparison: "Acme Corp."
-    (suffix rule keeps the sentence dot) is NOT a false positive of
-    seed "Acme Corp"."""
-    seed_set = seeds.select(F.lower("entity").alias("k")).distinct()
-    return (surfaces
-            .join(seed_set,
-                  F.lower(F.regexp_replace("surface", r"\.+$", ""))
-                  == F.col("k"), "left_anti")
-            .select(F.lit(NO_ENTITY).alias("tag"),
-                    F.explode(gram_udf("surface")).alias("gram")))
 
 
 def build_entity_dictionary(seeds: DataFrame) -> DataFrame:
@@ -842,134 +783,6 @@ def build_entity_dictionary(seeds: DataFrame) -> DataFrame:
     (PalladianNer.java:326-333)."""
     return seeds.groupBy(F.lower("entity").alias("surface"),
                          "concept").count()
-
-
-SPAN_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("tag", T.StringType()),
-    T.StructField("ctx", T.StringType()),
-    T.StructField("lefts", T.ArrayType(T.StringType())),
-    T.StructField("insides", T.ArrayType(T.StringType())),
-]))
-
-
-def seed_training_spans(docs: DataFrame,
-                        seed_map: dict[str, str]) -> DataFrame:
-    """Training annotation spans = DictionaryTagger matches of the seed
-    surfaces over every sentence (the distributed stand-in for the
-    reference's gold annotation file). Emits per span: the tag, the
-    ±40-char character context, the cumulated 1..3-token left contexts
-    (NerHelper.getLeftContexts) and the annotation's word-prefix list
-    (the 'inside' counts of buildLeftContexts,
-    PalladianNer.java:866-877). One Arrow pass over docs; the two
-    downstream aggregations (context dictionary, left contexts) reuse
-    this exploded table.
-
-    Matching is one Aho-Corasick automaton built ONCE on the driver and
-    shipped in the UDF closure — per-sentence cost is O(|sentence|),
-    independent of |seed dictionary| (a production seed dictionary has
-    10^5-10^7 surfaces; per-surface regex loops were quadratic-ish)."""
-    automaton = AhoCorasick(
-        (s, t) for s, t in seed_map.items() if len(s) > 1)
-
-    @F.pandas_udf(SPAN_SCHEMA)
-    def span_udf(sentences: pd.Series) -> pd.Series:
-        result = []
-        for sents in sentences:
-            rows = []
-            for s in (sents if sents is not None else []):
-                text = s["text"]
-                found = [(st, en, text[st:en], tag)
-                         for st, en, tag in automaton.find_all(text)]
-                kept = remove_nested([(f[0], f[1]) for f in found])
-                for i in kept:
-                    start, end, surface, tag = found[i]
-                    parts = surface.split(" ")
-                    insides = [" ".join(parts[:j + 1])
-                               for j in range(len(parts))]
-                    rows.append({
-                        "tag": tag,
-                        "ctx": get_character_context(text, start, end),
-                        "lefts": get_left_contexts(text, start, 3),
-                        "insides": insides,
-                    })
-            result.append(rows)
-        return pd.Series(result)
-
-    return (docs.select(F.explode(span_udf("sentences")).alias("sp"))
-            .select("sp.tag", "sp.ctx", "sp.lefts", "sp.insides"))
-
-
-TRAINING_SCAN_SCHEMA = T.StructType([
-    T.StructField("kind", T.StringType()),     # cand | case | span
-    T.StructField("key", T.StringType()),      # surface | token | ctx
-    T.StructField("tag", T.StringType()),      # - | sig | span tag
-    T.StructField("lefts", T.ArrayType(T.StringType())),
-    T.StructField("insides", T.ArrayType(T.StringType())),
-])
-
-
-def training_scan(docs: DataFrame,
-                  seed_map: dict[str, str]) -> DataFrame:
-    """ALL Python-derived training rows in ONE mapInPandas pass:
-
-      kind='cand'  candidate surfaces (StringTagger, per-doc deduped)
-                   — feeds the NO_ENTITY negatives of the annotation
-                   dictionary;
-      kind='case'  (token, first-char class) occurrences — feeds the
-                   case dictionary;
-      kind='span'  seed-dictionary matches with ±40-char context and
-                   left/inside token lists — feeds the context
-                   dictionary, priors and left contexts.
-
-    The per-sentence loop is shared, the docs table is Arrow-transferred
-    once, and the (small) result is what gets persisted — the shape
-    that matters when the corpus is 100 TB and this is the training
-    sample scan.
-
-    Escape hatch, measured r5: the candidate branch (the biggest
-    Python cost here, ~54% of the scan) is JVM-portable as
-    array_distinct(flatten(transform(sentences, s ->
-    filter(regexp_extract_all(regexp_replace(s.text, NBSP, ' '),
-    STRING_TAGGER_PATTERN, 0), x -> x != '')))) — verified
-    OUTPUT-IDENTICAL to this Python path on the heavy corpus (120/120
-    docs) since both ultimately speak Java-regex semantics; the
-    measured JVM speedup was only ~17% at 8 cores (the regex work
-    itself dominates, not the Python boundary), so the single-pass
-    Python scan is kept.  Flip if a profile ever shows the Arrow
-    boundary, not the regex, dominating."""
-    automaton = AhoCorasick(
-        (s, t) for s, t in seed_map.items() if len(s) > 1)
-    cols = [f.name for f in TRAINING_SCAN_SCHEMA.fields]
-
-    def scan(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for text, sents in zip(pdf["text"], pdf["sentences"]):
-                for tok, sig in case_dictionary_pairs(text or ""):
-                    rows.append(("case", tok, sig, None, None))
-                cand_set: set[str] = set()
-                for s in (sents if sents is not None else []):
-                    st = s["text"]
-                    for c in candidate_annotations(st):
-                        cand_set.add(c.value)
-                    found = [(a, b, st[a:b], tg)
-                             for a, b, tg in automaton.find_all(st)]
-                    kept = remove_nested([(f[0], f[1]) for f in found])
-                    for i in kept:
-                        start, end, surface, tg = found[i]
-                        parts_ = surface.split(" ")
-                        insides = [" ".join(parts_[:j + 1])
-                                   for j in range(len(parts_))]
-                        rows.append((
-                            "span",
-                            get_character_context(st, start, end), tg,
-                            get_left_contexts(st, start, 3), insides))
-                for surf in cand_set:
-                    rows.append(("cand", surf, None, None, None))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("text", "sentences").mapInPandas(
-        scan, TRAINING_SCAN_SCHEMA)
 
 
 def equalize_type_counts(spans: DataFrame) -> DataFrame:
@@ -981,8 +794,9 @@ def equalize_type_counts(spans: DataFrame) -> DataFrame:
     ranks rows by the md5-derived sample key (kgp.curation.sample_key,
     ties by key string) and keeps the first min-count per tag — the
     same deterministic-substitute policy as stratified_sample.
-    Operates on the 'span' rows of the training scan; other kinds pass
-    through untouched."""
+    Operates on rows of kind 'span' (kind, key = context, tag, ...);
+    other kinds pass through untouched. ner_model_table does not
+    equalize."""
     from kgp.curation import sample_key
     span_rows = spans.where(F.col("kind") == "span")
     min_count = (span_rows.groupBy("tag").count()
@@ -994,40 +808,6 @@ def equalize_type_counts(spans: DataFrame) -> DataFrame:
     kept = (span_rows.withColumn("_rk", F.row_number().over(w))
             .where(F.col("_rk") <= min_count).drop("_rk"))
     return spans.where(F.col("kind") != "span").unionByName(kept)
-
-
-def build_context_dictionary(spans: DataFrame,
-                             min_count: int = 1) -> DataFrame:
-    """(gram, tag, count) over char-5 UNPADDED grams of the ±40-char
-    contexts — buildContextDictionary (PalladianNer.java:894-906) as a
-    hash aggregation."""
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def gram_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: char_ngrams((x or "").lower(), GRAM_N,
-                                           GRAM_N, padding=False))
-
-    return (spans.select("tag", F.explode(gram_udf("ctx")).alias("gram"))
-            .groupBy("gram", "tag").count()
-            .where(F.col("count") >= min_count))
-
-
-def build_left_contexts(spans: DataFrame, min_count: int = 1) -> DataFrame:
-    """Tokens that appear more often LEFT of an entity than inside one
-    — buildLeftContexts (PalladianNer.java:860-892): keep uppercase-
-    starting tokens with outside >= 2, outside+inside >= min_count and
-    inside/outside < 1. Two cheap aggregations + one small join."""
-    outside = (spans.select(F.explode("lefts").alias("token"))
-               .groupBy("token").agg(F.count("*").alias("n_out")))
-    inside = (spans.select(F.explode("insides").alias("token"))
-              .groupBy("token").agg(F.count("*").alias("n_in")))
-    joined = outside.join(inside, "token", "left") \
-        .withColumn("n_in", F.coalesce("n_in", F.lit(0)))
-    return (joined
-            .where(F.col("token").rlike(r"^\p{Lu}"))
-            .where(F.col("n_out") >= 2)
-            .where(F.col("n_out") + F.col("n_in") >= min_count)
-            .where(F.col("n_in") < F.col("n_out"))
-            .select("token"))
 
 
 def assemble_model(entity_rows, ann_rows, case_tokens) -> NerModel:
@@ -1059,56 +839,143 @@ def assemble_model(entity_rows, ann_rows, case_tokens) -> NerModel:
                     priors=priors, case_dict=case_dict)
 
 
-def ner_model_table(docs: DataFrame, seeds: DataFrame,
-                    seed_map: dict[str, str] | None = None) -> DataFrame:
-    """EVERY model dictionary as ONE unioned table (kind, key, tag,
-    count) so training is a single Spark job / one materialized stage —
-    at bench scale each separate stage pays ~5 s of fixed job+write
-    latency, and seven tiny model tables were dominating the wall.
-    kinds: entity / agram (annotation grams) / case / ctxgram (context
-    grams) / prior (context instance counts) / left (left contexts)."""
-    if seed_map is None:
-        seed_map = {r["entity"]: r["concept"]
-                    for r in seeds.select("entity", "concept").collect()}
-    # ONE Arrow pass over the training docs produces every
-    # Python-derived raw row (candidate surfaces, case-token pairs,
-    # seed spans); persisted so the six aggregation branches below
-    # never re-scan the corpus or re-run the tagger regexes. Before
-    # this merge the job made three separate full-text Arrow passes
-    # (candidates, case pairs, spans) over the same cached docs.
-    raw = training_scan(docs, seed_map).persist()
-    spans = raw.where(F.col("kind") == "span").select(
-        "tag", F.col("key").alias("ctx"), "lefts", "insides")
-    case_pairs = raw.where(F.col("kind") == "case").select(
-        F.col("key").alias("token"), F.col("tag").alias("sig"))
-    cand_surfaces = raw.where(F.col("kind") == "cand").select(
-        F.col("key").alias("surface"))
+PARTIAL_COUNT_SCHEMA = T.StructType([
+    T.StructField("kind", T.StringType()),
+    T.StructField("key", T.StringType()),
+    T.StructField("tag", T.StringType()),
+    T.StructField("n", T.LongType()),
+    T.StructField("n2", T.LongType()),
+])
 
-    def shape(df, kind, key, tag=None, count=None):
-        return df.select(
-            F.lit(kind).alias("kind"),
-            F.col(key).cast("string").alias("key"),
-            (F.col(tag).cast("string") if tag else
-             F.lit(None).cast("string")).alias("tag"),
-            (F.col(count).cast("long") if count else
-             F.lit(None).cast("long")).alias("count"))
 
-    parts = [
-        shape(build_entity_dictionary(seeds), "entity", "surface",
-              "concept", "count"),
-        shape(_annotation_dict_from_surfaces(seeds, cand_surfaces),
-              "agram", "gram", "tag", "count"),
-        shape(_case_dict_from_pairs(case_pairs), "case", "token"),
-        shape(build_context_dictionary(spans), "ctxgram", "gram", "tag",
-              "count"),
-        shape(spans.groupBy("tag").agg(F.count("*").alias("n")),
-              "prior", "tag", None, "n"),
-        shape(build_left_contexts(spans), "left", "token"),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _count_rows(n: Counter, n2: Counter) -> list[tuple]:
+    """(kind, key, tag, n, n2) rows of two counters keyed by
+    (kind, key, tag); a key missing from one counter counts 0 there."""
+    return ([(*k, c, n2.get(k, 0)) for k, c in n.items()]
+            + [(*k, 0, c) for k, c in n2.items() if k not in n])
+
+
+def _training_counts(texts, sentence_lists, automaton: AhoCorasick,
+                     seed_keys: set[str]) -> tuple[Counter, Counter]:
+    """Per-(kind, key, tag) counts of the corpus-derived dictionaries
+    over some training docs:
+
+      case     token, n = occurrences, n2 = lowercase-signature ones
+               (case_dictionary_pairs);
+      agram    padded char-5-grams of each doc's distinct candidate
+               surfaces that are not seed surfaces, tag NO_ENTITY
+               (trainEnglish 2nd pass). The comparison is dot-stripped
+               and lowercase: "Acme Corp." (the suffix rule keeps the
+               sentence dot) is NOT a false positive of seed "Acme Corp";
+      ctxgram  unpadded char-5-grams of the ±40-char context of every
+               seed-dictionary match, tag = the match's tag
+               (buildContextDictionary, PalladianNer.java:894-906);
+      prior    match tag, n = matches;
+      left     token, n = cumulated 1..3-token left contexts of the
+               matches (NerHelper.getLeftContexts), n2 = the matches'
+               word prefixes (the 'inside' counts of buildLeftContexts,
+               PalladianNer.java:866-877).
+
+    Matches are the seed surfaces the Aho-Corasick automaton finds in
+    each sentence, nested ones removed (the distributed stand-in for
+    the reference's gold annotation file). The automaton is built once
+    on the driver, so the per-sentence cost does not grow with the seed
+    dictionary (10^5-10^7 surfaces in production)."""
+    n: Counter = Counter()
+    n2: Counter = Counter()
+    for text, sents in zip(texts, sentence_lists):
+        for tok, sig in case_dictionary_pairs(text or ""):
+            n["case", tok, None] += 1
+            if sig == "a":
+                n2["case", tok, None] += 1
+        surfaces: set[str] = set()
+        for s in (sents if sents is not None else []):
+            st = s["text"]
+            surfaces.update(c.value for c in candidate_annotations(st))
+            found = automaton.find_all(st)
+            for i in remove_nested([(a, b) for a, b, _ in found]):
+                start, end, tag = found[i]
+                n["prior", tag, None] += 1
+                ctx = get_character_context(st, start, end).lower()
+                n.update(("ctxgram", g, tag)
+                         for g in char_ngrams(ctx, GRAM_N, GRAM_N))
+                n.update(("left", t, None)
+                         for t in get_left_contexts(st, start, 3))
+                parts = st[start:end].split(" ")
+                n2.update(("left", " ".join(parts[:j + 1]), None)
+                          for j in range(len(parts)))
+        for surface in surfaces:
+            if surface.rstrip(".").lower() not in seed_keys:
+                n.update(("agram", g, NO_ENTITY) for g in char_ngrams(
+                    surface.lower(), GRAM_N, GRAM_N, padding=True))
+    return n, n2
+
+
+def ner_model_table(docs: DataFrame,
+                    seed_rows: list[tuple[str, str]]) -> DataFrame:
+    """EVERY model dictionary as ONE table (kind, key, tag, count) —
+    kinds entity / agram (annotation grams) / case / ctxgram (context
+    grams) / prior (context instance counts) / left (left contexts) —
+    so training is one materialized stage: at bench scale each
+    separate stage pays seconds of fixed job+write latency.
+
+    seed_rows are the seed dictionary's (entity, concept) rows, all of
+    them: duplicates count in the entity and annotation dictionaries,
+    and the last concept of a surface wins in the matching automaton.
+
+    Two-phase aggregation. ONE mapInPandas scan over the training docs
+    counts every corpus-derived dictionary per Arrow batch
+    (_training_counts) and emits only the batch's partial
+    (kind, key, tag, n, n2) rows — a map-side combine that ships each
+    gram once per batch instead of once per occurrence. The seed-derived
+    rows (entity dictionary on lower(entity), the seeds' padded grams;
+    lowercased in Python, as the tagger looks surfaces up) join as a
+    small local relation. The JVM then runs one
+    groupBy(kind, key, tag) sum and applies each kind's filter: case
+    keeps P(lowercase) > 0.5 and the CASE_DICT_MAX_SIZE most frequent
+    tokens; left keeps uppercase-starting tokens seen left of a match
+    at least twice and more often left than inside one. case and left
+    rows carry a null count."""
+    seed_map = dict(seed_rows)
+    automaton = AhoCorasick(
+        (s, t) for s, t in seed_map.items() if len(s) > 1)
+    seed_keys = {e.lower() for e in seed_map}
+    seed_n: Counter = Counter()
+    for entity, concept in seed_rows:
+        seed_n["entity", entity.lower(), concept] += 1
+        seed_n.update(("agram", g, concept) for g in char_ngrams(
+            entity.lower(), GRAM_N, GRAM_N, padding=True))
+    cols = PARTIAL_COUNT_SCHEMA.fieldNames()
+
+    def scan(batches):
+        for pdf in batches:
+            n, n2 = _training_counts(pdf["text"], pdf["sentences"],
+                                     automaton, seed_keys)
+            yield pd.DataFrame(_count_rows(n, n2), columns=cols)
+
+    # from pandas (Arrow) it is a LocalRelation: no job, no worker
+    seed_df = docs.sparkSession.createDataFrame(
+        pd.DataFrame(_count_rows(seed_n, Counter()), columns=cols),
+        PARTIAL_COUNT_SCHEMA)
+    partial = (docs.select("text", "sentences")
+               .mapInPandas(scan, PARTIAL_COUNT_SCHEMA)
+               .unionByName(seed_df))
+    kind, key = F.col("kind"), F.col("key")
+    n, n2 = F.col("n"), F.col("n2")
+    kept = (partial.groupBy("kind", "key", "tag")
+            .agg(F.sum("n").alias("n"), F.sum("n2").alias("n2"))
+            .where(F.when(kind == "case", n2 / n > 0.5)
+                   .when(kind == "left", key.rlike(r"^\p{Lu}")
+                         & (n >= 2) & (n2 < n))
+                   .otherwise(True)))
+    # the model is collected to the driver, so one window partition
+    # per kind stays small
+    rank = F.row_number().over(
+        Window.partitionBy("kind").orderBy(F.desc("n"), "key"))
+    return (kept.withColumn("_rank", rank)
+            .where((kind != "case") | (F.col("_rank") <= CASE_DICT_MAX_SIZE))
+            .select("kind", "key", "tag",
+                    F.when(~kind.isin("case", "left"), n).alias("count")))
 
 
 def model_from_rows(rows) -> NerModel:
@@ -1131,21 +998,17 @@ def model_from_rows(rows) -> NerModel:
 
 
 def train_ner_model(spark: SparkSession, docs: DataFrame,
-                    seeds: DataFrame,
-                    with_context: bool = True) -> NerModel:
-    """Distributed training -> small broadcastable model, ONE job.
+                    seeds: DataFrame) -> NerModel:
+    """Distributed training -> small broadcastable model: one collect
+    of the seed rows, then one collect of ner_model_table (its training
+    scan plus one aggregation).
 
     docs is the TRAINING corpus (pass a stable-hash sample of the full
     corpus in production — entities that must be typed by context
     rather than dictionary need to be absent from training, or the
     two-pass negative mining would mark them NO_ENTITY)."""
-    if not with_context:
-        return assemble_model(
-            build_entity_dictionary(seeds).collect(),
-            build_annotation_dictionary(seeds, docs).collect(),
-            build_case_dictionary(docs).collect(),
-        )
-    return model_from_rows(ner_model_table(docs, seeds).collect())
+    seed_rows = seeds.select("entity", "concept").collect()
+    return model_from_rows(ner_model_table(docs, seed_rows).collect())
 
 
 def attach_context(model: NerModel, ctx_rows, prior_rows,

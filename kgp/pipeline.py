@@ -10,7 +10,8 @@ a `_SUCCESS` marker is skipped on re-run → checkpoint-resume):
                  html, text, lang) — on a cluster this is the existing
                  Iceberg `pages` table and this stage is a no-op
     docs         stage 1: html → text/title/lang/sentences   (kgp.html_text)
-    ner_*        model training aggregations                  (kgp.mentions)
+    ner_model    model training: one Python scan that counts
+                 per Arrow batch + one aggregation            (kgp.mentions)
     mentions     stage 2: candidate detection + typing        (kgp.mentions)
     links        stage 3: gazetteer join + disambiguation     (kgp.linker)
     canon        mapping: connected components (kgp.canonicalize) —
@@ -145,17 +146,15 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # NER training runs on the stable hash split (corpus.training_docs)
     # — held-out docs carry the novel entities that must be typed by
     # context, and a production pipeline trains on a sample anyway.
-    # ALL model dictionaries are one unioned stage: one job + one
-    # write instead of seven fixed-latency round trips.
+    # ALL model dictionaries are one stage: one table + one write
+    # instead of seven fixed-latency round trips.
     docs_train = corpus.training_docs(docs)
-    # seed_map is collected ONCE here (the seed dictionary is tiny
-    # and already driver-known) — leaving it to ner_model_table costs
+    # the seed rows are collected ONCE here (the seed dictionary is
+    # tiny and already driver-known) — leaving it to the stage costs
     # an extra ~1.5 s collect job inside the stage wall
-    seed_map = {r["entity"]: r["concept"]
-                for r in seeds.select("entity", "concept").collect()}
+    seed_rows = seeds.select("entity", "concept").collect()
     _stage(spark, out_dir, "ner_model",
-           lambda: mentions.ner_model_table(docs_train, seeds,
-                                            seed_map=seed_map),
+           lambda: mentions.ner_model_table(docs_train, seed_rows),
            force=force, metrics=metrics)
     model = load_ner_model(spark, out_dir)
     model_bc = spark.sparkContext.broadcast(model)

@@ -44,6 +44,27 @@ def test_lineage_rows_appended(spark, tmp_path):
             "checksum", "wall_ms", "run_ts"} <= cols
 
 
+def test_lineage_append_leaves_no_torn_part(spark, tmp_path, monkeypatch):
+    """A lineage append that dies before its rename leaves only a
+    hidden temp file, which the lineage table's reader skips."""
+    _write(spark, tmp_path, rows=10, stage="a")
+
+    def crash(*_a):
+        raise OSError("crashed before rename")
+    with monkeypatch.context() as m:
+        m.setattr(materialize.os, "rename", crash)
+        with pytest.raises(OSError):
+            _write(spark, tmp_path, rows=20, stage="b")
+    lin_dir = os.path.join(str(tmp_path), "lineage")
+    left = [n for n in os.listdir(lin_dir) if not n.startswith("part-")]
+    assert left and all(n.startswith(".") for n in left)
+    with open(os.path.join(lin_dir, left[0]), "r+b") as f:
+        f.truncate(7)  # torn, as a crash mid-write would leave it
+    lin = spark.read.parquet(lin_dir)
+    assert {r.stage: r.total for r in lin.groupBy("stage").agg(
+        F.sum("output_rows").alias("total")).collect()} == {"a": 10}
+
+
 def test_footer_checksum_tracks_content(spark, tmp_path):
     df1 = spark.range(50).coalesce(1)
     df2 = spark.range(50).select((F.col("id") + 1).alias("id")).coalesce(1)

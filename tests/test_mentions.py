@@ -562,3 +562,103 @@ def test_equalize_type_counts(spark):
     b = {(r.kind, r.key, r.tag) for r in
          equalize_type_counts(df).collect()}
     assert a == b
+
+
+# ------------------------------------------------- ner_model_table golden
+
+_GOLDEN_SEEDS = [  # (entity, concept), duplicates and case variants kept
+    ("Acme Corp", "ORG"), ("ACME Corp", "ORG"), ("Jordan Lee", "PER"),
+    ("Jordan", "PER"), ("Jordan", "LOC"), ("Jürgen Müller", "PER"),
+    ("X", "LOC"),
+]
+_GOLDEN_DOCS = [
+    # "Acme Corp." keeps its dot (StringTagger suffix rule) and must
+    # still count as the seed "Acme Corp", not as a NO_ENTITY negative
+    ["President Jordan Lee met Acme Corp. officials in Berlin.",
+     # repeated grams inside one ±40-char context
+     "ha ha ha ha Acme Corp ha ha ha ha"],
+    ["Yesterday President Jürgen Müller visited Acme Corp.",
+     # non-ASCII capitalised non-seed candidate
+     "Zoë Novák praised the Plan, and the plan was fair."],
+    # "Lee"/"Corp" occur only inside entities; "Acme" is left of an
+    # entity twice but inside more often; "of" is a lowercase left
+    ["After the vote President Jordan Lee left.",
+     "Rivals of Acme Corp and of Jordan met near Acme Jordan Lee."],
+    ["Visit Acme Corp today, said the Vote for Acme Jordan Lee.",
+     "Visit Jordan soon, said Zoë Novák."],
+]
+
+
+def _golden_training_docs(spark):
+    rows = []
+    for sents in _GOLDEN_DOCS:
+        starts = [sum(len(s) + 1 for s in sents[:i])
+                  for i in range(len(sents))]
+        rows.append((" ".join(sents), list(zip(starts, sents))))
+    return spark.createDataFrame(
+        rows, "text string, sentences array<struct<start:int,text:string>>"
+    ).repartition(2)
+
+
+def test_ner_model_table_golden(spark):
+    """Every model dictionary of ner_model_table on a hand-made corpus,
+    pinned to the rows of the earlier per-kind Spark implementation
+    (gram UDFs, a JVM anti-join for the negatives, a six-way union)."""
+    import hashlib
+    import json
+    from collections import Counter
+
+    from kgp.mentions import ner_model_table
+    rows = sorted((tuple(r) for r in ner_model_table(
+        _golden_training_docs(spark), _GOLDEN_SEEDS).collect()), key=repr)
+    by_kind = Counter(r[0] for r in rows)
+    assert by_kind == {"agram": 200, "case": 16, "ctxgram": 353,
+                       "entity": 6, "left": 2, "prior": 3}
+    small = [r for r in rows if r[0] in ("entity", "case", "prior", "left")]
+    assert small == [
+        ("case", t, None, None) for t in (
+            "and", "fair", "for", "ha", "in", "left", "met", "near", "of",
+            "praised", "said", "soon", "the", "today", "visited", "was")
+    ] + [
+        ("entity", "acme corp", "ORG", 2), ("entity", "jordan lee", "PER", 1),
+        ("entity", "jordan", "LOC", 1), ("entity", "jordan", "PER", 1),
+        ("entity", "jürgen müller", "PER", 1), ("entity", "x", "LOC", 1),
+        ("left", "President", None, None), ("left", "Visit", None, None),
+        ("prior", "LOC", None, 2), ("prior", "ORG", None, 5),
+        ("prior", "PER", None, 5),
+    ]
+    sums = Counter()
+    for kind, _key, tag, count in rows:
+        if kind in ("agram", "ctxgram"):
+            sums[kind, tag] += count
+    assert sums == {("agram", "NO_ENTITY"): 242, ("agram", "ORG"): 26,
+                    ("agram", "PER"): 41, ("agram", "LOC"): 15,
+                    ("ctxgram", "LOC"): 73, ("ctxgram", "ORG"): 190,
+                    ("ctxgram", "PER"): 180}
+    negatives = {r[1] for r in rows if r[2] == "NO_ENTITY"}
+    assert {"zoë n", "novák"} <= negatives
+    assert not any("." in g for g in negatives)   # "Acme Corp." is a seed
+    assert ("ctxgram", "ha ha", "ORG", 6) in rows
+    assert hashlib.sha256(json.dumps(rows, ensure_ascii=False).encode()) \
+        .hexdigest() == ("cd86fea64ae2dddba41c92e6844b08cd"
+                         "ac4f305a11f849759f4430b90789642a")
+
+
+def test_ner_model_table_case_top_k(spark, monkeypatch):
+    """The case dictionary keeps the CASE_DICT_MAX_SIZE most frequent
+    qualifying tokens, ties by token."""
+    from collections import Counter
+
+    from kgp import mentions
+    n, lower = Counter(), Counter()
+    for sents in _GOLDEN_DOCS:
+        for tok, sig in mentions.case_dictionary_pairs(" ".join(sents)):
+            n[tok] += 1
+            lower[tok] += sig == "a"
+    ranked = sorted((t for t in n if lower[t] / n[t] > 0.5),
+                    key=lambda t: (-n[t], t))
+    monkeypatch.setattr(mentions, "CASE_DICT_MAX_SIZE", 3)
+    got = {r.key for r in mentions.ner_model_table(
+        _golden_training_docs(spark), _GOLDEN_SEEDS)
+        .where("kind = 'case'").collect()}
+    assert len(ranked) > 3 and got == set(ranked[:3])

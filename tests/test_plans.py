@@ -268,3 +268,24 @@ def test_reference_dates_single_window_single_join(spark):
     # pushdown (top-1 kept map-side before the shuffle) — a win.
     assert plan.count("Window") - plan.count("WindowGroupLimit") == 1
     assert "Python" not in plan
+
+
+def test_ner_model_table_one_python_scan(spark):
+    """NER training is one map-side-combined Python scan and one
+    aggregation: the executed plan (AQE's final plan, after the run)
+    holds exactly one MapInPandas — the corpus is never re-scanned by
+    a second branch — and no per-row gram UDF."""
+    from kgp.mentions import ner_model_table
+    docs = spark.createDataFrame(
+        [("Visit Acme Corp today.", [(0, "Visit Acme Corp today.")]),
+         ("Visit Jordan Lee now.", [(0, "Visit Jordan Lee now.")])],
+        "text string, sentences array<struct<start:int,text:string>>")
+    df = ner_model_table(docs, [("Acme Corp", "ORG"),
+                                ("Jordan Lee", "PER")])
+    df.collect()
+    plan = plan_of(df).split("== Initial Plan ==")[0]
+    assert plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # the seed-derived rows join as a local relation; the only scanned
+    # RDD is the docs input
+    assert "LocalTableScan" in plan and plan.count("ExistingRDD") == 1

@@ -3,6 +3,8 @@ checkpointed incremental processing, watermarked aggregation."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from kgp.corpus import seed_dictionary, synth_pages, training_docs
@@ -270,3 +272,18 @@ def test_stream_triples_full_pipeline(spark, tmp_path):
     g = {tuple(r) for r in got.collect()}
     w = {tuple(r) for r in want.collect()}
     assert g == w and len(g) > 0
+
+
+def test_streaming_extract_gate_removes_its_temp_dir(spark, tmp_path,
+                                                     monkeypatch):
+    """The streaming_extract gate returns every page's text and leaves
+    no temp dir behind (its rows are materialized before cleanup)."""
+    import tempfile
+
+    import __spark_entry__ as entry
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = entry._q_streaming_extract(spark, SF)
+    assert os.listdir(tmp_path) == []
+    want = {r.url: r.text for r in
+            synth_pages(spark, SF).select("url", "text").collect()}
+    assert {r.url: r.text for r in got.collect()} == want
