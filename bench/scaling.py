@@ -92,16 +92,9 @@ def main() -> None:
             "fresh-subprocess runs (this VM has 1.5-4.5 CPUs of bursty "
             "hypervisor steal, measured via /proc/stat; min-wall is the "
             "closest observable to true capability and the same selection "
-            "applies to BOTH levels). At >= 16-way parallelism the canon "
-            "stage overlaps the corpus stages on a concurrent "
-            "job-submission thread (kgp/pipeline.py) and its per-stage "
-            "wall then includes queue-wait (the table double-counts "
-            "contended seconds); below 16 slots — including both levels "
-            "here — the branch serializes, because there are no idle "
-            "cores for the overlap to use (measured: the overlap cost "
-            "~30 s of contention at 8 cores and bought nothing). The "
-            "DRIVER's own single-shot bench numbers (BENCH_r*.json) sit "
-            "above these min-of-repeats ones on this VM; both are real.\n")
+            "applies to BOTH levels). The single-shot bench numbers "
+            "(BENCH_r*.json) sit above these min-of-repeats ones on this "
+            "VM; both are real.\n")
     print(json.dumps(result))
 
 

@@ -3,43 +3,88 @@
 The reference has no coreference/canonicalization (nearest analog:
 exact dictionary surface match + conceptLikelihoodOrder,
 /root/reference/palladian-core/src/main/java/ws/palladian/extraction/entity/tagger/PalladianNer.java:522-530).
-Our design (SURVEY.md §2.7): build same-entity edges, run iterative
-min-label propagation (GraphFrames-style hash-join propagation — no
-GraphFrames dependency, plain DataFrame ops), take `canon_id =
-min(entity_id)` per component.
+Our design (SURVEY.md §2.7): build same-entity edges, find connected
+components, take `canon_id = min(entity_id)` per component.
 
 Scale notes:
-  * each iteration = one shuffle (join) + one hash agg; labels are
-    `localCheckpoint`-ed every iteration to cut lineage so the loop
-    doesn't grow the plan (a 20-iteration plan would otherwise OOM the
-    optimizer long before the data hurts);
+  * canon is a driver pass over the gazetteer: one collect of
+    (id, name, alt_names), the alias edges and a union-find in Python,
+    the mapping returned as an Arrow local relation. It needs the
+    gazetteer to fit in driver memory, as the linker's broadcast of it
+    already does; the stage's only Spark work is its write;
+  * `connected_components` serves the corpus-sized graphs (dedup,
+    synonyms, clustering): small edge sets take the same union-find,
+    large ones iterative min-label propagation (GraphFrames-style
+    hash-join propagation — no GraphFrames dependency, plain DataFrame
+    ops);
+  * each propagation iteration = one shuffle (join) + one hash agg;
+    labels are `localCheckpoint`-ed every iteration to cut lineage so
+    the loop doesn't grow the plan (a 20-iteration plan would otherwise
+    OOM the optimizer long before the data hurts);
   * a pointer-doubling contraction (label ← label-of-label) runs after
     every neighbor-min step, so convergence is O(log diameter) joins,
-    not O(diameter) — on 10^12-doc alias graphs diameter is small but
-    head entities create high-degree stars, which hash joins + AQE skew
-    splitting handle (the star center's label is a single row on the
-    build side);
+    not O(diameter) — head entities create high-degree stars, which
+    hash joins + AQE skew splitting handle (the star center's label is
+    a single row on the build side);
   * convergence is an exact changed-row count with an iteration cap.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _alias_edges(rows) -> list[tuple]:
+    """(id, name, alt_names) rows → sorted distinct (src, dst) edges:
+    entity A lists an alt name that IS entity B's primary name → same
+    real-world entity (how the synthetic gazetteer encodes aliases;
+    with a real KB this is the `sameAs`/redirect set). Null ids, names
+    and alt names match nothing, and self-aliases are no edge."""
+    ids_by_name: dict = {}
+    for r in rows:
+        if r[0] is not None and r[1] is not None:
+            ids_by_name.setdefault(r[1], []).append(r[0])
+    return sorted({(r[0], dst)
+                   for r in rows if r[0] is not None
+                   for alt in r[2] or ()
+                   for dst in ids_by_name.get(alt, ())
+                   if dst != r[0]})
+
+
 def same_entity_edges(gaz: DataFrame) -> DataFrame:
-    """(src, dst) edges: entity A lists an alt name that IS entity B's
-    primary name → same real-world entity (how the synthetic gazetteer
-    encodes aliases; with a real KB this is the `sameAs`/redirect set).
-    """
-    alt = gaz.select(F.col("id").alias("src"),
-                     F.explode("alt_names").alias("alt"))
-    prim = gaz.select(F.col("id").alias("dst"), F.col("name"))
-    return (alt.join(prim, alt.alt == prim.name)
-               .where(F.col("src") != F.col("dst"))
-               .select("src", "dst").distinct())
+    """The gazetteer's alias edges (src, dst), derived on the driver."""
+    id_type = gaz.schema["id"].dataType
+    schema = T.StructType([T.StructField("src", id_type, False),
+                           T.StructField("dst", id_type, False)])
+    edges = _alias_edges(gaz.select("id", "name", "alt_names").collect())
+    return gaz.sparkSession.createDataFrame(
+        pd.DataFrame(edges, columns=schema.fieldNames()), schema)
+
+
+def _union_find(edges) -> dict:
+    """(a, b) pairs → {node: min node of its component}, union by min
+    id, for every node that appears in an edge."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # union by min id
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {x: find(x) for x in parent}
 
 
 SMALL_GRAPH_EDGES = 100_000
@@ -52,10 +97,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
 
     Two regimes, picked by a cheap count:
       * small edge sets (≤ small_threshold) — collect + driver-side
-        union-find, ONE job instead of ~5 jobs × O(log d) iterations.
-        Alias graphs from a gazetteer are tiny even when the corpus is
-        100 TB; burning 20+ s of serial join latency on 50 edges is
-        wrong on any cluster;
+        union-find, ONE job instead of ~5 jobs × O(log d) iterations;
+        burning 20+ s of serial join latency on 50 edges is wrong on
+        any cluster;
       * large edge sets — distributed min-label propagation over the
         undirected edge set with pointer doubling, driver loop with
         exact convergence check, localCheckpoint per round.
@@ -72,25 +116,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     # count() would re-run all of it just to pick the branch.
     probe = edges.limit(small_threshold + 1).collect()
     if len(probe) <= small_threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in probe:
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:  # union by min id
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        rows = [(x, find(x)) for x in sorted(parent)]
+        canon = _union_find((r[0], r[1]) for r in probe)
+        rows = [(x, canon[x]) for x in sorted(canon)]
         return edges.sparkSession.createDataFrame(rows, out_schema)
     return (_cc_distributed(edges, max_iter)
             .select(F.col("entity_id").cast(id_type).alias("entity_id"),
@@ -131,16 +158,23 @@ def _cc_distributed(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
 def canonical_mapping(gaz: DataFrame) -> DataFrame:
     """gazetteer → (entity_id, canon_id, canon_name) covering ALL
-    entities (identity for singletons)."""
-    cc = connected_components(same_entity_edges(gaz))
-    all_ids = gaz.select(F.col("id").alias("entity_id"))
-    mapping = (all_ids.join(cc, "entity_id", "left")
-               .select("entity_id",
-                       F.coalesce("canon_id", "entity_id").alias("canon_id")))
-    names = gaz.select(F.col("id").alias("canon_id"),
-                       F.col("name").alias("canon_name"))
-    return mapping.join(F.broadcast(names), "canon_id") \
-                  .select("entity_id", "canon_id", "canon_name")
+    entities (identity for singletons), computed on the driver from
+    one collect and returned as an Arrow local relation."""
+    rows = gaz.select("id", "name", "alt_names").collect()
+    canon = _union_find(_alias_edges(rows))
+    names: dict = {}
+    for r in rows:
+        names.setdefault(r[0], []).append(r[1])
+    out = [(r[0], c, name)
+           for r in rows if r[0] is not None
+           for c in [canon.get(r[0], r[0])]
+           for name in names[c]]
+    schema = T.StructType([
+        T.StructField("entity_id", gaz.schema["id"].dataType),
+        T.StructField("canon_id", gaz.schema["id"].dataType),
+        T.StructField("canon_name", gaz.schema["name"].dataType)])
+    return gaz.sparkSession.createDataFrame(
+        pd.DataFrame(out, columns=schema.fieldNames()), schema)
 
 
 def canonicalize_links(links: DataFrame, mapping: DataFrame) -> DataFrame:

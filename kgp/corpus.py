@@ -519,14 +519,24 @@ def gazetteer_from_csv(spark: SparkSession, path: str,
 
 
 def gazetteer(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [tuple(r.values()) for r in gazetteer_rows()], GAZETTEER_SCHEMA)
+    """The entity KB as a local relation: built from pandas (Arrow) it
+    plans as a LocalTableScan, so reading it runs no job and starts no
+    Python worker. `population` is nullable Int64, so no value passes
+    through float64."""
+    rows = gazetteer_rows()
+    pdf = pd.DataFrame(rows)
+    pdf["population"] = pd.array([r["population"] for r in rows],
+                                 dtype="Int64")
+    return spark.createDataFrame(pdf, GAZETTEER_SCHEMA)
 
 
 def seed_dictionary(spark: SparkSession) -> DataFrame:
-    """(concept, entity) seed pairs — format of PalladianNer entity seeds."""
+    """(concept, entity) seed pairs — format of PalladianNer entity
+    seeds; a local relation like `gazetteer`."""
     rows = [(r["type"], r["name"]) for r in gazetteer_rows()]
-    return spark.createDataFrame(rows, "concept string, entity string")
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["concept", "entity"]),
+        "concept string, entity string")
 
 
 def expected_canon() -> dict[int, int]:

@@ -136,6 +136,10 @@ _SPECIAL = {"address", "applet", "area", "article", "aside", "base",
             "textarea", "tfoot", "th", "thead", "title", "tr", "track",
             "ul", "wbr", "xmp"}
 
+# marked-section names that markupbase closes at ']>' instead of ']]>'
+# (its _scan_name: a letter, then [-_.a-zA-Z0-9]*, case-folded)
+_MS_SECTION_RE = re.compile(r"(?ai)(?:if|else|endif)(?![-_.a-zA-Z0-9])")
+
 
 class _DomParser(HTMLParser):
     def __init__(self) -> None:
@@ -532,9 +536,12 @@ class _DomParser(HTMLParser):
 
     def unknown_decl(self, data):
         # WHATWG: <![CDATA[...]]> in HTML content (not foreign
-        # content) is a bogus comment whose data is '[CDATA[...]]'
+        # content) is a bogus comment whose data is '[CDATA[...]]';
+        # markupbase ends MS conditional sections (<![if !IE]>,
+        # <![endif]>) at ']>', so their data is '[if !IE]'
+        close = "]" if _MS_SECTION_RE.match(data) else "]]"
         self._append(self.stack[-1], Node("#comment",
-                                          data="[" + data + "]]"))
+                                          data="[" + data + close))
 
     def handle_pi(self, data):
         # WHATWG: '<?' opens a bogus comment up to the next '>', so

@@ -26,7 +26,6 @@ pyarrow, and needs no Spark job; the full-scan manifest
 from __future__ import annotations
 
 import os
-import threading
 import time
 from hashlib import blake2b
 
@@ -99,23 +98,12 @@ def partition_manifest(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
-# stages on concurrent DAG branches (kgp.pipeline runs the canon
-# branch on its own thread) append to the ONE lineage table; the
-# Hadoop FileOutputCommitter stages every append under the same
-# <dir>/_temporary/0, so two in-flight appends corrupt each other —
-# serialize them (the append itself is a millisecond-scale 1-file
-# write; the lock never holds up real work)
-_LINEAGE_LOCK = threading.Lock()
-
-
 def append_lineage(spark: SparkSession, out_dir: str, manifest: DataFrame,
                    wall_ms: int, input_rows: int | None = None) -> None:
     rows = manifest.withColumn("wall_ms", F.lit(wall_ms)) \
                    .withColumn("input_rows",
                                F.lit(input_rows).cast("long"))
-    with _LINEAGE_LOCK:
-        rows.write.mode("append").parquet(
-            os.path.join(out_dir, "lineage"))
+    rows.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
 
 
 def _append_lineage_rows(spark: SparkSession, out_dir: str,
@@ -152,13 +140,12 @@ def _append_lineage_rows(spark: SparkSession, out_dir: str,
     table = pa.table(
         {f.name: pa.array(list(c), type=f.type)
          for f, c in zip(schema, cols)}, schema=schema)
-    with _LINEAGE_LOCK:
-        path = os.path.join(out_dir, "lineage")
-        os.makedirs(path, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(path, f".{name}.tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(path, name))
+    path = os.path.join(out_dir, "lineage")
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(path, name))
 
 
 def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,

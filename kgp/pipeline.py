@@ -14,10 +14,8 @@ a `_SUCCESS` marker is skipped on re-run → checkpoint-resume):
                  per Arrow batch + one aggregation            (kgp.mentions)
     mentions     stage 2: candidate detection + typing        (kgp.mentions)
     links        stage 3: gazetteer join + disambiguation     (kgp.linker)
-    canon        mapping: connected components (kgp.canonicalize) —
-                 depends only on the gazetteer, so it runs on a
-                 CONCURRENT job-submission thread overlapping the
-                 corpus stages; joined before triples_raw needs it
+    canon        mapping: alias components of the gazetteer, one
+                 driver pass written as a table  (kgp.canonicalize)
     triples_raw  stage 4: pattern relation extraction         (kgp.relations)
     triples      stage 6: dedup'd, partitioned by pred        (kgp.materialize)
     lineage      per-partition manifests, appended per stage
@@ -46,7 +44,6 @@ if os.path.dirname(_HERE) not in [os.path.abspath(p or os.getcwd())
 
 import argparse
 import json
-import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,43 +112,14 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     gaz = corpus.gazetteer(spark)
     seeds = corpus.seed_dictionary(spark)
 
-    # the canon mapping depends ONLY on the gazetteer — an independent
-    # DAG branch of tiny 1-task jobs (alias edges → connected
-    # components). With enough cores its fixed job latency overlaps
-    # the big corpus scans on a separate job-submission thread (the
-    # small jobs slot into idle cores mid-stage); when every slot is
-    # busy the extra concurrent jobs only contend with the corpus
-    # stages, so the branch serializes like any other stage there.
-    # Threshold 32: measured at BOTH 8 and 16 local cores the overlap
-    # added contention (+30 s / +tens of s on the ner stage) and
-    # bought nothing; at 32+ slots the corpus stages leave idle cores
-    # mid-stage for the canon jobs to use.
-    canon_box: dict = {}
-
-    def _canon_branch():
-        try:
-            canon_box["mapping"] = _stage(
-                spark, out_dir, "canon",
-                lambda: canon.canonical_mapping(gaz),
-                force=force, metrics=metrics)
-        except BaseException as e:  # re-raised on join below
-            canon_box["error"] = e
-
-    overlap_canon = (spark.sparkContext.defaultParallelism >= 32
-                 and not os.environ.get('KGP_NO_OVERLAP'))
-    canon_thread = threading.Thread(target=_canon_branch, daemon=True)
-    if overlap_canon:
-        canon_thread.start()
-
     # NER training runs on the stable hash split (corpus.training_docs)
     # — held-out docs carry the novel entities that must be typed by
     # context, and a production pipeline trains on a sample anyway.
     # ALL model dictionaries are one stage: one table + one write
     # instead of seven fixed-latency round trips.
     docs_train = corpus.training_docs(docs)
-    # the seed rows are collected ONCE here (the seed dictionary is
-    # tiny and already driver-known) — leaving it to the stage costs
-    # an extra ~1.5 s collect job inside the stage wall
+    # the seed rows are collected ONCE here (the seed dictionary is a
+    # local relation, so the collect runs no job)
     seed_rows = seeds.select("entity", "concept").collect()
     _stage(spark, out_dir, "ner_model",
            lambda: mentions.ner_model_table(docs_train, seed_rows),
@@ -175,13 +143,10 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         lambda: link_fn(mention_df, gaz),
         force=force, metrics=metrics)
 
-    if overlap_canon:
-        canon_thread.join()
-    else:
-        _canon_branch()
-    if "error" in canon_box:
-        raise canon_box["error"]
-    mapping = canon_box["mapping"]
+    mapping = _stage(
+        spark, out_dir, "canon",
+        lambda: canon.canonical_mapping(gaz),
+        force=force, metrics=metrics)
 
     triples_raw = _stage(
         spark, out_dir, "triples_raw",

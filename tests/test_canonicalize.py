@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import functions as F
 
 from kgp import constants as C
@@ -50,3 +52,70 @@ def test_cc_multiple_components_both_paths(spark):
     dist = {r.entity_id: r.canon_id for r in
             connected_components(edges, small_threshold=0).collect()}
     assert small == want and dist == want
+
+
+def _jvm_canonical_mapping(gaz):
+    """The JVM formulation of the canon mapping — alias edges by an
+    explode/join, distributed min-label propagation, all ids joined to
+    their canonical's name — kept as the reference for the driver
+    pass."""
+    alt = gaz.select(F.col("id").alias("src"),
+                     F.explode("alt_names").alias("alt"))
+    prim = gaz.select(F.col("id").alias("dst"), F.col("name"))
+    edges = (alt.join(prim, alt.alt == prim.name)
+             .where(F.col("src") != F.col("dst"))
+             .select("src", "dst").distinct())
+    cc = connected_components(edges, small_threshold=0)
+    mapping = (gaz.select(F.col("id").alias("entity_id"))
+               .join(cc, "entity_id", "left")
+               .select("entity_id", F.coalesce("canon_id", "entity_id")
+                       .alias("canon_id")))
+    names = gaz.select(F.col("id").alias("canon_id"),
+                       F.col("name").alias("canon_name"))
+    return mapping.join(names, "canon_id").select(
+        "entity_id", "canon_id", "canon_name")
+
+
+def test_canonical_mapping_matches_distributed_components(spark):
+    gaz = spark.createDataFrame([
+        (1, "Alpha", None),               # null alt_names
+        (2, "Beta", []),                  # empty alt_names
+        (3, "Solo", ["Solo"]),            # self-alias: no edge
+        (4, "Twin", ["Twin"]),            # alias of the other Twin only
+        (5, "Twin", []),
+        (6, "Fan", ["Twin", "Nobody"]),   # alt naming two / no entity
+        (7, "Chain A", []),               # 3-chain 9 → 8 → 7
+        (8, "Chain B", ["Chain A"]),
+        (9, "Chain C", ["Chain B"]),
+        (10, "Springfield", []),          # duplicate primary name,
+        (11, "Springfield", []),          # no alias: stays two entities
+        (12, "Gamma", ["", None]),
+    ], "id long, name string, alt_names array<string>")
+    got_df, want_df = canonical_mapping(gaz), _jvm_canonical_mapping(gaz)
+    got = sorted(map(tuple, got_df.collect()))
+    assert got == sorted(map(tuple, want_df.collect()))
+    assert got_df.schema == want_df.schema
+    assert dict((e, c) for e, c, _ in got) == {
+        1: 1, 2: 2, 3: 3, 4: 4, 5: 4, 6: 4, 7: 7, 8: 7, 9: 7,
+        10: 10, 11: 11, 12: 12}
+
+
+def test_canonical_mapping_of_gazetteer_runs_no_job(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("canon-no-job", "canonical mapping")
+    try:
+        assert len(canonical_mapping(gazetteer(spark)).collect()) == \
+            len(expected_canon())
+        # control: a job after it in another group; job-start events
+        # arrive in order, so once it shows any canon job would too
+        sc.setJobGroup("canon-control", "control")
+        spark.range(4).rdd.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while (not tracker.getJobIdsForGroup("canon-control")
+           and time.time() < deadline):
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("canon-control")
+    assert tracker.getJobIdsForGroup("canon-no-job") == []

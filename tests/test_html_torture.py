@@ -39,6 +39,18 @@ def test_cdata_in_html_is_bogus_comment():
     assert _tree("<p><![CDATA[x]]></p>") == "p(c['[CDATA[x]]'])"
 
 
+def test_ms_conditional_section_is_bogus_comment():
+    # <![if ...]> and <![endif]> end at ']>': one ']' closes the data,
+    # and the text between them is ordinary content
+    assert (_tree("<p><![if !IE]>x<![endif]></p>")
+            == "p(c['[if !IE]'],'x',c['[endif]'])")
+    assert _tree("<p><![ELSE]></p>") == "p(c['[ELSE]'])"
+    # CDATA whose content starts with 'if' still closes with ']]'
+    assert _tree("<p><![CDATA[if]]></p>") == "p(c['[CDATA[if]]'])"
+    assert (document_to_text(parse_html("<p><![if !IE]>x y<![endif]></p>"))
+            == document_to_text(parse_html("<p>x y</p>")))
+
+
 def test_processing_instruction_is_bogus_comment():
     assert _tree("<p><?php e ?></p>") == "p(c['?php e ?'])"
 

@@ -289,3 +289,17 @@ def test_ner_model_table_one_python_scan(spark):
     # the seed-derived rows join as a local relation; the only scanned
     # RDD is the docs input
     assert "LocalTableScan" in plan and plan.count("ExistingRDD") == 1
+
+
+def test_gazetteer_side_is_local(spark):
+    """The gazetteer, the seeds and the canon mapping are Arrow local
+    relations: LocalTableScan, never a pickled RDD (Spark falls back to
+    one silently when the Arrow conversion fails)."""
+    from kgp.canonicalize import canonical_mapping
+    from kgp.corpus import seed_dictionary
+
+    for df in (gazetteer(spark), seed_dictionary(spark),
+               canonical_mapping(gazetteer(spark))):
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
