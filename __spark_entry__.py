@@ -21,16 +21,13 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kgp import canonicalize as _canon  # noqa: E402
 from kgp import corpus as _corpus  # noqa: E402
 from kgp import dedup as _dedup  # noqa: E402
-from kgp import html_text as _html  # noqa: E402
 from kgp import linker as _linker  # noqa: E402
 from kgp import materialize as _mat  # noqa: E402
-from kgp import mentions as _mentions  # noqa: E402
 from kgp import multimodal as _mm  # noqa: E402
 from kgp import oracle as _oracle  # noqa: E402
-from kgp import relations as _relations  # noqa: E402
+from kgp import pipeline as _pipeline  # noqa: E402
 from kgp import similarity as _sim  # noqa: E402
 from kgp import textstats as _ts  # noqa: E402
 
@@ -56,21 +53,11 @@ def _products(spark: SparkSession, sf_dir: str) -> dict:
                        "256")
     except Exception:
         pass
-    pages = _corpus.synth_pages(spark, sf_dir)
-    docs = _html.extract_stage(pages).persist()
-    gaz = _corpus.gazetteer(spark)
-    seeds = _corpus.seed_dictionary(spark)
-    model = _mentions.train_ner_model(
-        spark, _corpus.training_docs(docs), seeds)
-    bc = spark.sparkContext.broadcast(model)
-    mentions = _mentions.detect_mentions(docs, bc).persist()
-    links = _linker.link_mentions(mentions, gaz)
-    mapping = _canon.canonical_mapping(gaz).persist()
-    triples = _mat.finalize_triples(
-        _relations.extract_relations(
-            _canon.canonicalize_links(links, mapping)))
-    p = {"pages": pages, "docs": docs, "mentions": mentions,
-         "links": links, "mapping": mapping, "triples": triples}
+    # the KG pipeline's DAG, lazily: docs, mentions and canon are
+    # cached, so each stage's Python UDFs run once across all gates
+    p = _pipeline.kg_stages(
+        spark, _mat.lazy_stage(persist=("docs", "mentions", "canon")),
+        lambda: _corpus.synth_pages(spark, sf_dir))
     _CACHE[sf_dir] = p
     return p
 
@@ -114,7 +101,7 @@ def _q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_products(spark, sf_dir)["mapping"]
+    return (_products(spark, sf_dir)["canon"]
             .select("entity_id", "canon_id"))
 
 

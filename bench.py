@@ -44,8 +44,7 @@ def run_bench(sf_dir: str, cores: int, keep_out: str | None = None,
         _, n_pages = materialize.write_stage(spark, pages_df, out_dir,
                                              "pages")
         t0 = time.time()
-        metrics = run_pipeline(spark, sf_dir, out_dir,
-                               replicate=replicate, heavy=heavy)
+        metrics = run_pipeline(spark, sf_dir, out_dir)
         wall = time.time() - t0
         pages = n_pages
         triples = metrics["triples"]["rows"]

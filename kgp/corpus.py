@@ -597,45 +597,29 @@ ISO_639_1_LANGUAGES = frozenset(
 
 def read_alternate_names(spark: SparkSession, path: str) -> DataFrame:
     """Geonames alternateNames.txt ingest (GeonamesImporter.
-    importAlternativeNames, GeonamesImporter.java:387-420):
-    (id, name, language) rows — lines with <4 columns are skipped; an
-    empty or 'abbr' language column keeps the name with language null;
-    any other language must be a known ISO 639-1 code or the line is
-    dropped (this also drops geonames' 'post'/'link'/'iata' rows,
-    exactly as Language.getByIso6391 == null does upstream).
-
-    One distributed TSV scan, pure-JVM filters — the 639-1 domain is
-    a literal IN list."""
-    raw = spark.read.option("sep", "\t").option("quote", "").csv(path)
-    iso = F.coalesce(F.col("_c2"), F.lit(""))
-    return (raw
-            .where(F.col("_c3").isNotNull())       # <4 columns
-            .where((iso == "") | (iso == "abbr")
-                   | iso.isin(sorted(ISO_639_1_LANGUAGES)))
-            .select(F.col("_c1").cast("long").alias("id"),
-                    F.col("_c3").alias("name"),
-                    F.when((iso == "") | (iso == "abbr"),
-                           F.lit(None).cast("string"))
-                    .otherwise(iso).alias("language")))
+    importAlternativeNames, GeonamesImporter.java:387-420): the file's
+    lines through alternate_names_from_lines, so the file reader and
+    the lines twin apply one set of row rules."""
+    return alternate_names_from_lines(spark.read.text(path))
 
 
 def alternate_names_from_lines(lines: DataFrame,
                                col: str = "value") -> DataFrame:
-    """read_alternate_names' row semantics over a LINES column
-    (GeonamesImporter.java:387-420): tab-split, <4 columns skipped,
-    empty/'abbr' language kept as null, unknown languages dropped.
-    Java's line.split("\\t") DROPS trailing empty strings, so a line
-    with an empty name column ('id\\tgeo\\tde\\t') has length 3 and is
-    skipped — Spark's limit -1 split keeps the trailing empty, hence
-    the explicit name != '' filter (which also makes this twin agree
-    with read_alternate_names, where Spark CSV reads '' as null).
-    Pure JVM expressions — the file-reading twin shares these rules
-    via the same filter chain."""
-    parts = F.split(F.col(col), "\t", -1)
+    """(id, name, language) rows of alternateNames.txt LINES
+    (GeonamesImporter.java:387-420). Lines split on tabs the Java way:
+    line.split("\\t") drops TRAILING empty fields, and a line with fewer
+    than 4 fields left is skipped — 'id\\tgeo\\tde\\t' is skipped, while
+    'id\\tgeo\\tde\\t\\tfoo' is kept with the empty name ''. An empty or
+    'abbr' language column keeps the name with language null; any
+    other language must be a known ISO 639-1 code or the line is
+    dropped (this also drops geonames' 'post'/'link'/'iata' rows,
+    exactly as Language.getByIso6391 == null does upstream).
+
+    Pure JVM expressions — the 639-1 domain is a literal IN list."""
+    parts = F.split(F.regexp_replace(F.col(col), "\t+\\z", ""), "\t", -1)
     iso = F.coalesce(parts.getItem(2), F.lit(""))
     return (lines
             .where(F.size(parts) >= 4)
-            .where(parts.getItem(3) != "")
             .where((iso == "") | (iso == "abbr")
                    | iso.isin(sorted(ISO_639_1_LANGUAGES)))
             .select(parts.getItem(1).cast("long").alias("id"),

@@ -5,11 +5,11 @@ as resumable, lineage-tracked stage tables and runnable via
 spark-submit --py-files (python -m kgp.datapipeline <sf_dir>
 <out_dir>).
 
-Until now these operators were composed only inside bench/composite.py
-(timed, unmaterialized); a production corpus run needs the same
-checkpoint-resume + per-partition-lineage contract the KG pipeline
-has.  Stage DAG (each stage one parquet table + one pyarrow lineage
-append, kgp.materialize):
+The stage DAG is written once, in `curation_stages`, and shares the
+KG pipeline's runners (kgp.materialize): `run_data_pipeline` runs it
+materialized with checkpoint-resume and lineage, `lazy_stage` runs it
+as one DataFrame chain. Stages (each one parquet table + one pyarrow
+lineage append when materialized):
 
   pages     input crawl table (pre-existing in production; the
             deterministic synth corpus here), spread on url
@@ -34,14 +34,14 @@ only sequences and materializes them.
 from __future__ import annotations
 
 import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgp import corpus, curation, dedup, repetition, skew, webgraph
-from kgp.pipeline import _stage
+from kgp import corpus, curation, dedup, materialize, repetition, skew
+from kgp import webgraph
+from kgp.materialize import _stage
 
 
 def _dedup_table(docs: DataFrame) -> DataFrame:
@@ -66,34 +66,18 @@ def _signals_table(docs: DataFrame) -> DataFrame:
     return gopher.join(c4, "doc_id").join(rep, "doc_id")
 
 
-def run_data_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
-                      force: bool = False,
-                      pages: DataFrame | None = None,
-                      replicate: int = 1, heavy: int = 1) -> dict:
-    """Run (or resume) the curation pipeline; returns the metrics
-    dict and writes metrics.json, mirroring run_pipeline's contract.
-    The curated corpus lands at {out_dir}/curated."""
-    metrics: dict = {}
+def curation_stages(spark: SparkSession, stage,
+                    sf_dir: str) -> dict[str, DataFrame]:
+    """The curation pipeline's stage DAG, in run order. `stage` is a
+    stage runner (kgp.materialize: `_stage` via run_stages, or
+    lazy_stage). Returns every stage's DataFrame by stage name."""
     nparts = spark.sparkContext.defaultParallelism
-
-    pages_df = _stage(
-        spark, out_dir, "pages",
-        (lambda: skew.spread(pages, ["url"], nparts))
-        if pages is not None
-        else (lambda: skew.spread(
-            corpus.synth_pages(spark, sf_dir, with_doc_id=True,
-                               replicate=replicate, heavy=heavy),
-            ["url"], nparts)),
-        force=force, metrics=metrics)
-
-    docs = pages_df.select("doc_id", "url", "text")
-
-    dd = _stage(spark, out_dir, "dedup",
-                lambda: _dedup_table(docs),
-                force=force, metrics=metrics)
-    sig = _stage(spark, out_dir, "signals",
-                 lambda: _signals_table(docs),
-                 force=force, metrics=metrics)
+    pages = stage("pages", lambda: skew.spread(
+        corpus.synth_pages(spark, sf_dir, with_doc_id=True), ["url"],
+        nparts))
+    docs = pages.select("doc_id", "url", "text")
+    dd = stage("dedup", lambda: _dedup_table(docs))
+    sig = stage("signals", lambda: _signals_table(docs))
 
     def _curated() -> DataFrame:
         keep = (F.col("exact_canonical") & F.col("near_canonical")
@@ -105,25 +89,26 @@ def run_data_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
                 .where(keep)
                 .select("doc_id", "url", "clean_text"))
 
-    _stage(spark, out_dir, "curated", _curated,
-           force=force, metrics=metrics)
+    curated = stage("curated", _curated)
+    links = stage("links", lambda: webgraph.extract_links_stage(pages))
+    host_graph = stage("host_graph", lambda: webgraph.host_graph(links))
+    ranks = stage("ranks", lambda: webgraph.pagerank(
+        links.select(F.col("src_url").alias("src"),
+                     F.col("dst_url").alias("dst")),
+        iterations=5))
+    return {"pages": pages, "dedup": dd, "signals": sig,
+            "curated": curated, "links": links, "host_graph": host_graph,
+            "ranks": ranks}
 
-    links = _stage(spark, out_dir, "links",
-                   lambda: webgraph.extract_links_stage(pages_df),
-                   force=force, metrics=metrics)
-    _stage(spark, out_dir, "host_graph",
-           lambda: webgraph.host_graph(links),
-           force=force, metrics=metrics)
-    _stage(spark, out_dir, "ranks",
-           lambda: webgraph.pagerank(
-               links.select(F.col("src_url").alias("src"),
-                            F.col("dst_url").alias("dst")),
-               iterations=5),
-           force=force, metrics=metrics)
 
-    with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-        json.dump(metrics, f, indent=2, default=str)
-    return metrics
+def run_data_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
+                      force: bool = False) -> dict:
+    """Run (or resume) the curation pipeline; returns the metrics
+    dict and writes metrics.json, as run_pipeline does. The curated
+    corpus lands at {out_dir}/curated."""
+    return materialize.run_stages(
+        spark, out_dir, _stage,
+        lambda stage: curation_stages(spark, stage, sf_dir), force=force)
 
 
 def main() -> None:
@@ -140,7 +125,7 @@ def main() -> None:
     t0 = time.time()
     m = run_data_pipeline(spark, a.sf_dir, a.out_dir, force=a.force)
     m["wall_s"] = round(time.time() - t0, 3)
-    print(json.dumps({k: v for k, v in m.items()}, default=str))
+    print(json.dumps(m, default=str))
 
 
 if __name__ == "__main__":

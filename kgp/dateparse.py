@@ -855,22 +855,33 @@ def get_datetime(fmt: str, timestamp_ms: int) -> str:
 
 
 def _common_exactness_millis(p: ParsedDate, ex: int) -> int:
-    """getCalendar(exactness) (:261-284) in fixed UTC: fields beyond
-    `ex` fall back to this repo's deterministic defaults (year 1,
-    month/day 1, time 0) instead of the reference's run-time `new
-    GregorianCalendar()` filler, which leaks the test-run date into
-    the unset fields — documented deviation; both sides of a
-    difference use the SAME filler either way."""
+    """getCalendar(exactness) (:261-284) in fixed UTC. getCalendar
+    sets the 1-based month as the 0-based Calendar.MONTH (getLongDate
+    at :112 subtracts 1, getCalendar does not), so a set month lands
+    one month late and the lenient calendar rolls the day over:
+    2023-01-31 reads as "February 31" = 2023-03-03 and 2023-02-28 as
+    2023-03-28, 25 days apart. Replayed here: the day counts from the
+    first of the month AFTER p.month.
+
+    Fields beyond `ex` fall back to this repo's deterministic defaults
+    (year 1, January, day 1, time 0) instead of the reference's
+    run-time `new GregorianCalendar()` filler, which leaks the
+    test-run date into the unset fields — documented deviation; both
+    sides of a difference use the SAME filler either way."""
+    import calendar
     import datetime as _dt
     year = p.year if ex >= 1 else 1
-    month = p.month if ex >= 2 else 1
+    months = p.month if ex >= 2 else 0   # whole months before the day
     day = p.day if ex >= 3 else 1
     hour = p.hour if ex >= 4 else 0
     minute = p.minute if ex >= 5 else 0
     second = p.second if ex >= 6 else 0
-    dt = _dt.datetime(year, month, day, hour, minute, second,
-                      tzinfo=_dt.timezone.utc)
-    return int(dt.timestamp() * 1000)
+    jan1 = _dt.datetime(year, 1, 1, tzinfo=_dt.timezone.utc)
+    days = sum(calendar.monthrange(year, m)[1]
+               for m in range(1, months + 1)) + day - 1
+    secs = (int(jan1.timestamp()) + days * 86_400 + hour * 3_600
+            + minute * 60 + second)
+    return secs * 1000
 
 
 def get_difference(a: ParsedDate, b: ParsedDate,

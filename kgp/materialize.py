@@ -7,24 +7,27 @@ north-rule requirement; on a cluster these are Iceberg tables and the
 existence check is a catalog lookup + snapshot validation, here it is
 parquet + `_SUCCESS`, same semantics).
 
-Lineage: after each stage lands, one pass over the written files
-computes per-partition (rows, checksum) and appends rows to the
-`lineage` table:
+Lineage: after each stage lands, its parquet footers are read on the
+driver with pyarrow (no Spark job) and one row per written file is
+appended to the `lineage` table:
 
     lineage(stage, partition_id, input_rows, output_rows, checksum,
             wall_ms, run_ts)
 
-The checksum is an order-insensitive 64-bit aggregate
-(bit_xor of xxhash64 over all columns per partition — no overflow under
-ANSI mode) so re-runs can be verified partition-by-partition without
-re-reading upstream stages.
-The default manifest reads only the parquet footers, on the driver with
-pyarrow, and needs no Spark job; the full-scan manifest
-(KGP_LINEAGE_FULL) is JVM-side column work.
+The checksum digests each file's footer (row-group sizes and column
+min/max/null statistics), so a re-run can be told apart file by file
+without re-reading any data.
+
+Stage runners: a pipeline's stage DAG is one straight-line function
+that calls `stage(name, build, partition_by=None)` for each stage in
+order. `run_stages` runs it materialized (`_stage`: resume, write,
+lineage, metrics.json); `lazy_stage` runs it as one DataFrame chain
+with no tables (gates, tests, stream micro-batches).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from hashlib import blake2b
@@ -46,21 +49,33 @@ def stage_done(out_dir: str, stage: str) -> bool:
                                        "_SUCCESS"))
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The table's data files, sorted; walks partitioned layouts
+    (pred=X/ subdirs)."""
+    return sorted(os.path.join(root, n)
+                  for root, _dirs, names in os.walk(path)
+                  for n in names if n.endswith(".parquet"))
+
+
+def stage_rows(out_dir: str, stage: str) -> int:
+    """Rows of a finished stage, summed from its parquet footers (no
+    Spark job)."""
+    import pyarrow.parquet as pq
+    return sum(pq.read_metadata(f).num_rows
+               for f in _parquet_files(stage_path(out_dir, stage)))
+
+
 def footer_manifest(path: str, stage: str) -> list[tuple]:
     """Per-file (≈ per-partition) lineage rows read from parquet
     FOOTERS only — exact row counts and a footer-derived checksum with
     zero data scanned and zero Spark jobs. On object storage this is
     one ranged GET per file; Iceberg gives the same numbers from its
-    manifest files. Walks partitioned layouts (pred=X/ subdirs)."""
+    manifest files."""
     import pyarrow.parquet as pq
 
     rows = []
-    files = []
-    for root, _dirs, names in os.walk(path):
-        files += [os.path.join(root, n) for n in names
-                  if n.endswith(".parquet")]
     ts = time.time()
-    for i, f in enumerate(sorted(files)):
+    for i, f in enumerate(_parquet_files(path)):
         md = pq.read_metadata(f)
         digest = blake2b(md.serialized_size.to_bytes(8, "big"),
                          digest_size=8)
@@ -76,34 +91,6 @@ def footer_manifest(path: str, stage: str) -> list[tuple]:
         checksum = int.from_bytes(digest.digest(), "big", signed=True)
         rows.append((stage, i, None, md.num_rows, checksum, None, ts))
     return rows
-
-
-def partition_manifest(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition (rows, order-insensitive checksum) of df as read."""
-    hashed = df.select(
-        F.spark_partition_id().alias("partition_id"),
-        F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"),
-    )
-    return hashed.groupBy("partition_id").agg(
-        F.count("*").alias("output_rows"),
-        F.expr("bit_xor(h)").alias("checksum"),
-    ).select(
-        F.lit(stage).alias("stage"),
-        "partition_id",
-        F.lit(None).cast("long").alias("input_rows"),
-        "output_rows",
-        "checksum",
-        F.lit(None).cast("long").alias("wall_ms"),
-        F.lit(time.time()).alias("run_ts"),
-    )
-
-
-def append_lineage(spark: SparkSession, out_dir: str, manifest: DataFrame,
-                   wall_ms: int, input_rows: int | None = None) -> None:
-    rows = manifest.withColumn("wall_ms", F.lit(wall_ms)) \
-                   .withColumn("input_rows",
-                               F.lit(input_rows).cast("long"))
-    rows.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
 
 
 def _append_lineage_rows(spark: SparkSession, out_dir: str,
@@ -163,12 +150,6 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
     w.parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
     out = spark.read.parquet(path)
-    if os.environ.get("KGP_LINEAGE_FULL"):
-        # full-scan manifest: per-partition value checksums
-        manifest = partition_manifest(out, stage).localCheckpoint()
-        rows = manifest.agg(F.sum("output_rows")).collect()[0][0] or 0
-        append_lineage(spark, out_dir, manifest, wall_ms, input_rows)
-        return out, int(rows)
     frows = footer_manifest(path, stage)
     _append_lineage_rows(spark, out_dir, frows, wall_ms, input_rows)
     return out, sum(r[3] for r in frows)
@@ -176,6 +157,71 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(stage_path(out_dir, stage))
+
+
+def _stage(spark: SparkSession, out_dir: str, name: str, fn,
+           partition_by: list[str] | None = None,
+           force: bool = False, metrics: dict | None = None) -> DataFrame:
+    """The materialized stage runner: reuse the stage table if it is
+    done, else build it with fn(), write it (repartitioned by its
+    partition columns, so each partition directory gets one file set)
+    with its lineage rows, and return the re-read table. Records
+    rows / resumed / wall_s under metrics[name]."""
+    if not force and stage_done(out_dir, name):
+        if metrics is not None:
+            metrics[name] = {"resumed": True,
+                             "rows": stage_rows(out_dir, name)}
+        return read_stage(spark, out_dir, name)
+    t0 = time.time()
+    df = fn()
+    if partition_by:
+        df = df.repartition(*partition_by)
+    out, rows = write_stage(spark, df, out_dir, name,
+                            partition_by=partition_by)
+    if metrics is not None:
+        metrics[name] = {"resumed": False,
+                         "rows": rows,
+                         "wall_s": round(time.time() - t0, 3)}
+    return out
+
+
+def run_stages(spark: SparkSession, out_dir: str, runner, dag,
+               force: bool = False) -> dict:
+    """Run a stage DAG materialized: dag(stage) calls
+    stage(name, build, partition_by=None) for each stage in order, and
+    each call goes through runner — the pipeline module's `_stage`
+    global as it is at call time, so a wrapper installed on that
+    global (perfbench's tracer) sees every stage. Writes
+    {out_dir}/metrics.json (per stage: rows, resumed, wall_s) and
+    returns the same dict."""
+    os.makedirs(out_dir, exist_ok=True)
+    metrics: dict = {}
+
+    def stage(name: str, build, partition_by: list[str] | None = None):
+        return runner(spark, out_dir, name, build,
+                      partition_by=partition_by, force=force,
+                      metrics=metrics)
+    dag(stage)
+    with open(os.path.join(out_dir, "metrics.json"), "w") as f:
+        json.dump(metrics, f, indent=2, default=str)
+    return metrics
+
+
+def lazy_stage(persist: tuple[str, ...] = (),
+               given: dict[str, DataFrame] | None = None):
+    """The lazy stage runner: each stage is its built DataFrame — no
+    table, no lineage, no resume. Stages named in `persist` are
+    cached (their Python UDFs run once however many consumers read
+    them); a stage named in `given` is that DataFrame, and its build
+    never runs."""
+    given = given or {}
+
+    def stage(name: str, build, partition_by: list[str] | None = None):
+        if name in given:
+            return given[name]
+        df = build()
+        return df.persist() if name in persist else df
+    return stage
 
 
 def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -251,13 +297,8 @@ def compact_stage(spark: SparkSession, out_dir: str, stage: str,
     Returns {files_before, files_after, rows, checksum}.
     """
     path = stage_path(out_dir, stage)
-    files = []
-    total = 0
-    for root, _dirs, names in os.walk(path):
-        for n in names:
-            if n.endswith(".parquet"):
-                files.append(os.path.join(root, n))
-                total += os.path.getsize(os.path.join(root, n))
+    files = _parquet_files(path)
+    total = sum(os.path.getsize(f) for f in files)
     before = spark.read.parquet(path)
     n_rows, checksum = _global_checksum(before)
     n_out = max(1, -(-total // target_bytes))
@@ -281,9 +322,7 @@ def compact_stage(spark: SparkSession, out_dir: str, stage: str,
     import shutil
     shutil.rmtree(gc)
 
-    files_after = sum(
-        1 for root, _d, names in os.walk(path)
-        for n in names if n.endswith(".parquet"))
+    files_after = len(_parquet_files(path))
     _append_lineage_rows(
         spark, out_dir,
         [(f"{stage}:compact", 0, n_rows, n_rows, checksum, None,

@@ -18,11 +18,16 @@ a `_SUCCESS` marker is skipped on re-run → checkpoint-resume):
                  driver pass written as a table  (kgp.canonicalize)
     triples_raw  stage 4: pattern relation extraction         (kgp.relations)
     triples      stage 6: dedup'd, partitioned by pred        (kgp.materialize)
-    lineage      per-partition manifests, appended per stage
+    lineage      per-file footer manifests, appended per stage
 
 Every stage boundary re-reads the materialized table: AQE re-plans each
 stage with real sizes, resume is a directory check, and a crashed run
 loses at most one stage of work.
+
+The DAG is written once, in `kg_stages`: `run_pipeline` runs it
+materialized, `__spark_entry__` runs it lazily (one DataFrame chain,
+no tables), and `kgp.streaming.stream_triples` runs its per-document
+part (`triple_stages`) on each micro-batch.
 """
 
 from __future__ import annotations
@@ -44,150 +49,94 @@ if os.path.dirname(_HERE) not in [os.path.abspath(p or os.getcwd())
 
 import argparse
 import json
-import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgp import canonicalize as canon
 from kgp import corpus, html_text, linker, materialize, mentions, relations
 from kgp import skew
+from kgp.materialize import _stage
 from kgp.session import get_spark
 
 
-def _stage(spark: SparkSession, out_dir: str, name: str, fn,
-           partition_by: list[str] | None = None,
-           force: bool = False, metrics: dict | None = None) -> DataFrame:
-    if not force and materialize.stage_done(out_dir, name):
-        if metrics is not None:
-            metrics[name] = {"resumed": True}
-        return materialize.read_stage(spark, out_dir, name)
-    t0 = time.time()
-    df = fn()
-    out, rows = materialize.write_stage(spark, df, out_dir, name,
-                                        partition_by=partition_by)
-    if metrics is not None:
-        metrics[name] = {"resumed": False,
-                         "rows": rows,
-                         "wall_s": round(time.time() - t0, 3)}
-    return out
+def load_ner_model(ner_model: DataFrame) -> mentions.NerModel:
+    """The broadcastable NER model from the ner_model table (one
+    collect)."""
+    return mentions.model_from_rows(ner_model.collect())
 
 
-def load_ner_model(spark: SparkSession, out_dir: str) -> mentions.NerModel:
-    rows = materialize.read_stage(spark, out_dir, "ner_model").collect()
-    return mentions.model_from_rows(rows)
+def kg_stages(spark: SparkSession, stage, pages,
+              linker_mode: str = "fast") -> dict[str, DataFrame]:
+    """The KG pipeline's stage DAG, in run order. `stage` is a stage
+    runner (kgp.materialize: `_stage` via run_stages, or lazy_stage);
+    `pages` builds the input table. Returns each stage's DataFrame by
+    stage name, ner_model excepted."""
+    pages_df = stage("pages", pages)
+    docs = stage("docs", lambda: html_text.extract_stage(pages_df))
+    gaz = corpus.gazetteer(spark)
+    # NER training runs on the stable hash split (corpus.training_docs)
+    # — held-out docs carry the novel entities that must be typed by
+    # context, and a production pipeline trains on a sample anyway.
+    # ALL model dictionaries are one stage: one table + one write
+    # instead of seven fixed-latency round trips. The seed rows are
+    # collected ONCE here (the seed dictionary is a local relation, so
+    # the collect runs no job).
+    seed_rows = corpus.seed_dictionary(spark) \
+        .select("entity", "concept").collect()
+    ner = stage("ner_model", lambda: mentions.ner_model_table(
+        corpus.training_docs(docs), seed_rows))
+    model_bc = spark.sparkContext.broadcast(load_ner_model(ner))
+    out = triple_stages(stage, docs, model_bc, gaz, linker_mode)
+    triples = stage("triples", lambda: materialize.finalize_triples(
+        out["triples_raw"]), partition_by=["pred"])
+    # ner_model is left out: it is read once, into the broadcast model,
+    # and a DataFrame kept in a long-lived dict (the gates' cache)
+    # keeps its training plan alive — the sf0.01 gate session ran
+    # ~5-9 % slower with it (4-core VM)
+    return {"pages": pages_df, "docs": docs, **out, "triples": triples}
+
+
+def triple_stages(stage, docs: DataFrame, model_bc, gaz: DataFrame,
+                  linker_mode: str = "fast") -> dict[str, DataFrame]:
+    """docs → mentions → links, canon → triples_raw: the per-document
+    part of kg_stages, which a stream micro-batch also runs
+    (kgp.streaming.stream_triples)."""
+    found = stage("mentions",
+                  lambda: mentions.detect_mentions(docs, model_bc))
+    # linker_mode "fast" = fully vectorized anchor/population heuristic
+    # (zero Python, the 100 TB default); "reference" = the faithful
+    # coordinate-aware per-document disambiguation (anchor distance,
+    # lasso) via applyInPandas — same output columns
+    link = (linker.link_mentions_reference
+            if linker_mode == "reference" else linker.link_mentions)
+    links = stage("links", lambda: link(found, gaz))
+    mapping = stage("canon", lambda: canon.canonical_mapping(gaz))
+    raw = stage("triples_raw", lambda: relations.extract_relations(
+        canon.canonicalize_links(links, mapping)))
+    return {"mentions": found, "links": links, "canon": mapping,
+            "triples_raw": raw}
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
-                 force: bool = False, num_partitions: int | None = None,
-                 pages: DataFrame | None = None, replicate: int = 1,
-                 heavy: int = 1, linker_mode: str = "fast") -> dict:
+                 force: bool = False, linker_mode: str = "fast") -> dict:
     """Run (or resume) the full KG-construction pipeline.
 
-    Returns a metrics dict; triples land at {out_dir}/triples
-    partitioned by pred.
+    Returns the metrics dict (also written to {out_dir}/metrics.json);
+    triples land at {out_dir}/triples partitioned by pred.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    metrics: dict = {"sf_dir": sf_dir, "out_dir": out_dir}
-    nparts = num_partitions or spark.sparkContext.defaultParallelism
+    nparts = spark.sparkContext.defaultParallelism
 
     # ingest: hash-spread on url AT WRITE TIME so the biggest payload
     # (raw html) is partitioned once and never shuffled again — the
     # extract stage reads it straight off storage with balanced tasks
     # regardless of how host-clustered the crawl order was
-    pages_df = _stage(
-        spark, out_dir, "pages",
-        (lambda: skew.spread(pages, ["url"], nparts))
-        if pages is not None
-        else (lambda: skew.spread(
-            corpus.synth_pages(spark, sf_dir, replicate=replicate,
-                               heavy=heavy), ["url"], nparts)),
-        force=force, metrics=metrics)
-
-    docs = _stage(
-        spark, out_dir, "docs",
-        lambda: html_text.extract_stage(pages_df),
-        force=force, metrics=metrics)
-
-    gaz = corpus.gazetteer(spark)
-    seeds = corpus.seed_dictionary(spark)
-
-    # NER training runs on the stable hash split (corpus.training_docs)
-    # — held-out docs carry the novel entities that must be typed by
-    # context, and a production pipeline trains on a sample anyway.
-    # ALL model dictionaries are one stage: one table + one write
-    # instead of seven fixed-latency round trips.
-    docs_train = corpus.training_docs(docs)
-    # the seed rows are collected ONCE here (the seed dictionary is a
-    # local relation, so the collect runs no job)
-    seed_rows = seeds.select("entity", "concept").collect()
-    _stage(spark, out_dir, "ner_model",
-           lambda: mentions.ner_model_table(docs_train, seed_rows),
-           force=force, metrics=metrics)
-    model = load_ner_model(spark, out_dir)
-    model_bc = spark.sparkContext.broadcast(model)
-
-    mention_df = _stage(
-        spark, out_dir, "mentions",
-        lambda: mentions.detect_mentions(docs, model_bc),
-        force=force, metrics=metrics)
-
-    # linker_mode "fast" = fully vectorized anchor/population heuristic
-    # (zero Python, the 100 TB default); "reference" = the faithful
-    # coordinate-aware per-document disambiguation (anchor distance,
-    # lasso) via applyInPandas — same output columns
-    link_fn = (linker.link_mentions_reference
-               if linker_mode == "reference" else linker.link_mentions)
-    links = _stage(
-        spark, out_dir, "links",
-        lambda: link_fn(mention_df, gaz),
-        force=force, metrics=metrics)
-
-    mapping = _stage(
-        spark, out_dir, "canon",
-        lambda: canon.canonical_mapping(gaz),
-        force=force, metrics=metrics)
-
-    triples_raw = _stage(
-        spark, out_dir, "triples_raw",
-        lambda: relations.extract_relations(
-            canon.canonicalize_links(links, mapping)),
-        force=force, metrics=metrics)
-
-    triples = _stage(
-        spark, out_dir, "triples",
-        lambda: materialize.finalize_triples(triples_raw)
-        .repartition("pred"),
-        partition_by=["pred"], force=force, metrics=metrics)
-
-    if "rows" not in metrics.get("triples", {}):
-        metrics["triples"] = {**metrics.get("triples", {}),
-                              "rows": triples.count()}
-    with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-        json.dump(metrics, f, indent=2, default=str)
-    return metrics
-
-
-def triples_dataframe(spark: SparkSession, sf_dir: str,
-                      pages: DataFrame | None = None) -> DataFrame:
-    """The whole pipeline as ONE declarative DataFrame chain (no stage
-    materialization) — used by tests/the driver contract where the
-    checkpoint tables are not wanted. Training still runs eagerly (it
-    collects the small model tables)."""
-    pages_df = pages if pages is not None else corpus.synth_pages(spark,
-                                                                  sf_dir)
-    docs = html_text.extract_stage(pages_df).persist()
-    gaz = corpus.gazetteer(spark)
-    seeds = corpus.seed_dictionary(spark)
-    model = mentions.train_ner_model(spark, corpus.training_docs(docs),
-                                     seeds)
-    model_bc = spark.sparkContext.broadcast(model)
-    mention_df = mentions.detect_mentions(docs, model_bc)
-    links = linker.link_mentions(mention_df, gaz)
-    mapping = canon.canonical_mapping(gaz)
-    triples_raw = relations.extract_relations(
-        canon.canonicalize_links(links, mapping))
-    return materialize.finalize_triples(triples_raw)
+    def pages() -> DataFrame:
+        return skew.spread(corpus.synth_pages(spark, sf_dir), ["url"],
+                           nparts)
+    return materialize.run_stages(
+        spark, out_dir, _stage,
+        lambda stage: kg_stages(spark, stage, pages, linker_mode),
+        force=force)
 
 
 def main() -> None:

@@ -210,22 +210,18 @@ def stream_triples(pages_stream: DataFrame, model_bc, gaz: DataFrame,
     Batch/stream agreement is exact: every stage is per-document or a
     broadcast join against static tables, so draining N file drops
     yields byte-identical triple rows to one batch run over their
-    union (pinned in tests)."""
-    from kgp import canonicalize as _canon
-    from kgp import linker as _linker
-    from kgp import relations as _relations
-
-    link_fn = (_linker.link_mentions_reference
-               if linker_mode == "reference" else _linker.link_mentions)
+    union (pinned in tests). Each micro-batch runs the batch DAG's own
+    stage builders (kgp.pipeline.triple_stages) lazily, with the
+    supplied canon mapping in place of the canon stage."""
+    from kgp.materialize import lazy_stage
+    from kgp.pipeline import triple_stages
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        docs = extract_stage(batch_df)
-        found = detect_mentions(docs, model_bc)
-        links = link_fn(found, gaz)
-        triples = _relations.extract_relations(
-            _canon.canonicalize_links(links, mapping))
+        triples = triple_stages(
+            lazy_stage(given={"canon": mapping}), extract_stage(batch_df),
+            model_bc, gaz, linker_mode)["triples_raw"]
         triples.write.mode("overwrite").parquet(
             f"{out_dir}/epoch={epoch_id}")
 

@@ -88,3 +88,26 @@ def test_hotelsbase_importer(spark):
     # importable into the linking pipeline's gazetteer shape
     from kgp.linker import expand_gazetteer
     assert expand_gazetteer(import_hotelsbase(df, 0)).count() == 2
+
+
+def test_alternate_names_java_split_rule(spark, tmp_path):
+    """Both alternate-names readers apply Java's split("\\t"): trailing
+    empty fields are dropped before the 4-field check, interior empty
+    ones are kept — so an interior-empty name survives as ''."""
+    from kgp.corpus import alternate_names_from_lines, read_alternate_names
+    lines = ["1\t10\tde\tStuttgart",
+             "2\t11\tde\t\tfoo",         # interior-empty name: kept
+             "3\t12\tde\t",              # trailing-empty name: skipped
+             "4\t13\tde\t\t\t",          # all-trailing empties: skipped
+             "5\t14\t\tNoLang\t\t",      # empty language, trailing tabs
+             "6\t15\tabbr\tStgt",
+             "7\t16\tpost\t70173",       # not an ISO 639-1 code
+             "8\t17\ten"]                # < 4 fields
+    path = tmp_path / "alternateNames.txt"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    # (geonameid, name, language): the id is the SECOND column
+    want = [(10, "Stuttgart", "de"), (11, "", "de"), (14, "NoLang", None),
+            (15, "Stgt", None)]
+    for df in (read_alternate_names(spark, str(path)),
+               alternate_names_from_lines(spark.read.text(str(path)))):
+        assert sorted(tuple(r) for r in df.collect()) == want

@@ -6,12 +6,14 @@ composition."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from kgp import curation, dedup, materialize
-from kgp.datapipeline import run_data_pipeline
+from kgp.datapipeline import curation_stages, run_data_pipeline
 
 SF = "/root/testdata/sf0.001"
 
@@ -69,3 +71,25 @@ def test_lineage_rows_per_stage(spark, run_dir):
               materialize.lineage(spark, run_dir).collect()}
     assert {"pages", "dedup", "signals", "curated", "links",
             "host_graph", "ranks"} <= stages
+
+
+def test_lazy_curated_matches_materialized(spark, run_dir):
+    """The curation DAG run lazily (no tables) yields the materialized
+    curated corpus row for row."""
+    lazy = curation_stages(spark, materialize.lazy_stage(), SF)["curated"]
+    done = materialize.read_stage(spark, run_dir, "curated")
+    cols = ["doc_id", "url", "clean_text"]
+    assert (sorted(tuple(r) for r in lazy.select(*cols).collect())
+            == sorted(tuple(r) for r in done.select(*cols).collect()))
+
+
+def test_import_leaves_kg_pipeline_unloaded():
+    """The curation pipeline shares only the materialize layer with the
+    KG pipeline: importing it loads none of the KG stage modules."""
+    kg = ["kgp.pipeline", "kgp.mentions", "kgp.linker", "kgp.relations"]
+    code = ("import sys, kgp.datapipeline; "
+            f"print([m for m in {kg!r} if m in sys.modules])")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]", out

@@ -89,3 +89,16 @@ def test_get_2_digits():
     assert get_2_digits(0) == "00"
     assert get_2_digits(9) == "09"
     assert get_2_digits(10) == "10"
+
+
+def test_get_difference_replays_month_quirk():
+    """getCalendar sets the 1-based month as the 0-based Calendar.MONTH
+    with lenient rollover: 2023-01-31 reads as 2023-03-03 and
+    2023-02-28 as 2023-03-28, so the pair is 25 days apart, not 28.
+    Same-month pairs are unaffected."""
+    def day(y, m, d):
+        return dp.ParsedDate("", "", y, m, d, -1, -1, -1, None)
+    assert get_difference(day(2023, 1, 31), day(2023, 2, 28), DAYS) == 25
+    assert get_difference(day(2023, 1, 15), day(2023, 2, 15), DAYS) == 28
+    assert get_difference(day(2023, 12, 31), day(2024, 1, 1), DAYS) == 1
+    assert get_difference(day(2023, 3, 1), day(2023, 3, 31), DAYS) == 30

@@ -79,15 +79,6 @@ def test_footer_checksum_tracks_content(spark, tmp_path):
     assert m1[0][4] != m2[0][4]
 
 
-def test_full_checksum_mode(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("KGP_LINEAGE_FULL", "1")
-    out, n = _write(spark, tmp_path, rows=40, stage="full")
-    assert n == 40
-    lin = materialize.lineage(spark, str(tmp_path))
-    rows = lin.where(F.col("stage") == "full").collect()
-    assert sum(r.output_rows for r in rows) == 40
-
-
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """Two tables bucketed on the same key join WITHOUT any Exchange —
     the co-located-join contract that removes the biggest shuffle from
