@@ -118,7 +118,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     if len(probe) <= small_threshold:
         canon = _union_find((r[0], r[1]) for r in probe)
         rows = [(x, canon[x]) for x in sorted(canon)]
-        return edges.sparkSession.createDataFrame(rows, out_schema)
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame(rows, columns=out_schema.fieldNames()), out_schema)
     return (_cc_distributed(edges, max_iter)
             .select(F.col("entity_id").cast(id_type).alias("entity_id"),
                     F.col("canon_id").cast(id_type).alias("canon_id")))

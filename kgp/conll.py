@@ -346,7 +346,7 @@ def annotations_from_xml_text(tagged_text: str) -> list[Ann]:
     inside an entity, whose markup is stripped and newlines removed
     from the value — the reference's exact arithmetic). The reader
     complement of tag_text's XML writer; also loads TUD-Loc-style
-    gold markup for kgp.geoeval."""
+    gold markup."""
     out: list[Ann] = []
     cumulated = 0
     for m in _XML_ANN_RE.finditer(tagged_text):

@@ -141,7 +141,8 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
     """Write df as the stage table + lineage manifest; return the
     re-read DataFrame (so downstream stages consume the materialized
     table, cutting lineage and letting AQE re-plan per stage) plus the
-    exact row count (summed from the manifest — no extra count job)."""
+    exact row count (summed from the manifest — no extra count job).
+    The re-read is given df's schema: no schema-inference job runs."""
     path = stage_path(out_dir, stage)
     t0 = time.time()
     w = df.write.mode("overwrite")
@@ -149,7 +150,7 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
         w = w.partitionBy(*partition_by)
     w.parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
-    out = spark.read.parquet(path)
+    out = spark.read.schema(df.schema).parquet(path)
     frows = footer_manifest(path, stage)
     _append_lineage_rows(spark, out_dir, frows, wall_ms, input_rows)
     return out, sum(r[3] for r in frows)
@@ -237,29 +238,6 @@ def finalize_triples(triples: DataFrame) -> DataFrame:
                  F.min("url").alias("url"),
                  F.min("sent_idx").alias("sent_idx"),
                  F.count("*").alias("support")))
-
-
-# ------------------------------------------------------- bucketed tables
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   num_buckets: int = 64,
-                   sort_cols: list[str] | None = None) -> None:
-    """Materialize as a BUCKETED table (saveAsTable — bucket metadata
-    lives in the session catalog; on a cluster this is the Iceberg
-    bucket-partition transform). Joins/aggregations between tables
-    bucketed the same way on the same keys run WITHOUT a shuffle —
-    the pre-partitioning that turns the pipeline's repeated
-    entity/url joins into map-side work at 100 TB."""
-    w = (df.write.mode("overwrite")
-         .bucketBy(num_buckets, *bucket_cols))
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 # ---------------------------------------------------------- compaction

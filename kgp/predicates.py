@@ -839,7 +839,7 @@ def get_tense(text: str, tags: list[str]) -> str:
     rules over the sentence's tag set — VBD without is/are -> past,
     HVD+VBN/HVN -> past perfect, HV+VBN/HVN -> present perfect, VBN
     without is/are -> present perfect, was/were fallback -> past.
-    Tags come from the Brown-tagged kgp.postag output."""
+    Tags are Brown-corpus POS tags, one per token."""
     from kgp.rules import contains_word
     if not text:
         return SIMPLE_PRESENT

@@ -183,10 +183,8 @@ def extract_relations(links: DataFrame,
 # strings between same-sentence tagged mention pairs become anchored
 # Pattern entries — the reference's Apriori support counting
 # (extraction/apriori/Apriori.java) applied to relation phrasing
-# instead of market baskets (SURVEY §2.8). kgp.apriori.
-# mine_infix_patterns keeps the token-SET flavor; this one mines the
-# literal infix so the result anchors with fullmatch like the hand
-# bank.
+# instead of market baskets (SURVEY §2.8). It mines the literal
+# infix, so the result anchors with fullmatch like the hand bank.
 
 
 def induce_patterns(links: DataFrame, min_support: float = 0.05,

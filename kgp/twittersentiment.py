@@ -21,7 +21,7 @@ Spark shape: ONE Arrow pass per line batch (the quote-toggle split
 and replaceWord's rescan-after-splice semantics are stateful string
 walks); output is just (category, text) rows.  The reference's
 buffer()/RandomSplit/optimizer driver in main() is the experiment
-harness around kgp.textclassifier / kgp.optimize, already ported.
+harness around kgp.textclassifier; it is not ported.
 """
 
 from __future__ import annotations

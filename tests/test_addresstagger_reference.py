@@ -1,16 +1,12 @@
-"""Upstream AddressTagger + GeoEvaluationResult test vectors,
-transcribed mechanically.
+"""Upstream AddressTagger test vectors, transcribed mechanically.
 
-Sources (assertions copied 1:1):
-- AddressTaggerTest.java:17-97 (run on the reference's OWN
-  testTextAddresses.txt fixture through the FileFormatParser.getText
-  XML-strip, FileFormatParser.java:192-196)
-- GeoEvaluationResultTest.java:19-60
+Source (assertions copied 1:1): AddressTaggerTest.java:17-97, run on
+the reference's OWN testTextAddresses.txt fixture through the
+FileFormatParser.getText XML-strip (FileFormatParser.java:192-196).
 """
 
 import re
 
-from kgp.geoeval import geo_counters, geo_evaluate_document
 from kgp.rules import tag_addresses
 
 FIXTURE = ("/root/reference/palladian-core/src/test/resources/"
@@ -98,38 +94,3 @@ def test_address_tagger_sentences():
         "processor, 4GB of RAM, 1920 x 1080 resolution, and a "
         "SuperDrive.") == []
 
-
-# ------------------------------------------ GeoEvaluationResultTest
-
-
-def _ann(start, value, tag, lat, lng):
-    return (start, start + len(value), tag, lat, lng)
-
-
-def test_geo_evaluation_result():
-    gold = [
-        _ann(0, "Paris", "CITY", 33.6625, -95.5477),
-        _ann(7, "Texas", "UNIT", 31.0, -100.0),
-        _ann(53, "Dallas", "CITY", 32.7758, -96.7967),
-        _ann(63, "Lamar County", "UNIT", 33.67, -95.57),
-        _ann(77, "Texas", "UNIT", 31.0, -100.0),
-        _ann(91, "United States", "COUNTRY", 39.76, -98.5),
-        _ann(110, "Sam Bell Maxey House", "POI", 33.6539, -95.555),
-        _ann(154, "Paris", "CITY", 33.6625, -95.5477),
-    ]
-    result = [
-        _ann(0, "Paris", "CITY", 8.8534, 2.3488),
-        _ann(7, "Texas", "UNIT", 31.2504, -99.2506),
-        _ann(53, "Dallas", "CITY", 32.7758, -96.7967),
-        _ann(63, "Lamar County", "UNIT", 33.6668, -95.5836),
-        _ann(77, "Texas", "UNIT", 31.2504, -99.2506),
-        _ann(91, "United States", "COUNTRY", 37.0902, -95.7129),
-        _ann(154, "Paris", "CITY", 8.8534, 2.3488),
-    ]
-    items = geo_evaluate_document(gold, result)
-    correct, retrieved, relevant = geo_counters(items)
-    assert relevant == 4
-    assert correct == 1
-    assert retrieved == 3
-    assert abs(correct / retrieved - 1. / 3) < 0.0001
-    assert abs(correct / relevant - 1. / 4) < 0.0001

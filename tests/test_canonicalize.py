@@ -3,6 +3,7 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgp import constants as C
 from kgp.canonicalize import (canonical_mapping, connected_components,
@@ -43,15 +44,27 @@ def test_cc_long_chain_converges_logarithmically(spark):
 
 
 def test_cc_multiple_components_both_paths(spark):
-    edges = spark.createDataFrame(
-        [(10, 11), (11, 12), (20, 21), (30, 31), (31, 30)],
-        "src long, dst long")
-    want = {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30, 31: 30}
-    small = {r.entity_id: r.canon_id for r in
-             connected_components(edges).collect()}
-    dist = {r.entity_id: r.canon_id for r in
-            connected_components(edges, small_threshold=0).collect()}
-    assert small == want and dist == want
+    """Long ids, string ids (synonym surfaces) and an empty edge set:
+    the small path gives (entity_id, canon_id) sorted by entity_id with
+    non-null columns of the id type, and the distributed path agrees."""
+    for ddl, edges, want in [
+            ("src long, dst long",
+             [(10, 11), (11, 12), (20, 21), (30, 31), (31, 30)],
+             {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30, 31: 30}),
+            ("src string, dst string",
+             [("b", "a"), ("c", "b"), ("x", "y")],
+             {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}),
+            ("src long, dst long", [], {})]:
+        edges = spark.createDataFrame(edges, ddl)
+        id_type = edges.schema["src"].dataType
+        small = connected_components(edges)
+        assert small.schema == T.StructType([
+            T.StructField("entity_id", id_type, False),
+            T.StructField("canon_id", id_type, False)])
+        assert [tuple(r) for r in small.collect()] == sorted(want.items())
+        dist = {r.entity_id: r.canon_id for r in
+                connected_components(edges, small_threshold=0).collect()}
+        assert dist == want
 
 
 def _jvm_canonical_mapping(gaz):

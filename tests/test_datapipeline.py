@@ -12,17 +12,37 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from kgp import curation, dedup, materialize
+from kgp import curation, datapipeline, dedup, materialize
 from kgp.datapipeline import curation_stages, run_data_pipeline
 
 SF = "/root/testdata/sf0.001"
+# stage -> schema of the table the write path returned in the first run
+WRITTEN: dict = {}
 
 
 @pytest.fixture(scope="module")
 def run_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("datapipe"))
-    run_data_pipeline(spark, SF, out)
+    runner = datapipeline._stage
+
+    def recording(spark, out_dir, name, fn, **kw):
+        df = runner(spark, out_dir, name, fn, **kw)
+        WRITTEN[name] = df.schema
+        return df
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(datapipeline, "_stage", recording)
+        run_data_pipeline(spark, SF, out)
     return out
+
+
+def test_write_path_schema_matches_resume_path(spark, run_dir):
+    """Downstream stages see the same schema whether a stage was just
+    written or is resumed from its table."""
+    assert set(WRITTEN) == {"pages", "dedup", "signals", "curated",
+                            "links", "host_graph", "ranks"}
+    for stage, schema in WRITTEN.items():
+        assert schema == materialize.read_stage(
+            spark, run_dir, stage).schema, stage
 
 
 def test_stage_tables_exist(run_dir):

@@ -1,105 +1,8 @@
-"""Upstream LocationSet / AbstractLocation test vectors, transcribed
-mechanically against kgp.locationset.
+"""Upstream AbstractGeoCoordinate test vectors, transcribed
+mechanically against kgp.geo and kgp.spatial.
 
-Sources (assertions copied 1:1):
-- LocationSetTest.java:27-97
-- AbstractLocationTest.java:20-89
+Source (assertions copied 1:1): AbstractGeoCoordinateTest.java:10-46.
 """
-
-import math
-
-from kgp.locationset import (EARTH_MAX_DISTANCE_KM, Loc, LocationSet,
-                             child_of, descendant_of, not_equal,
-                             radius)
-
-L1 = Loc(2028461, "Ulaanbaatar Hot", "UNIT", (47.91667, 106.91667),
-         844818, (2029969, 6255147, 6295630))
-L2 = Loc(2028462, "Ulaanbaatar", "CITY", (47.90771, 106.88324),
-         844818, (2028461, 2029969, 6255147, 6295630))
-L3 = Loc(6295630, "Earth", "REGION", (0.0, 0.0), 6814400000, ())
-L4 = Loc(4653031, "Richmond", "CITY", (35.38563, -86.59194), 0)
-L5 = Loc(4074277, "Madison County", "UNIT", (34.73342, -86.56666), 0)
-L6 = Loc(100080784, "Madison County", "UNIT", (34.76583, -86.55778),
-         None)
-L7 = Loc(8468884, "Fayetteville State University", "POI", None, None)
-
-
-def test_where_predicates():
-    stats = LocationSet([L1, L2, L3, L4, L5, L6, L7])
-    assert not stats.where(descendant_of(L2)).contains(L1)
-    assert not stats.where(child_of(L2)).contains(L1)
-    assert stats.where(descendant_of(L1)).contains(L2)
-    assert stats.where(child_of(L1)).contains(L2)
-    assert stats.where(descendant_of(L3)).contains(L1)
-    assert not stats.where(descendant_of(L1)).contains(L3)
-    assert not stats.where(child_of(L3)).contains(L1)
-    assert stats.where(radius(L5.coordinate, 100)).size() == 3
-
-
-def test_get_largest_distance():
-    assert abs(LocationSet([L1, L2, L4]).largest_distance()
-               - 10656) <= 1
-    assert abs(LocationSet([L1, L2]).largest_distance() - 2.7) <= 0.1
-    assert LocationSet([L1, L2, L4, L7]).largest_distance() == \
-        EARTH_MAX_DISTANCE_KM
-    assert LocationSet([L1]).largest_distance() == 0
-    assert LocationSet([L7]).largest_distance() == 0
-
-
-def test_except():
-    stats = LocationSet([L1, L2, L3, L4])
-    assert stats.size() == 4
-    stats_except = stats.where(not_equal(L2, L3, L5, L7))
-    assert stats_except.size() == 2
-    assert stats_except.contains(L1)
-    assert stats_except.contains(L4)
-    assert stats.where(not_equal(L1)).size() == 3
-
-
-def test_first():
-    stats = LocationSet([L1, L2, L3, L4])
-    assert stats.first().id == 2028461
-    assert LocationSet([]).first() is None
-
-
-# ------------------------------------------- AbstractLocationTest
-
-A1 = Loc(1275525, "Bīrbhūm", "UNIT", (24.0, 87.58333), None,
-         (1252881, 1269750, 6255147, 6295630))
-A2 = Loc(1269750, "Republic of India", "COUNTRY", (22.0, 77.0),
-         1173108018, (6255147, 6295630))
-A3 = Loc(5128581, "New York City", "CITY", (40.71427, -74.00597),
-         8175133, (5128638, 6252001, 6255149, 6295630),
-         (("New York", "en"),))
-A4 = Loc(5128638, "New York", "CITY", (43.00035, -75.4999),
-         19274244, (6252001, 6255149, 6295630))
-
-
-def test_descendant_of():
-    assert A1.descendant_of(A2)
-    assert not A2.descendant_of(A1)
-    assert A3.descendant_of(A4)
-    assert not A4.descendant_of(A3)
-
-
-def test_child_of():
-    assert A3.child_of(A4)
-    assert not A4.child_of(A3)
-    assert not A1.child_of(A2)
-
-
-def test_common_names():
-    assert not A1.common_name(A2)
-    assert A3.common_name(A4)
-
-
-def test_has_name():
-    assert not A3.has_name("New York", {"it"})
-    assert A3.has_name("New York", {"en"})
-    assert A3.has_name("new york", {"en"})
-    assert A3.has_name("New York City", {"de"})
-    assert A3.has_name("New York City", {"en"})
-    assert A3.has_name("new york city", {"en"})
 
 
 # --------------------------------------- AbstractGeoCoordinateTest

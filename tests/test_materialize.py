@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,31 +80,60 @@ def test_footer_checksum_tracks_content(spark, tmp_path):
     assert m1[0][4] != m2[0][4]
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the same key join WITHOUT any Exchange —
-    the co-located-join contract that removes the biggest shuffle from
-    repeated entity joins at scale."""
-    from kgp.materialize import read_bucketed, write_bucketed
-    from pyspark.sql import functions as F
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+def _jobs_in_group(spark, group, run):
+    """Spark jobs that run() starts, counted by job group. A control
+    job in its own group runs after; job-start events arrive in order,
+    so once the control job shows, every job of run() has too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        left = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("v1"))
-        right = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("v2"))
-        write_bucketed(left, "bk_left", ["k"], num_buckets=8,
-                       sort_cols=["k"])
-        write_bucketed(right, "bk_right", ["k"], num_buckets=8,
-                       sort_cols=["k"])
-        joined = read_bucketed(spark, "bk_left").join(
-            read_bucketed(spark, "bk_right"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
+        run()
+        sc.setJobGroup(group + "-control", "control")
+        spark.range(4).rdd.count()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while (not tracker.getJobIdsForGroup(group + "-control")
+           and time.time() < deadline):
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(group + "-control")
+    return len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [None, ["pred"]])
+def test_write_stage_rereads_without_inference(spark, tmp_path,
+                                               partition_by):
+    """write_stage runs exactly the jobs of a plain parquet write of the
+    same frame: its re-read is given the schema instead of inferring
+    it. The schema it returns is the one inference gives, nested
+    nullability and partition-column order included."""
+    df = spark.range(60).select(
+        F.col("id"),
+        F.concat(F.lit("p"), (F.col("id") % 3).cast("string")).alias("pred"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+        F.struct(F.col("id").alias("a"),
+                 F.lit("x").alias("b")).alias("st"),
+        (F.col("id") / 7).alias("ratio"))
+    tag = "part" if partition_by else "flat"
+
+    def plain():
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(tmp_path / "plain"))
+    got = {}
+
+    def staged():
+        got["out"], got["rows"] = materialize.write_stage(
+            spark, df, str(tmp_path), "s", partition_by=partition_by)
+    assert (_jobs_in_group(spark, f"stage-{tag}", staged)
+            == _jobs_in_group(spark, f"plain-{tag}", plain))
+    path = materialize.stage_path(str(tmp_path), "s")
+    assert got["out"].schema == spark.read.parquet(path).schema
+    assert got["rows"] == 60
+    assert (sorted(map(tuple, got["out"].collect()))
+            == sorted(map(tuple, spark.read.parquet(path).collect())))
 
 
 def test_compact_stage_checksum_verified_swap(spark, tmp_path):

@@ -6,17 +6,38 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kgp import materialize
+from kgp import materialize, pipeline
 from kgp.corpus import synth_pages
 from kgp.golden import golden_triples, precision_recall
 from kgp.pipeline import kg_stages, run_pipeline
+
+# stage -> schema of the table the write path returned in the first run
+WRITTEN: dict = {}
 
 
 @pytest.fixture(scope="module")
 def run_dir(spark, sf_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kgp-run"))
-    run_pipeline(spark, sf_dir, out)
+    runner = pipeline._stage
+
+    def recording(spark, out_dir, name, fn, **kw):
+        df = runner(spark, out_dir, name, fn, **kw)
+        WRITTEN[name] = df.schema
+        return df
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(pipeline, "_stage", recording)
+        run_pipeline(spark, sf_dir, out)
     return out
+
+
+def test_write_path_schema_matches_resume_path(spark, run_dir):
+    """Downstream stages see the same schema whether a stage was just
+    written or is resumed from its table."""
+    assert set(WRITTEN) == {"pages", "docs", "ner_model", "mentions",
+                            "links", "canon", "triples_raw", "triples"}
+    for stage, schema in WRITTEN.items():
+        assert schema == materialize.read_stage(
+            spark, run_dir, stage).schema, stage
 
 
 def _doc_ids(spark, sf_dir):

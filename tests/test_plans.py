@@ -86,6 +86,27 @@ def test_exact_dedup_shuffles_on_fingerprint_not_text(spark):
     assert "_norm" not in exchanges[0]
 
 
+def test_near_dup_groups_joins_a_local_relation(spark):
+    """The connected-components small path hands near_dup_groups an
+    Arrow local relation, never a Python-pickled RDD scan."""
+    import pandas as pd
+    from kgp.dedup import near_dup_groups
+    base = ("the quick brown fox jumps over the lazy dog near the river "
+            "bank and then rests in the shade of a large oak tree while "
+            "the sun sets slowly behind the distant mountains")
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "text": [base, base.replace("lazy dog", "sleepy dog"),
+                 "spark dataframes shuffle partitions with broadcast joins "
+                 "and whole stage code generation for columnar speed"]}),
+        "doc_id long, text string")
+    groups = near_dup_groups(docs)
+    plan = plan_of(groups)
+    assert "ExistingRDD" not in plan, plan
+    assert {r.doc_id: r.group_id for r in groups.collect()} == \
+        {1: 1, 2: 1, 3: 3}
+
+
 def test_brute_force_topk_window_sees_partial_rows(spark):
     """The exact ANN path must reduce map-side: the rank window input
     is the mapInPandas partial-topk output (Q*k rows per partition),
@@ -148,17 +169,6 @@ def test_roc_auc_windows_distinct_scores_only(spark):
     plan = plan_of(roc_auc(r))
     assert plan.index("Window") > plan.index("HashAggregate") or \
         "Window" not in plan.split("HashAggregate")[0]
-
-
-def test_sentiment_and_pagetype_zero_shuffle(spark):
-    from kgp.pagetype import content_type_stage
-    from kgp.sentiment import sentiment_stage
-    docs = spark.createDataFrame([(1, "Das ist toll.")],
-                                 "doc_id long, text string")
-    assert "Exchange" not in plan_of(sentiment_stage(docs, {"toll": .5}))
-    pages = spark.createDataFrame([("u", b"<html></html>")],
-                                  "url string, html binary")
-    assert "Exchange" not in plan_of(content_type_stage(pages))
 
 
 def test_forest_scoring_is_pure_jvm(spark):

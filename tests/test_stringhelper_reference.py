@@ -2,7 +2,7 @@
 MECHANICALLY for the ported members — replaceWord, camelCaseToWords,
 removeNumbering, reverseString, putArticleInFront, normalizeQuotes,
 getCaseSignature, isCompletelyUppercase, isNumericExpression,
-isTimeExpression, containsNumber."""
+containsNumber."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pytest
 
 import kgp.stringhelpers as sh
 from kgp.entity_preprocess import normalize_quotes
-from kgp.lists import _is_time_expression
 from kgp.mentions import get_case_signature, is_completely_uppercase
 from kgp.wikpostag import is_numeric_expression
 
@@ -61,8 +60,6 @@ def test_string_vectors(method, call, fn, nargs, min_n):
      is_completely_uppercase, 3),
     ("testIsNumericExpression", "isNumericExpression",
      is_numeric_expression, 7),
-    ("testIsTimeExpression", "isTimeExpression",
-     _is_time_expression, 3),
     ("testContainsNumber", "containsNumber", sh.contains_number, 4),
 ])
 def test_bool_vectors(method, call, fn, min_n):

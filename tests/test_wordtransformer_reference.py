@@ -1,9 +1,9 @@
 """The reference's OWN WordTransformerTest English vectors
 (WordTransformerTest.java:54-265) harvested MECHANICALLY from the
 Java source — singular/plural nouns and the three verb transforms.
-(testSplitGermanCompounds and testGetTense are already reproduced in
-tests/test_germancompound.py / tests/test_predicates.py; the German
-noun methods need the reference's unshipped word DB.)"""
+(testGetTense is already reproduced in tests/test_predicates.py;
+testSplitGermanCompounds and the German noun methods need the
+reference's unshipped word DB.)"""
 
 from __future__ import annotations
 
