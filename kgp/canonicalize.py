@@ -31,10 +31,24 @@ Scale notes:
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def local_relation(spark: SparkSession, schema: T.StructType,
+                   columns) -> DataFrame:
+    """A driver-built table as an Arrow local relation: `columns` holds
+    one sequence (a list, numpy or Arrow array) per schema field. It
+    plans as `LocalTableScan` whatever the row count — PySpark sends an
+    empty pandas frame down its pickled-RDD path — and keeps the
+    schema's non-null fields."""
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow), schema)
 
 
 def _alias_edges(rows) -> list[tuple]:
@@ -60,8 +74,8 @@ def same_entity_edges(gaz: DataFrame) -> DataFrame:
     schema = T.StructType([T.StructField("src", id_type, False),
                            T.StructField("dst", id_type, False)])
     edges = _alias_edges(gaz.select("id", "name", "alt_names").collect())
-    return gaz.sparkSession.createDataFrame(
-        pd.DataFrame(edges, columns=schema.fieldNames()), schema)
+    return local_relation(gaz.sparkSession, schema,
+                          [[e[i] for e in edges] for i in range(2)])
 
 
 def _union_find(edges) -> dict:
@@ -117,9 +131,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     probe = edges.limit(small_threshold + 1).collect()
     if len(probe) <= small_threshold:
         canon = _union_find((r[0], r[1]) for r in probe)
-        rows = [(x, canon[x]) for x in sorted(canon)]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=out_schema.fieldNames()), out_schema)
+        ids = sorted(canon)
+        return local_relation(edges.sparkSession, out_schema,
+                              [ids, [canon[x] for x in ids]])
     return (_cc_distributed(edges, max_iter)
             .select(F.col("entity_id").cast(id_type).alias("entity_id"),
                     F.col("canon_id").cast(id_type).alias("canon_id")))
@@ -174,8 +188,8 @@ def canonical_mapping(gaz: DataFrame) -> DataFrame:
         T.StructField("entity_id", gaz.schema["id"].dataType),
         T.StructField("canon_id", gaz.schema["id"].dataType),
         T.StructField("canon_name", gaz.schema["name"].dataType)])
-    return gaz.sparkSession.createDataFrame(
-        pd.DataFrame(out, columns=schema.fieldNames()), schema)
+    return local_relation(gaz.sparkSession, schema,
+                          [[r[i] for r in out] for i in range(3)])
 
 
 def canonicalize_links(links: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -25,10 +25,12 @@ lineage append when materialized):
   links / host_graph / ranks — web-graph tables over ALL pages (the
             graph wants the full crawl, not the curated subset)
 
-Scale shape: every stage is an already-audited distributed operator
-(8-byte-key dedup shuffles, pure-JVM signal columns, banded
-LSH+verify funnel, co-partitioned graph propagation); this module
-only sequences and materializes them.
+Scale shape: every stage is an already-audited operator (8-byte-key
+dedup shuffles, pure-JVM signal columns, banded LSH+verify funnel,
+link extraction in one Arrow pass, and PageRank that runs on the
+driver for a graph of up to kgp.canonicalize.SMALL_GRAPH_EDGES edges
+and as a distributed loop above that); this module only sequences
+and materializes them.
 """
 
 from __future__ import annotations

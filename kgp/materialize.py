@@ -1,11 +1,13 @@
 """Stage 6 — materialization, lineage manifests, checkpoint-resume.
 
 Each pipeline stage writes its output as a table under the run
-directory; a stage that already has a `_SUCCESS` marker is NOT
-recomputed on re-run (checkpoint-resume at stage boundaries — the
-north-rule requirement; on a cluster these are Iceberg tables and the
-existence check is a catalog lookup + snapshot validation, here it is
-parquet + `_SUCCESS`, same semantics).
+directory; a stage that already has a `_SUCCESS` marker and its
+`_stage.json` is NOT recomputed on re-run (checkpoint-resume at stage
+boundaries — the north-rule requirement; on a cluster these are
+Iceberg tables and the existence check is a catalog lookup + snapshot
+validation, here it is parquet + `_SUCCESS`, same semantics).
+`_stage.json` holds the table's schema, so a resumed stage is read
+without a schema-inference job; Spark's reader skips `_` files.
 
 Lineage: after each stage lands, its parquet footers are read on the
 driver with pyarrow (no Spark job) and one row per written file is
@@ -29,11 +31,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from hashlib import blake2b
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 LINEAGE_SCHEMA = ("stage string, partition_id int, input_rows long, "
                   "output_rows long, checksum long, wall_ms long, "
@@ -44,9 +48,25 @@ def stage_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, stage)
 
 
+STAGE_META = "_stage.json"
+
+
 def stage_done(out_dir: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(stage_path(out_dir, stage),
-                                       "_SUCCESS"))
+    """The table was written to the end and its schema stored: a table
+    without `_stage.json` (cut off, or written before the file
+    existed) is recomputed."""
+    path = stage_path(out_dir, stage)
+    return all(os.path.exists(os.path.join(path, f))
+               for f in ("_SUCCESS", STAGE_META))
+
+
+def _write_meta(path: str, schema: T.StructType) -> None:
+    """Store the table's schema in `<path>/_stage.json`, written under
+    a dot-prefixed temporary name and renamed into place."""
+    tmp = os.path.join(path, f".{STAGE_META}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"schema": schema.jsonValue()}, f)
+    os.replace(tmp, os.path.join(path, STAGE_META))
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -142,7 +162,8 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
     re-read DataFrame (so downstream stages consume the materialized
     table, cutting lineage and letting AQE re-plan per stage) plus the
     exact row count (summed from the manifest — no extra count job).
-    The re-read is given df's schema: no schema-inference job runs."""
+    The re-read is given df's schema: no schema-inference job runs.
+    The re-read's schema is stored for read_stage."""
     path = stage_path(out_dir, stage)
     t0 = time.time()
     w = df.write.mode("overwrite")
@@ -151,13 +172,19 @@ def write_stage(spark: SparkSession, df: DataFrame, out_dir: str,
     w.parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
     out = spark.read.schema(df.schema).parquet(path)
+    _write_meta(path, out.schema)
     frows = footer_manifest(path, stage)
     _append_lineage_rows(spark, out_dir, frows, wall_ms, input_rows)
     return out, sum(r[3] for r in frows)
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(stage_path(out_dir, stage))
+    """A finished stage's table, read with its stored schema (no
+    inference job)."""
+    path = stage_path(out_dir, stage)
+    with open(os.path.join(path, STAGE_META)) as f:
+        schema = T.StructType.fromJson(json.load(f)["schema"])
+    return spark.read.schema(schema).parquet(path)
 
 
 def _stage(spark: SparkSession, out_dir: str, name: str, fn,
@@ -294,10 +321,10 @@ def compact_stage(spark: SparkSession, out_dir: str, stage: str,
             f"compaction checksum mismatch for {stage}: "
             f"{(n_rows, checksum)} != {(n_rows2, checksum2)}")
 
+    shutil.copy(os.path.join(path, STAGE_META), tmp)
     gc = path + ".gc"
     os.rename(path, gc)
     os.rename(tmp, path)
-    import shutil
     shutil.rmtree(gc)
 
     files_after = len(_parquet_files(path))

@@ -4,7 +4,8 @@
         pipeline.py --sf-dir /root/testdata/sf0.001 --out /tmp/kgp-run
 
 Stage DAG (each stage is a materialized table under --out; a stage with
-a `_SUCCESS` marker is skipped on re-run → checkpoint-resume):
+a `_SUCCESS` marker and a `_stage.json` is skipped on re-run →
+checkpoint-resume):
 
     pages        synthetic Common-Crawl-shaped input (url, warc_ts,
                  html, text, lang) — on a cluster this is the existing

@@ -31,15 +31,20 @@ Graph stages are Spark-first:
   parallel over the page partitions.
 - ``host_graph`` — a single hash aggregation on (src_host, dst_host);
   host parsing stays JVM-side (parse_url), no Python.
-- ``pagerank`` — DataFrame power iteration with dangling-mass
-  redistribution: edges are deduped, pre-partitioned by src and
-  persisted ONCE so every iteration's rank join reuses the same
-  layout; the per-iteration aggregation shuffles by dst only; ranks
-  are localCheckpoint-ed each iteration to truncate the lineage (an
-  unbounded iterative plan otherwise re-executes from the scan). The
-  hot-host in-degree skew (the corpus hub node) lands in the dst-side
-  aggregation, where partial (map-side) sums absorb it before the
-  shuffle; AQE skew-join splitting covers the join side.
+- ``pagerank`` / ``hits`` — two regimes, picked by one probe (a
+  ``limit(k+1)`` Arrow collect, one job) as in
+  ``kgp.canonicalize.connected_components``: a graph of at most
+  ``SMALL_GRAPH_EDGES`` edges is deduped and power-iterated in numpy
+  on the driver over a fixed, sorted node and edge order and returned
+  as an Arrow local relation; a larger one runs the distributed loop
+  (edges deduped, src-partitioned and persisted once, one join plus
+  one dst aggregation per iteration, where map-side partial sums absorb
+  the hub node's in-degree skew, scores localCheckpoint-ed per
+  iteration). PageRank sums in fixed point in both regimes (every
+  rank/deg contribution and dangling rank is ``floor(x * 2**60)`` as
+  a long, and long addition is associative), so its ranks are
+  bit-identical across regimes, partitionings, core counts and
+  resumes. An edge with a null endpoint is no edge in either regime.
 """
 
 from __future__ import annotations
@@ -48,10 +53,15 @@ import re
 from functools import reduce as functools_reduce
 from urllib.parse import urljoin, urlsplit
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from kgp.canonicalize import SMALL_GRAPH_EDGES, local_relation
 from kgp.html_text import Node, parse_html, sniff_decode
 
 # schemes java.net.URL has stock protocol handlers for; anything else
@@ -340,51 +350,129 @@ def host_graph(links: DataFrame) -> DataFrame:
                  F.countDistinct("src_url").alias("n_src_pages")))
 
 
+# fixed-point scale of the PageRank sums: a rank is at most 1, so a sum
+# of contributions stays far inside a long, and floor() moves each
+# contribution by less than 2**-60
+_FIX = 2.0 ** 60
+_UNFIX = 2.0 ** -60
+
+
+def _edge_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(src, dst) with both endpoints set: an edge with a null endpoint
+    is no edge, in either regime — it adds no node and no degree."""
+    return (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
+
+
+def _small_edge_index(e: DataFrame, small_threshold: int):
+    """The regime probe: ONE limit(k+1) Arrow collect (one job). None
+    when the graph has more than small_threshold edges; otherwise
+    (nodes, s, d): the distinct nodes, sorted, as an Arrow array, and
+    the distinct edges as node-index arrays sorted by (s, d) — a fixed
+    order whatever the input's partitioning."""
+    t = e.limit(small_threshold + 1).toArrow()
+    if t.num_rows > small_threshold:
+        return None
+    nodes = pc.unique(pa.chunked_array(t["src"].chunks + t["dst"].chunks,
+                                       type=t.schema.field("src").type))
+    nodes = nodes.take(pc.sort_indices(nodes))
+    n = len(nodes)
+
+    def index(col):
+        return pc.index_in(col, value_set=nodes).to_numpy().astype(np.int64)
+    s, d = np.divmod(np.unique(index(t["src"]) * n + index(t["dst"])),
+                     max(n, 1))
+    return nodes, s, d
+
+
+def _score_schema(e: DataFrame, scores: list[str],
+                  nullable: bool) -> T.StructType:
+    """(node, *scores) as the distributed regime plans it, so both
+    regimes return the same schema."""
+    return T.StructType(
+        [T.StructField("node", e.schema["src"].dataType)]
+        + [T.StructField(c, T.DoubleType(), nullable) for c in scores])
+
+
 def pagerank(edges: DataFrame, iterations: int = 5,
-             damping: float = 0.85, src: str = "src",
-             dst: str = "dst") -> DataFrame:
+             damping: float = 0.85, src: str = "src", dst: str = "dst",
+             small_threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
     """(node, rank) after `iterations` power steps with dangling-mass
     redistribution: rank' = (1-d)/N + d*(in-contribs + dangling/N).
 
-    Scale shape: edges dedupe + repartition(src) + persist happens
-    ONCE; each iteration is one co-partitioned join on src plus one
-    aggregation shuffle on dst; the rank frame is localCheckpoint-ed
-    per iteration so the plan stays one-iteration deep. The dangling
-    mass is a scalar aggregation per iteration (one tiny job), the
-    only driver-side value in the loop.
+    The sums are in fixed point: each contribution rank/deg and each
+    dangling rank becomes floor(x * 2**60) as a long, long addition is
+    exact in any order, and both regimes turn the sums back into
+    doubles by the same operations. The ranks are bit-identical
+    whichever regime, partitioning, core count or resume made them.
+
+    Scale shape: one probe picks the regime. A graph of at most
+    small_threshold edges is collected once, deduped and iterated in
+    numpy on the driver, and the ranks come back as an Arrow local
+    relation — the probe is the only Spark job. A larger graph runs
+    distributed: edges deduped, src-partitioned and persisted once;
+    each iteration is one join on src plus one aggregation shuffle on
+    dst, the dangling mass a one-row aggregate cross-joined into the
+    update (no driver round trip), and the rank frame is
+    localCheckpoint-ed so the plan stays one iteration deep.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct().repartition("src").persist())
+    e = _edge_pairs(edges, src, dst)
+    small = _small_edge_index(e, small_threshold)
+    if small is None:
+        return _pagerank_distributed(e, iterations, damping)
+    nodes, s, d = small
+    return local_relation(
+        e.sparkSession, _score_schema(e, ["rank"], True),
+        [nodes, _pagerank_local(len(nodes), s, d, iterations, damping)])
+
+
+def _pagerank_local(n: int, s: np.ndarray, d: np.ndarray,
+                    iterations: int, damping: float) -> np.ndarray:
+    """The power iteration over index arrays, in the fixed-point
+    arithmetic of _pagerank_distributed, operation for operation."""
+    if n == 0:
+        return np.zeros(0)
+    deg = np.bincount(s, minlength=n)
+    dangling = deg == 0
+    teleport = (1.0 - damping) / n
+    r = np.full(n, 1.0 / n)
+    for _ in range(iterations):
+        cfx = np.zeros(n, dtype=np.int64)
+        np.add.at(cfx, d, np.floor(r[s] / deg[s] * _FIX).astype(np.int64))
+        dfx = np.floor(r[dangling] * _FIX).astype(np.int64).sum()
+        r = teleport + damping * (cfx * _UNFIX + dfx * _UNFIX / n)
+    return r
+
+
+def _pagerank_distributed(e: DataFrame, iterations: int,
+                          damping: float) -> DataFrame:
+    e = e.distinct().repartition("src").persist()
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node")))
              .distinct().persist())
     n = nodes.count()
-    if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
     outdeg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
     dangling = nodes.join(outdeg.withColumnRenamed("src", "node"),
                           "node", "left_anti").persist()
     teleport = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iterations):
-        dmass = (dangling.join(ranks, "node")
-                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                 .first()[0])
-        contrib = (e.join(ranks.withColumnRenamed("node", "src"), "src")
-                   .join(outdeg, "src")
-                   .groupBy("dst")
-                   .agg(F.sum(F.col("rank") / F.col("deg"))
-                        .alias("contrib")))
+        share = (ranks.withColumnRenamed("node", "src").join(outdeg, "src")
+                 .select("src", F.floor(F.col("rank") / F.col("deg")
+                                        * _FIX).alias("share")))
+        cfx = (e.join(share, "src").groupBy("dst")
+               .agg(F.sum("share").alias("cfx")))
+        dfx = (dangling.join(ranks, "node")
+               .agg(F.coalesce(F.sum(F.floor(F.col("rank") * _FIX)),
+                               F.lit(0)).alias("dfx")))
+        contrib = F.coalesce(F.col("cfx"), F.lit(0)).cast("double") * _UNFIX
+        dmass = F.col("dfx").cast("double") * _UNFIX / n
         ranks = (nodes
-                 .join(contrib.withColumnRenamed("dst", "node"),
-                       "node", "left")
-                 .select("node",
-                         (F.lit(teleport)
-                          + damping * (F.coalesce(F.col("contrib"),
-                                                  F.lit(0.0))
-                                       + F.lit(dmass / n)))
-                         .alias("rank")))
-        ranks = ranks.localCheckpoint(eager=True)
+                 .join(cfx.withColumnRenamed("dst", "node"), "node", "left")
+                 .crossJoin(dfx)
+                 .select("node", (F.lit(teleport) + F.lit(damping)
+                                  * (contrib + dmass)).alias("rank"))
+                 .localCheckpoint(eager=True))
     return ranks
 
 
@@ -467,23 +555,40 @@ def crawl_reachable(links: DataFrame, seeds: DataFrame,
 
 
 def hits(edges: DataFrame, iterations: int = 5, src: str = "src",
-         dst: str = "dst") -> DataFrame:
+         dst: str = "dst",
+         small_threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
     """HITS hubs & authorities (Kleinberg), L1-normalized per half-step
     so scores stay comparable across engines: auth' = Σ hub(in-nbrs)
     then /= Σ auth'; hub' = Σ auth(out-nbrs) then /= Σ hub'.
 
-    (node, hub, auth). Same scale shape as pagerank: edges deduped +
-    partitioned once, two aggregation shuffles per iteration, scores
-    localCheckpoint-ed; the two normalization sums are scalar jobs.
+    (node, hub, auth). Same regimes as pagerank, from the same probe
+    and edge index: a small graph is iterated in numpy on the driver
+    over the fixed edge order (deterministic, no per-iteration job); a
+    larger one runs distributed — edges deduped and partitioned once,
+    two aggregation shuffles per iteration, scores localCheckpoint-ed,
+    and the two normalization sums as scalar jobs.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct().repartition("src").persist())
+    e = _edge_pairs(edges, src, dst)
+    small = _small_edge_index(e, small_threshold)
+    if small is None:
+        return _hits_distributed(e, iterations)
+    nodes, s, d = small
+    hub, auth = np.ones(len(nodes)), np.ones(len(nodes))
+    for _ in range(iterations):
+        auth = np.bincount(d, weights=hub[s], minlength=len(nodes))
+        auth = auth / auth.sum()
+        hub = np.bincount(s, weights=auth[d], minlength=len(nodes))
+        hub = hub / hub.sum()
+    return local_relation(e.sparkSession,
+                          _score_schema(e, ["hub", "auth"], False),
+                          [nodes, hub, auth])
+
+
+def _hits_distributed(e: DataFrame, iterations: int) -> DataFrame:
+    e = e.distinct().repartition("src").persist()
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node")))
              .distinct().persist())
-    if nodes.isEmpty():
-        return nodes.select("node", F.lit(0.0).alias("hub"),
-                            F.lit(0.0).alias("auth"))
     scores = nodes.select("node", F.lit(1.0).alias("hub"),
                           F.lit(1.0).alias("auth"))
     for _ in range(iterations):

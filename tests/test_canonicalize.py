@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,22 +111,8 @@ def test_canonical_mapping_matches_distributed_components(spark):
         10: 10, 11: 11, 12: 12}
 
 
-def test_canonical_mapping_of_gazetteer_runs_no_job(spark):
-    sc = spark.sparkContext
-    sc.setJobGroup("canon-no-job", "canonical mapping")
-    try:
-        assert len(canonical_mapping(gazetteer(spark)).collect()) == \
-            len(expected_canon())
-        # control: a job after it in another group; job-start events
-        # arrive in order, so once it shows any canon job would too
-        sc.setJobGroup("canon-control", "control")
-        spark.range(4).rdd.count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while (not tracker.getJobIdsForGroup("canon-control")
-           and time.time() < deadline):
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup("canon-control")
-    assert tracker.getJobIdsForGroup("canon-no-job") == []
+def test_canonical_mapping_of_gazetteer_runs_no_job(spark, jobs_in_group):
+    got = []
+    assert jobs_in_group("canon-no-job", lambda: got.extend(
+        canonical_mapping(gazetteer(spark)).collect())) == 0
+    assert len(got) == len(expected_canon())

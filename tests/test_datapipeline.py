@@ -6,6 +6,7 @@ composition."""
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 
@@ -18,10 +19,12 @@ from kgp.datapipeline import curation_stages, run_data_pipeline
 SF = "/root/testdata/sf0.001"
 # stage -> schema of the table the write path returned in the first run
 WRITTEN: dict = {}
+# stage -> Spark jobs it ran in the first run
+FULL_JOBS: dict = {}
 
 
 @pytest.fixture(scope="module")
-def run_dir(spark, tmp_path_factory):
+def run_dir(spark, tmp_path_factory, per_stage_jobs):
     out = str(tmp_path_factory.mktemp("datapipe"))
     runner = datapipeline._stage
 
@@ -30,7 +33,8 @@ def run_dir(spark, tmp_path_factory):
         WRITTEN[name] = df.schema
         return df
     with pytest.MonkeyPatch.context() as m:
-        m.setattr(datapipeline, "_stage", recording)
+        m.setattr(datapipeline, "_stage",
+                  per_stage_jobs(recording, "full", FULL_JOBS))
         run_data_pipeline(spark, SF, out)
     return out
 
@@ -84,6 +88,37 @@ def test_resume_skips_everything(spark, run_dir):
     m = run_data_pipeline(spark, SF, run_dir)
     assert all(v.get("resumed") for v in m.values()
                if isinstance(v, dict) and "resumed" in v), m
+
+
+def test_resume_reads_run_no_job(spark, run_dir, per_stage_jobs):
+    """A resume reads every reused stage with its stored schema: no
+    read runs a Spark job (an inferred schema costs one each)."""
+    jobs: dict = {}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(materialize, "read_stage", per_stage_jobs(
+            materialize.read_stage, "curate-read", jobs))
+        run_data_pipeline(spark, SF, run_dir)
+    assert jobs == dict.fromkeys(WRITTEN, 0)
+
+
+def test_resume_remakes_ranks_exactly(spark, run_dir, per_stage_jobs):
+    """With the web-graph tables deleted, a resume remakes ranks equal
+    (==, no tolerance) to the full run's, and with as many Spark jobs:
+    neither the ranks nor their cost depend on run history."""
+    def ranks():
+        return sorted(map(tuple, materialize.read_stage(
+            spark, run_dir, "ranks").collect()))
+    full = ranks()
+    for stage in ("links", "host_graph", "ranks"):
+        shutil.rmtree(os.path.join(run_dir, stage))
+    jobs: dict = {}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(datapipeline, "_stage", per_stage_jobs(
+            datapipeline._stage, "resume", jobs))
+        metrics = run_data_pipeline(spark, SF, run_dir)
+    assert not metrics["ranks"]["resumed"]
+    assert ranks() == full
+    assert jobs["ranks"] == FULL_JOBS["ranks"]
 
 
 def test_lineage_rows_per_stage(spark, run_dir):

@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +21,24 @@ def test_write_stage_row_count_from_footers(spark, tmp_path):
     assert n == 137
     assert out.count() == 137
     assert materialize.stage_done(str(tmp_path), "s1")
+
+
+def test_stage_done_needs_stored_schema(spark, tmp_path):
+    """read_stage reads the schema write_stage stored; a table without
+    its _stage.json (cut off, or written before the file existed) is
+    not done, and the stage runner recomputes it."""
+    out_dir = str(tmp_path)
+    out, _ = _write(spark, tmp_path, rows=20, stage="s2")
+    assert materialize.read_stage(spark, out_dir, "s2").schema == out.schema
+    os.remove(os.path.join(materialize.stage_path(out_dir, "s2"),
+                           materialize.STAGE_META))
+    assert not materialize.stage_done(out_dir, "s2")
+    metrics: dict = {}
+    materialize._stage(spark, out_dir, "s2", lambda: spark.range(3),
+                       metrics=metrics)
+    assert metrics["s2"]["resumed"] is False
+    assert metrics["s2"]["rows"] == 3
+    assert materialize.stage_done(out_dir, "s2")
 
 
 def test_footer_manifest_partitioned_layout(spark, tmp_path):
@@ -80,30 +97,10 @@ def test_footer_checksum_tracks_content(spark, tmp_path):
     assert m1[0][4] != m2[0][4]
 
 
-def _jobs_in_group(spark, group, run):
-    """Spark jobs that run() starts, counted by job group. A control
-    job in its own group runs after; job-start events arrive in order,
-    so once the control job shows, every job of run() has too."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run()
-        sc.setJobGroup(group + "-control", "control")
-        spark.range(4).rdd.count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while (not tracker.getJobIdsForGroup(group + "-control")
-           and time.time() < deadline):
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup(group + "-control")
-    return len(tracker.getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("partition_by", [None, ["pred"]])
 def test_write_stage_rereads_without_inference(spark, tmp_path,
-                                               partition_by):
+                                               partition_by,
+                                               jobs_in_group):
     """write_stage runs exactly the jobs of a plain parquet write of the
     same frame: its re-read is given the schema instead of inferring
     it. The schema it returns is the one inference gives, nested
@@ -127,8 +124,8 @@ def test_write_stage_rereads_without_inference(spark, tmp_path,
     def staged():
         got["out"], got["rows"] = materialize.write_stage(
             spark, df, str(tmp_path), "s", partition_by=partition_by)
-    assert (_jobs_in_group(spark, f"stage-{tag}", staged)
-            == _jobs_in_group(spark, f"plain-{tag}", plain))
+    assert (jobs_in_group(f"stage-{tag}", staged)
+            == jobs_in_group(f"plain-{tag}", plain))
     path = materialize.stage_path(str(tmp_path), "s")
     assert got["out"].schema == spark.read.parquet(path).schema
     assert got["rows"] == 60
@@ -148,6 +145,7 @@ def test_compact_stage_checksum_verified_swap(spark, tmp_path):
     written, n = write_stage(spark, df, out, "triples")
     assert n == 10_000
     r = compact_stage(spark, out, "triples", target_bytes=1 << 30)
+    assert materialize.stage_done(out, "triples")
     assert r["files_before"] == 50
     assert r["files_after"] == 1
     assert r["rows"] == 10_000

@@ -40,6 +40,17 @@ def test_write_path_schema_matches_resume_path(spark, run_dir):
             spark, run_dir, stage).schema, stage
 
 
+def test_resume_reads_run_no_job(spark, sf_dir, run_dir, per_stage_jobs):
+    """A resume reads every reused stage with its stored schema: no
+    read runs a Spark job (an inferred schema costs one each)."""
+    jobs: dict = {}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(materialize, "read_stage", per_stage_jobs(
+            materialize.read_stage, "kg-read", jobs))
+        run_pipeline(spark, sf_dir, run_dir)
+    assert jobs == dict.fromkeys(WRITTEN, 0)
+
+
 def _doc_ids(spark, sf_dir):
     return [r.doc_id for r in spark.read.parquet(
         f"{sf_dir}/documents.parquet").select("doc_id").collect()]

@@ -107,6 +107,19 @@ def test_near_dup_groups_joins_a_local_relation(spark):
         {1: 1, 2: 1, 3: 3}
 
 
+def test_empty_graphs_plan_as_local_relations(spark):
+    """On an empty edge set the small paths of connected_components,
+    pagerank and hits still return an Arrow local relation, never a
+    Python-pickled RDD scan."""
+    from kgp.canonicalize import connected_components
+    from kgp.webgraph import hits, pagerank
+    edges = spark.createDataFrame([], "src long, dst long")
+    for df in (connected_components(edges), pagerank(edges), hits(edges)):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan, plan
+        assert df.count() == 0
+
+
 def test_brute_force_topk_window_sees_partial_rows(spark):
     """The exact ANN path must reduce map-side: the rank window input
     is the mapInPandas partial-topk output (Q*k rows per partition),

@@ -8,11 +8,14 @@ Goldens are ported from UrlHelperTest.testMakeFullUrl
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from kgp import constants as C
+from kgp.canonicalize import SMALL_GRAPH_EDGES
 from kgp.corpus import synth_pages
 from kgp.html_text import parse_html
 from kgp.webgraph import (extract_links_stage, get_domain, get_links,
@@ -291,6 +294,38 @@ def test_pagerank_rank_mass_conserved(spark, sf_dir):
 def test_pagerank_empty_edges(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert pagerank(df, iterations=2).count() == 0
+
+
+def test_pagerank_bit_identical_across_regimes_and_partitionings(spark):
+    """Fixed-point sums make the ranks exact: the driver regime and the
+    distributed one (small_threshold=0), at 2 and 16 shuffle
+    partitions, with the input split 1 and 7 ways, give == ranks. An
+    edge with a null endpoint is no edge in either regime: it adds no
+    node and no out-degree."""
+    rng = random.Random(7)
+    names = [f"n{i:03d}" for i in range(120)]
+    edges = [(rng.choice(names), rng.choice(names)) for _ in range(600)]
+    edges += [("n000", "sink1"), ("n001", "sink2")]   # dangling nodes
+    edges += edges[:50]                                # duplicates
+    nulls = [(None, "n002"), ("orphan", None), (None, None)]
+    ddl = "src string, dst string"
+    clean = {r.node: r.rank
+             for r in pagerank(spark.createDataFrame(edges, ddl),
+                               iterations=4).collect()}
+    assert set(clean) == {x for e in edges for x in e}
+    with_nulls = spark.createDataFrame(edges + nulls, ddl)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (2, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            for split in (1, 7):
+                for k in (SMALL_GRAPH_EDGES, 0):
+                    got = {r.node: r.rank for r in pagerank(
+                        with_nulls.repartition(split), iterations=4,
+                        small_threshold=k).collect()}
+                    assert got == clean, (parts, split, k)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ----------------------------------- anchor stats / crawl BFS / HITS
