@@ -68,16 +68,6 @@ def _alias_edges(rows) -> list[tuple]:
                    if dst != r[0]})
 
 
-def same_entity_edges(gaz: DataFrame) -> DataFrame:
-    """The gazetteer's alias edges (src, dst), derived on the driver."""
-    id_type = gaz.schema["id"].dataType
-    schema = T.StructType([T.StructField("src", id_type, False),
-                           T.StructField("dst", id_type, False)])
-    edges = _alias_edges(gaz.select("id", "name", "alt_names").collect())
-    return local_relation(gaz.sparkSession, schema,
-                          [[e[i] for e in edges] for i in range(2)])
-
-
 def _union_find(edges) -> dict:
     """(a, b) pairs → {node: min node of its component}, union by min
     id, for every node that appears in an edge."""

@@ -297,227 +297,6 @@ GAZETTEER_SCHEMA = (
     "population long, ancestor_ids array<long>, lat double, lon double"
 )
 
-# GeonamesUtil.mapType feature mapping (GeonamesUtil.java:25-52):
-# full feature code first, then feature class, else UNDETERMINED
-_GEONAMES_TYPE = {
-    "A": "UNIT", "A.PCL": "COUNTRY", "A.PCLF": "COUNTRY",
-    "A.PCLH": "COUNTRY", "A.PCLI": "COUNTRY", "A.PCLIX": "COUNTRY",
-    "A.PCLS": "COUNTRY", "H": "LANDMARK", "L": "POI",
-    "L.AREA": "REGION", "L.COLF": "REGION", "L.CONT": "CONTINENT",
-    "L.RGN": "REGION", "L.RGNE": "REGION", "L.RGNH": "REGION",
-    "L.RGNL": "REGION", "P": "CITY", "R": "POI", "S": "POI",
-    "T": "LANDMARK", "U": "LANDMARK", "U.BDLU": "REGION",
-    "U.PLNU": "REGION", "U.PRVU": "REGION", "V": "POI",
-}
-
-
-# GeonamesImporter.ADMIN_LEVELS_MAPPING (GeonamesImporter.java:67-78)
-_ADMIN_LEVELS = {"PCLI": 0, "PCLD": 0, "TERR": 0, "PCLIX": 0,
-                 "ADM1": 1, "ADM2": 2, "ADM3": 3, "ADM4": 4}
-
-
-def _geonames_code_parts(fclass, fcode, cc, a1, a2, a3, a4) -> list[str]:
-    """GeonameLocation.getCodeParts (GeonamesImporter.java:517-546):
-    country + admin codes up to the row's own admin level ('*' for
-    nulls); empty if nothing meaningful."""
-    level = (_ADMIN_LEVELS.get(fcode, 2**31 - 1)
-             if fclass == "A" and fcode in _ADMIN_LEVELS else 2**31 - 1)
-    codes = [cc, a1, a2, a3, a4]
-    parts = [codes[i] or "*" for i in range(min(level, 4) + 1)]
-    return parts if any(p != "*" for p in parts) else []
-
-
-def _geonames_parent_codes(fclass, fcode, cc, a1, a2, a3, a4) -> list[str]:
-    """Candidate parent codes, longest first — the prefix walk of
-    GeonamesImporter.getParent (:224-260): admin units drop their own
-    last code part; unleveled ADMD drops trailing '*'s plus one."""
-    parts = _geonames_code_parts(fclass, fcode, cc, a1, a2, a3, a4)
-    if not parts:
-        return []
-    is_admin = fclass == "A" and fcode in _ADMIN_LEVELS
-    if is_admin:
-        parts = parts[:-1]
-    if fclass == "A" and fcode == "ADMD":
-        while parts and parts[-1] == "*":
-            parts = parts[:-1]
-        parts = parts[:-1]
-    return [".".join(parts[:i]) for i in range(len(parts), 0, -1)]
-
-
-def gazetteer_from_csv(spark: SparkSession, path: str,
-                       hierarchy_path: str | None = None) -> DataFrame:
-    """Geonames-format gazetteer ingest (GeonamesImporter.java:495-510
-    column layout: id, name, asciiname, alternatenames, lat, lon,
-    featureClass, featureCode, countryCode, cc2, admin1-4 codes,
-    population) → the pipeline's GAZETTEER_SCHEMA, INCLUDING the
-    `ancestor_ids` hierarchy both disambiguators score on.
-
-    Hierarchy build = the reference's three passes re-shaped for Spark
-    (GeonamesImporter.java:129-260):
-      1. administrative mapping: admin rows (class A, leveled feature
-         code, non-historic, complete code) → (code_combined, id).
-         The reference keeps the first row per code and warns on
-         duplicates; we keep min(id) for determinism.
-      2. per-row parent: explicit hierarchy file mapping first
-         (type ADM/empty, ambiguous children dropped, historic /
-         lower-order-admin parents dropped — :285-297,352-373), else
-         the longest admin-code prefix that maps to a different id.
-      3. ancestor chain: walk parent-of-parent to the root
-         (importLocations :202-206, nearest ancestor first).
-
-    Scale shape: one distributed CSV scan; the admin mapping and the
-    parent-edge closure are admin-row-sized (~3% of a full Geonames
-    dump), collected and broadcast — the 12M-row main table is never
-    shuffled, each row resolves its chain map-side."""
-    raw = (spark.read.option("sep", "\t").option("quote", "")
-           .csv(path))
-    code_full = F.concat_ws(".", F.col("_c6"), F.col("_c7"))
-    type_col = F.coalesce(
-        *[F.when(code_full == k, F.lit(v))
-          for k, v in _GEONAMES_TYPE.items() if "." in k],
-        *[F.when(F.col("_c6") == k, F.lit(v))
-          for k, v in _GEONAMES_TYPE.items() if "." not in k],
-        F.lit("UNDETERMINED"))
-
-    # ---- pass 1: administrative code -> id mapping (small; collect)
-    code_cols = [F.col(c) for c in ("_c6", "_c7", "_c8", "_c10", "_c11",
-                                    "_c12", "_c13")]
-
-    @F.pandas_udf(T.StringType())
-    def combined_udf(fclass: pd.Series, fcode: pd.Series, cc: pd.Series,
-                     a1: pd.Series, a2: pd.Series, a3: pd.Series,
-                     a4: pd.Series) -> pd.Series:
-        return pd.Series([
-            ".".join(_geonames_code_parts(*vals))
-            for vals in zip(fclass, fcode, cc, a1, a2, a3, a4)])
-
-    admin_rows = (raw
-                  .where((F.col("_c6") == "A")
-                         & F.col("_c7").isin(list(_ADMIN_LEVELS))
-                         & ~F.col("_c7").endswith("H"))
-                  .select(F.col("_c0").cast("long").alias("id"),
-                          combined_udf(*code_cols).alias("code"))
-                  .where((F.col("code") != "") &
-                         ~F.col("code").endswith("*"))
-                  .groupBy("code").agg(F.min("id").alias("id")))
-    admin_map = {r["code"]: r["id"] for r in admin_rows.collect()}
-
-    # historic admin rows and lower-order admin seats must not serve as
-    # EXPLICIT hierarchy parents (readAdministrativeItems :285-297)
-    bad_parent_ids = {
-        r["id"] for r in raw.where(
-            ((F.col("_c6") == "A") & F.col("_c7").endswith("H")) |
-            ((F.col("_c6") == "P")
-             & F.col("_c7").isin(["PPLA2", "PPLA3", "PPLA4"])))
-        .select(F.col("_c0").cast("long").alias("id")).collect()}
-
-    explicit: dict[int, int] = {}
-    if hierarchy_path is not None:
-        ambiguous: set[int] = set()
-        hier = (spark.read.option("sep", "\t").csv(hierarchy_path)
-                .select(F.col("_c0").cast("long").alias("parent"),
-                        F.col("_c1").cast("long").alias("child"),
-                        F.col("_c2").alias("type"))
-                .where(F.col("_c2").isNull() | (F.col("_c2") == "ADM")))
-        for r in hier.collect():
-            if r["child"] in ambiguous or r["parent"] is None \
-                    or r["child"] is None:
-                continue
-            prev = explicit.get(r["child"])
-            if prev is None:
-                explicit[r["child"]] = r["parent"]
-            elif prev != r["parent"]:
-                ambiguous.add(r["child"])
-                del explicit[r["child"]]
-        explicit = {c: p for c, p in explicit.items()
-                    if p not in bad_parent_ids}
-
-    bc_admin = spark.sparkContext.broadcast(admin_map)
-    bc_explicit = spark.sparkContext.broadcast(explicit)
-
-    # ---- pass 2+3 support: ancestor chains for every possible parent
-    # (admin rows + explicit parents), computed on the driver from the
-    # admin-row edge set — tiny relative to the full table
-    def _parent_of(row_id, fclass, fcode, cc, a1, a2, a3, a4,
-                   admin, expl):
-        p = expl.get(row_id)
-        if p is not None:
-            return p
-        for code in _geonames_parent_codes(fclass, fcode, cc, a1, a2,
-                                           a3, a4):
-            pid = admin.get(code)
-            if pid is not None and pid != row_id:
-                return pid
-        return None
-
-    parent_pool_ids = set(admin_map.values()) | set(explicit.values())
-    if parent_pool_ids:
-        pool_df = spark.createDataFrame(
-            [(i,) for i in sorted(parent_pool_ids)], "id long")
-        pool_rows = (raw.select(F.col("_c0").cast("long").alias("id"),
-                                *code_cols)
-                     .join(F.broadcast(pool_df), "id", "left_semi")
-                     .collect())
-    else:
-        pool_rows = []
-    pool_parent = {
-        r["id"]: _parent_of(r["id"], r["_c6"], r["_c7"], r["_c8"],
-                            r["_c10"], r["_c11"], r["_c12"], r["_c13"],
-                            admin_map, explicit)
-        for r in pool_rows}
-
-    chains: dict[int, list[int]] = {}
-
-    def _chain(pid: int) -> list[int]:
-        if pid in chains:
-            return chains[pid]
-        chain: list[int] = []
-        seen = {pid}
-        cur = pool_parent.get(pid)
-        while cur is not None and cur not in seen:
-            chain.append(cur)
-            seen.add(cur)
-            cur = pool_parent.get(cur)
-        chains[pid] = chain
-        return chain
-
-    for pid in list(pool_parent):
-        _chain(pid)
-    bc_chains = spark.sparkContext.broadcast(chains)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def ancestors_udf(row_id: pd.Series, fclass: pd.Series,
-                      fcode: pd.Series, cc: pd.Series, a1: pd.Series,
-                      a2: pd.Series, a3: pd.Series,
-                      a4: pd.Series) -> pd.Series:
-        admin, expl = bc_admin.value, bc_explicit.value
-        chain_map = bc_chains.value
-        out = []
-        for vals in zip(row_id, fclass, fcode, cc, a1, a2, a3, a4):
-            p = _parent_of(int(vals[0]), *vals[1:], admin, expl)
-            if p is None:
-                out.append([])
-            else:
-                out.append([p] + [a for a in chain_map.get(p, [])
-                                  if a != int(vals[0])])
-        return pd.Series(out)
-
-    return raw.select(
-        F.col("_c0").cast("long").alias("id"),
-        F.col("_c1").alias("name"),
-        F.when(F.col("_c3").isNull() | (F.col("_c3") == ""),
-               F.array().cast("array<string>"))
-        .otherwise(F.split("_c3", ",")).alias("alt_names"),
-        type_col.alias("type"),
-        F.greatest(F.col("_c14").cast("long"), F.lit(0))
-        .alias("population"),
-        ancestors_udf(F.col("_c0").cast("long"), *code_cols)
-        .alias("ancestor_ids"),
-        F.col("_c4").cast("double").alias("lat"),
-        F.col("_c5").cast("double").alias("lon"),
-    )
-
-
 def gazetteer(spark: SparkSession) -> DataFrame:
     """The entity KB as a local relation: built from pandas (Arrow) it
     plans as a LocalTableScan, so reading it runs no job and starts no
@@ -550,39 +329,6 @@ def expected_canon() -> dict[int, int]:
     return m
 
 
-def import_hotelsbase(lines: DataFrame, max_id: int = 0) -> DataFrame:
-    """HotelsBase gazetteer importer — port of HotelsBaseImporter
-    (extraction/location/sources/importers/HotelsBaseImporter.java:
-    57-77): '~'-split lines; the header (line 0) and lines with < 15
-    parts are skipped; name = parts[1] with &amp; -> &; coordinate
-    from parts 12/13; every location is a POI with null population;
-    id = locationStore.getHighestId() + 1-based line number.
-
-    Spark shape: the parse is pure JVM (split / replace / casts).
-    The reference's line-number id needs the file order: ONE
-    row_number window over ``monotonically_increasing_id`` — fine
-    here because a gazetteer import is the SMALL side by definition
-    (the store the reference writes into is the broadcast side of
-    every downstream join); callers at true bulk scale can pass
-    pre-numbered lines instead.
-    """
-    parts = F.split(F.col("value"), "~", -1)
-    w = Window.orderBy("_ord")
-    return (lines
-            .withColumn("_ord", F.monotonically_increasing_id())
-            .withColumn("_line", F.row_number().over(w) - 1)
-            .where((F.col("_line") > 0) & (F.size(parts) >= 15))
-            .select(
-                (F.col("_line") + max_id).cast("long").alias("id"),
-                F.regexp_replace(parts[1], "&amp;", "&").alias("name"),
-                F.array().cast("array<string>").alias("alt_names"),
-                F.lit("POI").alias("type"),
-                F.lit(None).cast("long").alias("population"),
-                F.array().cast("array<long>").alias("ancestor_ids"),
-                parts[12].cast("double").alias("lat"),
-                parts[13].cast("double").alias("lon")))
-
-
 # Language.getByIso6391 domain (palladian-commons helper/constants/
 # Language.java:19-118) — the 98 entries carrying an ISO 639-1 code;
 # entries with a null 639-1 code (e.g. SONGE) are unreachable through
@@ -593,14 +339,6 @@ ISO_639_1_LANGUAGES = frozenset(
     "jv ko ku ky la lv lt lb mk ms ml mt mi mr ne nd no nb nn oc oj ps "
     "fa pl pt pa qu ro ru sr sn sk sl so nr es su sw sv tl ta te th bo "
     "tr uk ur vi vo wa cy fy wo xh".split())
-
-
-def read_alternate_names(spark: SparkSession, path: str) -> DataFrame:
-    """Geonames alternateNames.txt ingest (GeonamesImporter.
-    importAlternativeNames, GeonamesImporter.java:387-420): the file's
-    lines through alternate_names_from_lines, so the file reader and
-    the lines twin apply one set of row rules."""
-    return alternate_names_from_lines(spark.read.text(path))
 
 
 def alternate_names_from_lines(lines: DataFrame,

@@ -113,19 +113,6 @@ def canonical_url(col: Column) -> Column:
         F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)))
 
 
-def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """(url, canon_url, is_canonical): exact dedup on the canonical
-    URL form — the first crawl-dedup pass, upstream of content dedup.
-    Canonical survivor = lexicographically smallest original url; one
-    hash shuffle on canon_url (high-cardinality key)."""
-    canon = pages.select(F.col(url_col).alias("url"),
-                         canonical_url(F.col(url_col)).alias("canon_url"))
-    best = canon.groupBy("canon_url").agg(F.min("url").alias("_keep"))
-    return (canon.join(best, "canon_url")
-            .select("url", "canon_url",
-                    (F.col("url") == F.col("_keep")).alias("is_canonical")))
-
-
 def sample_key(col: Column) -> Column:
     """Deterministic engine-portable sample key in [0, 10000): first 8
     md5 hex chars of the id as an integer, mod 10000. md5-derived so

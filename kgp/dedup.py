@@ -363,6 +363,9 @@ def near_dup_groups(docs: DataFrame, text_col: str = "text",
     edges = pairs.select(F.col("a").alias("src"),
                          F.col("b").alias("dst")).persist()
     mapping = connected_components(edges)
+    # neither regime's mapping reads edges again (a local relation, or
+    # eager localCheckpoints): drop the cache now, not at session end
+    edges.unpersist()
     out = (docs.select(F.col(id_col).alias("doc_id"))
            .join(mapping.withColumnRenamed("entity_id", "doc_id"),
                  "doc_id", "left")

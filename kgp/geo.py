@@ -10,6 +10,7 @@ and unit tests.
 from __future__ import annotations
 
 import math
+import re
 
 EARTH_RADIUS_KM = 6371.0
 
@@ -123,26 +124,14 @@ def largest_distance(coords: list[tuple[float, float]]) -> float:
     return best
 
 
-# ---------------------------------------------- DMS / coordinate tagging
-# CoordinateTagger + GeoUtils.parseDms port
-# (/root/reference/palladian-core/src/main/java/ws/palladian/extraction/location/CoordinateTagger.java:30-90,
-#  /root/reference/palladian-commons/src/main/java/ws/palladian/helper/geo/GeoUtils.java:28-31,186-203)
-
-import re as _re
-from typing import NamedTuple as _NamedTuple
+# --------------------------------------------------------- DMS parsing
+# GeoUtils.parseDms port (GeoUtils.java:28-31,186-203)
 
 DMS = (r"([-+]?\d{1,3}(?:\.\d{1,10})?)[°ºd:]"
        r"(?:\s?(\d{1,2}(?:\.\d{1,10})?))?['′:]?"
        r"(?:\s?(\d{1,2}(?:\.\d{1,10})?))?(?:\"|″|'')?"
        r"(?:\s?(N|S|W|E|North|South|West|East))?")
-_LEFT, _RIGHT = r"(?<!\w)", r"(?!\w)"
-_DEG = r"([-+]?\d{1,3}\.\d{1,10})([NSWE])?"
-_SEP = r"(?:,\s?|\s)"
-_PATTERN_DEG = _re.compile(_LEFT + "(" + _DEG + ")" + _SEP
-                           + "(" + _DEG + ")" + _RIGHT)
-_PATTERN_DMS = _re.compile(_LEFT + "(" + DMS + ")" + _SEP
-                           + "(" + DMS + ")" + _RIGHT)
-_PARSE_DMS = _re.compile(DMS)
+_PARSE_DMS = re.compile(DMS)
 
 
 def parse_dms(dms: str) -> float:
@@ -160,73 +149,3 @@ def parse_dms(dms: str) -> float:
     minutes = float(m.group(2)) if m.group(2) else 0.0
     seconds = float(m.group(3)) if m.group(3) else 0.0
     return sign * (abs(degrees) + minutes / 60.0 + seconds / 3600.0)
-
-
-def is_valid_coordinate(lat: float, lon: float) -> bool:
-    return -90.0 <= lat <= 90.0 and -180.0 <= lon <= 180.0
-
-
-class CoordinateAnnotation(_NamedTuple):
-    start: int
-    value: str
-    lat: float
-    lon: float
-
-
-def tag_coordinates(text: str) -> list[CoordinateAnnotation]:
-    """CoordinateTagger.getAnnotations port: decimal-degree pairs
-    (optionally hemisphere-suffixed) and DMS pairs."""
-    out: list[CoordinateAnnotation] = []
-    for m in _PATTERN_DEG.finditer(text):
-        lat, lon = float(m.group(2)), float(m.group(5))
-        if m.group(3) == "S":
-            lat = -lat
-        if m.group(6) == "W":
-            lon = -lon
-        if is_valid_coordinate(lat, lon):
-            out.append(CoordinateAnnotation(m.start(), m.group(),
-                                            lat, lon))
-    for m in _PATTERN_DMS.finditer(text):
-        try:
-            lat, lon = parse_dms(m.group(1)), parse_dms(m.group(6))
-        except ValueError:
-            continue
-        if is_valid_coordinate(lat, lon):
-            out.append(CoordinateAnnotation(m.start(), m.group(),
-                                            lat, lon))
-    return out
-
-
-def _dms_parts(decimal: float) -> tuple[int, int, int]:
-    """AbstractGeoCoordinate.getParts (:86-100): truncating int casts
-    per stage."""
-    temp = abs(decimal)
-    deg = int(temp)
-    temp = (temp % 1) * 60
-    minutes = int(temp)
-    temp = (temp % 1) * 60
-    seconds = int(temp)
-    return deg, minutes, seconds
-
-
-def _format_dms(parts: tuple[int, int, int], suffix: str) -> str:
-    """AbstractGeoCoordinate.formatDms (:73-84) — kept as-written:
-    the minute part prints only when minutes AND seconds are both
-    non-zero (the outer condition tests both, making the inner
-    seconds check redundant)."""
-    out = f"{parts[0]}°"
-    if parts[1] != 0 and parts[2] != 0:
-        out += f"{parts[1]}′"
-        if parts[2] != 0:
-            out += f"{parts[2]}″"
-    return out + suffix
-
-
-def to_dms_string(lat: float, lng: float) -> str:
-    """AbstractGeoCoordinate.toDmsString (:43-64):
-    '51°1′59″N,13°43′59″E'; zero stays bare ('0°'), sign picks the
-    hemisphere suffix."""
-    lat_suffix = "N" if lat > 0 else ("S" if lat < 0 else "")
-    lng_suffix = "E" if lng > 0 else ("W" if lng < 0 else "")
-    return (_format_dms(_dms_parts(lat), lat_suffix) + ","
-            + _format_dms(_dms_parts(lng), lng_suffix))

@@ -608,71 +608,6 @@ def parse_html(html: str | bytes) -> Node:
     return p.root
 
 
-def xml10_filter(text: str) -> str:
-    """Xml10FilterReader port (retrieval/parser/Xml10FilterReader
-    .java:41-83): drop characters invalid in XML 1.0 — keeping
-    \\t \\n \\r, 0x20-0xD7FF, 0xE000-0xFFFD — plus every char BEFORE
-    the first non-whitespace one (the reader's ignoreCharacter ramp:
-    leading whitespace is dropped; a BOM is NON-whitespace, ends the
-    ramp and survives, per Character.isWhitespace).  The
-    reference filters Java chars, so astral-plane codepoints (two
-    invalid surrogates each) are dropped too — kept bug-for-bug."""
-    out: list[str] = []
-    ignoring = True
-    for ch in text:
-        if ignoring and not ch.isspace():
-            ignoring = False
-        cp = ord(ch)
-        valid = (cp in (0x9, 0xA, 0xD) or 0x20 <= cp <= 0xD7FF
-                 or 0xE000 <= cp <= 0xFFFD)
-        if valid and not ignoring:
-            out.append(ch)
-    return "".join(out)
-
-
-def parse_xml(content: str | bytes) -> Node:
-    """Strict XML/XHTML parse into the same Node DOM (the reference's
-    XmlParser next to its lenient HTML parser,
-    /root/reference/palladian-retrieval/src/main/java/ws/palladian/retrieval/parser/XmlParser.java):
-    stdlib ElementTree over the Xml10FilterReader-filtered input
-    (XmlParser.java wraps its reader the same way), namespaces
-    stripped from tag names, falls back to the lenient HTML parser on
-    malformed input."""
-    import xml.etree.ElementTree as ET
-    if isinstance(content, (bytes, bytearray)):
-        content = bytes(content).decode("utf-8", errors="replace")
-    content = xml10_filter(content)
-    try:
-        root_el = ET.fromstring(content)
-    except ET.ParseError:
-        return parse_html(content)
-
-    def make(el) -> Node:
-        tag = el.tag.rsplit("}", 1)[-1].lower() \
-            if isinstance(el.tag, str) else "#comment"
-        n = Node(tag, {k.rsplit("}", 1)[-1]: v
-                       for k, v in el.attrib.items()})
-        if el.text:
-            n.children.append(Node("#text", data=el.text))
-        return n
-
-    # iterative conversion — adversarially deep XML must not blow the
-    # Python recursion limit inside a worker
-    doc = Node("#document")
-    root_node = make(root_el)
-    doc.children.append(root_node)
-    stack = [(root_el, root_node)]
-    while stack:
-        el, node = stack.pop()
-        for c in el:
-            cn = make(c)
-            node.children.append(cn)
-            if c.tail:
-                node.children.append(Node("#text", data=c.tail))
-            stack.append((c, cn))
-    return doc
-
-
 # ------------------------------------------------- documentToText port
 
 SKIP_NODES = {"script", "style", "#comment", "option", "meta", "head"}
@@ -719,17 +654,11 @@ def document_to_text(node: Node) -> str:
     return results[id(node)]
 
 
-# ------------------------- XPath-density extraction (full algorithm)
-# Port of PalladianContentExtractor.parseDocument
-# (/root/reference/palladian-core/src/main/java/ws/palladian/extraction/content/PalladianContentExtractor.java:218-369)
-# and its PageAnalyzer / XPathSet machinery
-# (/root/reference/palladian-retrieval/src/main/java/ws/palladian/retrieval/PageAnalyzer.java:144-209,355-485,656-686,1379-1390,
-#  .../XPathSet.java:45-92). XPaths are the same strings the reference
-# builds ("/html/body/div[2]/p"); evaluation is a small interpreter
-# over the stdlib DOM covering exactly the shapes the algorithm emits.
-
-MAIN_NODE_HINTS = ["articleText", "article_body", "article-body",
-                   "articleBody", "hfeed", "st_text_c"]
+# ------------------------------------------------------ XPath evaluation
+# The path shapes of the reference's PageAnalyzer (palladian-retrieval,
+# PageAnalyzer.java), e.g. "/html/body/div[2]/p", evaluated by a small
+# interpreter over the stdlib DOM; kgp.segmenter builds and evaluates
+# them.
 
 
 def _parent_index_map(root: Node) -> dict[int, tuple[Node, int]]:
@@ -741,259 +670,6 @@ def _parent_index_map(root: Node) -> dict[int, tuple[Node, int]]:
             out[id(c)] = (n, i)
             stack.append(c)
     return out
-
-
-def construct_xpath(node: Node, pmap: dict[int, tuple[Node, int]]) -> str:
-    """PageAnalyzer.constructXPath port (:420-485): 1-based same-name
-    sibling index, added when the node has any next sibling or a
-    previous same-name sibling (never for html/th); path stops above
-    #text; script paths yield ''."""
-    xpath = ""
-    cur = node
-    while cur is not None:
-        parent_entry = pmap.get(id(cur))
-        name = cur.tag
-        ps_count = 1
-        has_next = False
-        if parent_entry is not None:
-            parent, idx = parent_entry
-            ps_count += sum(1 for s in parent.children[:idx]
-                            if s.tag == name)
-            has_next = idx + 1 < len(parent.children)
-        seg = name
-        if (has_next or ps_count > 1) and name not in ("html", "th"):
-            seg = f"{name}[{ps_count}]"
-        xpath = seg + "/" + xpath
-        ti = xpath.find("/#text")
-        if ti > -1:
-            xpath = xpath[:ti]
-        cur = parent_entry[0] if parent_entry is not None else None
-    xpath = xpath[len("#document"):]
-    if "/script" in xpath.lower():
-        return ""
-    if xpath.endswith("/"):
-        xpath = xpath[:-1]
-    return xpath
-
-
-def construct_all_xpaths(root: Node, keyword: str,
-                         pmap: dict[int, tuple[Node, int]] | None = None
-                         ) -> list[str]:
-    """PageAnalyzer.constructAllXPaths port (:144-209): path of every
-    node whose textContent contains the keyword (case-sensitive for
-    elements, case-insensitive for text nodes), most-specific paths
-    only."""
-    if pmap is None:
-        pmap = _parent_index_map(root)
-    kw_lower = keyword.lower()
-    xpaths: list[str] = []
-    seen: set[str] = set()
-
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        for child in n.children:
-            tc = (child.data if child.tag == "#text"
-                  else child.text_content())
-            hit = keyword in tc or (
-                child.tag == "#text" and kw_lower in child.data.lower())
-            if hit and child.tag != "#comment":
-                xp = construct_xpath(child, pmap)
-                if xp and xp not in seen:
-                    seen.add(xp)
-                    xpaths.append(xp)
-            stack.append(child)
-
-    # drop paths that are prefixes of the longest path (too general)
-    longest = max(xpaths, key=len, default="")
-    return [x for x in xpaths
-            if not (len(longest) > len(x) and longest.startswith(x))]
-
-
-def remove_last_index(xpath: str) -> str:
-    """PageAnalyzer.removeXPathIndicesFromLastCountNode (:1379-1390):
-    strip the LAST [n] from the path."""
-    return regex.sub(r"\[\d+\](?!.*\[\d+\])", "", xpath, count=1)
-
-
-_BOX_PREFIXES = ("p", "div", "td", "th", "li",
-                 "h1", "h2", "h3", "h4", "h5", "h6")
-
-
-def _is_box_node(node: str, prefixes=_BOX_PREFIXES) -> bool:
-    low = node.lower()
-    return any(low.startswith(p) or low.startswith("xhtml:" + p)
-               for p in prefixes)
-
-
-def find_last_box_section(xpath: str) -> str:
-    """PageAnalyzer.findLastBoxSection port (PageAnalyzer.java:
-    656-686): cut after the last segment whose name STARTS WITH
-    p/div/td/th/li/h1..h6 or the xhtml:-prefixed form (prefix match
-    — 'pre' counts as 'p', faithful reference quirk)."""
-    nodes = xpath.split("/")
-    index = len(nodes)
-    for i in range(len(nodes) - 1, 0, -1):
-        if _is_box_node(nodes[i]):
-            index = i + 1
-            break
-    return "".join("/" + nodes[i] for i in range(1, index))
-
-
-def get_target_node(xpath: str) -> str:
-    """PageAnalyzer.getTargetNode: last segment, xhtml: stripped,
-    indices removed, lowercased."""
-    i = xpath.rfind("/")
-    if i < 0:
-        return ""
-    node = xpath[i + 1:].lower().replace("xhtml:", "")
-    return regex.sub(r"\[(\d)+\]", "", node)
-
-
-def node_in_box(xpath: str, look_back: int) -> bool:
-    """PageAnalyzer.nodeInBox: a p/div segment within the last
-    look_back parents."""
-    nodes = xpath.split("/")
-    nl = len(nodes)
-    for i in range(nl - 1, max(0, nl - look_back - 1), -1):
-        if _is_box_node(nodes[i], ("p", "div")):
-            return True
-    return False
-
-
-def node_in_table(xpath: str, look_back: int) -> bool:
-    """PageAnalyzer.nodeInTable: a td/th segment within the last
-    look_back parents."""
-    nodes = xpath.split("/")
-    nl = len(nodes)
-    for i in range(nl - 1, max(0, nl - look_back - 1), -1):
-        if _is_box_node(nodes[i], ("td", "th")):
-            return True
-    return False
-
-
-def get_table_cell_path(xpath: str) -> str:
-    """PageAnalyzer.getTableCellPath: cut after the last td/th
-    segment."""
-    nodes = xpath.split("/")
-    index = len(nodes)
-    for i in range(len(nodes) - 1, 0, -1):
-        if _is_box_node(nodes[i], ("td", "th")):
-            index = i + 1
-            break
-    return "".join("/" + nodes[i] for i in range(1, index))
-
-
-def get_next_sibling(xpath: str, table_cell_sibling: bool = False) -> str:
-    """PageAnalyzer.getNextSibling (+getNextTableCell via
-    table_cell_sibling): a bare trailing /td becomes /td[1], a
-    trailing /th becomes /td[1] (header -> first data cell), else the
-    LAST bracketed index increments (in table mode, the last td[
-    bracket)."""
-    if table_cell_sibling:
-        last_open = max(xpath.rfind("td["), xpath.rfind("TD[")) + 2
-        last_close = xpath.find("]", last_open)
-    else:
-        last_open = xpath.rfind("[")
-        last_close = xpath.rfind("]")
-    low = xpath.lower()
-    td_index = max(low.rfind("/td"), low.rfind("/xhtml:td"))
-    th_index = max(low.rfind("/th"), low.rfind("/xhtml:th"))
-    if td_index > last_close and td_index > th_index:
-        first, last = xpath[:td_index], xpath[td_index:]
-        last = (last.replace("/td", "/td[1]").replace("/TD", "/TD[1]")
-                .replace("/xhtml:td", "/xhtml:td[1]")
-                .replace("/xhtml:TD", "/xhtml:TD[1]"))
-        return first + last
-    if th_index > last_close and th_index > td_index:
-        first, last = xpath[:th_index], xpath[th_index:]
-        last = (last.replace("/th", "/td[1]").replace("/TH", "/TD[1]")
-                .replace("/xhtml:th", "/xhtml:td[1]")
-                .replace("/xhtml:TH", "/xhtml:TD[1]"))
-        return first + last
-    if last_close <= last_open or last_open == 1:
-        return xpath
-    current = int(xpath[last_open + 1:last_close])
-    return (xpath[:last_open + 1] + str(current + 1)
-            + xpath[last_close:])
-
-
-def get_next_table_cell(xpath: str) -> str:
-    """PageAnalyzer.getNextTableCell."""
-    return get_next_sibling(xpath, True)
-
-
-def get_first_table_cell(xpath: str) -> str:
-    """PageAnalyzer.getFirstTableCell: a bare trailing /td becomes
-    /td[1]; /th stays."""
-    last_open = max(xpath.rfind("td["), xpath.rfind("TD[")) + 2
-    last_close = xpath.find("]", last_open)
-    low = xpath.lower()
-    td_index = max(low.rfind("/td"), low.rfind("/xhtml:td"))
-    th_index = max(low.rfind("/th"), low.rfind("/xhtml:th"))
-    if td_index > last_close and td_index > th_index:
-        first, last = xpath[:td_index], xpath[td_index:]
-        last = (last.replace("/td", "/td[1]").replace("/TD", "/TD[1]")
-                .replace("/xhtml:td", "/xhtml:td[1]")
-                .replace("/xhtml:TD", "/xhtml:TD[1]"))
-        return first + last
-    return xpath
-
-
-def get_parent_node(xpath: str) -> str:
-    """PageAnalyzer.getParentNode."""
-    return xpath[:xpath.rfind("/")]
-
-
-def remove_xpath_indices_from_last_count_node(xpath: str) -> str:
-    """PageAnalyzer.removeXPathIndicesFromLastCountNode: strip only
-    the LAST [n] (via the reversed-string replaceFirst, as
-    written)."""
-    rev = xpath[::-1]
-    rev = regex.sub(r"\](\d)+\[", "", rev, count=1)
-    return rev[::-1]
-
-
-def remove_xpath_indices_not(xpath: str,
-                             keep_elements: "list[str]") -> str:
-    """PageAnalyzer.removeXPathIndicesNot: strip every [n] EXCEPT on
-    the named elements (brace-protect, strip, restore)."""
-    for el in keep_elements:
-        xpath = regex.sub(el + r"\[(\d+)\]", el + r"{\1}", xpath)
-    xpath = regex.sub(r"\[(\d)+\]", "", xpath)
-    for el in keep_elements:
-        xpath = regex.sub(el + r"\{(\d+)\}", el + r"[\1]", xpath)
-    return xpath
-
-
-def get_parent_xpath(xpath: str) -> str:
-    i = xpath.rfind("/")
-    return xpath[:i] if i > 0 else xpath
-
-
-def clean_xpath(xpath: str) -> str:
-    """PalladianContentExtractor.cleanXPath port (:176-200)."""
-    xpath = regex.sub(r"/text(\[.*?\])?", "/", xpath)
-    xpath = xpath.replace("html/body", "")
-    xpath = xpath.replace("///", "//")
-    if not xpath or xpath == "//":
-        xpath = "//body"
-    if xpath.endswith("//"):
-        xpath = xpath[:-2]
-    return xpath
-
-
-def add_headline_siblings(xpath: str) -> str:
-    """PalladianContentExtractor.addHeadlineSiblings port (:471-487):
-    widen the last segment to also select headline/list siblings."""
-    parts = xpath.split("/")
-    last = parts[-1]
-    if not last:
-        return xpath
-    alts = [last, "h1", "h2", "h3", "h4", "h5", "h6", "span", "ul",
-            "ol", "blockquote"]
-    new_last = "*[" + " or ".join(f"(self::{a})" for a in alts) + "]"
-    return "/".join(parts[:-1] + [new_last])
 
 
 def xpath_nodes(root: Node, xpath: str) -> list[Node]:
@@ -1045,59 +721,6 @@ def xpath_nodes(root: Node, xpath: str) -> list[Node]:
     return current
 
 
-def get_main_content_node_with_hints(root: Node) -> Node | None:
-    """getMainContentNodeWithHints port (:433-461): first div/p/span
-    whose class/id/itemprop names a hint; several matches → their
-    parent."""
-    pmap = _parent_index_map(root)
-    for hint in MAIN_NODE_HINTS:
-        found = []
-        for n in root.iter():
-            if n.tag not in ("div", "p", "span"):
-                continue
-            cls = str(n.attrs.get("class", "") or "")
-            ok = (cls == hint or (hint + " ") in cls
-                  or (" " + hint) in cls
-                  or str(n.attrs.get("itemprop", "") or "") == hint
-                  or str(n.attrs.get("id", "") or "") == hint)
-            if ok:
-                found.append(n)
-        if found:
-            node = found[0]
-            if len(found) > 1 and id(node) in pmap:
-                node = pmap[id(node)][0]
-            return node
-    return None
-
-
-_HEADER_DIV_IDS = {"head", "pageheader", "header", "foot", "footer",
-                   "pagefooter", "sidebar"}
-
-
-def clean_dom_reference(root: Node) -> Node:
-    """PalladianContentExtractor.cleanDom port (:391-431): drop
-    comments and script/style/iframe everywhere; strip the ELEMENT
-    descendants of header/nav/footer and of divs with
-    header/footer/sidebar ids (their direct text survives — faithful
-    to the reference's //header//* xpaths)."""
-    def is_chrome(n: Node) -> bool:
-        return (n.tag in ("header", "nav", "footer")
-                or (n.tag == "div"
-                    and str(n.attrs.get("id", "") or "").lower()
-                    in _HEADER_DIV_IDS))
-
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        n.children = [c for c in n.children
-                      if c.tag not in ("#comment", "script", "style",
-                                       "iframe")]
-        if is_chrome(n):
-            n.children = [c for c in n.children if c.tag == "#text"]
-        stack.extend(n.children)
-    return root
-
-
 def document_to_readable_text(node: Node) -> str:
     """HtmlHelper.documentToReadableText port (HtmlHelper.java:310-360):
     '\\n' on entering AND leaving block elements, text inside
@@ -1133,97 +756,6 @@ def document_to_readable_text(node: Node) -> str:
 
     walk(node, False)
     return "".join(parts)
-
-
-def parse_document(html: str | bytes, language: str = "en") -> dict:
-    """Full parseDocument port (PalladianContentExtractor.java:218-369):
-    hint node → cleanDom → sentence xpath density (XPathSet) →
-    main-block filter → shortest-equal-count path → last box section →
-    headline siblings → content-node text; <100-char fallbacks to the
-    main node's readable text, then the full document text."""
-    root = parse_html(html)
-    pmap = _parent_index_map(root)
-
-    use_main_node_text = False
-    result_node = get_main_content_node_with_hints(root)
-    result_node_xpath = ""
-    text_node_count = 0
-    if result_node is not None:
-        result_node_xpath = construct_xpath(result_node, pmap)
-        # countDirectTextNodes (:371-382)
-        text_node_count = sum(
-            1 for c in result_node.children
-            if c.tag == "#text" and len(c.data.strip()) > 20)
-
-    full_text_content = document_to_text(root)
-    clean_dom_reference(root)
-    pmap = _parent_index_map(root)
-    content = document_to_text(root)
-    sentences = get_sentences(content, only_real=True, language=language)
-
-    # unique sentences in first-appearance (document) order — equal
-    # xpath counts tie-break by insertion order, so iteration must be
-    # deterministic (a raw set here would hash-randomize which block
-    # wins a tie)
-    seen_s: set[str] = set()
-    uniq_sentences = [s.value for s in sentences
-                      if not (s.value in seen_s or seen_s.add(s.value))]
-    counts: dict[str, int] = {}
-    for sentence in uniq_sentences:
-        for xp in construct_all_xpaths(root, sentence, pmap):
-            xp = remove_last_index(xp)
-            counts[xp] = counts.get(xp, 0) + 1
-
-    def highest() -> tuple[str, int]:
-        best, best_n = "", 0
-        for k, v in counts.items():
-            if v > best_n:
-                best, best_n = k, v
-        return best, best_n
-
-    highest_xp, highest_n = highest()
-    if result_node_xpath:
-        for k in [k for k in counts if not k.startswith(result_node_xpath)]:
-            del counts[k]
-        if counts:
-            highest_xp, highest_n = highest()
-            if text_node_count > 3:
-                use_main_node_text = True
-        else:
-            use_main_node_text = True
-
-    shortest = highest_xp
-    parent_xpath = result_node_xpath
-    if not use_main_node_text:
-        for k, v in counts.items():
-            if len(k) < len(shortest) and v == highest_n:
-                shortest = k
-    if not shortest:
-        use_main_node_text = True
-    shortest = find_last_box_section(shortest)
-    if not use_main_node_text:
-        parent_xpath = get_parent_xpath(shortest)
-    parent_xpath = clean_xpath(parent_xpath)
-
-    parents = xpath_nodes(root, parent_xpath)
-    if not parents:
-        return {"text": full_text_content, "xpath": "",
-                "full_text": full_text_content, "node": None,
-                "root": root}
-    result_node = parents[0]
-
-    main_text = ""
-    if not use_main_node_text:
-        shortest = add_headline_siblings(shortest)
-        pieces = [n.text_content() for n in xpath_nodes(root, shortest)]
-        main_text = "".join(p + "\n\n" for p in pieces if p)
-    if len(main_text.strip()) < MIN_MAIN_LEN:
-        main_text = document_to_readable_text(result_node)
-    if len(main_text.strip()) < MIN_MAIN_LEN:
-        main_text = full_text_content
-    return {"text": main_text, "xpath": shortest,
-            "full_text": full_text_content, "node": result_node,
-            "root": root}
 
 
 # ------------------------------------------- main-content extraction
@@ -1323,47 +855,6 @@ def _extract_title(root: Node) -> str:
     return ""
 
 
-def get_entire_text_content(full_text: str) -> str:
-    """getEntireTextContent port (PalladianContentExtractor.java:
-    209-216): drop tab runs, blank out short (≤40-char) lines,
-    collapse whitespace-bridged and repeated newlines. Includes
-    comments etc. — the 'everything textual' view."""
-    t = regex.sub(r"(\t)+", "", full_text)
-    t = regex.sub(r"(?m)^.{0,40}$", "\n", t)
-    t = regex.sub(r"\n(\s)+\n", "\n\n", t)
-    t = regex.sub(r"(\n){2,}", "\n\n", t)
-    return t
-
-
-def get_result_title(root: Node, main_text: str = "") -> str:
-    """getResultTitle port (PalladianContentExtractor.java:700-737):
-    last <h1> outside header/footer (readable text, newlines → ' - '),
-    else <title> up to '|', else the main text's first 20 words."""
-    pmap = _parent_index_map(root)
-
-    def in_chrome(n: Node) -> bool:
-        cur = n
-        while id(cur) in pmap:
-            cur = pmap[id(cur)][0]
-            if cur.tag in ("header", "footer"):
-                return True
-        return False
-
-    h1s = [n for n in root.iter() if n.tag == "h1" and not in_chrome(n)]
-    title = ""
-    if h1s:
-        title = " ".join(
-            document_to_readable_text(h1s[-1])
-            .replace("\n", " - ").split()).strip(" -")
-    if not title:
-        tnode = next((n for n in root.iter() if n.tag == "title"), None)
-        if tnode is not None:
-            title = regex.sub(r"\|.*", "", tnode.text_content()).strip()
-        else:
-            title = " ".join(main_text.split()[:20])
-    return title
-
-
 _TLD_LANG = {".de": "de", ".at": "de", ".ch": "de", ".fr": "fr",
              ".es": "es", ".it": "it", ".nl": "nl", ".se": "sv",
              ".cn": "zh", ".uk": "en", ".com": "en", ".org": "en",
@@ -1453,155 +944,7 @@ def extract_stage(pages: DataFrame,
     )
 
 
-# ------------------------------------------------ images (metadata only)
-# getImages / getDominantImage port (PalladianContentExtractor.java:
-# 545-620, 897-996) — image METADATA extraction; decoding lives in
-# kgp.multimodal.
-
-
-def get_images(root: Node, base_url: str = "") -> list[dict]:
-    """All <img> references with absolutized URLs and declared
-    dimensions: [{url, width, height, alt, title}]."""
-    from urllib.parse import urljoin
-    base = base_url
-    for n in root.iter():
-        if n.tag == "base" and n.attrs.get("href"):
-            base = urljoin(base_url, str(n.attrs["href"]))
-            break
-
-    def dim(v):
-        try:
-            return int(str(v).rstrip("px"))
-        except (TypeError, ValueError):
-            return -1
-
-    out = []
-    for n in root.iter():
-        if n.tag == "img" and n.attrs.get("src"):
-            out.append({
-                "url": urljoin(base, str(n.attrs["src"])),
-                "width": dim(n.attrs.get("width")),
-                "height": dim(n.attrs.get("height")),
-                "alt": str(n.attrs.get("alt") or ""),
-                "title": str(n.attrs.get("title") or ""),
-            })
-    return out
-
-
-def get_dominant_image(root: Node, base_url: str = "") -> dict | None:
-    """The page's main image, by the reference's cascade: og:image meta
-    beats itemprop=image/id=photo containers beats main-photo/main-image
-    classes beats the biggest non-chrome, non-icon body image."""
-    from urllib.parse import urljoin
-    pmap = _parent_index_map(root)
-
-    def in_chrome(n: Node) -> bool:
-        cur = n
-        while id(cur) in pmap:
-            cur = pmap[id(cur)][0]
-            if cur.tag in ("header", "footer"):
-                return True
-        return False
-
-    for n in root.iter():
-        if n.tag == "meta" \
-                and str(n.attrs.get("property") or "") == "og:image" \
-                and n.attrs.get("content"):
-            return {"url": urljoin(base_url,
-                                   str(n.attrs["content"]).strip()),
-                    "width": -1, "height": -1, "alt": "", "title": ""}
-
-    def first_img_src(container: Node):
-        for c in container.iter():
-            if c.tag == "img" and c.attrs.get("src"):
-                return urljoin(base_url, str(c.attrs["src"]))
-        return None
-
-    for n in root.iter():
-        if n.tag in ("#text", "#comment") or in_chrome(n):
-            continue
-        ip = str(n.attrs.get("itemprop") or "").lower()
-        nid = str(n.attrs.get("id") or "").lower()
-        if ip == "image" or nid == "photo":
-            url = (urljoin(base_url, str(n.attrs["src"]))
-                   if n.tag == "img" and n.attrs.get("src")
-                   else first_img_src(n))
-            if url:
-                return {"url": url, "width": -1, "height": -1,
-                        "alt": "", "title": ""}
-
-    for n in root.iter():
-        if n.tag == "img" and not in_chrome(n):
-            cls = str(n.attrs.get("class") or "")
-            if ("main-photo" in cls or "main-image" in cls) \
-                    and n.attrs.get("src"):
-                return {"url": urljoin(base_url, str(n.attrs["src"])),
-                        "width": -1, "height": -1, "alt": "",
-                        "title": ""}
-
-    def linked_to_index(n: Node) -> bool:
-        cur = n
-        while id(cur) in pmap:
-            cur = pmap[id(cur)][0]
-            if cur.tag == "a":
-                href = str(cur.attrs.get("href") or "")
-                if "index" in href or href == "":
-                    return True
-        return False
-
-    candidates = []
-    for n in root.iter():
-        if n.tag == "img" and n.attrs.get("src") \
-                and not in_chrome(n) and not linked_to_index(n):
-            src = str(n.attrs["src"])
-            if not src.lower().split("?")[0].endswith(
-                    (".jpg", ".jpeg", ".png")):
-                continue
-            def d(v):
-                try:
-                    return int(str(v).rstrip("px"))
-                except (TypeError, ValueError):
-                    return -1
-            candidates.append({"url": urljoin(base_url, src),
-                               "width": d(n.attrs.get("width")),
-                               "height": d(n.attrs.get("height")),
-                               "alt": str(n.attrs.get("alt") or ""),
-                               "title": str(n.attrs.get("title") or "")})
-    if not candidates:
-        return None
-    seen: dict[str, dict] = {}
-    for c in candidates:
-        seen[c["url"]] = c
-    candidates = list(seen.values())
-    first = candidates[0]
-    if max(first["width"], 0) * max(first["height"], 0) < 10_000:
-        candidates = [c for c in candidates
-                      if "icon" not in c["url"].lower()] or candidates
-        candidates = [c for c in candidates
-                      if c["width"] < 0 or c["height"] < 0
-                      or (c["width"] > 50 and c["height"] > 50)] \
-            or candidates
-        candidates.sort(key=lambda c: max(c["width"], 0)
-                        * max(c["height"], 0), reverse=True)
-    return candidates[0]
-
-
-# ------------------------- content-scoped image extraction (reference
-# getImages: PalladianContentExtractor.java:555-650)
-
-DEFAULT_IMAGE_CONTAINER_SIZE = 500
-
-
-def _image_size(text: str) -> int:
-    """PalladianContentExtractor.getImageSize:655-670: the literal
-    ",*" deletion, %-of-500-container sizing, px strip; a non-numeric
-    value raises (and the CALLER skips the whole image, like the
-    reference's catch of NumberFormatException)."""
-    text = text.replace(",*", "")
-    if "%" in text:
-        return int(0.01 * int(text.replace("%", "").strip())
-                   * DEFAULT_IMAGE_CONTAINER_SIZE)
-    return int(text.replace("px", "").strip())
+# ------------------------------------------------------------ helpers
 
 
 def _substring_between(text: str, left: str, right: str) -> str:
@@ -1612,119 +955,3 @@ def _substring_between(text: str, left: str, right: str) -> str:
     if j < 0:
         return ""
     return text[i + len(left):j]
-
-
-def get_content_images(root: Node, main_node: Node | None,
-                       document_url: str = "") -> list[dict]:
-    """The reference's result-scoped getImages
-    (PalladianContentExtractor.java:555-650): .//img under the main
-    content node, CLIMBING to the parent while empty; header/footer
-    images (//header//img, //div[@id='header']//img and the footer
-    twins) removed; src absolutized against base href / document url;
-    width/height via getImageSize with the inline-style fallback; an
-    unparseable size SKIPS the whole image (the reference catches
-    NumberFormatException around the builder)."""
-    from kgp.webgraph import make_full_url
-    if main_node is None:
-        return []
-    base = ""
-    for n in root.iter():
-        if n.tag == "head":
-            for m in n.iter():
-                if m.tag == "base" and m.attrs.get("href"):
-                    base = str(m.attrs["href"])
-                    break
-            break
-
-    pmap = _parent_index_map(root)
-    node = main_node
-    image_nodes: list[Node] = []
-    while not image_nodes and node is not None:
-        image_nodes = [n for n in node.iter() if n.tag == "img"]
-        node = pmap[id(node)][0] if id(node) in pmap else None
-
-    # images under header/footer chrome anywhere in the document
-    remove: set[int] = set()
-    for n in root.iter():
-        is_chrome = n.tag in ("header", "footer") or (
-            n.tag == "div" and n.attrs.get("id") in ("header", "footer"))
-        if is_chrome:
-            for m in n.iter():
-                if m.tag == "img":
-                    remove.add(id(m))
-
-    out: list[dict] = []
-    for n in image_nodes:
-        if id(n) in remove:
-            continue
-        src = n.attrs.get("src")
-        if src is None:
-            continue  # the reference's swallowed NullPointerException
-        url = src
-        if not url.startswith("http"):
-            context = base if base else (document_url or None)
-            url = make_full_url(context, None, url)
-        try:
-            width = height = -1
-            found = False
-            if n.attrs.get("width") is not None:
-                width = _image_size(str(n.attrs["width"]))
-                found = True
-            if n.attrs.get("height") is not None:
-                height = _image_size(str(n.attrs["height"]))
-                found = True
-            if not found and n.attrs.get("style") is not None:
-                style = str(n.attrs["style"])
-                wt = _substring_between(style, "width:", "px").strip()
-                ht = _substring_between(style, "height:", "px").strip()
-                if wt:
-                    width = int(float(wt))
-                if ht:
-                    height = int(float(ht))
-        except ValueError:
-            continue
-        out.append({"url": url, "width": width, "height": height,
-                    "summary": str(n.attrs.get("alt") or ""),
-                    "title": str(n.attrs.get("title") or "")})
-    return out
-
-
-def add_xhtml_ns_to_xpath(xpath: str) -> str:
-    """XPathHelper.addXhtmlNsToXPath (XPathHelper.java:474-539):
-    quoted literals are masked first, the path splits on
-    / space [ ] | ) :  (NOT on '(' — "text(" / "contains(@x,…" parts
-    therefore never get prefixed), and every part matching
-    [a-zA-Z]\\w*|\\* except the logical operators and/or gains the
-    'xhtml:' prefix. A path already containing 'xhtml:' (any case)
-    passes through unchanged."""
-    if "xhtml:" in xpath.lower():
-        return xpath
-    unmask: dict[str, str] = {}
-    mask_id = 0
-    for quoted in re.findall(r"\"[^\"]+\"|'[^']+'", xpath):
-        mask = f"_MASK_{mask_id}"
-        mask_id += 1
-        xpath = xpath.replace(quoted, mask)
-        unmask[mask] = quoted
-    parts: list[str] = []
-    buf: list[str] = []
-    split_chars = set("/ []|):")
-    for i, ch in enumerate(xpath):
-        if ch in split_chars:
-            parts.append("".join(buf))
-            buf = []
-            parts.append(ch)
-        else:
-            buf.append(ch)
-        if i == len(xpath) - 1:
-            parts.append("".join(buf))
-    out: list[str] = []
-    for part in parts:
-        if re.fullmatch(r"[a-zA-Z]\w*|\*", part) \
-                and not re.fullmatch(r"and|or", part):
-            out.append("xhtml:")
-        out.append(part)
-    result = "".join(out)
-    for mask, quoted in unmask.items():
-        result = result.replace(mask, quoted)
-    return result

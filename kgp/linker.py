@@ -247,21 +247,6 @@ def baseline_gate_rows() -> list[dict]:
     return rows
 
 
-def link_mentions_none(mentions: DataFrame, gaz: DataFrame) -> DataFrame:
-    """NoDisambiguation port (disambiguation/NoDisambiguation.java:
-    22-36): every candidate becomes an annotation — the pure
-    candidate-generation join, no selection at all."""
-    expanded = expand_gazetteer(gaz)
-    return (mentions
-            .withColumn("norm", normalize_name(F.col("surface")))
-            .join(F.broadcast(expanded.select(
-                "norm", "entity_id", "canon_name", "etype",
-                "population")), "norm")
-            .select("url", "sent_idx", "start", "end", "surface",
-                    "tag", "entity_id", "canon_name", "etype",
-                    "population"))
-
-
 # -------------------- faithful per-document heuristic disambiguation
 # Port of HeuristicDisambiguation.disambiguate
 # (/root/reference/palladian-core/src/main/java/ws/palladian/extraction/location/disambiguation/HeuristicDisambiguation.java:47-120,

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from hashlib import blake2b
 
@@ -265,72 +264,3 @@ def finalize_triples(triples: DataFrame) -> DataFrame:
                  F.min("url").alias("url"),
                  F.min("sent_idx").alias("sent_idx"),
                  F.count("*").alias("support")))
-
-
-# ---------------------------------------------------------- compaction
-
-
-def _global_checksum(df: DataFrame) -> tuple[int, int]:
-    """(rows, order-insensitive 64-bit checksum) over the WHOLE table:
-    bit_xor of xxhash64 across all columns — partitioning- and
-    file-layout-independent, so it is preserved by any rewrite that
-    keeps the data identical."""
-    cols = ", ".join(f"`{c}`" for c in df.columns)
-    row = df.select(
-        F.count("*").alias("n"),
-        F.expr(f"bit_xor(xxhash64({cols}))").alias("ck")
-    ).collect()[0]
-    return int(row["n"]), int(row["ck"] or 0)
-
-
-def compact_stage(spark: SparkSession, out_dir: str, stage: str,
-                  target_bytes: int = 128 << 20,
-                  partition_by: list[str] | None = None) -> dict:
-    """Small-file compaction for a materialized stage — the classic
-    100 TB operational task (per-micro-batch appends and high shuffle
-    parallelism leave thousands of KB-sized parquet files; scans then
-    pay one open/footer-read per file). Rewrites the stage into
-    ceil(bytes / target_bytes) files (per partition directory when the
-    stage is hive-partitioned), VERIFIES the rewrite with the
-    order-insensitive global checksum before swapping, swaps
-    atomically (old data parks at <stage>.gc until the swap succeeds),
-    and appends a `<stage>:compact` lineage row carrying the verified
-    checksum. On a cluster this is Iceberg's rewrite_data_files; the
-    semantics here are the same: same rows, fewer files, lineage entry
-    proving it.
-
-    Returns {files_before, files_after, rows, checksum}.
-    """
-    path = stage_path(out_dir, stage)
-    files = _parquet_files(path)
-    total = sum(os.path.getsize(f) for f in files)
-    before = spark.read.parquet(path)
-    n_rows, checksum = _global_checksum(before)
-    n_out = max(1, -(-total // target_bytes))
-
-    tmp = path + ".compact"
-    w = before.repartition(n_out).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-
-    after = spark.read.parquet(tmp)
-    n_rows2, checksum2 = _global_checksum(after)
-    if (n_rows, checksum) != (n_rows2, checksum2):
-        raise RuntimeError(
-            f"compaction checksum mismatch for {stage}: "
-            f"{(n_rows, checksum)} != {(n_rows2, checksum2)}")
-
-    shutil.copy(os.path.join(path, STAGE_META), tmp)
-    gc = path + ".gc"
-    os.rename(path, gc)
-    os.rename(tmp, path)
-    shutil.rmtree(gc)
-
-    files_after = len(_parquet_files(path))
-    _append_lineage_rows(
-        spark, out_dir,
-        [(f"{stage}:compact", 0, n_rows, n_rows, checksum, None,
-          time.time())], wall_ms=None, input_rows=n_rows)
-    return {"files_before": len(files), "files_after": files_after,
-            "rows": n_rows, "checksum": checksum}

@@ -32,7 +32,7 @@ from typing import NamedTuple
 
 import pandas as pd
 import regex
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -143,12 +143,9 @@ def combine_annotations(mentions: list[dict]) -> list[dict]:
     return out
 
 
-# RegExTagger family — UrlTagger (UrlTagger.java:13-23, tag "URI") and
-# TwitterTagger (TwitterTagger.java:14-22, tag "TWITTER", [@#]\\w+)
+# RegExTagger family — UrlTagger (UrlTagger.java:13-23, tag "URI")
 
 URI_TAG_NAME = "URI"
-TWITTER_TAG_NAME = "TWITTER"
-_TWITTER_PATTERN = regex.compile(r"[@#][A-Za-z0-9_]+")
 
 
 def regex_tag(text: str, pattern, tag: str) -> list[dict]:
@@ -164,10 +161,6 @@ def regex_tag(text: str, pattern, tag: str) -> list[dict]:
 def tag_urls(text: str) -> list[dict]:
     from kgp.tokenize import URL_PATTERN
     return regex_tag(text, URL_PATTERN, URI_TAG_NAME)
-
-
-def tag_twitter(text: str) -> list[dict]:
-    return regex_tag(text, _TWITTER_PATTERN, TWITTER_TAG_NAME)
 
 
 # ------------------------------------------------------- date fragments
@@ -421,26 +414,6 @@ def apply_context_analysis(scores: dict[str, float], sentence: str,
             for cat in set(scores) | set(ctx)}
 
 
-def dictionary_tag(text: str, dictionary: dict[str, str],
-                   automaton: AhoCorasick | None = None) -> list[dict]:
-    """DictionaryTagger.getAnnotations port
-    (extraction/DictionaryTagger.java:50-69): case-insensitive
-    word-boundary match of every dictionary surface (len > 1), nested
-    matches removed. Returns [{start, end, surface, tag}] sorted by
-    (start, -end). One Aho-Corasick pass over the text — matching cost
-    no longer scales with |dictionary|; pass a prebuilt `automaton`
-    (AhoCorasick(dictionary.items())) to amortize the build across
-    texts."""
-    if automaton is None:
-        automaton = AhoCorasick(dictionary.items())
-    found = [{"start": s, "end": e, "surface": text[s:e], "tag": tag}
-             for s, e, tag in automaton.find_all(text)]
-    kept = remove_nested([(f["start"], f["end"]) for f in found])
-    out = [found[i] for i in kept]
-    out.sort(key=lambda f: (f["start"], -f["end"]))
-    return out
-
-
 # ------------------------------------------------ preprocess passes
 # preProcessAnnotations order (PalladianNer.java:603-626)
 
@@ -662,28 +635,6 @@ def tag_sentence(sentence: str, sent_start: int, model: NerModel,
 # ------------------------------------------------------ model training
 
 
-def get_case_signature(s: str) -> str:
-    """StringHelper.getCaseSignature port (StringHelper.java:1826-1844):
-    per-char signature (upper 'A', lower 'a', digit '0', whitespace ' ',
-    else '-'), run-compressed ("Hello" -> "Aa", "Super!? 8 Zorro" ->
-    "Aa- 0 Aa")."""
-    out: list[str] = []
-    for ch in s:
-        if ch.isupper():
-            sig = "A"
-        elif ch.islower():
-            sig = "a"
-        elif ch.isdigit():
-            sig = "0"
-        elif ch.isspace():
-            sig = " "
-        else:
-            sig = "-"
-        if not out or out[-1] != sig:
-            out.append(sig)
-    return "".join(out)
-
-
 def case_dictionary_pairs(text: str) -> list[tuple[str, str]]:
     """The token stream PalladianNer.buildCaseDictionary consumes
     (PalladianNer.java:191-213): WordTokenizer tokens with a skip flag
@@ -713,101 +664,9 @@ def case_dictionary_pairs(text: str) -> list[tuple[str, str]]:
     return pairs
 
 
-_CASE_PAIR_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("token", T.StringType()),
-    T.StructField("sig", T.StringType()),
-]))
-
 # bounds the broadcast case dictionary at web scale (the reference has
 # no bound): the most frequent tokens win, ties by token
 CASE_DICT_MAX_SIZE = 200_000
-
-
-def build_case_dictionary(docs: DataFrame, min_count: int = 1,
-                          max_size: int = CASE_DICT_MAX_SIZE) -> DataFrame:
-    """buildCaseDictionary as an aggregation (PalladianNer.java:191-222):
-    WordTokenizer tokens NOT at sentence beginnings (skip flag reset
-    after [.?!] tokens), length > 1, keyed by lowercase form; keep
-    tokens whose occurrences carry lowercase signature with P > 0.5.
-    The reference counts singleton documents per occurrence, so the
-    probability is the occurrence fraction."""
-
-    @F.pandas_udf(_CASE_PAIR_SCHEMA)
-    def pairs_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: case_dictionary_pairs(t or ""))
-
-    return (
-        docs.select(F.explode(pairs_udf("text")).alias("p"))
-        .groupBy(F.col("p.token").alias("token"))
-        .agg(F.count("*").alias("n"),
-             F.sum(F.when(F.col("p.sig") == "a", 1)
-                   .otherwise(0)).alias("n_lower"))
-        .where(F.col("n") >= min_count)
-        .where(F.col("n_lower") / F.col("n") > 0.5)
-        .orderBy(F.desc("n"), "token").limit(max_size)
-        .select("token")
-    )
-
-
-def build_annotation_dictionary(seeds: DataFrame, min_count: int = 1,
-                                token_based: bool = False) -> DataFrame:
-    """(gram, tag, count) of the seeds' padded char-5-grams via explode
-    + groupBy — the reference's trie build
-    (DictionaryTrieModel.Builder.addDocument, :78-100) as a hash
-    aggregation. token_based=True trains on each surface's TOKENS
-    labelled with the surface's concept — trainLanguageIndependent's
-    getAnnotationsFromColumnTokenBased feed (PalladianNer.java:354-372).
-    ner_model_table adds the corpus NO_ENTITY grams of trainEnglish's
-    second pass."""
-    if token_based:
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def tok_udf(col: pd.Series) -> pd.Series:
-            return col.map(lambda v: tokenize(v or ""))
-
-        seeds = seeds.select("concept",
-                             F.explode(tok_udf("entity")).alias("entity"))
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def gram_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: char_ngrams((x or "").lower(), GRAM_N,
-                                           GRAM_N, padding=True))
-
-    return (seeds.select(F.col("concept").alias("tag"),
-                         F.explode(gram_udf("entity")).alias("gram"))
-            .groupBy("gram", "tag").count()
-            .where(F.col("count") >= min_count))
-
-
-def build_entity_dictionary(seeds: DataFrame) -> DataFrame:
-    """(surface, concept, count) — buildEntityDictionary as aggregation
-    (PalladianNer.java:326-333)."""
-    return seeds.groupBy(F.lower("entity").alias("surface"),
-                         "concept").count()
-
-
-def equalize_type_counts(spans: DataFrame) -> DataFrame:
-    """PalladianNerTrainingSettings.equalizeTypeCounts
-    (trainEnglish, PalladianNer.java:391-405): downsample every tag's
-    training spans to the RAREST tag's count so no type dominates the
-    context/left-context dictionaries. The reference samples with
-    MathHelper.sample (java.util.Random — nondeterministic); this port
-    ranks rows by the md5-derived sample key (kgp.curation.sample_key,
-    ties by key string) and keeps the first min-count per tag — the
-    same deterministic-substitute policy as stratified_sample.
-    Operates on rows of kind 'span' (kind, key = context, tag, ...);
-    other kinds pass through untouched. ner_model_table does not
-    equalize."""
-    from kgp.curation import sample_key
-    span_rows = spans.where(F.col("kind") == "span")
-    min_count = (span_rows.groupBy("tag").count()
-                 .agg(F.min("count")).collect()[0][0])
-    if min_count is None:
-        return spans
-    w = Window.partitionBy("tag").orderBy(
-        sample_key(F.concat_ws("\x1f", "key", "tag")), "key")
-    kept = (span_rows.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= min_count).drop("_rk"))
-    return spans.where(F.col("kind") != "span").unionByName(kept)
 
 
 def assemble_model(entity_rows, ann_rows, case_tokens) -> NerModel:
@@ -995,20 +854,6 @@ def model_from_rows(rows) -> NerModel:
         [(k, c) for k, _, c in by_kind.get("prior", [])],
         [(k,) for k, _, _ in by_kind.get("left", [])],
     )
-
-
-def train_ner_model(spark: SparkSession, docs: DataFrame,
-                    seeds: DataFrame) -> NerModel:
-    """Distributed training -> small broadcastable model: one collect
-    of the seed rows, then one collect of ner_model_table (its training
-    scan plus one aggregation).
-
-    docs is the TRAINING corpus (pass a stable-hash sample of the full
-    corpus in production — entities that must be typed by context
-    rather than dictionary need to be absent from training, or the
-    two-pass negative mining would mark them NO_ENTITY)."""
-    seed_rows = seeds.select("entity", "concept").collect()
-    return model_from_rows(ner_model_table(docs, seed_rows).collect())
 
 
 def attach_context(model: NerModel, ctx_rows, prior_rows,

@@ -963,32 +963,3 @@ def dominant_colors_stage(media: DataFrame, fake: bool = False,
 
     return pruned.mapInPandas(
         run, "media_id long, fine_color string, main_color string")
-
-
-def detect_colors_svg(svg_content: str, palette=None,
-                      top: int = 3) -> list[tuple[str, str, str]]:
-    """ImageHandler.detectColors(String svg) (ImageHandler.java:
-    976-1003): every fill="..." value, lowercased, counted into a bag;
-    walked count-descending (the reference's Bag.createSorted keeps
-    HashMap tie order — this port ties by value ascending, the repo's
-    standard deterministic substitute); non-'#' codes skipped; each
-    code snaps to the nearest palette entry and the first `top`
-    DISTINCT main colors win. Returns (original hex, fine, main)."""
-    from collections import Counter
-
-    from kgp.stringhelpers import get_substrings_between
-    codes = Counter(c.lower() for c in get_substrings_between(
-        svg_content, 'fill="', '"'))
-    seen: set[str] = set()
-    out: list[tuple[str, str, str]] = []
-    for code, _n in sorted(codes.items(),
-                           key=lambda kv: (-kv[1], kv[0])):
-        if not code.startswith("#"):
-            continue
-        fine, main = find_best_match_color(_hex_to_rgb(code), palette)
-        if main not in seen:
-            seen.add(main)
-            out.append((code, fine, main))
-        if len(seen) >= top:
-            break
-    return out

@@ -453,26 +453,9 @@ IRREGULAR_VERB_TABLE: dict[str, tuple[str, str, str]] = {
 }
 
 
-def load_irregular_verbs(lines) -> dict[str, tuple[str, str, str]]:
-    """Loader for the reference's irregularEnglishVerbs.csv format
-    (WordTransformer.java:145-155): ';'-split triples, every form a
-    key, later lines overwrite."""
-    table: dict[str, tuple[str, str, str]] = {}
-    for line in lines:
-        parts = line.strip().split(";")
-        if len(parts) < 3:
-            continue
-        ev = (parts[0], parts[1], parts[2])
-        for k in parts[:3]:
-            table[k] = ev
-    return table
-
-
 # Irregular nouns — singular -> plural, the used slice of the
 # reference's 2153-line irregularEnglishNouns.txt (every entry the
-# WordTransformerTest vectors exercise plus the common head nouns);
-# the full file loads through load_irregular_nouns with the exact
-# reference line semantics (WordTransformer.java:161-171).
+# WordTransformerTest vectors exercise plus the common head nouns).
 IRREGULAR_NOUNS_SINGULAR_TO_PLURAL: dict[str, str] = {
     "addendum": "addenda",
     "alga": "algae",
@@ -586,16 +569,6 @@ IRREGULAR_NOUNS: dict[str, str] = {
     v: k for k, v in IRREGULAR_NOUNS_SINGULAR_TO_PLURAL.items()}
 
 
-def load_irregular_nouns(lines) -> dict[str, str]:
-    """Loader for irregularEnglishNouns.txt ('plural singular' per
-    line, whitespace-split) -> singular -> plural map."""
-    out: dict[str, str] = {}
-    for line in lines:
-        parts = line.split()
-        if len(parts) == 2:
-            out[parts[1]] = parts[0]
-    return out
-
 _VOWELS = set("aeiou")
 
 
@@ -682,183 +655,9 @@ def normalize_predicates(triples: DataFrame,
         F.coalesce(lit_map[F.col(pred_col)], F.col(pred_col)))
 
 
-# ------------------------------------- generative word transforms
-# The inverse directions of WordTransformer, used when GENERATING
-# surface variants for relation patterns (one canonical predicate ->
-# every phrasing to match). Pure functions; the reference keys its
-# irregular-verb lookups by the Snowball-stemmed form
-# (stemEnglishWord, now the real algorithm in kgp.stemmer).
-
-_MODALS = {"can", "could", "will", "would", "may", "might", "shall",
-           "should", "must"}
-
-
-def word_to_plural(singular: str) -> str:
-    """wordToPluralEnglishCaseSensitive port (WordTransformer.java:
-    414-489): composite terms pluralize the LAST word; irregular map;
-    vowel+y -> +s; consonant+y -> -ies; -is -> -es; s/z/x/ch/sh ->
-    +es; default +s. Words under 3 chars pass through."""
-    if not singular:
-        return ""
-    s = singular.lower()
-    prefix = ""
-    parts = s.split(" ")
-    if len(parts) > 1:
-        s = parts[-1]
-        prefix = " ".join(parts[:-1]) + " "
-    if s in IRREGULAR_NOUNS_SINGULAR_TO_PLURAL:
-        return prefix + IRREGULAR_NOUNS_SINGULAR_TO_PLURAL[s]
-    if len(s) < 3:
-        return prefix + s
-    last, last2 = s[-1], s[-2:]
-    if last2 in ("ay", "ey", "iy", "oy", "uy"):
-        return prefix + s + "s"
-    if last == "y":
-        return prefix + s[:-1] + "ies"
-    if last2 == "is":
-        return prefix + s[:-2] + "es"
-    if last in "szx" or last2 in ("ch", "sh"):
-        return prefix + s + "es"
-    return prefix + s + "s"
-
-
 def _irregular(verb: str) -> tuple[str, str, str] | None:
     """IRREGULAR_VERBS.get(stemEnglishWord(verb)) — the reference
     looks up by the Snowball-stemmed form only; every raw form is a
     key of the table anyway (WordTransformer.java:635-636)."""
     from kgp.stemmer import stem_english_word
     return IRREGULAR_VERB_TABLE.get(stem_english_word(verb))
-
-
-def third_person_singular(verb: str) -> str:
-    """getThirdPersonSingular port (WordTransformer.java:608-671):
-    be/was/been/have specials, modals stay, past forms of irregular
-    verbs stay, regular -ed stays, then the es/ies suffix rules
-    (incl. the vowel+s/z letter-doubling branch)."""
-    if not verb:
-        return verb
-    v = verb.lower()
-    if v == "be":
-        return "is"
-    if v in ("was", "been"):
-        return v
-    if v == "have":
-        return "has"
-    if v in _MODALS:
-        return v
-    ev = _irregular(v)
-    if ev is not None:
-        if v in (ev[1], ev[2]):
-            return v
-        v = ev[0]
-    elif v.endswith("ed"):
-        return v
-    if len(v) >= 2:
-        before = v[-2]
-        if v.endswith(("ch", "sh", "x", "o")):
-            return v + "es"
-        if before not in _VOWELS and v[-1] in "sz":
-            return v + "es"
-        if before in _VOWELS and v[-1] in "sz":
-            return v + v[-1] + "es"
-        if before not in _VOWELS and v.endswith("y"):
-            return v[:-1] + "ies"
-    return v + "s"
-
-
-def _regular_verb_past(verb: str) -> str:
-    """getRegularVerbPast port (WordTransformer.java:706-729) incl.
-    the qui/qua/quo/quu final-consonant-doubling quirk."""
-    if not verb:
-        return verb
-    v = verb.lower()
-    if v.endswith("ed"):
-        return v
-    if v.endswith("e"):
-        return v + "d"
-    if v.endswith("y"):
-        return v[:-1] + "ied"
-    if any(q in v for q in ("qui", "qua", "quo", "quu")):
-        return v + v[-1] + "ed"
-    return v + "ed"
-
-
-def simple_past(verb: str) -> str:
-    """getSimplePast port (:694-704): irregular past, else regular."""
-    if not verb:
-        return verb
-    ev = _irregular(verb.lower())
-    if ev is not None:
-        return ev[1]
-    return _regular_verb_past(verb)
-
-
-def past_participle(verb: str) -> str:
-    """getPastParticiple port (:731-745): irregular participle, else
-    the regular past of the STEMMED word (the reference quirk —
-    participles of regular verbs are built on the Snowball stem)."""
-    from kgp.stemmer import stem_english_word
-    if not verb:
-        return verb
-    ev = _irregular(verb.lower())
-    if ev is not None:
-        return ev[2]
-    return _regular_verb_past(stem_english_word(verb.lower()))
-
-
-def predicate_variants(pred: str) -> list[str]:
-    """Every surface phrasing of a snake_cased predicate the pattern
-    bank should match: the name itself plus third-person / past /
-    participle forms of the leading verb. Deterministic order, no
-    duplicates — feeds kgp.relations pattern generation."""
-    toks = pred.split("_")
-    head, tail = toks[0], toks[1:]
-    forms = [head, third_person_singular(head), simple_past(head),
-             past_participle(head)]
-    out, seen = [], set()
-    for f in forms:
-        name = "_".join([f] + tail)
-        if name not in seen:
-            seen.add(name)
-            out.append(name)
-    return out
-
-
-# ------------------------------------------------- tense detection
-
-# EnglishTense.java values
-SIMPLE_PRESENT = "SIMPLE_PRESENT"
-SIMPLE_PAST = "SIMPLE_PAST"
-PRESENT_PERFECT = "PRESENT_PERFECT"
-PAST_PERFECT = "PAST_PERFECT"
-
-
-def get_tense(text: str, tags: list[str]) -> str:
-    """getTense port (WordTransformer.java:760-806): signal-word
-    checks (do/does -> present, did -> past) first, then the POS-tag
-    rules over the sentence's tag set — VBD without is/are -> past,
-    HVD+VBN/HVN -> past perfect, HV+VBN/HVN -> present perfect, VBN
-    without is/are -> present perfect, was/were fallback -> past.
-    Tags are Brown-corpus POS tags, one per token."""
-    from kgp.rules import contains_word
-    if not text:
-        return SIMPLE_PRESENT
-    text = text.lower()
-    if contains_word(["do", "don't", "does", "doesn't"], text):
-        return SIMPLE_PRESENT
-    if contains_word(["did", "didn't"], text):
-        return SIMPLE_PAST
-    is_are = contains_word(["is", "are"], text)
-    was_were = contains_word(["was", "were"], text)
-    pos = set(tags)
-    if "VBD" in pos and not is_are:
-        return SIMPLE_PAST
-    if "HVD" in pos and ("VBN" in pos or "HVN" in pos):
-        return PAST_PERFECT
-    if "HV" in pos and ("VBN" in pos or "HVN" in pos):
-        return PRESENT_PERFECT
-    if "VBN" in pos and not is_are:
-        return PRESENT_PERFECT
-    if was_were:
-        return SIMPLE_PAST
-    return SIMPLE_PRESENT

@@ -321,20 +321,3 @@ def co_occurrence_pairs(links: DataFrame, mode: str = "document",
             .where(F.col("surface_a") < F.col("surface_b"))
             .groupBy("surface_a", "surface_b", "tag_a", "tag_b")
             .agg(F.count("*").alias("n_contexts")))
-
-
-def verb_forms_regex(verb: str) -> str:
-    """Alternation of every WordTransformer form of a verb (present,
-    third-person, past, participle — kgp.predicates ports), longest
-    first so the regex engine can't stop at a prefix. Pattern-bank
-    construction helper:
-
-        Pattern("works_for", "PER", "ORG",
-                _p(" " + verb_forms_regex("work") + " (?:for|at) "))
-    """
-    from kgp.predicates import (past_participle, simple_past,
-                                third_person_singular)
-    forms = {verb, third_person_singular(verb), simple_past(verb),
-             past_participle(verb)}
-    return "(?:" + "|".join(sorted(forms, key=lambda f: (-len(f), f))) \
-        + ")"

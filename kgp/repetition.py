@@ -135,21 +135,3 @@ def repetition_signals(docs: DataFrame,
         *[F.round(F.element_at("_g", i + 1), 4).alias(name)
           for i, name in enumerate(gram_names)],
     )
-
-
-def gopher_repetition_filter(signals: DataFrame) -> Column:
-    """The Gopher keep/drop rule over the signal row (thresholds from
-    Rae et al. Table A1): drop when any fraction exceeds its bound."""
-    bounds = {
-        "dup_line_frac": 0.30, "dup_para_frac": 0.30,
-        "dup_line_char_frac": 0.20, "dup_para_char_frac": 0.20,
-        "top_2gram_char_frac": 0.20, "top_3gram_char_frac": 0.18,
-        "top_4gram_char_frac": 0.16,
-        "dup_5gram_char_frac": 0.15, "dup_6gram_char_frac": 0.14,
-        "dup_7gram_char_frac": 0.13, "dup_8gram_char_frac": 0.12,
-        "dup_9gram_char_frac": 0.11, "dup_10gram_char_frac": 0.10,
-    }
-    keep = F.lit(True)
-    for col, bound in bounds.items():
-        keep = keep & (F.col(col) <= F.lit(bound))
-    return keep

@@ -558,24 +558,3 @@ def make_mutual_xpath(xpaths: list[str]) -> str:
     out = [p if keep[i] or p.find("[") == -1 else p[:p.find("[")]
            for i, p in enumerate(path)]
     return "/".join(out)
-
-
-def make_mutual(root: Node, xpaths: list[str], level: int = 1
-                ) -> list[str]:
-    """PageSegmenter.makeMutual port (:717-757): resolve the mutual
-    xpath (appending /td under a trailing tr, as written) and return
-    the constructed xpath of every node it selects."""
-    from kgp.html_text import construct_xpath
-    pmap = _parent_index_map(root)
-    s = list(dict.fromkeys(xpaths))
-    out: list[str] = []
-    for _ in range(level):
-        xp = make_mutual_xpath(s)
-        if xp.rsplit("/", 1)[-1] == "tr":
-            xp = xp + "/td"
-        for n in xpath_nodes(root, xp):
-            cx = construct_xpath(n, pmap)
-            out.append(cx)
-            if cx in s:
-                s.remove(cx)
-    return out

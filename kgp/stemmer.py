@@ -421,13 +421,6 @@ def stem_word(word: str, language: str = "en") -> str:
         "(reference Stemmer.java:53-88 routes to org.tartarus snowball)")
 
 
-def stem_words(words: str, language: str = "en") -> str:
-    """WordTransformer.stemWords (:539-556): split on \\s+, stem each
-    word, single-space join (StringBuilder + trim)."""
-    return " ".join(stem_word(p, language)
-                    for p in words.split() if p).strip()
-
-
 # Fixed word bank for the snowball_stems gate: every algorithm branch
 # (both languages) plus the full exception maps; the oracle renders
 # the expected stems from the spec-trace-pinned twins above.

@@ -1,22 +1,9 @@
-"""StringHelper scalar library — the remaining used-in-the-wild
-members not already ported into their consumer modules
-(palladian-commons helper/nlp/StringHelper.java; line numbers below).
-Pure driver-side twins, same role as kgp.webgraph's URL parity
-utilities; everything stays exact to the Java incl. the quirks.
+"""StringHelper scalar twins — first-letter casing and whole-word
+replacement (palladian-commons helper/nlp/StringHelper.java; line
+numbers below), exact to the Java incl. its quirks.
 """
 
 from __future__ import annotations
-
-import re
-
-# RegExp.NUMBER (constants/RegExp.java:14) — used by removeNumbers /
-# containsNumber; Java and Python lookbehind/lookahead compatible.
-NUMBER_PATTERN = re.compile(
-    r"(?<!(\w)-)(?<!(\w))((\d){1,}((,|\.|\s))?){1,}"
-    r"(?!((\d)+-(\d)+))(?!-(\d)+)")
-
-_NUMBERING1 = re.compile(r"^\s*\d+(\.?\d?)*\s*")
-_NUMBERING2 = re.compile(r"^\s*#\d+(\.?\d?)*\s*")
 
 
 def upper_case_first_letter(s: str) -> str:
@@ -30,82 +17,6 @@ def lower_case_first_letter(s: str) -> str:
     if not s:
         return s or ""
     return s[0].lower() + s[1:]
-
-
-def make_camel_case(name: str, uppercase_first: bool = False) -> str:
-    """StringHelper.makeCamelCase (:189-204): whitespace -> '_',
-    split on '_', upperCaseFirstLetter per part (original casing
-    kept), then lowercase the first letter unless asked."""
-    out = ""
-    for part in re.sub(r"\s", "_", name).split("_"):
-        out += upper_case_first_letter(part)
-    if not uppercase_first:
-        out = lower_case_first_letter(out)
-    return out
-
-
-def camel_case_to_words(s: str, separator: str = " ") -> str:
-    """StringHelper.camelCaseToWords (:1417-1442): a separator goes
-    between a lowercase letter and the following UPPERCASE letter
-    (category check, not isupper — digits/symbols never split)."""
-    if not s:
-        return ""
-    out = [s[0]]
-    for prev, cur in zip(s, s[1:]):
-        if cur.isalpha() and cur.isupper() and prev.isalpha() \
-                and prev.islower():
-            out.append(separator)
-        out.append(cur)
-    return "".join(out)
-
-
-def normalize_capitalization(name: str) -> str:
-    """StringHelper.normalizeCapitalization (:290-306): every
-    whitespace part gets upperCaseFirstLetter except non-leading
-    'of'/'and'/'the' (which must already be lowercase to be spared —
-    the membership test runs on the raw part; quirk kept)."""
-    no_upper = ("of", "and", "the")
-    parts = re.split(r"\s", name)
-    out = ""
-    for i, part in enumerate(parts):
-        if i > 0 and part in no_upper:
-            out += part + " "
-        else:
-            out += upper_case_first_letter(part) + " "
-    return out.strip()
-
-
-_ARTICLES = ["the", "a", "an", "der", "die", "das", "le", "la",
-             "les", "las", "los", "ta", "il", "un", "uno"]
-
-
-def put_article_in_front(s: str) -> str:
-    """StringHelper.putArticleInFront (:1111-1177): 'Beatles, The' ->
-    'The Beatles' for the fixed article list, checking the ',X' and
-    ', X' suffixes in the reference's exact order."""
-    string = (s or "").strip()
-    low = string.lower()
-    for art in _ARTICLES:
-        if low.endswith("," + art):
-            return art.capitalize() + " " + string[:-(len(art) + 1)]
-        if low.endswith(", " + art):
-            return art.capitalize() + " " + string[:-(len(art) + 2)]
-    return string
-
-
-def remove_numbering(s: str) -> str:
-    """StringHelper.removeNumbering (:314-318): leading '1.2 ' or
-    '#1.2 ' numbering deleted."""
-    return _NUMBERING2.sub("", _NUMBERING1.sub("", s))
-
-
-def remove_numbers(s: str) -> str:
-    """StringHelper.removeNumbers (:326-328) over RegExp.NUMBER."""
-    return NUMBER_PATTERN.sub("", s)
-
-
-def contains_number(s: str) -> bool:
-    return NUMBER_PATTERN.search(s) is not None
 
 
 def replace_word(word: str, replacement: str, text: str) -> str:
@@ -145,134 +56,3 @@ def replace_word(word: str, replacement: str, text: str) -> str:
 def _is_dash_punct(c: str) -> bool:
     import unicodedata
     return unicodedata.category(c) == "Pd"
-
-
-_NUMBER_WORDS = {
-    "zero": 0, "one": 1, "two": 2, "couple": 2, "three": 3, "few": 3,
-    "four": 4, "five": 5, "six": 6, "seven": 7, "eight": 8, "nine": 9,
-    "ten": 10, "eleven": 11, "twelve": 12,
-}
-
-
-def number_word_to_number(word: str) -> int | None:
-    """StringHelper.numberWordToNumber (:1645-1688): zero..twelve plus
-    'couple' (2) and 'few' (3); anything else -> null."""
-    return _NUMBER_WORDS.get((word or "").lower().strip())
-
-
-_WORDS_BY_NUMBER = {1: "one", 2: "two", 3: "three", 4: "four",
-                    5: "five", 6: "six", 7: "seven", 8: "eight",
-                    9: "nine", 10: "ten", 11: "eleven", 12: "twelve"}
-
-
-def number_to_word(number: float) -> str | None:
-    """StringHelper.numberToWord (:1590-1643): 1..12 only; fractional
-    input -> null (the Java `number %% intNumber > 0` check; 0 and
-    0.x hit the NaN branch and also return null)."""
-    int_number = int(number)
-    if int_number == 0:
-        return None  # Java: x % 0 = NaN, NaN > 0 false, no 0 case
-    if number % int_number > 0:
-        return None
-    return _WORDS_BY_NUMBER.get(int_number)
-
-
-_NUMBER_WORD_CHAIN = [
-    ("zero", "0"), ("one", "1"), ("first", "1"), ("two", "2"),
-    ("second", "2"), ("three", "3"), ("third", "3"), ("four", "4"),
-    ("fourth", "4"), ("five", "5"), ("fifth", "5"), ("six", "6"),
-    ("sixth", "6"), ("seven", "7"), ("seventh", "7"), ("eight", "8"),
-    ("eights", "8"), ("nine", "9"), ("nineth", "9"), ("ten", "10"),
-    ("tenth", "10"), ("eleven", "11"), ("eleventh", "11"),
-    ("twelve", "12"), ("twelveth", "12"), ("twenty", "20"),
-    ("thirty", "30"), ("forty", "40"), ("fifty", "50"),
-    ("sixty", "60"), ("seventy", "70"), ("eighty", "80"),
-    ("ninety", "90"), ("one hundred", "100"),
-]
-
-
-def number_words_to_numbers(text: str) -> str:
-    """StringHelper.numberWordsToNumbers (:1690-1730): the exact
-    replaceWord chain — NOTE 'one hundred' comes LAST, after 'one' has
-    already become '1', so it can never match; kept bug-for-bug."""
-    for word, repl in _NUMBER_WORD_CHAIN:
-        text = replace_word(word, repl, text)
-    return text
-
-
-def get_longest_common_string(s1: str, s2: str,
-                              case_sensitive: bool = False,
-                              shift_string: bool = True) -> str:
-    """StringHelper.getLongestCommonString (:1232-1285): the shorter
-    string is shortened from the front and (optionally) shifted over
-    the longer one; common PREFIX runs are collected by length and the
-    longest wins (later entries of equal length overwrite — TreeMap
-    semantics kept)."""
-    a, b = (s1, s2) if case_sensitive else (s1.lower(), s2.lower())
-    short, long_ = (a, b) if len(a) <= len(b) else (b, a)
-    commons: dict[int, str] = {}
-    s1c = short
-    while len(s1c) > 1:
-        for start in range(len(long_)):
-            index = start
-            while index < min(len(s1c) + start, len(long_)):
-                if s1c[index - start] != long_[index]:
-                    break
-                index += 1
-            commons[index - start] = s1c[:index - start]
-            if not shift_string:
-                break
-        if not shift_string:
-            break
-        s1c = s1c[1:]
-    if not commons:
-        return ""
-    return commons[max(commons)]
-
-
-def reverse_string(s: str) -> str:
-    return s[::-1]
-
-
-def shorten(s: str | None, max_len: int) -> str | None:
-    """StringHelper.shorten (:129-134)."""
-    if s is None:
-        return None
-    return s[:min(len(s), max_len)]
-
-
-def shorten_ellipsis(s: str | None, max_len: int) -> str | None:
-    """StringHelper.shortenEllipsis (:144-152): appends the single
-    HORIZONTAL ELLIPSIS character, not three dots."""
-    if s is None or len(s) <= max_len:
-        return s
-    return s[:max_len] + "\u2026"
-
-
-def get_substrings_between(string: str, left_border: str | None,
-                           right_border: str | None) -> list[str]:
-    """StringHelper.getSubstringsBetween (StringHelper.java:1365-1393)
-    — the exact index walk, including the as-written i==0 null-left
-    branch and the rightIndex>leftIndex stop rule."""
-    substrings: list[str] = []
-    left_len = len(left_border) if left_border is not None else 0
-    right_index = 0
-    i = 0
-    while True:
-        left_index = 0
-        if left_border is not None:
-            left_index = string.find(left_border, right_index)
-        if right_border is not None:
-            right_index = string.find(right_border,
-                                      left_index + left_len)
-        else:
-            right_index = len(string)
-        if right_index > left_index and (
-                (left_index > -1 and left_border is not None)
-                or (i == 0 and left_border is None)):
-            substrings.append(
-                string[left_index + left_len:right_index])
-        else:
-            break
-        i += 1
-    return substrings

@@ -205,187 +205,3 @@ def word_ngrams(tokens: list[str], n_min: int, n_max: int) -> list[str]:
         for i in range(len(tokens) - n + 1):
             out.append(" ".join(tokens[i:i + n]))
     return out
-
-
-def char_edge_ngrams(string: str, n: int,
-                     must_hit_left_edge: bool = False) -> set[str]:
-    """Tokenizer.calculateCharEdgeNGrams port (Tokenizer.java:94-120):
-    only the n-gram touching the left edge and the one touching the
-    right edge of the word are kept ("pROTector" must not yield "rot").
-    must_hit_left_edge stops after the prefix gram."""
-    out: set[str] = set()
-    length = len(string)
-    if length < n:
-        return out
-    for i in range(0, length - n + 1):
-        if i > 0 and i != length - n:
-            continue
-        out.add(string[i:i + n])
-        if i == 0 and must_hit_left_edge:
-            break
-    return out
-
-
-def all_char_edge_ngrams(string: str, n1: int, n2: int,
-                         must_hit_left_edge: bool = False) -> set[str]:
-    """Tokenizer.calculateAllCharEdgeNGrams port (Tokenizer.java:65-79):
-    split on single spaces, union of per-part edge grams for every n in
-    [n1, n2]."""
-    out: set[str] = set()
-    for part in string.split(" "):
-        for n in range(n1, n2 + 1):
-            out |= char_edge_ngrams(part, n, must_hit_left_edge)
-    return out
-
-
-def compute_starting_word_ngrams(string: str, n1: int,
-                                 n2: int) -> list[str]:
-    """Tokenizer.computeStartingWordNGrams port (Tokenizer.java:
-    247-265): word n-grams anchored at the START of the string, from
-    the longest (min(n2, words)) down, at most n2-n1+1 of them."""
-    split = string.split(" ")
-    n2 = min(n2, len(split))
-    out: list[str] = []
-    for i in range(min(len(split), n2 - n1 + 1)):
-        ngram = " ".join(split[:n2 - i]).strip()
-        if ngram:
-            out.append(ngram)
-    return out
-
-
-def compute_splits(string: str, n1: int, n2: int,
-                   max_splits: int) -> set[tuple[str, ...]]:
-    """Tokenizer.computeSplits port (Tokenizer.java:203-236): every way
-    of segmenting the string into starting n-grams of n1..n2 words,
-    capped at max_splits results."""
-    splits: set[tuple[str, ...]] = set()
-
-    def rec(current: list[str], rest: str) -> None:
-        if not rest:
-            splits.add(tuple(current))
-            if current:
-                current.pop()
-            return
-        if len(splits) >= max_splits:
-            return
-        for ngram in compute_starting_word_ngrams(rest, n1, n2):
-            current.append(ngram)
-            nxt = rest[len(ngram):].strip() if rest.startswith(ngram) \
-                else rest
-            rec(current, nxt)
-        if current:
-            current.pop()
-
-    rec([], string)
-    return splits
-
-
-def _is_bracket(ch: str) -> bool:
-    """StringHelper.isBracket (StringHelper.java:682-684)."""
-    return ch in "(){}[]"
-
-
-def phrase_to_end_of_sentence(string: str) -> str:
-    """Tokenizer.getPhraseToEndOfSentence (Tokenizer.java:450-519),
-    exact translation: period scan with the numeral / uppercase /
-    bracket / preceding-quote context rules (each check OVERWRITES
-    the previous verdict, as written), break/end-of-string
-    acceptance, an earlier !/? wins, and the delimiter character is
-    KEPT (++endIndex)."""
-    end_index = string.find(".")
-    ok = False
-    while not ok and end_index > -1:
-        if end_index > 0:
-            ok = not string[end_index - 1].isdigit()
-        if end_index < len(string) - 1:
-            ok = ((not string[end_index + 1].isdigit()
-                   and string[end_index + 1].isupper())
-                  or _is_bracket(string[end_index + 1])
-                  or (end_index > 0 and string[end_index - 1] == '"'))
-        if not ok and end_index < len(string) - 2:
-            ok = (not string[end_index + 2].isdigit()
-                  and (string[end_index + 2].isupper()
-                       or _is_bracket(string[end_index + 2]))
-                  and string[end_index + 1] == " ")
-        if not ok and (len(string) == end_index + 1
-                       or string[end_index + 1] == "\n"):
-            ok = True
-        if ok:
-            break
-        if end_index < len(string) - 1:
-            end_index = string.find(".", end_index + 1)
-        else:
-            end_index = -1
-    bang = string.find("!")
-    if bang > -1 and (bang < end_index or end_index == -1):
-        end_index = bang
-    quest = string.find("?")
-    if quest > -1 and (quest < end_index or end_index == -1):
-        end_index = quest
-    if end_index == -1:
-        end_index = len(string)
-    else:
-        end_index += 1
-    return string[:end_index]
-
-
-def get_sentence(string: str, position: int,
-                 language: str = "en") -> str:
-    """Tokenizer.getSentence (Tokenizer.java:267-296): the last
-    sentence whose indexOf start is <= position."""
-    if position < 0:
-        return string
-    picked = ""
-    for tok in get_sentences(string, language=language):
-        start = string.find(tok.value)
-        if start <= position:
-            picked = tok.value
-        else:
-            break
-    return picked
-
-
-def phrase_from_beginning_of_sentence(string: str) -> str:
-    """Tokenizer.getPhraseFromBeginningOfSentence port (:369-438): text
-    after the last sentence delimiter, skipping periods inside numbers
-    (e.g. "30.2%")."""
-    string = regex.sub(r"  +", " ", string)
-    start = max(string.rfind("."), string.rfind("\n"))
-    ok = False
-    while not ok and start > -1:
-        if start >= len(string) - 1:
-            break
-        if start > 0:
-            ok = (not string[start - 1].isdigit()
-                  and string[start + 1].isupper())
-        if not ok and start < len(string) - 2:
-            ok = ((string[start + 2].isupper()
-                   or string[start + 2] in "-=")
-                  and string[start + 1] == " ")
-        if not ok and (string[start + 1] == "\n" or string[start] == "\n"):
-            ok = True
-        if ok:
-            break
-        start = string[:start].rfind(".") if start < len(string) - 1 \
-            else -1
-    for ch in "!?:":
-        i = string.rfind(ch)
-        if i > start:
-            start = i
-    string = string[start + 1:]
-    return string[1:] if string.startswith(" ") else string
-
-
-def word_ngram_sequence(tokens: list[str], n_min: int,
-                        n_max: int) -> list[str]:
-    """NGramWrapperIterator order (extraction/token/
-    NGramWrapperIterator.java): POSITION-major — every length from one
-    start token before advancing ("the", "the quick", "quick", ...),
-    unlike word_ngrams' length-major enumeration
-    (Tokenizer.calculateWordNgrams)."""
-    out = []
-    for i in range(len(tokens)):
-        for n in range(n_min, n_max + 1):
-            if i + n <= len(tokens):
-                out.append(" ".join(tokens[i:i + n]))
-    return out

@@ -106,25 +106,6 @@ def _length_sorted(strings: "list[str]") -> "list[str]":
     return sorted(strings, key=lambda s: (-len(s), s.lower()))
 
 
-def load_domain_suffixes(tld_lines, sld_lines) -> "list[str]":
-    """The reference's suffix-bank loader (UrlHelper.java:64-103):
-    top-level-domains.txt lines lose their leading dot then get it
-    re-prepended; second-level-domains.txt lines are used verbatim;
-    comments/empties skipped; each section length-sorted; SLDs first
-    (so the first endsWith match prefers the longer public suffix)."""
-    tlds, slds = [], []
-    for line in tld_lines:
-        t = line.strip()
-        if t and not t.startswith("#"):
-            tlds.append(t[1:])
-    for line in sld_lines:
-        t = line.strip()
-        if t and not t.startswith("#"):
-            slds.append(t)
-    return (_length_sorted(slds)
-            + ["." + t for t in _length_sorted(tlds)])
-
-
 DOMAIN_SUFFIXES = (_length_sorted(_SLD_SUFFIXES)
                    + ["." + t for t in _length_sorted(_TLDS)])
 
@@ -288,16 +269,6 @@ def get_links(root: Node, original_url: str | None,
                 links.append({"url": link, "anchor": anchor,
                               "in_domain": in_dom})
     return links
-
-
-def get_links_set(root: Node, original_url: str | None,
-                  in_domain: bool = True, out_domain: bool = True,
-                  prefix: str = "", respect_nofollow: bool = False,
-                  include_subdomains: bool = False) -> set[str]:
-    """The reference's exact return shape (Set<String>)."""
-    return {d["url"] for d in get_links(
-        root, original_url, in_domain, out_domain, prefix,
-        respect_nofollow, include_subdomains)}
 
 
 # ------------------------------------------------------------- stages
@@ -671,102 +642,3 @@ def remove_session_id_col(col: Column | str) -> Column:
     c = F.regexp_replace(c, SESSION_ID_PATTERN, "")
     c = F.regexp_replace(c, r"\?$", "")
     return F.regexp_replace(c, r"\?&", "?")
-
-
-# ------------------------------------------ canonical / absolute urls
-
-_DEFAULT_PORTS = {"http": 80, "https": 443, "ftp": 21}
-
-
-def get_clean_url(url: str | None) -> str:
-    """UrlHelper.getCleanUrl:227-242 — strip scheme prefix + www."""
-    if url is None:
-        url = ""
-    if url.startswith("https://"):
-        url = url[8:]
-    if url.startswith("http://"):
-        url = url[7:]
-    if url.startswith("www."):
-        url = url[4:]
-    return url
-
-
-def get_canonical_url(url: str | None) -> str:
-    """UrlHelper.getCanonicalUrl:300-360, bug-for-bug:
-
-    - a non-default explicit port is concatenated BEFORE the host
-      (``protocol + "://" + port + host`` in the reference)
-    - ``..`` blanks itself and the part above it even if that part was
-      already blanked by an earlier ``..``
-    - every surviving path part gets a trailing slash; the slash is
-      stripped again when the LAST split part contains a dot (a file)
-    - ``index.<ext>`` is deleted only when there is NO query
-    - query parts are sorted bytewise; the fragment is dropped
-
-    Malformed/unknown-protocol urls return "" (the swallowed
-    MalformedURLException).
-
-    NOTE: this is the reference's per-URL canonical form used for
-    parity; the SCALE path for crawl-frontier dedup is the pure-column
-    kgp.curation.canonical_url (different, documented rules).
-    """
-    if url is None:
-        return ""
-    try:
-        p = urlsplit(url)
-    except ValueError:
-        return ""
-    if p.scheme.lower() not in _KNOWN_SCHEMES or p.scheme == "mailto":
-        return ""
-    try:
-        explicit_port = p.port
-    except ValueError:
-        return ""
-    port = ""
-    if explicit_port is not None \
-            and explicit_port != _DEFAULT_PORTS.get(p.scheme.lower(), -1):
-        port = ":" + str(explicit_port)
-    host = (p.hostname or "").lower()
-    path = p.path
-    query = None
-    if p.query:
-        query = sorted(p.query.split("&"))
-
-    # Java String.split drops trailing empty strings
-    parts = path.split("/")
-    while parts and parts[-1] == "":
-        parts.pop()
-    path = "/"
-    if parts:
-        for i in range(len(parts)):
-            parts[i] = _jtrim(parts[i])
-            if parts[i] == "..":
-                parts[i] = ""
-                if len(parts) > 1 and i > 0:
-                    parts[i - 1] = ""
-        for part in parts:
-            if part:
-                path += part + "/"
-        if "." in parts[-1]:
-            path = path[:-1]
-        if "index" in parts[-1] and query is None:
-            path = re.sub(r"index\..+$", "", path)
-
-    query_part = "?" + "&".join(query) if query is not None else ""
-    return p.scheme + "://" + port + host + path + query_part
-
-
-def make_absolute_urls(root: Node, document_url: str | None) -> Node:
-    """UrlHelper.makeAbsoluteUrls:139-157 — rewrite every href/src
-    attribute in the DOM to a full URL against the document url and
-    its base href, in place."""
-    base_url = _base_href(root)
-    for attribute in ("href", "src"):
-        for node in root.iter():
-            value = node.attrs.get(attribute)
-            if value is None:
-                continue
-            full = make_full_url(document_url, base_url, value)
-            if full != value:
-                node.attrs[attribute] = full
-    return root

@@ -86,7 +86,8 @@ def test_end_to_end_conll_evaluation(spark):
     if not (os.path.exists(train_path) and os.path.exists(test_path)):
         pytest.skip("reference ner corpus not available")
     from kgp.conll import parse_column
-    from kgp.mentions import detect_mentions, train_ner_model
+    from kgp.mentions import (detect_mentions, model_from_rows,
+                              ner_model_table)
     from kgp.tokenize import get_sentences
     from pyspark.sql import functions as F
 
@@ -103,10 +104,9 @@ def test_end_to_end_conll_evaluation(spark):
     schema = ("url string, text string, sentences "
               "array<struct<start:int, text:string>>")
     train_docs = spark.createDataFrame([doc_row("t", train_text)], schema)
-    seeds = spark.createDataFrame(
-        sorted({(a.tag, a.value) for a in train_gold}),
-        "concept string, entity string")
-    model = train_ner_model(spark, train_docs, seeds)
+    seed_rows = [(entity, concept) for concept, entity in
+                 sorted({(a.tag, a.value) for a in train_gold})]
+    model = model_from_rows(ner_model_table(train_docs, seed_rows).collect())
 
     test_docs = spark.createDataFrame([doc_row("e", test_text)], schema)
     bc = spark.sparkContext.broadcast(model)
@@ -138,32 +138,6 @@ def test_tag_text_writers():
     assert tag_text(text, nested, "XML").count("<PER>") == 1
 
 
-def test_gazetteer_from_csv(spark, tmp_path):
-    from kgp.corpus import gazetteer_from_csv
-    rows = [
-        # id name ascii alts lat lon fclass fcode cc8 c9 a1 a2 a3 a4 pop
-        "2950159\tBerlin\tBerlin\tBerlino,Berlijn\t52.52\t13.40\tP\tPPLC"
-        "\tDE\t\t16\t00\t\t\t3426354",
-        "2921044\tGermany\tGermany\tDeutschland\t51.5\t10.5\tA\tPCLI"
-        "\tDE\t\t00\t\t\t\t82927922",
-        "6255148\tEurope\tEurope\t\t48.69\t9.14\tL\tCONT\t\t\t\t\t\t\t0",
-        "3034720\tSomething\tSomething\t\t47.0\t2.0\tX\tWEIRD"
-        "\t\t\t\t\t\t\t-1",
-    ]
-    p = tmp_path / "geonames.txt"
-    p.write_text("\n".join(rows))
-    gaz = {r.id: r for r in
-           gazetteer_from_csv(spark, str(p)).collect()}
-    assert gaz[2950159].type == "CITY"
-    assert gaz[2950159].alt_names == ["Berlino", "Berlijn"]
-    assert gaz[2950159].population == 3426354
-    assert gaz[2921044].type == "COUNTRY"       # A.PCLI full-code match
-    assert gaz[6255148].type == "CONTINENT"     # L.CONT full-code match
-    assert gaz[3034720].type == "UNDETERMINED"
-    assert gaz[3034720].population == 0         # clamped at 0
-    assert abs(gaz[2950159].lat - 52.52) < 1e-9
-
-
 def test_annotations_from_xml_text():
     """FileFormatParser.getAnnotationsFromXmlText: plain-text offsets
     via cumulative tag arithmetic; nested markup stripped from the
@@ -185,3 +159,4 @@ def test_xml_writer_reader_roundtrip():
     anns = [Ann(0, "Jim Carter", "PER"), Ann(19, "Paris", "LOC")]
     tagged = tag_text(text, anns, fmt="XML")
     assert annotations_from_xml_text(tagged) == anns
+

@@ -68,33 +68,11 @@ def test_gazetteer(spark):
     assert canon[C.ORG_ALIAS_ID + 1] == C.ORG_ID + 1
 
 
-def test_hotelsbase_importer(spark):
-    """HotelsBaseImporter.java:57-77: header + short lines skipped,
-    &amp; unescaped, POI type, line-number ids above max_id."""
-    from kgp.corpus import import_hotelsbase
-    lines = [
-        "id~name~x~x~x~x~x~x~x~x~x~x~lat~lng~z",            # header
-        "1~Grand &amp; Small Hotel~a~b~c~d~e~f~g~h~i~j~51.5~-0.1~z",
-        "2~short~line",                                      # < 15 parts
-        "3~Beach Resort~a~b~c~d~e~f~g~h~i~j~-33.86~151.2~z",
-    ]
-    df = spark.createDataFrame([(l,) for l in lines], "value string")
-    out = {r["id"]: r for r in
-           import_hotelsbase(df.coalesce(1), max_id=500).collect()}
-    assert set(out) == {501, 503}
-    assert out[501]["name"] == "Grand & Small Hotel"
-    assert (out[501]["lat"], out[501]["lon"]) == (51.5, -0.1)
-    assert out[503]["type"] == "POI" and out[503]["population"] is None
-    # importable into the linking pipeline's gazetteer shape
-    from kgp.linker import expand_gazetteer
-    assert expand_gazetteer(import_hotelsbase(df, 0)).count() == 2
-
-
 def test_alternate_names_java_split_rule(spark, tmp_path):
-    """Both alternate-names readers apply Java's split("\\t"): trailing
+    """The alternate-names reader applies Java's split("\\t"): trailing
     empty fields are dropped before the 4-field check, interior empty
     ones are kept — so an interior-empty name survives as ''."""
-    from kgp.corpus import alternate_names_from_lines, read_alternate_names
+    from kgp.corpus import alternate_names_from_lines
     lines = ["1\t10\tde\tStuttgart",
              "2\t11\tde\t\tfoo",         # interior-empty name: kept
              "3\t12\tde\t",              # trailing-empty name: skipped
@@ -108,6 +86,6 @@ def test_alternate_names_java_split_rule(spark, tmp_path):
     # (geonameid, name, language): the id is the SECOND column
     want = [(10, "Stuttgart", "de"), (11, "", "de"), (14, "NoLang", None),
             (15, "Stgt", None)]
-    for df in (read_alternate_names(spark, str(path)),
-               alternate_names_from_lines(spark.read.text(str(path)))):
-        assert sorted(tuple(r) for r in df.collect()) == want
+    df = alternate_names_from_lines(spark.read.text(str(path)))
+    assert sorted(tuple(r) for r in df.collect()) == want
+

@@ -3,7 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kgp.curation import (c4_filter, canonical_url, sample_key,
-                          stratified_sample, url_dedup)
+                          stratified_sample)
 
 GOOD = "This is a perfectly fine sentence with enough words in it."
 SHORT = "Too short."                           # < 5 words
@@ -66,20 +66,6 @@ def test_canonical_url(spark):
     }
     for raw, want in cases.items():
         assert _canon(spark, raw) == want, raw
-
-
-def test_url_dedup(spark):
-    pages = spark.createDataFrame(
-        [("https://www.example.com/a?utm_source=x",),
-         ("https://example.com/a",),
-         ("https://example.com/b",)], "url string")
-    got = {r.url: r for r in url_dedup(pages).collect()}
-    assert (got["https://example.com/a"].canon_url
-            == got["https://www.example.com/a?utm_source=x"].canon_url)
-    # lexicographically smallest original survives
-    assert got["https://example.com/a"].is_canonical
-    assert not got["https://www.example.com/a?utm_source=x"].is_canonical
-    assert got["https://example.com/b"].is_canonical
 
 
 def test_sample_key_matches_duckdb(spark):
@@ -176,3 +162,4 @@ def test_gopher_quality_empty_and_plan(spark):
     # zero Python, zero Exchange — pure JVM expressions over the scan
     plan = sig._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Exchange" not in plan
+

@@ -1,109 +1,19 @@
-"""The reference's OWN GeonamesImporterTest reproduced against
-kgp.corpus.gazetteer_from_csv on its own fixture files
-(palladian-core src/test/resources/geonames.org/).
-
-- testHierarchies is harvested MECHANICALLY: every un-commented
-  ``getLocation(id).getAncestorIds()`` + ``checkHierarchy(...)`` pair
-  in the Java source runs verbatim (the FIXME-commented vectors the
-  reference itself disables are excluded there too).
-- testGeneralData vectors are transcribed (name, coordinate,
-  population, LocationType per id).
-- testAlternativeNames runs against kgp.corpus.read_alternate_names
-  (GeonamesImporter.java:387-420 filter rules).
+"""The reference's OWN GeonamesImporterTest.testAlternativeNames
+reproduced against kgp.corpus.alternate_names_from_lines on its own
+fixture file (palladian-core src/test/resources/geonames.org/,
+GeonamesImporter.java:387-420 filter rules).
 """
 
 from __future__ import annotations
 
-import re
-
-import pytest
-
-from kgp.corpus import gazetteer_from_csv, read_alternate_names
+from kgp.corpus import alternate_names_from_lines
 
 RES = "/root/reference/palladian-core/src/test/resources/geonames.org"
-JAVA = ("/root/reference/palladian-core/src/test/java/ws/palladian/"
-        "extraction/location/sources/importers/"
-        "GeonamesImporterTest.java")
-
-
-@pytest.fixture(scope="module")
-def gazetteer(spark):
-    df = gazetteer_from_csv(spark, f"{RES}/locationData.txt",
-                            hierarchy_path=f"{RES}/hierarchy.txt")
-    return {r["id"]: r.asDict() for r in df.collect()}
-
-
-def _harvest_hierarchy_vectors() -> list[tuple[int, list[int]]]:
-    src = open(JAVA).read()
-    # strip line comments so the FIXME'd vectors don't harvest
-    src = re.sub(r"//[^\n]*", "", src)
-    pat = re.compile(
-        r"getLocation\((\d+)\)\.getAncestorIds\(\);\s*"
-        r"checkHierarchy\(hierarchy((?:,\s*\d+)*)\);")
-    out = []
-    for m in pat.finditer(src):
-        child = int(m.group(1))
-        ids = [int(x) for x in re.findall(r"\d+", m.group(2))]
-        out.append((child, ids))
-    return out
-
-
-def test_harvest_found_vectors():
-    vectors = _harvest_hierarchy_vectors()
-    # the Java file holds 60 active checkHierarchy vectors
-    assert len(vectors) >= 55
-
-
-def test_hierarchies(gazetteer):
-    failures = []
-    for child, expected in _harvest_hierarchy_vectors():
-        got = list(gazetteer[child]["ancestor_ids"])
-        if got != expected:
-            failures.append((child, got, expected))
-    assert not failures, failures
-
-
-GENERAL = [
-    # id, name, lat, lon, population, type
-    (2926304, "Flein", 49.10306, 9.21083, 6558, "CITY"),
-    (2825297, "Stuttgart", 48.78232, 9.17702, 589793, "CITY"),
-    (2953481, "Baden-Württemberg", None, None, None, "UNIT"),
-    (2921044, "Federal Republic of Germany", None, None, None,
-     "COUNTRY"),
-    (6255148, "Europe", None, None, None, "CONTINENT"),
-    (6295630, "Earth", 0.0, 0.0, None, "REGION"),
-    (7268814, "Pueblo Sud Subbarrio", None, None, None, "UNIT"),
-    (2766409, "Sankt Ruprecht ob Murau", None, None, None, "CITY"),
-    (2803474, "Zwota", None, None, None, "CITY"),
-    (2831574, "Solkau", None, None, None, "CITY"),
-    (2917786, "Kreisfreie Stadt Greifswald", None, None, None,
-     "UNIT"),
-    (6547539, "Berlin, Stadt", None, None, None, "UNIT"),
-    (1529666, "Bahnhof Grenzau", None, None, None, "POI"),
-    (4953706, "University of Massachusetts", None, None, None, "POI"),
-    (5795921, "Grand Canyon", None, None, None, "LANDMARK"),
-    (5342044, "Death Valley Canyon", None, None, None, "LANDMARK"),
-    (6255147, "Asia", None, None, 3812366000, "CONTINENT"),
-    (2622320, "Faroe Islands", None, None, None, "UNIT"),
-    (6518215, "Hotel Torshavn", None, None, None, "POI"),
-    (6632604, "Ehlers Knob", None, None, None, "LANDMARK"),
-]
-
-
-def test_general_data(gazetteer):
-    for (gid, name, lat, lon, pop, typ) in GENERAL:
-        row = gazetteer[gid]
-        assert row["name"] == name, (gid, row["name"])
-        assert row["type"] == typ, (gid, row["type"], typ)
-        if lat is not None:
-            assert row["lat"] == lat, (gid, row["lat"])
-            assert row["lon"] == lon, (gid, row["lon"])
-        if pop is not None:
-            assert row["population"] == pop, (gid, row["population"])
 
 
 def test_alternative_names(spark):
-    alt = read_alternate_names(spark, f"{RES}/alternateNames.txt")
+    alt = alternate_names_from_lines(
+        spark.read.text(f"{RES}/alternateNames.txt"))
     stuttgart = [(r["name"], r["language"])
                  for r in alt.where("id = 2825297").collect()]
     assert len(stuttgart) == 58

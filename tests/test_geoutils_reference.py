@@ -1,6 +1,6 @@
 """GeoUtilsTest goldens (GeoUtilsTest.java:30-200) transcribed —
 midpoint, center of minimum distance, DMS parsing, haversine
-distance, normalize lat/lng, largest distance, range validation."""
+distance, normalize lat/lng, largest distance."""
 
 from __future__ import annotations
 
@@ -62,6 +62,3 @@ def test_normalize_and_validate():
     assert [g.normalize_longitude(x)
             for x in (-180, 180, 0, 185, -185)] == \
         [-180, 180, 0, -175, 175]
-    assert g.is_valid_coordinate(45, 175)
-    assert not g.is_valid_coordinate(45, 195)
-    assert not g.is_valid_coordinate(-95, 175)

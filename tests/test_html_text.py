@@ -7,6 +7,8 @@ deletion; /root/reference/palladian-commons/.../html/HtmlHelper.java:694-728).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,104 +175,21 @@ def test_deep_nesting_no_recursion_error():
     assert root.text_content().strip() == "hello"
 
 
-# ---------------- XPath-density extraction on reference fixture pages
-
-import os
+# ---------------- XPath evaluation / readable text
 
 FIXDIR = ("/root/reference/palladian-core/src/test/resources/"
           "pageContentExtractor")
 
-# (fixture, phrase that MUST be in the main text, boilerplate phrase
-# that is on the page but MUST be excluded from the main text)
-FIXTURES = [
-    ("test001.html", "Was wollte Google mit den WLAN-Daten?",
-     "Hauptnavigation"),
-    ("test002.html", "Earth's Frontiers explores the conflict",
-     "Most Popular"),
-    ("test003.html", "beste TV-Serie nach Twin Peaks", "Impressum"),
-    ("test004.html", "Stadtplanungsamt veranstaltet", "Impressum"),
-    ("test005.html", "i read on my kindle", "Comments"),
-    ("test015.html", "working remotely from home", "Subscribe"),
-    ("test020.html", "US heatwave raises climate", "Terms of Use"),
-    # round 3: widened to every result-backed reference fixture; the
-    # article phrase comes from the result/ expected-content file
-    # (where the density extractor finds the article) or pins current
-    # main-block selection on comment-heavy pages (005/011)
-    ("test006.html",
-     "At least one spot will show a mother and daughter", "Subscribe"),
-    ("test007.html",
-     "Flame is a brilliant JavaScript painting tool", "Advertisement"),
-    ("test008.html",
-     "I attended a panel called", "Copyright"),
-    ("test009.html",
-     "quietly re-launching our ReadWriteEnterprise channel", "Subscribe"),
-    ("test010.html",
-     "I tried to use the BinaryLMClassifier", "Subscribe"),
-    ("test011.html",
-     "there is plenty to like about BlackBerry", "All rights reserved"),
-    ("test012.html",
-     "particularly enthusiastic about is suppo", "Subscribe"),
-    ("test013.html",
-     "The quandary for Obama, however, is that", "Copyright"),
-    ("test014.html",
-     "news that the XB in XBMC won't mean Xbox any more", "Related"),
-    ("test018.html",
-     "the workers are angry that about 320 te", "Most Popular"),
-]
-
-
-@pytest.mark.parametrize("name,want,boiler", FIXTURES)
-def test_parse_document_reference_fixture(name, want, boiler):
-    """Full parseDocument port on the reference's own fixture pages:
-    the main article text is found by sentence-xpath density and the
-    page chrome is excluded."""
-    from kgp.html_text import parse_document
-    path = os.path.join(FIXDIR, name)
-    if not os.path.exists(path):
-        pytest.skip("reference fixtures not available")
-    r = parse_document(open(path, "rb").read())
-    assert want in r["text"], name
-    assert boiler in r["full_text"], name         # it IS on the page
-    assert boiler not in r["text"], name          # ...but not extracted
-    assert len(r["text"]) < len(r["full_text"])
-
-
-def test_construct_xpath_and_indices():
-    from kgp.html_text import (_parent_index_map, construct_all_xpaths,
-                               remove_last_index)
-    root = parse_html("<html><body><div>a</div><div><p>long sentence "
-                      "here</p><p>two</p></div></body></html>")
-    pmap = _parent_index_map(root)
-    xps = construct_all_xpaths(root, "long sentence here", pmap)
-    assert xps == ["/html/body/div[2]/p[1]"]
-    assert remove_last_index(xps[0]) == "/html/body/div[2]/p"
-    # paths INTO scripts are dropped (the body ancestor remains — its
-    # textContent contains the keyword, same as the reference DOM)
-    sroot = parse_html("<html><body><script>var kw = 1;</script>"
-                       "</body></html>")
-    got = construct_all_xpaths(sroot, "kw")
-    assert all("script" not in x for x in got)
-
-
-def test_find_last_box_section_and_headline_siblings():
-    from kgp.html_text import add_headline_siblings, find_last_box_section
-    assert find_last_box_section("/html/body/div[2]/p/strong") == \
-        "/html/body/div[2]/p"
-    assert find_last_box_section("/html/body/span") == "/html/body/span"
-    widened = add_headline_siblings("/html/body/div[2]/p")
-    assert widened.startswith("/html/body/div[2]/*[(self::p)")
-    assert "(self::h1)" in widened and "(self::blockquote)" in widened
-
 
 def test_xpath_nodes_evaluator():
-    from kgp.html_text import add_headline_siblings, xpath_nodes
+    from kgp.html_text import xpath_nodes
     root = parse_html("<html><body><div><h1>T</h1><p>a</p><p>b</p>"
                       "<ul><li>x</li></ul></div></body></html>")
     ps = xpath_nodes(root, "/html/body/div/p")
     assert [p.text_content() for p in ps] == ["a", "b"]
     assert len(xpath_nodes(root, "/html/body/div/p[2]")) == 1
-    sel = xpath_nodes(root, add_headline_siblings("/html/body/div/p"))
-    assert [n.tag for n in sel] == ["h1", "p", "p", "ul"]
+    sel = xpath_nodes(root, "/html/body/div/*[(self::h1) or (self::ul)]")
+    assert [n.tag for n in sel] == ["h1", "ul"]
     assert [n.tag for n in xpath_nodes(root, "//li")] == ["li"]
 
 
@@ -282,76 +201,6 @@ def test_document_to_readable_text():
     assert "one" in out and "two" in out and "skip" not in out
     # block elements newline on enter AND leave
     assert "\none\n" in out
-
-
-def test_get_entire_text_content():
-    from kgp.html_text import get_entire_text_content
-    full = ("Nav\n\tHome\nA proper long line of article text that "
-            "survives the short-line filter easily.\nok\n\n\n\nEnd of "
-            "the document with another long enough line to keep here.")
-    out = get_entire_text_content(full)
-    assert "article text" in out
-    assert "\t" not in out
-    assert "Nav" not in out          # ≤40-char lines blanked
-    assert "\n\n\n" not in out       # newline runs collapsed
-
-
-def test_get_result_title_paths():
-    from kgp.html_text import get_result_title
-    root = parse_html("<html><body><header><h1>Site</h1></header>"
-                      "<h1>First</h1><div><h1>Real Article Title</h1>"
-                      "</div></body></html>")
-    assert get_result_title(root) == "Real Article Title"  # last, no chrome
-    root2 = parse_html("<html><head><title>Page Title | Site</title>"
-                       "</head><body><p>x</p></body></html>")
-    assert get_result_title(root2) == "Page Title"
-    root3 = parse_html("<div><p>x</p></div>")
-    words = " ".join(f"w{i}" for i in range(30))
-    assert get_result_title(root3, words) == \
-        " ".join(f"w{i}" for i in range(20))
-
-
-def test_parse_xml_strict_and_fallback():
-    from kgp.html_text import document_to_text, parse_xml
-    xml = ('<?xml version="1.0"?><html xmlns="http://www.w3.org/1999/'
-           'xhtml"><body><div><p>strict xhtml text</p></div></body>'
-           '</html>')
-    root = parse_xml(xml)
-    assert "strict xhtml text" in document_to_text(root)
-    # namespaces stripped, attributes preserved
-    div = next(n for n in root.iter() if n.tag == "div")
-    assert div.tag == "div"
-    # malformed input falls back to the lenient HTML parser
-    bad = "<div><p>unclosed"
-    assert "unclosed" in document_to_text(parse_xml(bad))
-
-
-def test_get_images_and_dominant_image():
-    from kgp.html_text import get_dominant_image, get_images
-    html = ('<html><head><base href="https://cdn.ex.com/"></head><body>'
-            '<header><img src="logo.png" width="40" height="40"></header>'
-            '<img src="icon-small.png" width="16" height="16">'
-            '<img src="article/big.jpg" width="640" height="480" '
-            'alt="Hero">'
-            '</body></html>')
-    root = parse_html(html)
-    imgs = get_images(root, "https://site.ex.com/a/")
-    assert [i["url"] for i in imgs] == [
-        "https://cdn.ex.com/logo.png",
-        "https://cdn.ex.com/icon-small.png",
-        "https://cdn.ex.com/article/big.jpg"]
-    dom = get_dominant_image(root, "https://site.ex.com/a/")
-    assert dom["url"].endswith("article/big.jpg")   # header+icon excluded
-
-    og = parse_html('<html><head><meta property="og:image" '
-                    'content="https://x.com/hero.jpg"></head>'
-                    '<body><img src="a.jpg"></body></html>')
-    assert get_dominant_image(og)["url"] == "https://x.com/hero.jpg"
-
-    ip = parse_html('<html><body><div itemprop="image">'
-                    '<img src="https://x.com/item.jpg"></div>'
-                    "</body></html>")
-    assert get_dominant_image(ip)["url"] == "https://x.com/item.jpg"
 
 
 # -------------------- HTML5 tree-construction cases (round 3)
@@ -526,68 +375,6 @@ def test_table_closes_p_and_td_p_is_scoped():
     assert "d" in td.text_content()
 
 
-# ----------------- content-scoped image extraction (reference getImages)
-
-
-def test_content_images_reference_fixtures():
-    """PalladianContentExtractorTest.testImageExtraction — the
-    result-scoped getImages: test015 -> 2 images, first has no
-    declared width (-1); test020 -> 4 images, images[1].width ==
-    624."""
-    from kgp.html_text import get_content_images, parse_document
-    p15 = os.path.join(FIXDIR, "test015.html")
-    p20 = os.path.join(FIXDIR, "test020.html")
-    if not os.path.exists(p15):
-        pytest.skip("reference fixtures not available")
-    r = parse_document(open(p15, "rb").read())
-    images = get_content_images(r["root"], r["node"])
-    assert len(images) == 2
-    assert images[0]["width"] == -1
-    r = parse_document(open(p20, "rb").read())
-    images = get_content_images(r["root"], r["node"])
-    assert len(images) == 4
-    assert images[1]["width"] == 624
-
-
-def test_content_images_semantics():
-    from kgp.html_text import get_content_images, parse_html
-    html = ('<html><head><base href="http://cdn.ex.com/"></head><body>'
-            '<header><img src="logo.png"></header>'
-            '<div id="main">'
-            '<img src="a.jpg" width="50%">'
-            '<img src="b.jpg" style="width:120.5px;height:80px">'
-            '<img src="bad.jpg" width="wide">'
-            '<img alt="no src">'
-            '</div>'
-            '<div id="footer"><img src="f.png"></div>'
-            '</body></html>')
-    root = parse_html(html)
-    main = next(n for n in root.iter()
-                if n.attrs.get("id") == "main")
-    images = get_content_images(root, main)
-    urls = [i["url"] for i in images]
-    # header/footer chrome removed, srcless skipped, bad width SKIPS
-    # the whole image (the reference's NumberFormatException catch)
-    assert urls == ["http://cdn.ex.com/a.jpg", "http://cdn.ex.com/b.jpg"]
-    # 50% of the 500px default container; inline-style floats truncate
-    assert images[0]["width"] == 250
-    assert images[1]["width"] == 120 and images[1]["height"] == 80
-
-
-def test_content_images_parent_climb():
-    from kgp.html_text import get_content_images, parse_html
-    # no img under the main node -> climb to the parent (reference's
-    # while-empty loop)
-    html = ('<html><body><div><img src="http://x.com/up.jpg">'
-            '<div id="main"><p>text only</p></div></div></body></html>')
-    root = parse_html(html)
-    main = next(n for n in root.iter()
-                if n.attrs.get("id") == "main")
-    images = get_content_images(root, main)
-    assert [i["url"] for i in images] == ["http://x.com/up.jpg"]
-    assert get_content_images(root, None) == []
-
-
 # ---------------- adoption agency (WHATWG 13.2.6.4.7)
 
 def _tree(html):
@@ -652,52 +439,7 @@ def test_aaa_text_output_stable():
         assert ch in t
 
 
-# ---------------- full reference fixture sweep (all ~30 pages)
-
-# every remaining pageContentExtractor page: the parse must complete,
-# the known article/page phrase must be present, and where the page
-# has chrome the extraction must be a strict subset of the full text
-FIXTURES_SWEEP = [
-    ("test016.html", "Eine gebannte Menschenmenge", True),
-    ("test017.html", "Apple unveils iPad tablet computer", True),
-    ("test101.html", "UPBH-5004", False),           # chrome-free page
-    ("test201.html", "Sin and Punishment", True),
-    ("test202.html", "Was nun, Frau Kraft?", True),
-    ("test203.html", "Zotac GeForce GTX 470", True),
-    ("test204.html", "Klose oder Cacau?", True),
-    ("test205.html", "Red Dead Redemption", True),
-    ("test206.html", "Collier County Sheriff", True),
-    ("test207.html", "Twittley Karma", True),
-    ("test5.html", "längerer Absatz", False),       # MacRoman XML decl
-    ("test6.html", "längerer Absatz", False),
-    ("test7.html", "without specified encoding", False),
-    ("test8.html", "ISO-8859-1", False),
-]
-
-
-@pytest.mark.parametrize("name,phrase,has_chrome", FIXTURES_SWEEP)
-def test_parse_document_fixture_sweep(name, phrase, has_chrome):
-    from kgp.html_text import parse_document
-    path = os.path.join(FIXDIR, name)
-    if not os.path.exists(path):
-        pytest.skip("reference fixtures not available")
-    r = parse_document(open(path, "rb").read())
-    assert phrase in r["full_text"], name
-    assert r["text"].strip(), name
-    if has_chrome:
-        assert len(r["text"]) < len(r["full_text"]), name
-
-
-def test_parse_document_fixture_readability_208():
-    # Readability-era page (that extractor is superseded in the
-    # reference); we only pin robustness + full-text fidelity
-    from kgp.html_text import parse_document
-    path = os.path.join(FIXDIR, "test208.html")
-    if not os.path.exists(path):
-        pytest.skip("reference fixtures not available")
-    r = parse_document(open(path, "rb").read())
-    assert "Business Insider" in r["full_text"]
-    assert len(r["text"]) < len(r["full_text"])
+# ---------------- reference fixture pages
 
 
 def test_get_links_fixture_base_href():
@@ -712,3 +454,4 @@ def test_get_links_fixture_base_href():
         root = parse_html(sniff_decode(open(path, "rb").read()))
         links = get_links(root, "http://www.example.com/", True, True)
         assert links[0]["url"] == "http://www.example.com/test.html", name
+

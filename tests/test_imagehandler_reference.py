@@ -95,24 +95,3 @@ def test_detect_colors(color_bank):
     assert detected[2] in [("Carousel Pink", "Pink"),
                            ("gainsboro", "Gray")]
 
-
-def test_detect_colors_svg(color_bank):
-    """ImageHandler.detectColors(String) (ImageHandler.java:976-1003)
-    — fill-attribute bag walk, non-# skip, distinct-main cut at 3."""
-    from kgp.multimodal import detect_colors_svg
-    svg = ('<svg><rect fill="#273e7a"/><rect fill="#273e7a"/>'
-           '<circle fill="#cc1b36"/><path fill="none"/>'
-           '<g fill="#eddfeb"/><g fill="#1b2c5c"/></svg>')
-    colors = detect_colors_svg(svg, palette=color_bank)
-    assert len(colors) == 3
-    assert colors[0] == ("#273e7a", "Congress Blue", "Blue")
-    assert colors[1][2] in ("Red", "Pink")
-    mains = [c[2] for c in colors]
-    assert len(set(mains)) == 3
-
-
-def test_get_substrings_between():
-    # StringHelper.getSubstringsBetween contract incl. no-match stop
-    from kgp.stringhelpers import get_substrings_between
-    assert get_substrings_between('a<x>b<y>c', '<', '>') == ['x', 'y']
-    assert get_substrings_between('no borders here', '<', '>') == []

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from kgp import constants as C
@@ -187,85 +186,24 @@ def test_link_mentions_reference_spark(spark):
     assert out["Nonsense"].canon_name == "Nonsense"
 
 
-def test_coordinate_tagger_reference_goldens():
-    # CoordinateTaggerTest goldens: decimal pairs, hemisphere suffixes,
-    # DMS variants; plain numbers must not tag
-    from kgp.geo import tag_coordinates
-    approx = pytest.approx
-
-    def one(text):
-        got = tag_coordinates(text)
-        assert len(got) == 1, (text, got)
-        return got[0]
-
-    a = one("40.446195, -79.948862")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862))
-    a = one("40.446195 -79.948862")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862))
-    a = one("40.446195N 79.948862W")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862))
-    a = one("40°26′47″N 079°58′36″W")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862), abs=0.05)
-    a = one("40d 26′ 47″ N 079d 58′ 36″ W")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862), abs=0.05)
-    a = one("40:26:46.302N 079:56:55.903W")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862), abs=0.05)
-    a = one("40° 26.7717, -79° 56.93172")
-    assert (a.lat, a.lon) == approx((40.446195, -79.948862), abs=0.05)
-    a = one("Mast Hill (68°11′S 67°0′W) is a hill 14 metres (46 ft) "
-            "high at the western end of Stonington Island.")
-    assert (a.lat, a.lon) == approx((-68.183333, -67.0), abs=0.05)
-    assert tag_coordinates("The cost of living index was listed as "
-                           "121.4, 21.4 points above the U.S. "
-                           "average.") == []
+def _geo_gaz(spark):
+    """A Geonames-shaped gazetteer: Oldtown (300) sits under the
+    Atland Region (150) in Atlantis (100); its namesake (400) is in
+    Borduria (200), 780 km from the Atlantis anchor."""
+    from kgp.corpus import GAZETTEER_SCHEMA
+    rows = [
+        (100, "Atlantis", [], "COUNTRY", 90000000, [], 10.0, 10.0),
+        (150, "Atland Region", [], "UNIT", 0, [100], 12.0, 12.0),
+        (200, "Borduria", [], "COUNTRY", 50000000, [], -40.0, -40.0),
+        (300, "Oldtown", [], "CITY", 6000, [150, 100], 15.0, 15.0),
+        (400, "Oldtown", [], "CITY", 5500, [200], -40.5, -40.5),
+    ]
+    return spark.createDataFrame(rows, GAZETTEER_SCHEMA)
 
 
-_GEO_CSV = [
-    # id name ascii alts lat lon fclass fcode cc cc2 a1 a2 a3 a4 pop
-    "100\tAtlantis\tAtlantis\t\t10.0\t10.0\tA\tPCLI\tAT\t\t00\t\t\t\t90000000",
-    "150\tAtland Region\tAtland Region\t\t12.0\t12.0\tA\tADM1\tAT\t\t01\t\t\t\t0",
-    "300\tOldtown\tOldtown\t\t15.0\t15.0\tP\tPPL\tAT\t\t01\t\t\t\t6000",
-    "200\tBorduria\tBorduria\t\t-40.0\t-40.0\tA\tPCLI\tBO\t\t00\t\t\t\t50000000",
-    "400\tOldtown\tOldtown\t\t-40.5\t-40.5\tP\tPPL\tBO\t\t01\t\t\t\t5500",
-]
-
-
-def _geo_gaz(spark, tmp_path, hierarchy=None):
-    from kgp.corpus import gazetteer_from_csv
-    p = tmp_path / "geonames.txt"
-    p.write_text("\n".join(_GEO_CSV))
-    hp = None
-    if hierarchy is not None:
-        hp = tmp_path / "hierarchy.txt"
-        hp.write_text("\n".join(hierarchy))
-    return gazetteer_from_csv(spark, str(p),
-                              hierarchy_path=str(hp) if hp else None)
-
-
-def test_geonames_csv_ancestor_hierarchy(spark, tmp_path):
-    gaz = {r.id: r for r in _geo_gaz(spark, tmp_path).collect()}
-    # admin-code walk (GeonamesImporter.getParent): city -> ADM1 ->
-    # country, nearest ancestor first
-    assert gaz[300].ancestor_ids == [150, 100]
-    assert gaz[150].ancestor_ids == [100]     # admin unit drops own code
-    assert gaz[100].ancestor_ids == []        # country is the root
-    assert gaz[400].ancestor_ids == [200]     # no BO ADM1 row: skip level
-
-
-def test_geonames_explicit_hierarchy_precedence(spark, tmp_path):
-    # hierarchy.txt relations win over admin-code derivation
-    # (GeonamesImporter.java:225-230); ambiguous children are dropped
-    gaz = {r.id: r for r in
-           _geo_gaz(spark, tmp_path,
-                    hierarchy=["100\t300\tADM",
-                               "100\t400\tADM", "200\t400\tADM"]).collect()}
-    assert gaz[300].ancestor_ids == [100]     # explicit parent
-    assert gaz[400].ancestor_ids == [200]     # ambiguous -> admin walk
-
-
-def test_csv_gazetteer_hierarchy_links_fast_path(spark, tmp_path):
+def test_csv_gazetteer_hierarchy_links_fast_path(spark):
     # the hierarchy term in the vectorized disambiguator fires for a
-    # CSV-loaded gazetteer: the in-country Oldtown (descendant of the
+    # Geonames-shaped gazetteer: the in-country Oldtown (descendant of the
     # Atlantis anchor, 780 km away so distance cannot explain it) beats
     # the decoy in Borduria
     rows = [("u1", 0, 0, 8, "Atlantis", "COUNTRY", 1.0, 0,
@@ -274,12 +212,12 @@ def test_csv_gazetteer_hierarchy_links_fast_path(spark, tmp_path):
              "Atlantis taxes Oldtown.")]
     out = {r.surface: r for r in
            link_mentions(_mentions(spark, rows),
-                         _geo_gaz(spark, tmp_path)).collect()}
+                         _geo_gaz(spark)).collect()}
     assert out["Atlantis"].entity_id == 100
     assert out["Oldtown"].entity_id == 300
 
 
-def test_csv_gazetteer_hierarchy_links_reference_path(spark, tmp_path):
+def test_csv_gazetteer_hierarchy_links_reference_path(spark):
     from kgp.linker import link_mentions_reference
     rows = [("u1", 0, 0, 8, "Atlantis", "COUNTRY", 1.0, 0,
              "Atlantis taxes Oldtown."),
@@ -287,7 +225,7 @@ def test_csv_gazetteer_hierarchy_links_reference_path(spark, tmp_path):
              "Atlantis taxes Oldtown.")]
     out = {r.surface: r for r in
            link_mentions_reference(_mentions(spark, rows),
-                                   _geo_gaz(spark, tmp_path)).collect()}
+                                   _geo_gaz(spark)).collect()}
     assert out["Atlantis"].entity_id == 100
     assert out["Oldtown"].entity_id == 300
 
@@ -336,16 +274,6 @@ def test_baseline_disambiguation(spark):
     assert len(out) == 3
 
 
-def test_no_disambiguation_keeps_all(spark):
-    """NoDisambiguation.java:22-36: every candidate annotates."""
-    from kgp.linker import link_mentions_none
-    rows = [("u1", 0, 0, 8, "Atlantis", "LOC", 1.0, 0, "s"),
-            ("u1", 1, 0, 7, "Nowhere", "LOC", 1.0, 0, "s")]
-    out = link_mentions_none(
-        _mentions(spark, rows), _baseline_gaz(spark)).collect()
-    assert sorted(r.entity_id for r in out) == [1, 2, 3]
-
-
 def test_baseline_plan_zero_python(spark):
     from kgp.linker import link_mentions_baseline
     rows = [("u1", 0, 0, 8, "Atlantis", "LOC", 1.0, 0, "s")]
@@ -354,3 +282,4 @@ def test_baseline_plan_zero_python(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "BroadcastHashJoin" in plan
     assert "EvalPython" not in plan and "InPandas" not in plan
+

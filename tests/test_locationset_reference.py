@@ -7,16 +7,7 @@ Source (assertions copied 1:1): AbstractGeoCoordinateTest.java:10-46.
 
 # --------------------------------------- AbstractGeoCoordinateTest
 # (AbstractGeoCoordinateTest.java:10-46; distance/bounding-box/
-# destination already pinned in test_geoutils_reference — the DMS
-# string formatter is new here)
-
-def test_coordinate_to_dms():
-    from kgp.geo import to_dms_string
-    assert to_dms_string(51.033333, 13.733333) == \
-        "51°1′59″N,13°43′59″E"
-    assert to_dms_string(0.0, 0.0) == "0°,0°"
-    assert to_dms_string(40, -4) == "40°N,4°W"
-
+# destination already pinned in test_geoutils_reference)
 
 def test_distance_and_bounding_box():
     from kgp.geo import distance_km

@@ -132,40 +132,3 @@ def test_write_stage_rereads_without_inference(spark, tmp_path,
     assert (sorted(map(tuple, got["out"].collect()))
             == sorted(map(tuple, spark.read.parquet(path).collect())))
 
-
-def test_compact_stage_checksum_verified_swap(spark, tmp_path):
-    """compact_stage merges a many-small-file stage into few files,
-    proves data identity with the order-insensitive checksum, and
-    appends a :compact lineage row."""
-    from kgp.materialize import compact_stage, lineage, write_stage
-    out = str(tmp_path / "run")
-    df = spark.range(0, 10_000).selectExpr(
-        "id", "concat('s', id % 7) AS subj", "id * 3 AS v") \
-        .repartition(50)                      # 50 tiny files
-    written, n = write_stage(spark, df, out, "triples")
-    assert n == 10_000
-    r = compact_stage(spark, out, "triples", target_bytes=1 << 30)
-    assert materialize.stage_done(out, "triples")
-    assert r["files_before"] == 50
-    assert r["files_after"] == 1
-    assert r["rows"] == 10_000
-    after = spark.read.parquet(str(tmp_path / "run" / "triples"))
-    assert after.count() == 10_000
-    assert after.selectExpr("sum(v)").collect()[0][0] == \
-        sum(i * 3 for i in range(10_000))
-    lin = lineage(spark, out)
-    row = lin.where("stage = 'triples:compact'").collect()[0]
-    assert row.output_rows == 10_000 and row.checksum == r["checksum"]
-
-
-def test_compact_stage_partitioned(spark, tmp_path):
-    from kgp.materialize import compact_stage, write_stage
-    out = str(tmp_path / "runp")
-    df = spark.range(0, 2_000).selectExpr(
-        "id", "concat('p', id % 3) AS pred").repartition(20)
-    write_stage(spark, df, out, "by_pred", partition_by=["pred"])
-    r = compact_stage(spark, out, "by_pred", target_bytes=1 << 30,
-                      partition_by=["pred"])
-    assert r["files_after"] <= 3 and r["rows"] == 2_000
-    back = spark.read.parquet(str(tmp_path / "runp" / "by_pred"))
-    assert back.select("pred").distinct().count() == 3

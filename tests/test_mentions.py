@@ -14,11 +14,11 @@ from kgp import constants as C
 from kgp.corpus import seed_dictionary, synth_pages, training_docs
 from kgp.html_text import extract_stage
 from kgp.mentions import (NerModel, candidate_annotations, detect_mentions,
-                          dictionary_tag, fix_start_errors,
-                          get_character_context, get_left_contexts,
-                          get_sub_phrases, is_date_fragment,
-                          remove_date_fragment, remove_nested,
-                          train_ner_model, unwrap_entities,
+                          fix_start_errors, get_character_context,
+                          get_left_contexts, get_sub_phrases,
+                          is_date_fragment, model_from_rows,
+                          ner_model_table, remove_date_fragment,
+                          remove_nested, unwrap_entities,
                           unwrap_with_context, Candidate)
 
 
@@ -316,18 +316,6 @@ def test_fix_start_errors_case_dictionary():
     assert [(c.start, c.value) for c in out4] == [(0, "The")]
 
 
-def test_dictionary_tagger_word_boundaries():
-    # DictionaryTagger.getAnnotations (:50-69): case-insensitive,
-    # word-boundary, nested matches removed
-    d = {"New York": "CITY", "York": "CITY", "M": "X"}
-    got = dictionary_tag("He moved to new york from York.", d)
-    assert [(g["start"], g["surface"], g["tag"]) for g in got] == \
-        [(12, "new york", "CITY"), (26, "York", "CITY")]
-    # no match inside words; single-char surfaces skipped
-    assert dictionary_tag("Yorkshire is not York-ish M", {"York": "C"}) \
-        == [{"start": 17, "end": 21, "surface": "York", "tag": "C"}]
-
-
 # --------------------------------------------------- corpus golden NER
 
 
@@ -335,8 +323,9 @@ def test_dictionary_tagger_word_boundaries():
 def mention_rows(spark, sf_dir):
     pages = synth_pages(spark, sf_dir)
     docs = extract_stage(pages).cache()
-    model = train_ner_model(spark, training_docs(docs),
-                            seed_dictionary(spark))
+    seed_rows = seed_dictionary(spark).select("entity", "concept").collect()
+    model = model_from_rows(
+        ner_model_table(training_docs(docs), seed_rows).collect())
     bc = spark.sparkContext.broadcast(model)
     rows = detect_mentions(docs, bc).collect()
     docs.unpersist()
@@ -401,13 +390,10 @@ def test_mention_offsets_slice_text(spark, sf_dir, mention_rows):
 
 
 def test_regex_taggers_url_and_twitter():
-    from kgp.mentions import tag_twitter, tag_urls
+    from kgp.mentions import tag_urls
     got = tag_urls("see https://example.com/a?b=1 for details")
     assert len(got) == 1 and got[0]["tag"] == "URI"
     assert got[0]["surface"].startswith("https://example.com/a")
-    tw = tag_twitter("ping @alice about #Spark today")
-    assert [(t["surface"], t["tag"]) for t in tw] == \
-        [("@alice", "TWITTER"), ("#Spark", "TWITTER")]
 
 
 def test_uri_mention_add_back_removes_nested():
@@ -454,25 +440,6 @@ def test_build_case_dictionary_pairs_golden():
     assert "involvement" in got
 
 
-def test_build_case_dictionary_spark_golden(spark):
-    from kgp.mentions import build_case_dictionary
-    docs = spark.createDataFrame([(_CASE_DICT_TEXT,)], ["text"])
-    got = {r.token for r in build_case_dictionary(docs).collect()}
-    assert len(got) == 33
-    assert "involvement" in got and "despite" not in got
-
-
-def test_get_case_signature_golden():
-    # StringHelper.getCaseSignature javadoc examples
-    # (StringHelper.java:1810-1824)
-    from kgp.mentions import get_case_signature
-    assert get_case_signature("Hello") == "Aa"
-    assert get_case_signature("Super!? 8 Zorro") == "Aa- 0 Aa"
-    assert get_case_signature("Apple") == "Aa"
-    assert get_case_signature("GmbH") == "AaA"
-    assert get_case_signature("USA") == "A"
-
-
 # ----------------------------------- LanguageIndependent mode (r3)
 
 
@@ -517,18 +484,23 @@ def test_token_candidates():
     assert got[0].start == 0 and got[1].start == 5
 
 
-def test_language_independent_tagging(spark):
+def test_language_independent_tagging():
     """End-to-end independent mode: per-token classification +
     adjacent combine recovers a multi-token seed entity."""
-    from kgp.corpus import seed_dictionary
-    from kgp.mentions import (build_annotation_dictionary,
-                              build_entity_dictionary, tag_sentence,
-                              assemble_model)
-    seeds = spark.createDataFrame(
-        [("Jim Carter", "PER"), ("Mexico City", "CITY")],
-        "entity string, concept string")
-    ann = build_annotation_dictionary(seeds, token_based=True).collect()
-    ent = build_entity_dictionary(seeds).collect()
+    from collections import Counter
+
+    from kgp.mentions import GRAM_N, assemble_model, tag_sentence
+    from kgp.tokenize import char_ngrams, tokenize
+    seeds = [("Jim Carter", "PER"), ("Mexico City", "CITY")]
+    # token-based annotation dictionary (trainLanguageIndependent,
+    # PalladianNer.java:354-372): each seed TOKEN's padded char grams,
+    # labelled with the seed's concept
+    grams = Counter((g, concept) for entity, concept in seeds
+                    for tok in tokenize(entity)
+                    for g in char_ngrams(tok.lower(), GRAM_N, GRAM_N,
+                                         padding=True))
+    ann = [(g, tag, n) for (g, tag), n in sorted(grams.items())]
+    ent = [(entity.lower(), concept, 1) for entity, concept in seeds]
     model = assemble_model(ent, ann, [])
     got = tag_sentence("Jim Carter visited Mexico City", 0, model,
                        tag_dates=False, language_mode="independent")
@@ -536,32 +508,6 @@ def test_language_independent_tagging(spark):
     assert "Jim Carter" in surfaces or "Jim" in surfaces
     # the combine step must produce at least one multi-token span
     assert any(" " in s for s in surfaces)
-
-
-def test_equalize_type_counts(spark):
-    """equalizeTypeCounts (PalladianNer.java:391-405): every tag's
-    span rows downsample to the rarest tag's count; other training
-    kinds pass through; the cut is deterministic (md5 sample key)."""
-    from kgp.mentions import equalize_type_counts
-    rows = ([("span", f"ctx{i}", "PER", [], []) for i in range(10)]
-            + [("span", f"ctx{i}", "LOC", [], []) for i in range(3)]
-            + [("case", "tok", "Aa", [], []),
-               ("cand", "Surface", None, [], [])])
-    df = spark.createDataFrame(
-        rows, "kind string, key string, tag string, "
-              "lefts array<string>, insides array<string>")
-    out = equalize_type_counts(df)
-    counts = {r["tag"]: r["count"] for r in
-              out.where("kind = 'span'").groupBy("tag").count()
-              .collect()}
-    assert counts == {"PER": 3, "LOC": 3}
-    assert out.where("kind != 'span'").count() == 2
-    # deterministic: same rows kept on re-run
-    a = {(r.kind, r.key, r.tag) for r in
-         equalize_type_counts(df).collect()}
-    b = {(r.kind, r.key, r.tag) for r in
-         equalize_type_counts(df).collect()}
-    assert a == b
 
 
 # ------------------------------------------------- ner_model_table golden
@@ -662,3 +608,4 @@ def test_ner_model_table_case_top_k(spark, monkeypatch):
         _golden_training_docs(spark), _GOLDEN_SEEDS)
         .where("kind = 'case'").collect()}
     assert len(ranked) > 3 and got == set(ranked[:3])
+

@@ -1,14 +1,9 @@
 """PageAnalyzerTest vectors (PageAnalyzerTest.java:35-189)
-transcribed — the xpath helper family (PageAnalyzer.java)."""
+transcribed for the xpath helpers kgp.segmenter uses
+(PageAnalyzer.java)."""
 
 from __future__ import annotations
 
-from kgp.html_text import (find_last_box_section, get_first_table_cell,
-                           get_next_sibling, get_next_table_cell,
-                           get_parent_node, get_table_cell_path,
-                           get_target_node, node_in_table,
-                           remove_xpath_indices_from_last_count_node,
-                           remove_xpath_indices_not)
 from kgp.segmenter import make_mutual_xpath, remove_xpath_indices
 
 
@@ -24,62 +19,6 @@ def test_make_mutual_xpath():
 
 
 def test_page_analyzer_helpers():
-    assert get_target_node(
-        "/div/table/tr/xhtml:td[6]/div[3]/p/xhtml:a[4]") == "a"
-    assert node_in_table("/div/table/tr/xhtml:td[6]/div[3]/p", 3)
-    assert find_last_box_section(
-        "/xhtml:table/xhtml:tr/xhtml:td/xhtml:div[4]/xhtml:span"
-        "/xhtml:b/xhtml:a") == \
-        "/xhtml:table/xhtml:tr/xhtml:td/xhtml:div[4]"
-    assert get_next_sibling("/div/p/table[4]/tr[6]/td[1]/a/b") == \
-        "/div/p/table[4]/tr[6]/td[2]/a/b"
-    assert get_next_sibling("/div/p/table[4]/tr[6]/xhtml:th/b/a") == \
-        "/div/p/table[4]/tr[6]/xhtml:td[1]/b/a"
-    assert get_next_table_cell(
-        "/div/p/table[4]/tr[6]/xhtml:th/div[6]/a") == \
-        "/div/p/table[4]/tr[6]/xhtml:td[1]/div[6]/a"
-    assert get_next_table_cell(
-        "/div/p/table[4]/tr[6]/td[1]/div[6]/p[8]/a/i") == \
-        "/div/p/table[4]/tr[6]/td[2]/div[6]/p[8]/a/i"
-    assert get_next_table_cell(
-        "/div/p/table[4]/tr[6]/td/div[6]/p[8]/a/i") == \
-        "/div/p/table[4]/tr[6]/td[1]/div[6]/p[8]/a/i"
-    assert get_next_table_cell(
-        "/div/p/table[4]/tr[6]/th/div[6]/p[8]/a/i") == \
-        "/div/p/table[4]/tr[6]/td[1]/div[6]/p[8]/a/i"
-    assert get_parent_node("/table[6]/tr/td[5]/div/a") == \
-        "/table[6]/tr/td[5]/div"
     assert remove_xpath_indices(
         "/html/body/div[1]/div[1]/div[1]/div[2]/ul[2]/li[11]") == \
         "/html/body/div/div/div/div/ul/li"
-    assert remove_xpath_indices_from_last_count_node(
-        "/html/body/div[1]/div[1]/div[1]/div[2]/ul[2]/li[11]/small") \
-        == "/html/body/div[1]/div[1]/div[1]/div[2]/ul[2]/li/small"
-    assert remove_xpath_indices_not(
-        "/html/body/div/div[1]/div/div[2]/table[2]/tbody/tr[3]/td/div"
-        "/div/table[1]/tbody/tr/td/table/tbody/tr[13]/td[2]/div"
-        "/span[7]/a", ["ul", "div"]) == \
-        "/html/body/div/div[1]/div/div[2]/table/tbody/tr/td/div/div" \
-        "/table/tbody/tr/td/table/tbody/tr/td/div/span/a"
-
-
-def test_get_first_table_cell():
-    assert get_first_table_cell("//table/tr/td") == "//table/tr/td[1]"
-    assert get_first_table_cell("//table/tr/td[1]") == \
-        "//table/tr/td[1]"
-    assert get_first_table_cell("//table/tr/th") == "//table/tr/th"
-    assert get_first_table_cell("//table/tr/td[1]/table/tr/td") == \
-        "//table/tr/td[1]/table/tr/td[1]"
-    assert get_first_table_cell("//table/tr/td/table/tr/td") == \
-        "//table/tr/td/table/tr/td[1]"
-    assert get_first_table_cell("//table/tr/th/table/tr/td") == \
-        "//table/tr/th/table/tr/td[1]"
-
-
-def test_get_table_cell_path():
-    assert get_table_cell_path("/div/p/table/tr/td/a[5]/b") == \
-        "/div/p/table/tr/td"
-    assert get_table_cell_path("/div/p/table/tr/td") == \
-        "/div/p/table/tr/td"
-    assert get_table_cell_path("/div/p/table/tr/td[2]") == \
-        "/div/p/table/tr/td[2]"

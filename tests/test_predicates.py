@@ -66,78 +66,3 @@ def test_based_in_sentence_merges_into_canonical(spark):
     got = {(r.subj, r.pred, r.obj) for r in
            extract_relations(links).collect()}
     assert got == {("Duff Brewing", "headquartered_in", "Maplewood")}
-
-
-# --------------------------------- generative transforms (r3 tail)
-
-def test_word_to_plural_rule_bank():
-    from kgp.predicates import word_to_plural
-    assert word_to_plural("company") == "companies"      # consonant+y
-    assert word_to_plural("boy") == "boys"               # vowel+y
-    assert word_to_plural("analysis") == "analyses"      # -is -> -es
-    assert word_to_plural("box") == "boxes"
-    assert word_to_plural("church") == "churches"
-    assert word_to_plural("person") == "people"          # irregular
-    # composite terms pluralize the LAST word
-    assert word_to_plural("computer mouse") == "computer mice"
-    assert word_to_plural("ox") == "oxen"  # bank beats the <3 guard
-    assert word_to_plural("") == ""
-
-
-def test_third_person_singular():
-    from kgp.predicates import third_person_singular as tps
-    assert tps("be") == "is" and tps("have") == "has"
-    assert tps("was") == "was" and tps("been") == "been"
-    assert tps("can") == "can"                           # modal stays
-    assert tps("go") == "goes" and tps("watch") == "watches"
-    assert tps("fly") == "flies" and tps("pass") == "passes"
-    assert tps("quiz") == "quizzes"       # vowel+z doubles the letter
-    assert tps("played") == "played"      # regular past stays
-    assert tps("went") == "went"          # irregular past stays
-    assert tps("write") == "writes"
-
-
-def test_simple_past_and_participle():
-    from kgp.predicates import past_participle, simple_past
-    # "found" stems to itself and hits the find-family bank entry
-    assert simple_past("found") == "found"
-    assert simple_past("acquire") == "acquired"
-    assert simple_past("marry") == "married"
-    # reference quirk kept: getRegularVerbPast's unconditional y->ied
-    assert simple_past("employ") == "emploied"
-    # qui/qua/quo/quu doubling quirk
-    assert simple_past("quiz") == "quizzed"
-    assert simple_past("go") == "went" and simple_past("write") == "wrote"
-    assert past_participle("write") == "written"
-    assert past_participle("take") == "taken"
-
-
-def test_predicate_variants_feed_patterns():
-    from kgp.predicates import predicate_variants
-    assert predicate_variants("work_for") == [
-        "work_for", "works_for", "worked_for"]
-    v = predicate_variants("hold_stake_in")
-    assert "holds_stake_in" in v and "held_stake_in" in v
-
-
-def test_get_tense_reference_goldens():
-    """The full WordTransformerTest.testGetTense golden set
-    (WordTransformerTest.java:266-333) with the test's own tag lists."""
-    from kgp.predicates import (PAST_PERFECT, PRESENT_PERFECT,
-                                SIMPLE_PAST, SIMPLE_PRESENT, get_tense)
-    assert get_tense("Do you like bugs?", ["VB"]) == SIMPLE_PRESENT
-    assert get_tense("He is said to be nice?",
-                     ["BEZ", "VBN", "BE"]) == SIMPLE_PRESENT
-    assert get_tense("The books are written?", ["VBN"]) == SIMPLE_PRESENT
-    assert get_tense("They wrote the books?", ["VBD"]) == SIMPLE_PAST
-    assert get_tense("I did not go there.", ["VB", "DOD"]) == SIMPLE_PAST
-    assert get_tense("Where was Woodstock?", ["BEDZ"]) == SIMPLE_PAST
-    assert get_tense("When is Easter this year?", ["BEZ"]) == \
-        SIMPLE_PRESENT
-    assert get_tense("I jump over a fence.", ["VB"]) == SIMPLE_PRESENT
-    assert get_tense("I jumped over a fence.", ["VBD"]) == SIMPLE_PAST
-    assert get_tense("Have you ever had pancakes?",
-                     ["HV", "HVN"]) == PRESENT_PERFECT
-    assert get_tense("No, I never had eaten pancakes before today?",
-                     ["HVD", "VBN"]) == PAST_PERFECT
-    assert get_tense("", []) == SIMPLE_PRESENT

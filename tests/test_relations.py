@@ -148,16 +148,3 @@ def test_co_occurrence_chars_bucket_boundary(spark):
     assert ("B", "C") not in got                # 201 chars apart
     assert ("A", "C") not in got
 
-
-def test_verb_forms_regex_matches_all_tenses():
-    import regex
-    from kgp.relations import verb_forms_regex
-    r = regex.compile(" " + verb_forms_regex("work") + " for ")
-    for tense in ("work", "works", "worked"):
-        assert r.search(f"Alice {tense} for Acme "), tense
-    # longest-first: 'works' must win over the 'work' prefix
-    assert regex.compile(verb_forms_regex("work")).match(
-        "works").group(0) == "works"
-    # irregular verbs pull their irregular forms
-    r = verb_forms_regex("hold")
-    assert "held" in r and "holds" in r

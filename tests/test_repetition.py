@@ -8,8 +8,8 @@ import duckdb
 import pytest
 
 from kgp.oracle import repetition_signals_sql
-from kgp.repetition import (DUP_NS, TOP_NS, gopher_repetition_filter,
-                            ngram_fractions, repetition_signals)
+from kgp.repetition import (DUP_NS, TOP_NS, ngram_fractions,
+                            repetition_signals)
 
 
 def test_ngram_top_fraction_hand_computed():
@@ -65,19 +65,6 @@ def test_empty_doc_is_all_zero(spark):
         assert all(v == 0.0 for k, v in d.items() if k != "doc_id")
 
 
-def test_gopher_filter_drops_repetitive_doc(spark):
-    # long enough that a single-occurrence top n-gram is a small
-    # fraction (the Gopher thresholds presume web-document lengths)
-    clean = " ".join(f"word{i} item{i} thing{i}" for i in range(40))
-    spam = "buy now " * 40
-    docs = spark.createDataFrame([(1, clean), (2, spam)],
-                                 "doc_id long, text string")
-    sig = repetition_signals(docs)
-    kept = [r["doc_id"] for r in
-            sig.where(gopher_repetition_filter(sig)).collect()]
-    assert kept == [1]
-
-
 def test_oracle_parity_on_crafted_corpus(spark, tmp_path):
     """Spark vs DuckDB on docs exercising EVERY metric family —
     duplicate lines, paragraphs, top grams, dup 5..10-grams, ties."""
@@ -108,3 +95,4 @@ def test_plan_zero_shuffle(spark):
         .executedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("ArrowEvalPython") == 1
+

@@ -221,26 +221,3 @@ def test_make_mutual_xpath():
     assert make_mutual_xpath([]) == ""
     assert make_mutual_xpath(["/a/b[2]"]) == "/a/b[2]"
 
-
-def test_make_mutual_resolves_nodes():
-    from kgp.segmenter import make_mutual
-    root = parse_html(
-        "<html><body><div><p>a</p><p>b</p><p>c</p></div>"
-        "<span>x</span></body></html>")
-    got = make_mutual(root, ["/html/body/div[1]/p[1]",
-                             "/html/body/div[1]/p[2]"])
-    assert got == ["/html/body/div[1]/p[1]", "/html/body/div[1]/p[2]",
-                   "/html/body/div[1]/p[3]"]
-
-
-def test_xml10_filter():
-    from kgp.html_text import parse_xml, xml10_filter
-    # the BOM is NON-whitespace: it ends the ramp and survives
-    assert xml10_filter("﻿  <a>x</a>\x00\x0b") == "﻿  <a>x</a>"
-    assert xml10_filter("  \x0c\n<a/>") == "<a/>"
-    assert xml10_filter("ok\x01\x02\x1f end") == "ok end"
-    # astral chars are two invalid Java surrogates -> dropped
-    assert xml10_filter("a\U0001F600b") == "ab"
-    root = parse_xml("\x00<r><c>v\x01</c></r>")
-    assert root.children[0].tag == "r"
-    assert root.children[0].children[0].text_content() == "v"

@@ -7,8 +7,7 @@ import pytest
 from kgp.stemmer import (ENGLISH_STEMMING_EXCEPTIONS,
                          GERMAN_STEMMING_EXCEPTIONS, snowball_de,
                          snowball_en, stem_english_word,
-                         stem_german_word, stem_stage, stem_word,
-                         stem_words)
+                         stem_german_word, stem_stage, stem_word)
 
 
 def test_reference_stemmer_test_golden():
@@ -122,9 +121,7 @@ def test_exception_wrappers_align_casing():
 
 
 def test_stem_words_and_dispatch():
-    # WordTransformer.stemWords:539-556 / stemWord:558-565
-    assert stem_words("walked the dogs") == "walk the dog"
-    assert stem_words("Straßen  und Häuser", "de") == "Strasse und Haus"
+    # WordTransformer.stemWord:558-565
     assert stem_word("walking", "en") == "walk"
     assert stem_word("laufen", "de") == "lauf"
     with pytest.raises(NotImplementedError):

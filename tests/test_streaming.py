@@ -9,11 +9,19 @@ from pyspark.sql import functions as F
 
 from kgp.corpus import seed_dictionary, synth_pages, training_docs
 from kgp.html_text import extract_stage
-from kgp.mentions import train_ner_model
+from kgp.mentions import model_from_rows, ner_model_table
 from kgp.streaming import (mention_rates, run_stream, stream_docs,
                            stream_mentions, stream_pages)
 
 SF = "/root/testdata/sf0.001"
+
+
+def _train(spark, docs):
+    """The NER model the KG pipeline trains on docs (its ner_model
+    stage, collected)."""
+    seed_rows = seed_dictionary(spark).select("entity", "concept").collect()
+    return model_from_rows(
+        ner_model_table(training_docs(docs), seed_rows).collect())
 
 
 def _write_batch(spark, src_dir, lo, hi):
@@ -57,8 +65,7 @@ def test_streaming_mentions_and_watermarked_rates(spark, tmp_path):
 
     pages_batch = synth_pages(spark, SF)
     docs_batch = extract_stage(pages_batch).persist()
-    model = train_ner_model(spark, training_docs(docs_batch),
-                            seed_dictionary(spark))
+    model = _train(spark, docs_batch)
     bc = spark.sparkContext.broadcast(model)
 
     stream = stream_pages(spark, src)
@@ -230,10 +237,10 @@ def test_stream_triples_full_pipeline(spark, tmp_path):
     run over their union, and epoch overwrite keeps re-drains
     idempotent."""
     from kgp.canonicalize import canonical_mapping, canonicalize_links
-    from kgp.corpus import gazetteer, seed_dictionary, training_docs
+    from kgp.corpus import gazetteer
     from kgp.linker import link_mentions
     from kgp.materialize import finalize_triples
-    from kgp.mentions import detect_mentions, train_ner_model
+    from kgp.mentions import detect_mentions
     from kgp.relations import extract_relations
     from kgp.streaming import (read_stream_triples, stream_pages,
                                stream_triples)
@@ -245,8 +252,7 @@ def test_stream_triples_full_pipeline(spark, tmp_path):
     # bootstrap: train the model once on the full static corpus
     pages_all = synth_pages(spark, SF)
     docs_all = extract_stage(pages_all).persist()
-    model = train_ner_model(spark, training_docs(docs_all),
-                            seed_dictionary(spark))
+    model = _train(spark, docs_all)
     bc = spark.sparkContext.broadcast(model)
     gaz = gazetteer(spark)
     mapping = canonical_mapping(gaz).persist()

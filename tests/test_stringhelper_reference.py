@@ -1,8 +1,6 @@
 """StringHelperTest vectors (StringHelperTest.java) harvested
-MECHANICALLY for the ported members — replaceWord, camelCaseToWords,
-removeNumbering, reverseString, putArticleInFront, normalizeQuotes,
-getCaseSignature, isCompletelyUppercase, isNumericExpression,
-containsNumber."""
+MECHANICALLY for the ported members — replaceWord, normalizeQuotes,
+isCompletelyUppercase, isNumericExpression."""
 
 from __future__ import annotations
 
@@ -12,7 +10,7 @@ import pytest
 
 import kgp.stringhelpers as sh
 from kgp.entity_preprocess import normalize_quotes
-from kgp.mentions import get_case_signature, is_completely_uppercase
+from kgp.mentions import is_completely_uppercase
 from kgp.wikpostag import is_numeric_expression
 
 _JAVA = ("/root/reference/palladian-commons/src/test/java/ws/"
@@ -31,16 +29,7 @@ def _unesc(s: str) -> str:
 
 @pytest.mark.parametrize("method,call,fn,nargs,min_n", [
     ("testReplaceWord", "replaceWord", sh.replace_word, 3, 4),
-    ("testCamelCaseToWords", "camelCaseToWords",
-     sh.camel_case_to_words, 1, 3),
-    ("testRemoveNumbering", "removeNumbering",
-     sh.remove_numbering, 1, 8),
-    ("testReverseString", "reverseString", sh.reverse_string, 1, 1),
-    ("testPutArticleInFront", "putArticleInFront",
-     sh.put_article_in_front, 1, 2),
     ("testNormalizeQuotes", "normalizeQuotes", normalize_quotes, 1, 2),
-    ("testGetCaseSignature", "getCaseSignature",
-     get_case_signature, 1, 7),
 ])
 def test_string_vectors(method, call, fn, nargs, min_n):
     body = _body(method)
@@ -60,7 +49,6 @@ def test_string_vectors(method, call, fn, nargs, min_n):
      is_completely_uppercase, 3),
     ("testIsNumericExpression", "isNumericExpression",
      is_numeric_expression, 7),
-    ("testContainsNumber", "containsNumber", sh.contains_number, 4),
 ])
 def test_bool_vectors(method, call, fn, min_n):
     body = _body(method)

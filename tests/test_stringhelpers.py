@@ -2,17 +2,7 @@
 
 from __future__ import annotations
 
-from kgp.stringhelpers import (camel_case_to_words, contains_number,
-                               get_longest_common_string,
-                               lower_case_first_letter,
-                               make_camel_case,
-                               normalize_capitalization,
-                               number_to_word, number_word_to_number,
-                               number_words_to_numbers,
-                               put_article_in_front, remove_numbering,
-                               remove_numbers, replace_word,
-                               reverse_string, shorten,
-                               shorten_ellipsis,
+from kgp.stringhelpers import (lower_case_first_letter, replace_word,
                                upper_case_first_letter)
 
 
@@ -20,41 +10,6 @@ def test_case_helpers():
     assert upper_case_first_letter("word") == "Word"
     assert upper_case_first_letter("") == ""
     assert lower_case_first_letter("Word") == "word"
-    assert make_camel_case("max speed") == "maxSpeed"
-    assert make_camel_case("max speed", True) == "MaxSpeed"
-    assert make_camel_case("MAX SPEED") == "mAXSPEED"  # casing kept
-    assert camel_case_to_words("camelCaseString") == "camel Case String"
-    assert camel_case_to_words("camelCaseString", "_") \
-        == "camel_Case_String"
-    assert camel_case_to_words("") == ""
-    assert camel_case_to_words("ABCdef") == "ABCdef"  # no lower->upper
-
-
-def test_normalize_capitalization():
-    assert normalize_capitalization("the lord of the rings") \
-        == "The Lord of the Rings"
-    # 'and' non-leading stays lowercase, everything else capitalizes
-    assert normalize_capitalization("war and peace") == "War and Peace"
-    # raw-part membership: 'And' (capitalized) is NOT spared
-    assert normalize_capitalization("war And peace") == "War And Peace"
-
-
-def test_put_article_in_front():
-    assert put_article_in_front("Beatles, The") == "The Beatles"
-    assert put_article_in_front("Beatles,The") == "The Beatles"
-    assert put_article_in_front("Traviata, La") == "La Traviata"
-    assert put_article_in_front("Meistersinger, Die") \
-        == "Die Meistersinger"
-    assert put_article_in_front("No Article") == "No Article"
-
-
-def test_numbering_and_numbers():
-    assert remove_numbering("1.2 Headline") == "Headline"
-    assert remove_numbering("#3 Headline") == "Headline"
-    assert remove_numbering("Headline") == "Headline"
-    assert contains_number("has 42 things")
-    assert not contains_number("no digits here")
-    assert "42" not in remove_numbers("has 42 things")
 
 
 def test_replace_word():
@@ -68,40 +23,3 @@ def test_replace_word():
     assert replace_word("a", "X", "a b a") == "X b X"
     assert replace_word("", "X", "abc") == "abc"
 
-
-def test_number_words():
-    assert number_word_to_number("three") == 3
-    assert number_word_to_number("Couple") == 2
-    assert number_word_to_number("few") == 3
-    assert number_word_to_number("hundred") is None
-    assert number_to_word(7) == "seven"
-    assert number_to_word(7.5) is None
-    assert number_to_word(13) is None
-    assert number_to_word(0) is None
-    out = number_words_to_numbers("twenty two horses, the first one")
-    assert out == "20 2 horses, the 1 1"
-    # 'one hundred' can never fire (one -> 1 happens first): quirk
-    assert number_words_to_numbers("one hundred") == "1 hundred"
-
-
-def test_longest_common_string():
-    assert get_longest_common_string("sunflower", "flowerpot") \
-        == "flower"
-    assert get_longest_common_string("ABCdef", "abcXYZ",
-                                     case_sensitive=False) == "abc"
-    assert get_longest_common_string("ABCdef", "abcXYZ",
-                                     case_sensitive=True) == ""
-    # shift disabled: ONLY the common prefix of the two strings
-    assert get_longest_common_string("xabc", "abcy",
-                                     shift_string=False) == ""
-    assert get_longest_common_string("abcdef", "abcxyz",
-                                     shift_string=False) == "abc"
-
-
-def test_shorten_variants():
-    assert shorten("abcdef", 3) == "abc"
-    assert shorten("ab", 5) == "ab"
-    assert shorten(None, 3) is None
-    assert shorten_ellipsis("abcdef", 3) == "abc…"
-    assert shorten_ellipsis("ab", 5) == "ab"
-    assert reverse_string("ABC") == "CBA"

@@ -1,11 +1,6 @@
-"""Upstream MapTermCorpusTest + NGramWrapperIteratorTest vectors,
-transcribed mechanically.
+"""Upstream MapTermCorpusTest vectors, transcribed mechanically.
 
-Sources (assertions copied 1:1):
-- MapTermCorpusTest.java:16-60
-- NGramWrapperIteratorTest.java:16-62 (word n-gram enumeration order:
-  all lengths from one start position before advancing — exactly
-  kgp.tokenize.word_ngrams' order)
+Source (assertions copied 1:1): MapTermCorpusTest.java:16-60
 """
 
 import math
@@ -14,7 +9,6 @@ import re
 import pytest
 
 from kgp.textvector import TermCorpusLocal
-from kgp.tokenize import word_ngram_sequence
 
 DELTA = 0.00001
 
@@ -60,26 +54,3 @@ def test_get_idf(corpus):
     assert corpus.get_idf("moon", False) == math.inf
     assert abs(corpus.get_idf("moon", True)
                - (1 + math.log(4. / 1))) < DELTA
-
-
-# ------------------------------------------ NGramWrapperIteratorTest
-
-TOKENS = ["the", "quick", "brown", "fox"]
-
-
-def test_ngrams_1_2():
-    grams = word_ngram_sequence(TOKENS, 1, 2)
-    assert grams == ["the", "the quick", "quick", "quick brown",
-                     "brown", "brown fox", "fox"]
-
-
-def test_ngrams_1_3():
-    grams = word_ngram_sequence(TOKENS, 1, 3)
-    assert grams == ["the", "the quick", "the quick brown",
-                     "quick", "quick brown", "quick brown fox",
-                     "brown", "brown fox", "fox"]
-
-
-def test_ngrams_1_1():
-    grams = word_ngram_sequence(TOKENS, 1, 1)
-    assert grams == ["the", "quick", "brown", "fox"]

@@ -80,20 +80,6 @@ def test_char_ngrams_padding():
     assert "##" not in grams
 
 
-def test_char_edge_ngrams_java_semantics():
-    # Tokenizer.java:94-120 — only edge-touching grams survive
-    from kgp.tokenize import all_char_edge_ngrams, char_edge_ngrams
-    assert char_edge_ngrams("protector", 3) == {"pro", "tor"}
-    assert "rot" not in char_edge_ngrams("protector", 3)
-    assert char_edge_ngrams("sleeve", 2) == {"sl", "ve"}
-    assert char_edge_ngrams("ab", 3) == set()          # shorter than n
-    assert char_edge_ngrams("abc", 3) == {"abc"}       # n == length
-    assert char_edge_ngrams("protector", 3, must_hit_left_edge=True) \
-        == {"pro"}
-    got = all_char_edge_ngrams("blue sleeve", 2, 3)
-    assert {"bl", "ue", "blu", "lue", "sl", "ve", "sle", "eve"} == got
-
-
 def test_word_ngrams():
     assert word_ngrams(["a", "b", "c"], 2, 2) == ["a b", "b c"]
 
@@ -105,68 +91,10 @@ def test_offsets_reproject_onto_original():
     assert text[s[0].start:s[0].start + len(s[0].value)] == s[0].value
 
 
-def test_compute_starting_word_ngrams_golden():
-    # TokenizerTest.testComputeStartingWordNGrams (:33-39)
-    from kgp.tokenize import compute_starting_word_ngrams
-    got = compute_starting_word_ngrams("This is a test.", 1, 3)
-    assert "This" in got and "This is" in got and "This is a" in got
-    assert len(got) == 3
-
-
-def test_compute_splits():
-    from kgp.tokenize import compute_splits
-    got = compute_splits("a b c", 1, 2, 500)
-    assert ("a", "b", "c") in got
-    assert ("a b", "c") in got
-    assert ("a", "b c") in got
-    assert ("a b c",) not in got        # 3-gram exceeds n2=2
-    # max_splits caps the search
-    assert len(compute_splits("a b c d e f", 1, 3, 2)) <= 2
-
-
-def test_phrase_helpers():
-    from kgp.tokenize import (phrase_from_beginning_of_sentence,
-                              phrase_to_end_of_sentence)
-    # the delimiter character is kept (Tokenizer.java:515 ++endIndex)
-    assert phrase_to_end_of_sentence("Costs 30.2% more. Next") == \
-        "Costs 30.2% more."
-    assert phrase_from_beginning_of_sentence(
-        "It rose 30.2% today. The next phrase") == "The next phrase"
-    assert phrase_from_beginning_of_sentence("no delimiters here") == \
-        "no delimiters here"
-
-
 def test_reference_tokenizer_sentence_battery():
-    """TokenizerTest.testGetSentence (:123-144) + the German
-    one-sentence battery of testGetSentences (:146-200) + the
-    testTokenize counts (:86-112), transcribed from the reference's
-    own test."""
-    from kgp.tokenize import (get_sentence, get_sentences,
-                              phrase_from_beginning_of_sentence,
-                              phrase_to_end_of_sentence, tokenize)
-    assert phrase_to_end_of_sentence(
-        "Although, many of them (30.2%) are good. As long as") == \
-        "Although, many of them (30.2%) are good."
-    assert phrase_from_beginning_of_sentence(
-        "...now. Although, many of them (30.2%) are good") == \
-        "Although, many of them (30.2%) are good"
-    for s, p, exp in [
-        ("...now. Although, many of them (30.2%) are good. As long as",
-         10, "Although, many of them (30.2%) are good."),
-        ("...now. Although, many of them (30.2%) are good. As long as",
-         40, "Although, many of them (30.2%) are good."),
-        ("What is the largest city in usa, (30.2%) in population. "
-         "Yahoo! Answers,", 12,
-         "What is the largest city in usa, (30.2%) in population."),
-        ("What is the largest city in usa, (30.2%) in population? - "
-         "Yahoo! Answers,", 12,
-         "What is the largest city in usa, (30.2%) in population?"),
-        ("...now. Although, has 234,423,234 sq.miles area many of "
-         "them (30.2%) are good. As long as", 10,
-         "Although, has 234,423,234 sq.miles area many of them "
-         "(30.2%) are good."),
-    ]:
-        assert get_sentence(s, p) == exp, (s, p)
+    """The German one-sentence battery of TokenizerTest.testGetSentences
+    (:146-200) + the testTokenize counts (:86-112), transcribed from
+    the reference's own test."""
     for t, n in [
         ("That poster costs $22.40. twenty-one.", 7),
         ("Mr. <MUSICIAN>John Hiatt</MUSICIAN> is awesome.", 8),
@@ -211,3 +139,4 @@ def test_reference_tokenizer_sentence_battery():
         "abgeschnitten.", language="de")
     assert two[1].value == \
         "Bei uns ist jedoch der Satz am B abgeschnitten."
+

@@ -1,8 +1,6 @@
 """The reference's OWN UrlHelperTest vectors (UrlHelperTest.java)
-harvested MECHANICALLY — getCleanUrl, getDomain (all arities incl.
-the public-suffix subdomain stripping), removeSessionId,
-getCanonicalUrl, makeFullUrl — plus the suffix-bank loader's parity
-with the bundled resource files."""
+harvested MECHANICALLY — getDomain (all arities incl. the
+public-suffix subdomain stripping), removeSessionId and makeFullUrl."""
 
 from __future__ import annotations
 
@@ -43,10 +41,8 @@ def _vectors(name: str, call: str):
 
 
 @pytest.mark.parametrize("method,call,fn,min_n", [
-    ("testGetCleanUrl", "getCleanUrl", wg.get_clean_url, 6),
     ("testGetDomain", "getDomain", wg.get_domain, 18),
     ("testRemoveSessionId", "removeSessionId", wg.remove_session_id, 7),
-    ("testGetCanonicalUrl", "getCanonicalUrl", wg.get_canonical_url, 2),
 ])
 def test_url_helper_vectors(method, call, fn, min_n):
     vecs = _vectors(method, call)
@@ -81,15 +77,3 @@ def test_make_full_url_vectors():
     with pytest.raises(ValueError):
         wg.make_full_url(None, "http://www.example.com", None)
 
-
-def test_suffix_bank_loader_full_resources():
-    tl = open("/root/reference/palladian-commons/src/main/resources/"
-              "top-level-domains.txt", encoding="utf-8")
-    sl = open("/root/reference/palladian-commons/src/main/resources/"
-              "second-level-domains.txt", encoding="utf-8")
-    full = wg.load_domain_suffixes(tl, sl)
-    assert len(full) == 2701
-    # SLDs come first, longest first; bare TLDs follow
-    assert all(s.startswith(".") for s in full)
-    assert ".or.us" in full and ".codes" in full
-    assert full.index(".or.us") < full.index(".us")

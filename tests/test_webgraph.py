@@ -19,8 +19,8 @@ from kgp.canonicalize import SMALL_GRAPH_EDGES
 from kgp.corpus import synth_pages
 from kgp.html_text import parse_html
 from kgp.webgraph import (extract_links_stage, get_domain, get_links,
-                          get_links_set, host_graph, make_full_url,
-                          pagerank, remove_anchors)
+                          host_graph, make_full_url, pagerank,
+                          remove_anchors)
 
 
 # ------------------------------------------------- makeFullUrl parity
@@ -136,10 +136,15 @@ PAGE = """<html><head><base href="http://base.example.com/sub/">
 </body></html>"""
 
 
+def _link_urls(root, original_url, **kw):
+    """The reference's return shape (Set<String>) of get_links."""
+    return {d["url"] for d in get_links(root, original_url, **kw)}
+
+
 def test_get_links_base_href_and_filters():
     root = parse_html(PAGE)
-    got = get_links_set(root, "http://www.example.com/dir/index.html",
-                        include_subdomains=True)
+    got = _link_urls(root, "http://www.example.com/dir/index.html",
+                     include_subdomains=True)
     # base href wins over the page url for relative resolution
     assert "http://base.example.com/sub/page1.html" in got
     assert "http://base.example.com/abs.html" in got
@@ -177,8 +182,8 @@ def test_get_links_subdomain_drop_quirk():
             '<a href="http://example.com/b">R</a>'
             '<a href="http://other.org/c">O</a></body></html>')
     root = parse_html(html)
-    got = get_links_set(root, "http://example.com/",
-                        include_subdomains=False)
+    got = _link_urls(root, "http://example.com/",
+                     include_subdomains=False)
     assert got == {"http://example.com/b", "http://other.org/c"}
 
 
@@ -186,20 +191,20 @@ def test_get_links_in_out_flags():
     html = ('<html><body><a href="/in.html">I</a>'
             '<a href="http://other.org/c">O</a></body></html>')
     root = parse_html(html)
-    assert get_links_set(root, "http://example.com/x", in_domain=True,
-                         out_domain=False) == {"http://example.com/in.html"}
-    assert get_links_set(root, "http://example.com/x", in_domain=False,
-                         out_domain=True) == {"http://other.org/c"}
+    assert _link_urls(root, "http://example.com/x", in_domain=True,
+                      out_domain=False) == {"http://example.com/in.html"}
+    assert _link_urls(root, "http://example.com/x", in_domain=False,
+                      out_domain=True) == {"http://other.org/c"}
     # prefix filter (HtmlHelper.java:837)
-    assert get_links_set(root, "http://example.com/x",
-                         prefix="http://other") == {"http://other.org/c"}
+    assert _link_urls(root, "http://example.com/x",
+                      prefix="http://other") == {"http://other.org/c"}
 
 
 def test_get_links_fragment_only_is_self_link():
     # href="#top" -> removeAnchors -> "" -> resolves to the page url
     # (the reference's Set picks it up as a self-link)
     html = '<html><body><a href="#top">Top</a></body></html>'
-    got = get_links_set(parse_html(html), "http://example.com/x.html")
+    got = _link_urls(parse_html(html), "http://example.com/x.html")
     assert got == {"http://example.com/x.html"}
 
 
@@ -558,68 +563,3 @@ def test_text_urls_query_plan_pure_jvm(spark):
     df = entry.queries()["text_urls"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Exchange" not in plan
-
-
-# ------------------------- getCanonicalUrl / getCleanUrl / absolutize
-
-
-def test_get_canonical_url_goldens():
-    # UrlHelperTest.testGetCanonicalUrl
-    from kgp.webgraph import get_canonical_url as c
-    assert c("http://www.funs.co.uk/comic/index.html") \
-        == "http://www.funs.co.uk/comic/"
-    assert c("http://sourceforge.net/tracker/?func=detail&aid=1954302"
-             "&group_id=23067&atid=377408") \
-        == ("http://sourceforge.net/tracker/?aid=1954302&atid=377408"
-            "&func=detail&group_id=23067")
-    assert c("http://sourceforge.net/") == "http://sourceforge.net/"
-    # fragment dropped before query sorting
-    assert c("http://sourceforge.net/tracker/?func=detail&aid=3492945"
-             "&group_id=23067&atid=377408#artifact_comment_6199621") \
-        == ("http://sourceforge.net/tracker/?aid=3492945&atid=377408"
-            "&func=detail&group_id=23067")
-    assert c(None) == "" and c("not a url") == ""
-
-
-def test_get_canonical_url_quirks():
-    from kgp.webgraph import get_canonical_url as c
-    # dot-dot blanks itself and the directory above
-    assert c("http://a.com/x/../y.html") == "http://a.com/y.html"
-    # the reference concatenates a non-default port BEFORE the host —
-    # bug-for-bug parity
-    assert c("http://a.com:8080/x/") == "http://:8080a.com/x/"
-    # default port elided
-    assert c("http://a.com:80/x/") == "http://a.com/x/"
-    # index.* survives when a query exists
-    assert c("http://a.com/index.html?q=1") == "http://a.com/index.html?q=1"
-
-
-def test_get_clean_url():
-    from kgp.webgraph import get_clean_url
-    assert get_clean_url("https://www.example.com/p") == "example.com/p"
-    assert get_clean_url("http://example.com") == "example.com"
-    assert get_clean_url(None) == ""
-
-
-def test_make_absolute_urls():
-    # UrlHelperTest.testMakeAbsoluteUrls shape: relative href/src
-    # rewritten against the document url (+ base href when present)
-    from kgp.webgraph import make_absolute_urls
-    html = ('<html><body><a href="xhtml1-diff.html">d</a>'
-            '<img src="/logo.png">'
-            '<a href="http://abs.org/x">abs</a></body></html>')
-    root = make_absolute_urls(parse_html(html),
-                              "http://www.w3.org/TR/xhtml1/")
-    hrefs = [n.attrs.get("href") or n.attrs.get("src")
-             for n in root.iter() if n.tag in ("a", "img")]
-    assert hrefs == ["http://www.w3.org/TR/xhtml1/xhtml1-diff.html",
-                     "http://www.w3.org/logo.png", "http://abs.org/x"]
-
-
-def test_make_absolute_urls_base_href():
-    from kgp.webgraph import make_absolute_urls
-    html = ('<html><head><base href="http://cdn.example.com/assets/">'
-            '</head><body><img src="pic.jpg"></body></html>')
-    root = make_absolute_urls(parse_html(html), "http://www.site.com/p/")
-    img = next(n for n in root.iter() if n.tag == "img")
-    assert img.attrs["src"] == "http://cdn.example.com/assets/pic.jpg"

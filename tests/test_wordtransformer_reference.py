@@ -1,9 +1,8 @@
 """The reference's OWN WordTransformerTest English vectors
 (WordTransformerTest.java:54-265) harvested MECHANICALLY from the
-Java source — singular/plural nouns and the three verb transforms.
-(testGetTense is already reproduced in tests/test_predicates.py;
-testSplitGermanCompounds and the German noun methods need the
-reference's unshipped word DB.)"""
+Java source — the English plural→singular transform the predicate
+normalizer uses. (testSplitGermanCompounds and the German noun methods
+need the reference's unshipped word DB.)"""
 
 from __future__ import annotations
 
@@ -11,9 +10,7 @@ import re
 
 import pytest
 
-from kgp.predicates import (past_participle, simple_past,
-                            third_person_singular, word_to_plural,
-                            word_to_singular)
+from kgp.predicates import word_to_singular
 
 _JAVA = ("/root/reference/palladian-core/src/test/java/ws/palladian/"
          "semantics/WordTransformerTest.java")
@@ -32,12 +29,6 @@ def _harvest(method: str, java_call: str):
 @pytest.mark.parametrize("method,call,fn,min_n", [
     ("testWordToSingularEnglish", "wordToSingular",
      word_to_singular, 25),
-    ("testWordToPluralEnglish", "wordToPlural", word_to_plural, 100),
-    ("testGetThirdPersonSingular", "getThirdPersonSingular",
-     third_person_singular, 10),
-    ("testGetSimplePast", "getSimplePast", simple_past, 7),
-    ("testGetPastParticiple", "getPastParticiple",
-     past_participle, 8),
 ])
 def test_word_transformer_vectors(method, call, fn, min_n):
     vecs = _harvest(method, call)
