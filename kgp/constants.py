@@ -97,13 +97,7 @@ S7 = NOVEL_ORG + " is headquartered in {city2}."  # when doc_id % 23 == 11
 DATE_SURFACE = "March 3, 2021"
 S8 = "The merger was announced on " + DATE_SURFACE + " in {city}."
 
-COND_S4 = ("doc_id % 3", 0)
-COND_S5 = ("doc_id % 4", 1)
-COND_S6 = ("doc_id % 5", 2)
-COND_S9 = ("doc_id % 7", 4)
 S9_MOD, S9_VAL = 7, 4
-COND_S7 = ("doc_id % 23", 11)
-COND_S8 = ("doc_id % 6", 3)
 HOLDOUT_MOD, HOLDOUT_VAL = 23, 11  # NER train/apply split
 S8_MOD, S8_VAL = 6, 3
 ALIAS_COND = "(doc_id % 9 = 5 AND doc_id % 13 < 3)"
@@ -148,8 +142,5 @@ RELATED_HTML = (
     '<li><a rel="nofollow" href="https://ads.example.biz/click?id='
     '{doc_id}">Sponsored</a></li>'
     '<li><a href="mailto:tips@example.com">Contact</a></li></ul></div>')
-
-PREDICATES = ["ceo_of", "born_in", "headquartered_in", "capital_of",
-              "works_for", "founded"]
 
 CONCEPT_PRIORITY = ["PER", "ORG", "CITY", "COUNTRY"]

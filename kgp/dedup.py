@@ -4,7 +4,7 @@ Five families, each the Spark-first shape of a published technique:
 
   * exact           — hash-groupBy on a normalized fingerprint
   * MinHash + LSH   — shingle → minhash sigs → band buckets →
-                      bucket-join candidates → exact-Jaccard verify
+                      per-bucket pairs → exact-Jaccard verify
   * SimHash         — 64-bit sketch, Hamming-band buckets
   * n-gram Jaccard  — exact verifier (also standalone for small sets)
   * embedding cosine near-dup — see kgp.similarity
@@ -13,12 +13,16 @@ The reference's similarity metrics are the per-pair analogs
 (/root/reference/palladian-commons/src/main/java/ws/palladian/helper/nlp/JaccardSimilarity.java,
  CharacterNGramSimilarity.java, the shingle idea in
  palladian-core/.../token/CharacterNGramTokenizer.java); the banding /
- bucket-join structure is what makes them corpus-scale: candidates come
- from equality joins on (band, bucket-hash) — a plain hash shuffle Spark
- distributes and AQE skew-splits — never from an O(n²) cross join.
+ bucket structure is what makes them corpus-scale: candidates come
+ from grouping on the (band, bucket-hash) key — a plain hash shuffle
+ Spark distributes — never from an O(n²) cross join.
 
-Python appears only in signature computation (vectorized numpy over
-Arrow batches, one pass per document); all pairing is JVM joins.
+Python appears only in signature computation and the exact verify.
+A MinHash signature is computed once per document (a numpy hash over
+the code points of all of a text's shingles at once, inside an Arrow
+batch) and read by banding and both estimate joins through one
+exchange; the exact Jaccard runs once per surviving candidate pair.
+All pairing is JVM aggregation and joins.
 """
 
 from __future__ import annotations
@@ -81,8 +85,13 @@ def _stable_hash64(s: str) -> int:
     return int.from_bytes(md5(s.encode("utf-8")).digest()[:8], "big")
 
 
+def _normalize(text: str | None) -> str:
+    """Lower-case, whitespace runs collapsed to one space, trimmed."""
+    return " ".join((text or "").lower().split())
+
+
 def _shingle_set(text: str, k: int) -> set[str]:
-    t = " ".join((text or "").lower().split())
+    t = _normalize(text)
     if len(t) < k:
         return {t} if t else set()
     return {t[i:i + k] for i in range(len(t) - k + 1)}
@@ -103,6 +112,12 @@ def ngram_jaccard(a: str, b: str, k: int = 5) -> float:
 MINHASH_PERMS = 128
 _MERSENNE = (1 << 61) - 1
 
+# k-gram polynomial hash over code points, then the murmur3 64-bit
+# finalizer (uint64 arithmetic wraps mod 2^64 by design)
+_CP_SEED = np.uint64(0x9E3779B97F4A7C15)
+_CP_BASE = np.uint64(0x100000001B3)
+_FMIX = (np.uint64(0xFF51AFD7ED558CCD), np.uint64(0xC4CEB9FE1A85EC53))
+
 
 def _minhash_params(num_perm: int, seed: int = 42):
     rng = np.random.RandomState(seed)
@@ -111,34 +126,74 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
+def _codepoint_hashes(text: str, k: int) -> np.ndarray:
+    """61-bit hashes of every k-shingle of `text` (as is — normalize
+    first), all windows at once: a UTF-32 view of the code points and
+    one vector multiply-add per shingle position. A text shorter than
+    k is its own single shingle (the _shingle_set rule). The hash
+    starts from a seed, so a shorter shingle never hashes like a
+    longer one that is zero-padded in front."""
+    cp = np.frombuffer(text.encode("utf-32-le", "surrogatepass"),
+                       dtype="<u4").astype(np.uint64)
+    width = min(k, len(cp))
+    n = len(cp) - width + 1
+    h = np.full(n, _CP_SEED)
+    for j in range(width):
+        h = h * _CP_BASE + cp[j:j + n]
+    for m in _FMIX:
+        h ^= h >> np.uint64(33)
+        h *= m
+    h ^= h >> np.uint64(33)
+    return h >> np.uint64(3)
+
+
+def _minhash(text: str, k: int, a_par: np.ndarray,
+             b_par: np.ndarray) -> np.ndarray:
+    """The MinHash signature of one text's k-shingle set: per
+    permutation, min over the distinct shingle hashes x of
+    (a*x + b) mod (2^61 - 1). Products wrap mod 2^64 first —
+    deterministic, and the composition stays a uniform enough hash
+    family. A text with no shingles signs as all zeros."""
+    t = _normalize(text)
+    if not t:
+        return np.zeros(len(a_par), dtype=np.uint64)
+    hv = np.unique(_codepoint_hashes(t, k))
+    x = np.outer(a_par, hv)
+    x += b_par[:, None]
+    # x mod p for the Mersenne prime p = 2^61 - 1 without a division:
+    # 2^61 = 1 (mod p), so fold the top 3 bits onto the low 61; the
+    # sum is < 2p and one wrapped subtraction finishes it
+    p = np.uint64(_MERSENNE)
+    x = (x & p) + (x >> np.uint64(61))
+    np.minimum(x, x - p, out=x)
+    return x.min(axis=1)
+
+
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 5,
                        num_perm: int = MINHASH_PERMS) -> DataFrame:
     """(doc_id, sig: array<long>) — numpy-vectorized minhash over
-    k-shingles, one Arrow pass."""
+    k-shingles, hash-partitioned on doc_id.
+
+    Rows with a null id are dropped BEFORE the signature UDF: they can
+    never pair (every pair needs a < b), and the explicit filter keeps
+    every consumer's copy of this plan identical. Without it Spark
+    infers an isnotnull(doc_id) filter on join sides only, the copies
+    differ, and the UDF runs once per copy. With it, the banding and
+    both estimate joins of minhash_near_dups read the one
+    repartition(doc_id) exchange (AQE reuses the stage), so each
+    document is signed once."""
     a_par, b_par = _minhash_params(num_perm)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            sh = _shingle_set(t or "", k)
-            if not sh:
-                out.append([0] * num_perm)
-                continue
-            hv = np.fromiter((_stable_hash64(s) >> 3 for s in sh),
-                             dtype=np.uint64, count=len(sh))
-            # (a*x + b) mod p per permutation, min over shingles
-            # (products wrap mod 2^64 first — deterministic, and the
-            # composition stays a uniform enough hash family)
-            sig = np.min(
-                (np.outer(a_par, hv) + b_par[:, None]) % _MERSENNE,
-                axis=1)
-            out.append([int(x) for x in sig])
-        return pd.Series(out)
+        return pd.Series([_minhash(t, k, a_par, b_par).astype(np.int64)
+                          for t in texts])
 
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       sig_udf(F.col(text_col)).alias("sig"))
+    return (docs.where(F.col(id_col).isNotNull())
+            .select(F.col(id_col).alias("doc_id"),
+                    sig_udf(F.col(text_col)).alias("sig"))
+            .repartition("doc_id"))
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
@@ -146,15 +201,18 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
                         num_perm: int = MINHASH_PERMS,
                         min_band_matches: int = 1) -> DataFrame:
     """Band the signatures; docs sharing any (band, band-hash) bucket
-    become a candidate pair. Pure DataFrame: explode bands →
-    self-equijoin on the bucket hash. Emits each pair once (a < b).
+    become a candidate pair. Pure DataFrame: explode bands → one
+    collect_list of doc ids per bucket → the a < b pairs of each list,
+    generated in the JVM. Emits each pair once (a < b).
 
     max_bucket drops pathological buckets (e.g. thousands of IDENTICAL
     documents — those are exact-dup territory, handled by
     exact_dup_groups at O(n), not O(n²) pairing). This is the standard
-    web-scale guard: bucket sizes are counted first (one cheap agg on
-    the already-shuffled key) and the join never sees a quadratic
-    blowup.
+    web-scale guard: a bucket's list is sized in the same aggregation
+    that builds it, and an oversized list is dropped before any pair
+    is generated, so the pairing never sees a quadratic blowup (the
+    list itself is built whole first: 8 bytes per member, in one
+    task).
 
     num_perm MUST be the signature length minhash_signatures was called
     with and must divide evenly into bands — otherwise band slices past
@@ -180,18 +238,20 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
                                      rows_per_band).cast("array<long>")
                    .cast("string"))
         for i in range(bands)])
-    buckets = (sigs
-               .withColumn("bucket", F.explode(band_cols))
-               .select("doc_id", "bucket"))
-    sizes = buckets.groupBy("bucket").count()
-    buckets = (buckets.join(sizes.where(F.col("count") <= max_bucket)
-                            .select("bucket"), "bucket"))
-    lft, rgt = buckets.alias("l"), buckets.alias("r")
-    pairs = (lft.join(rgt, (F.col("l.bucket") == F.col("r.bucket")) &
-                      (F.col("l.doc_id") < F.col("r.doc_id")))
-             .select(F.col("l.doc_id").alias("a"),
-                     F.col("r.doc_id").alias("b"))
-             .groupBy("a", "b").count())
+    # every (x, y) of a bucket's list with x < y: the rows a bucket
+    # self-join on l.doc_id < r.doc_id gives, repeated ids included
+    in_bucket = F.flatten(F.transform(
+        "ids", lambda x: F.transform(
+            F.filter("ids", lambda y: x < y),
+            lambda y: F.struct(x.alias("a"), y.alias("b")))))
+    pairs = (sigs
+             .select("doc_id", F.explode(band_cols).alias("bucket"))
+             .groupBy("bucket")
+             .agg(F.collect_list("doc_id").alias("ids"))
+             .where(F.size("ids").between(2, max_bucket))
+             .select(F.explode(in_bucket).alias("p"))
+             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+             .count())
     if min_band_matches > 1:
         pairs = pairs.where(F.col("count") >= min_band_matches)
     return pairs.select("a", "b")
@@ -223,14 +283,17 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text",
 
     The prefilter re-uses the signatures the bands were cut from:
     estimated jaccard = fraction of agreeing minhash positions — a
-    pure JVM `zip_with`+`aggregate` over two already-shuffled 128-long
-    arrays, no Python, no text movement. Pairs below
-    threshold - prefilter_margin are dropped before texts are ever
-    joined. Before even that, min_band_matches=3 screens the pair set
-    inside the banding aggregation itself (see lsh_candidate_pairs) —
-    a three-tier funnel: band count (free, in-shuffle) → signature
-    estimate (JVM, 1 KB/doc moves) → exact Jaccard (Python, only
-    near-threshold survivors). With 128 perms the estimate's std is
+    pure JVM `zip_with`+`aggregate` over two 128-long arrays, no
+    Python, no text movement. Pairs below threshold - prefilter_margin
+    are dropped before texts are ever joined. Banding and both
+    estimate joins read ONE signature exchange (see
+    minhash_signatures): the Python signature pass runs once per
+    document, not once per consumer. Before even that,
+    min_band_matches=3 screens the pair set inside the banding
+    aggregation itself (see lsh_candidate_pairs) — a three-tier
+    funnel: band count (free, in-shuffle) → signature estimate (JVM,
+    1 KB/doc moves) → exact Jaccard (Python, only near-threshold
+    survivors, once per pair). With 128 perms the estimate's std is
     sqrt(J(1-J)/128) ≤ 0.044, so the default margin 0.15 is ≥3.4σ:
     a TRUE pair at exactly jaccard=threshold is lost with p ≤ 3e-4,
     and the miss probability decays to ~1e-15 by jaccard=threshold+0.1
@@ -267,6 +330,11 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text",
         return pd.Series([ngram_jaccard(x, y, k)
                           for x, y in zip(ta, tb)])
 
+    # marked nondeterministic so the optimizer cannot copy the call
+    # into both the Filter below and the final Project (it does for a
+    # deterministic UDF, and every pair is verified twice); the value
+    # is a pure function of the two texts all the same
+    jac = jac.asNondeterministic()
     return (paired.withColumn("jaccard", jac("text_a", "text_b"))
             .where(F.col("jaccard") >= threshold)
             .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
@@ -358,8 +426,11 @@ def near_dup_groups(docs: DataFrame, text_col: str = "text",
     from kgp.canonicalize import connected_components
     pairs = minhash_near_dups(docs, text_col, id_col, k, threshold)
     # the pair pipeline (signatures -> banding -> estimate -> exact
-    # verify) is the expensive part; persist so the CC regime probe
-    # and any distributed-CC iteration read it once, not per job
+    # verify) is the expensive part; within one evaluation it signs
+    # each document once and verifies each pair once. Persist the
+    # edges so the CC regime probe and any distributed-CC iteration
+    # run that evaluation once, not once per job; the signatures
+    # themselves are never cached
     edges = pairs.select(F.col("a").alias("src"),
                          F.col("b").alias("dst")).persist()
     mapping = connected_components(edges)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 # Canonical predicate map. Keys are snake_cased phrasings as produced
 # by the pattern bank / induced patterns; values are the pipeline's
-# canonical predicates (kgp.constants.PREDICATES).
+# canonical predicates.
 PREDICATE_CANON: dict[str, str] = {
     "based_in": "headquartered_in",
     "is_based_in": "headquartered_in",

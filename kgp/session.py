@@ -5,6 +5,20 @@ would set on a 1000-executor cluster: AQE on (runtime re-planning +
 skew-join splitting), Arrow-vectorized Python UDF transport with large
 batches, shuffle partitions sized to cores (overridden upward on a real
 cluster), UTC session timezone for deterministic timestamps.
+
+Where the session's cold start lands: the first job that runs Python
+in a session pays for starting the Python workers and importing
+pandas, pyarrow and kgp in them, about 1.1-2 s on a 4-core VM. That
+cost is booked to the first stage that runs Python — `dedup` in the
+curation pipeline, `docs` in the KG pipeline — and stays there on
+purpose. On the 1,150 curate_dup seed-1 documents (4-core VM, local[4])
+`kgp.dedup.minhash_near_dups` takes 2.9-3.0 s as a fresh process's
+first Python job and 1.0 s when run again in the same session. A
+Python warm-up job in `get_spark` would only move those seconds into
+session set-up, not remove them, and a preloading worker daemon
+(`spark.python.daemon.module`) measured no change. Only the collation
+warm-up below runs at set-up, because it removes a stall rather than
+moving one.
 """
 
 from __future__ import annotations

@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import random
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from kgp import dedup
 from kgp.dedup import (exact_dup_groups, lsh_candidate_pairs,
                        near_dup_groups,
                        minhash_near_dups, minhash_signatures,
@@ -50,6 +54,141 @@ def test_minhash_signature_determinism(spark):
     assert sim > 0.6                  # near-dup -> most minhashes agree
     dis = sum(x == y for x, y in zip(a[1], a[5])) / len(a[1])
     assert dis < 0.2
+
+
+M64 = (1 << 64) - 1
+KERNEL_TEXTS = [
+    None, "", "   \t\n ",
+    "abc",                                   # shorter than k
+    "abcde",                                 # exactly k
+    "aaaaaaaaaaaaaaaaaaaa",                  # one shingle, repeated
+    "ab ab ab ab ab ab ab ab",               # few distinct shingles
+    "  The QUICK\tbrown\n\nfox   JUMPS  ",   # case and whitespace
+    "東京は日本の首都です。大阪は大きな都市です。",   # CJK
+    "party 🎉🎉 time 🎉 again 🎉",            # astral code points
+    "🎉",                                    # one astral code point
+    "ÄÖÜ Straße İstanbul ǅemal",             # lower() changes length
+    BASE, NEAR,
+]
+
+
+def _slow_shingle_hash(shingle: str) -> int:
+    """The code-point hash of one shingle, one character at a time in
+    Python integers."""
+    h = int(dedup._CP_SEED)
+    for ch in shingle:
+        h = (h * int(dedup._CP_BASE) + ord(ch)) & M64
+    for m in dedup._FMIX:
+        h ^= h >> 33
+        h = (h * int(m)) & M64
+    h ^= h >> 33
+    return h >> 3
+
+
+def _slow_signature(text, k=5, num_perm=dedup.MINHASH_PERMS):
+    """Each distinct shingle of _shingle_set hashed on its own, then
+    min over (a*x + b mod 2^64) mod (2^61 - 1) per permutation."""
+    a_par, b_par = dedup._minhash_params(num_perm)
+    hv = {_slow_shingle_hash(sh) for sh in dedup._shingle_set(text, k)}
+    if not hv:
+        return [0] * num_perm
+    return [min(((int(a) * x + int(b)) & M64) % dedup._MERSENNE
+                for x in hv)
+            for a, b in zip(a_par, b_par)]
+
+
+@pytest.mark.parametrize("k", [3, 5])
+def test_vectorized_signature_matches_slow_reference(k):
+    a_par, b_par = dedup._minhash_params(dedup.MINHASH_PERMS)
+    for text in KERNEL_TEXTS:
+        got = dedup._minhash(text, k, a_par, b_par)
+        assert [int(x) for x in got] == _slow_signature(text, k), text
+
+
+def test_signature_is_independent_of_its_arrow_batch(spark):
+    """A document signs the same alone and inside a full 256-row Arrow
+    batch of other documents."""
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(300)]
+    filler = [" ".join(rng.choice(words) for _ in range(rng.randint(0, 60)))
+              for _ in range(256 - len(KERNEL_TEXTS))]
+    texts = KERNEL_TEXTS + filler
+    rows = [(i, t) for i, t in enumerate(texts)]
+    schema = "doc_id long, text string"
+    batch = {r.doc_id: r.sig for r in minhash_signatures(
+        spark.createDataFrame(rows, schema).coalesce(1)).collect()}
+    assert len(batch) == 256
+    for i, t in enumerate(KERNEL_TEXTS):
+        alone = minhash_signatures(
+            spark.createDataFrame([(i, t)], schema)).collect()
+        assert [r.sig for r in alone] == [batch[i]], t
+        assert batch[i] == _slow_signature(t), t
+
+
+def _final_plan_nodes(spark, df):
+    """Every node of df's executed plan, the final AQE plan included:
+    query stages and reused exchanges are followed into the plans they
+    wrap, each node object once."""
+    ident = spark._jvm.System.identityHashCode
+    todo, seen, out = [df._jdf.queryExecution().executedPlan()], set(), []
+    while todo:
+        node = todo.pop()
+        if ident(node) in seen:
+            continue
+        seen.add(ident(node))
+        out.append(node)
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif cls == "ReusedExchangeExec":
+            todo.append(node.child())
+    return out
+
+
+def _python_rows(nodes, udf):
+    """Rows the Python workers returned for `udf`, summed over every
+    ArrowEvalPython node that calls it."""
+    total = 0
+    for node in nodes:
+        if (node.nodeName() == "ArrowEvalPython"
+                and f"[{udf}(" in node.toString().splitlines()[0]):
+            total += node.metrics().get("pythonNumRowsReceived").get().value()
+    return total
+
+
+def test_minhash_near_dups_signs_each_doc_and_verifies_each_pair_once(spark):
+    """One signature per document (banding and both estimate joins read
+    one exchange) and one exact Jaccard per candidate pair, with no
+    cache and no RDD scan standing in for the reuse. Every candidate
+    here is a true pair (clusters of an original, an exact copy and a
+    near copy; unrelated originals), so the verify sees exactly the
+    pairs returned."""
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(500)]
+    rows = []
+    for c in range(12):
+        text = " ".join(rng.choice(words) for _ in range(60))
+        rows += [(100 * c, text), (100 * c + 1, text),
+                 (100 * c + 2, text + " w1 w2")]
+    rows += [(5000 + i, " ".join(rng.choice(words) for _ in range(60)))
+             for i in range(20)]
+    # an Arrow local relation: a plain row list would plan as an RDD scan
+    docs = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "text"]),
+        "doc_id long, text string")
+    df = minhash_near_dups(docs)
+    pairs = df.collect()
+    assert len(pairs) == 12 * 3
+    nodes = _final_plan_nodes(spark, df)
+    names = {n.nodeName() for n in nodes}
+    assert "InMemoryTableScan" not in names, names
+    assert not any("ExistingRDD" in n for n in names), names
+    assert _python_rows(nodes, "sig_udf") == len(rows)
+    assert _python_rows(nodes, "jac") == len(pairs)
 
 
 def test_minhash_near_dups_end_to_end(spark):

@@ -16,6 +16,10 @@ the root files, every module-level statement and decorator of every kgp
 module, and the bodies of reached definitions, iterated to a fixed
 point. Names are not resolved to modules, so a collision can only make
 a definition look reached, never unreached.
+
+Module-level assignments of the pipelines' modules are checked the same
+way: a name a module assigns at top level is read when reached code
+loads it (an assignment target is not a read).
 """
 import ast
 import re
@@ -87,13 +91,14 @@ def kgp_closure(roots=None):
 
 
 def names_in(*nodes):
-    """Every name the nodes use: names, attributes, import aliases and
-    identifiers inside string constants."""
+    """Every name the nodes use: loaded names, attributes, import
+    aliases and identifiers inside string constants."""
     found = set()
     for top in nodes:
         for node in ast.walk(top):
             if isinstance(node, ast.Name):
-                found.add(node.id)
+                if not isinstance(node.ctx, (ast.Store, ast.Del)):
+                    found.add(node.id)
             elif isinstance(node, ast.Attribute):
                 found.add(node.attr)
             elif isinstance(node, ast.alias):
@@ -109,18 +114,18 @@ def names_in(*nodes):
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
-def unreached_definitions(roots, modules):
-    """(module stem, name) of every top-level def/class in `modules`
-    whose name no reached code uses."""
-    names = set()
+def reached_names(roots, modules, kept=()):
+    """Every name reached code uses: the roots, every module-level
+    statement of `modules`, and the bodies of the definitions those
+    names (and the definition names in `kept`) reach, to a fixed
+    point."""
+    names = set(kept)
     for path in roots:
         names |= names_in(_parse(path))
     pending = {}   # name -> bodies of the definitions of that name
-    defs = []
     for path in modules:
         for stmt in _parse(path).body:
             if isinstance(stmt, _DEFS):
-                defs.append((path.stem, stmt.name))
                 names |= names_in(*stmt.decorator_list)
                 parts = list(stmt.body)
                 if isinstance(stmt, ast.ClassDef):
@@ -139,7 +144,48 @@ def unreached_definitions(roots, modules):
             names.add(name)
             if name in pending:
                 todo.append(name)
-    return sorted(d for d in defs if d[1] not in names)
+    return names
+
+
+def unreached_definitions(roots, modules):
+    """(module stem, name) of every top-level def/class in `modules`
+    whose name no reached code uses."""
+    names = reached_names(roots, modules)
+    return sorted((path.stem, stmt.name) for path in modules
+                  for stmt in _parse(path).body
+                  if isinstance(stmt, _DEFS) and stmt.name not in names)
+
+
+def _assigned(stmts):
+    """Names the statements assign at their own level: targets of
+    assignments, also inside if/try/with/for blocks, never inside a
+    def, class or comprehension."""
+    for stmt in stmts:
+        if isinstance(stmt, ast.Assign):
+            targets = stmt.targets
+        elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
+            targets = [stmt.target]
+        else:
+            targets = []
+            if not isinstance(stmt, _DEFS):
+                for field in ("body", "orelse", "finalbody", "handlers"):
+                    yield from _assigned(getattr(stmt, field, ()))
+        for target in targets:
+            for node in ast.walk(target):
+                if isinstance(node, ast.Name):
+                    yield node.id
+
+
+def unread_assignments(roots, modules, checked, kept=()):
+    """(module stem, name) of every top-level assignment in `checked`
+    (a subset of `modules`) whose name no reached code loads, the
+    bodies of the definitions named in `kept` counting as reached.
+    Dunder names (`__all__`) are read by Python itself."""
+    names = reached_names(roots, modules, kept)
+    return sorted({(path.stem, name) for path in checked
+                   for name in _assigned(_parse(path).body)
+                   if name not in names
+                   and not (name.startswith("__") and name.endswith("__"))})
 
 
 def test_import_forms_are_followed(tmp_path):
@@ -180,6 +226,32 @@ def test_definition_scan_follows_bodies_to_a_fixed_point(tmp_path):
         ("a", "only_test"), ("b", "uses_child")]
 
 
+def test_assignment_scan_counts_loads_only(tmp_path):
+    root = tmp_path / "root.py"
+    root.write_text("from kgp.a import entry\nentry(USED_BY_ROOT)\n")
+    a = tmp_path / "a.py"
+    a.write_text(
+        "__all__ = ['entry']\n"
+        "USED_BY_ROOT = 1\n"
+        "IN_BODY, UNREAD = 2, 3\n"
+        "ONLY_STORED = 4\n"
+        "ONLY_STORED = 5\n"
+        "ONLY_DELETED = 6\n"
+        "del ONLY_DELETED\n"
+        "TOTAL: int = 0\n"
+        "TOTAL += 1\n"
+        "SQUARES = {n: n * n for n in range(3)}\n"
+        "try:\n    import zlib\nexcept ImportError:\n    FALLBACK = None\n"
+        "def entry(x):\n    local = IN_BODY\n    return local + SQUARES[x]\n"
+        "def unreached():\n    return TOTAL\n"
+        "def oracle():\n    return FALLBACK\n")
+    assert unread_assignments([root], [a], [a]) == [
+        ("a", "FALLBACK"), ("a", "ONLY_DELETED"), ("a", "ONLY_STORED"),
+        ("a", "TOTAL"), ("a", "UNREAD")]
+    assert ("a", "FALLBACK") not in unread_assignments(
+        [root], [a], [a], kept=["oracle"])
+
+
 def test_every_kgp_module_is_reached():
     modules = {p.stem for p in KGP.glob("*.py") if p.stem != "__init__"}
     unreached = sorted(modules - kgp_closure())
@@ -205,3 +277,17 @@ def test_every_pipeline_definition_is_reached():
         assert (module, name) in unreached, (module, name)
         path, func = test.split("::")
         assert f"def {func}(" in (ROOT / path).read_text(), test
+
+
+def test_every_pipeline_assignment_is_read():
+    pipelines = kgp_closure([KGP / "pipeline.py", KGP / "datapipeline.py"])
+    pipelines |= {"pipeline", "datapipeline"}
+    # what an oracle definition reads stays with it
+    unread = unread_assignments(
+        list(_roots()), sorted(KGP.glob("*.py")),
+        sorted(KGP / f"{m}.py" for m in pipelines),
+        kept=[name for _, name in ORACLES])
+    assert not unread, (
+        f"{len(unread)} module-level names in the pipelines' modules are "
+        f"read by no pipeline, gate or benchmark: "
+        + ", ".join(f"{m}.{n}" for m, n in unread))
