@@ -63,18 +63,24 @@ def c4_filter(docs: DataFrame, text_col: str = "text",
     curly brace (code). clean_text preserves original line order; the
     document row always survives so downstream stages can count drops.
     """
-    c = F.col(text_col)
+    return docs.select(id_col, *c4_columns(F.col(text_col), min_words,
+                                           min_lines))
+
+
+def c4_columns(c: Column, min_words: int = MIN_WORDS_PER_LINE,
+               min_lines: int = MIN_LINES_PER_DOC) -> list[Column]:
+    """c4_filter's output columns over the text column c: clean_text,
+    n_lines, n_kept, keep_doc."""
     lines = F.split(c, r"\n")
     kept = F.filter(lines, lambda l: _line_kept(l, min_words))
     n_lines = F.size(F.filter(lines, lambda l: F.trim(l) != ""))
     n_kept = F.size(kept)
     bad_doc = (F.lower(c).contains("lorem ipsum") | c.contains("{"))
-    return docs.select(
-        id_col,
+    return [
         F.array_join(F.transform(kept, F.trim), "\n").alias("clean_text"),
         n_lines.cast("int").alias("n_lines"),
         n_kept.cast("int").alias("n_kept"),
-        ((n_kept >= min_lines) & ~bad_doc).alias("keep_doc"))
+        ((n_kept >= min_lines) & ~bad_doc).alias("keep_doc")]
 
 
 def canonical_url(col: Column) -> Column:
@@ -170,7 +176,18 @@ def gopher_quality_signals(docs: DataFrame, text_col: str = "text",
     simplification — language-specific alphabets ride the lang column
     upstream); ellipses count both '…' and '...'. Fractions round to
     6 decimals so any engine lands on the same side of a threshold."""
-    c = F.col(text_col)
+    return docs.select(id_col, *gopher_quality_columns(F.col(text_col)))
+
+
+# gopher_quality_signals' signal columns, in output order
+GOPHER_SIGNALS = ("n_words", "mean_word_len", "hash_word_ratio",
+                  "ellipsis_word_ratio", "bullet_line_frac",
+                  "ellipsis_line_frac", "alpha_word_frac", "n_stop_words")
+
+
+def gopher_quality_columns(c: Column) -> list[Column]:
+    """gopher_quality_signals' signal columns (GOPHER_SIGNALS) over the
+    text column c."""
     words = F.filter(F.split(c, r"\s+"), lambda w: w != "")
     lines = F.filter(F.transform(F.split(c, "\n"), F.trim),
                      lambda s: s != "")
@@ -193,17 +210,17 @@ def gopher_quality_signals(docs: DataFrame, text_col: str = "text",
     n_stops = F.size(F.array_intersect(
         F.transform(words, F.lower), stops))
     r6 = lambda col: F.round(col, 6)  # noqa: E731
-    return docs.select(
-        id_col,
-        n_words.cast("long").alias("n_words"),
-        r6(word_chars / nw).alias("mean_word_len"),
-        r6(_count_occurrences(c, "#") / nw).alias("hash_word_ratio"),
-        r6(n_ellipsis / nw).alias("ellipsis_word_ratio"),
-        r6(n_bullet_lines / nl).alias("bullet_line_frac"),
-        r6(n_ellipsis_lines / nl).alias("ellipsis_line_frac"),
-        r6(n_alpha_words / nw).alias("alpha_word_frac"),
-        n_stops.cast("int").alias("n_stop_words"),
-    )
+    cols = [
+        n_words.cast("long"),
+        r6(word_chars / nw),
+        r6(_count_occurrences(c, "#") / nw),
+        r6(n_ellipsis / nw),
+        r6(n_bullet_lines / nl),
+        r6(n_ellipsis_lines / nl),
+        r6(n_alpha_words / nw),
+        n_stops.cast("int"),
+    ]
+    return [col.alias(name) for col, name in zip(cols, GOPHER_SIGNALS)]
 
 
 def gopher_quality_filter(min_words: int = 50, max_words: int = 100_000,

@@ -59,13 +59,18 @@ def _dedup_table(docs: DataFrame) -> DataFrame:
 
 
 def _signals_table(docs: DataFrame) -> DataFrame:
-    gopher = curation.gopher_quality_signals(docs).withColumn(
-        "gopher_keep", curation.gopher_quality_filter())
-    c4 = curation.c4_filter(docs).select(
-        "doc_id", "clean_text", "n_kept",
-        F.col("keep_doc").alias("c4_keep"))
-    rep = repetition.repetition_signals(docs)
-    return gopher.join(c4, "doc_id").join(rep, "doc_id")
+    """The Gopher, C4 and repetition signals of each document, as one
+    projection of docs (no join): documents without a doc_id are
+    dropped."""
+    text = F.col("text")
+    rep_inner, rep_outer = repetition.repetition_columns(text)
+    return (docs.where(F.col("doc_id").isNotNull())
+            .select("doc_id", *curation.gopher_quality_columns(text),
+                    *curation.c4_columns(text), *rep_inner)
+            .select("doc_id", *curation.GOPHER_SIGNALS,
+                    curation.gopher_quality_filter().alias("gopher_keep"),
+                    "clean_text", "n_kept",
+                    F.col("keep_doc").alias("c4_keep"), *rep_outer))
 
 
 def curation_stages(spark: SparkSession, stage,

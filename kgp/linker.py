@@ -30,6 +30,12 @@ Scale notes (100 TB / 10^12 docs):
     broadcast; if it outgrows broadcast, the same code degrades to a
     shuffle hash join on `norm` — AQE picks it when the hint no longer
     fits, nothing else changes;
+  * the gazetteer side is a driver pass, as in canon
+    (kgp.canonicalize): `expand_gazetteer` collects the exploded names
+    once, counts each surface's entities on the driver and returns an
+    Arrow local relation, so building it runs one Spark job and no
+    shuffle. Like the broadcast, it needs the expanded gazetteer to
+    fit in driver memory;
   * head entities ("Freedonia" in 30% of pages) skew the join OUTPUT,
     not the join itself (broadcast = map-side); the one shuffle here is
     groupBy(url), and urls are unique keys → no key skew, only batch
@@ -42,6 +48,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kgp.canonicalize import local_relation
 
 # HeuristicDisambiguation constants (HeuristicDisambiguation.java:47-59)
 ANCHOR_POPULATION_THRESHOLD = 1_000_000
@@ -62,10 +70,17 @@ def normalize_name(col: Column) -> Column:
 def expand_gazetteer(gaz: DataFrame) -> DataFrame:
     """gazetteer → one row per (entity, surface): primary + alt names.
 
-    Output: (entity_id, canon_name, norm, type, population, ancestor_ids,
-    n_tokens, ambiguous). `ambiguous` marks surfaces claimed by >1 entity
-    — precomputed on the SMALL side so the big mentions table never needs
-    a global surface-count aggregation.
+    Output: (norm, entity_id, canon_name, surface_form, etype,
+    population, ancestor_ids, ambiguous, n_tokens), one row per
+    non-null `norm`. `ambiguous` marks surfaces claimed by >1 entity
+    — precomputed on the SMALL side so the big mentions table never
+    needs a global surface-count aggregation.
+
+    A driver pass, as in canon: one collect of the exploded names,
+    with `norm` and `n_tokens` computed by Spark (`normalize_name`,
+    `split`, `size`, so the join keys keep Spark's regex, trim and
+    lower semantics), `ambiguous` counted here, and the table
+    returned as an Arrow local relation.
     """
     names = gaz.select(
         F.col("id").alias("entity_id"),
@@ -79,15 +94,22 @@ def expand_gazetteer(gaz: DataFrame) -> DataFrame:
         F.coalesce(F.col("population"), F.lit(-1)).alias("population"),
         F.coalesce(F.col("ancestor_ids"),
                    F.array().cast("array<long>")).alias("ancestor_ids"),
-    ).withColumn("norm", normalize_name(F.col("surface_form")))
-    counts = names.groupBy("norm").agg(
-        F.countDistinct("entity_id").alias("n_ids"))
-    return (
-        names.join(F.broadcast(counts), "norm")
-        .withColumn("ambiguous", F.col("n_ids") > 1)
-        .withColumn("n_tokens", F.size(F.split(F.col("surface_form"), " ")))
-        .drop("n_ids")
-    )
+    ).select(
+        normalize_name(F.col("surface_form")).alias("norm"), "*",
+        F.size(F.split(F.col("surface_form"), " ")).alias("n_tokens"))
+    rows = [r for r in names.collect() if r.norm is not None]
+    ids: dict = {}
+    for r in rows:
+        if r.entity_id is not None:
+            ids.setdefault(r.norm, set()).add(r.entity_id)
+    *head, n_tokens = names.schema.fields
+    schema = T.StructType(
+        head + [T.StructField("ambiguous", T.BooleanType(), False),
+                n_tokens])
+    cols = [[r[f.name] for r in rows] for f in head]
+    cols += [[len(ids.get(r.norm, ())) > 1 for r in rows],
+             [r.n_tokens for r in rows]]
+    return local_relation(gaz.sparkSession, schema, cols)
 
 
 LINK_COLUMNS = ["url", "sent_idx", "start", "end", "surface", "tag",

@@ -88,8 +88,10 @@ def kg_stages(spark: SparkSession, stage, pages,
         corpus.training_docs(docs), seed_rows))
     model_bc = spark.sparkContext.broadcast(load_ner_model(ner))
     out = triple_stages(stage, docs, model_bc, gaz, linker_mode)
+    # the dedup reads the hash(pred) exchange that the partitioned
+    # write needs, so the stage runs one shuffle, not two
     triples = stage("triples", lambda: materialize.finalize_triples(
-        out["triples_raw"]), partition_by=["pred"])
+        out["triples_raw"].repartition("pred")), partition_by=["pred"])
     # ner_model is left out: it is read once, into the broadcast model,
     # and a DataFrame kept in a long-lived dict (the gates' cache)
     # keeps its training plan alive — the sf0.01 gate session ran

@@ -111,7 +111,15 @@ def repetition_signals(docs: DataFrame,
                        text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """documents → per-doc repetition-signal row (see module doc)."""
-    c = F.col(text_col)
+    inner, outer = repetition_columns(F.col(text_col))
+    return docs.select(id_col, *inner).select(id_col, *outer)
+
+
+def repetition_columns(c: Column) -> tuple[list[Column], list[Column]]:
+    """repetition_signals' columns over the text column c, as two
+    projections: `inner` computes the line/paragraph fractions and the
+    n-gram UDF's array `_g` once per row; `outer` reads them by name
+    and is the output columns."""
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def gram_udf(texts: pd.Series) -> pd.Series:
@@ -121,17 +129,15 @@ def repetition_signals(docs: DataFrame,
                  [f"dup_{n}gram_char_frac" for n in DUP_NS]
     lines = _segments(c, r"\n")
     paras = _segments(c, r"\n\s*\n")
-    base = docs.select(
-        id_col,
+    inner = [
         _dup_frac(lines).alias("dup_line_frac"),
         _dup_char_frac(lines).alias("dup_line_char_frac"),
         _dup_frac(paras).alias("dup_para_frac"),
         _dup_char_frac(paras).alias("dup_para_char_frac"),
         gram_udf(c).alias("_g"),
-    )
-    return base.select(
-        id_col, "dup_line_frac", "dup_line_char_frac",
-        "dup_para_frac", "dup_para_char_frac",
-        *[F.round(F.element_at("_g", i + 1), 4).alias(name)
-          for i, name in enumerate(gram_names)],
-    )
+    ]
+    outer = [F.col(n) for n in ("dup_line_frac", "dup_line_char_frac",
+                                "dup_para_frac", "dup_para_char_frac")]
+    outer += [F.round(F.element_at("_g", i + 1), 4).alias(name)
+              for i, name in enumerate(gram_names)]
+    return inner, outer

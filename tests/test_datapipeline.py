@@ -13,7 +13,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from kgp import curation, datapipeline, dedup, materialize
+from kgp import curation, datapipeline, dedup, materialize, repetition
 from kgp.datapipeline import curation_stages, run_data_pipeline
 
 SF = "/root/testdata/sf0.001"
@@ -76,6 +76,29 @@ def test_curated_matches_direct_composition(spark, run_dir):
     want = exact_keep & near_keep & gopher_keep & c4_keep
     assert got == want
     assert got, "curated corpus must be non-empty at sf0.001"
+
+
+def test_signals_is_one_projection(spark, run_dir):
+    """The signals table is one projection of the documents: no
+    Exchange, one Python evaluation, one Spark job, and the same rows
+    as the three signal functions joined on doc_id."""
+    docs = materialize.read_stage(spark, run_dir, "pages") \
+        .select("doc_id", "url", "text")
+    sig = datapipeline._signals_table(docs)
+    plan = sig._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert FULL_JOBS["signals"] == 1
+    joined = (curation.gopher_quality_signals(docs)
+              .withColumn("gopher_keep", curation.gopher_quality_filter())
+              .join(curation.c4_filter(docs).select(
+                  "doc_id", "clean_text", "n_kept",
+                  F.col("keep_doc").alias("c4_keep")), "doc_id")
+              .join(repetition.repetition_signals(docs), "doc_id"))
+    assert sig.columns == joined.columns
+    done = materialize.read_stage(spark, run_dir, "signals")
+    assert (sorted(map(tuple, done.collect()))
+            == sorted(map(tuple, joined.collect())))
 
 
 def test_curated_carries_clean_text(spark, run_dir):

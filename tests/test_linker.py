@@ -3,8 +3,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kgp import constants as C
-from kgp.corpus import gazetteer
-from kgp.linker import expand_gazetteer, link_mentions, lsh_candidates
+from kgp.corpus import GAZETTEER_SCHEMA, gazetteer
+from kgp.linker import (expand_gazetteer, link_mentions, lsh_candidates,
+                        normalize_name)
 
 MENTION_COLS = ("url string, sent_idx int, start int, end int, "
                 "surface string, tag string, score double, "
@@ -26,6 +27,80 @@ def test_expand_gazetteer_alt_names_and_ambiguity(spark):
     spring = g.where(F.col("norm") == "springfield")
     assert {r.entity_id for r in spring.collect()} == {C.CITY_ID,
                                                        C.CITY_DUP_ID}
+
+
+def _expand_by_join(gaz):
+    """expand_gazetteer as an aggregate and a join: distinct entity ids
+    counted per norm, broadcast back onto the exploded names."""
+    names = gaz.select(
+        F.col("id").alias("entity_id"),
+        F.col("name").alias("canon_name"),
+        F.explode(
+            F.array_union(F.array(F.col("name")),
+                          F.coalesce(F.col("alt_names"),
+                                     F.array().cast("array<string>")))
+        ).alias("surface_form"),
+        F.col("type").alias("etype"),
+        F.coalesce(F.col("population"), F.lit(-1)).alias("population"),
+        F.coalesce(F.col("ancestor_ids"),
+                   F.array().cast("array<long>")).alias("ancestor_ids"),
+    ).withColumn("norm", normalize_name(F.col("surface_form")))
+    counts = names.groupBy("norm").agg(
+        F.countDistinct("entity_id").alias("n_ids"))
+    return (
+        names.join(F.broadcast(counts), "norm")
+        .withColumn("ambiguous", F.col("n_ids") > 1)
+        .withColumn("n_tokens", F.size(F.split(F.col("surface_form"), " ")))
+        .drop("n_ids")
+    )
+
+
+def _tricky_gaz(spark):
+    """Surfaces shared by two entities, surfaces that collide only
+    after normalize_name, null alt_names/population/name/id and
+    alt-name elements, and one entity listing a surface twice."""
+    rows = [
+        (1, "Riverton", ["Port Alpha", None], "CITY", 5000, [10],
+         None, None),
+        (2, "Port Alpha", [], "CITY", None, None, 1.0, 2.0),
+        (3, "Acme™ Corp.", ["ACME  corp", "acme corp...", "Acme© Corp"],
+         "ORG", None, [], None, None),
+        (4, "acme corp", None, "ORG", 7, None, None, None),
+        (5, None, ["Nameless  Place."], "POI", None, None, None, None),
+        (None, "Idless", ["Riverton", "nameless place"], "CITY", 1, [1],
+         None, None),
+        (6, "Twice", ["Twice", "twice", "Twice Town"], "CITY", 3, [],
+         None, None),
+        (7, "Solo®", ["  solo  "], "POI", 0, [6, 1], None, None),
+    ]
+    return spark.createDataFrame(rows, GAZETTEER_SCHEMA)
+
+
+def test_expand_gazetteer_matches_join_formulation(spark):
+    for gaz in (gazetteer(spark), _tricky_gaz(spark)):
+        got, want = expand_gazetteer(gaz), _expand_by_join(gaz)
+        assert got.schema == want.schema
+        rows = sorted(map(repr, got.collect()))
+        assert rows == sorted(map(repr, want.collect()))
+        assert len(rows) == got.count()
+    got = {(r.entity_id, r.surface_form): r.ambiguous for r in
+           expand_gazetteer(_tricky_gaz(spark)).collect()}
+    assert got[(1, "Riverton")] is False      # the null id is no entity
+    assert got[(1, "Port Alpha")] and got[(2, "Port Alpha")]
+    assert all(got[(e, s)] for e, s in [
+        (3, "Acme™ Corp."), (3, "ACME  corp"), (3, "acme corp..."),
+        (4, "acme corp")])
+    assert got[(6, "Twice")] is False and got[(6, "twice")] is False
+    assert got[(5, "Nameless  Place.")] is False
+    assert (5, None) not in got and (1, None) not in got
+
+
+def test_expand_gazetteer_plans_as_local_relation(spark):
+    for gaz in (gazetteer(spark), _tricky_gaz(spark)):
+        plan = (expand_gazetteer(gaz)._jdf.queryExecution()
+                .executedPlan().toString())
+        assert "LocalTableScan" in plan
+        assert "Exchange" not in plan and "HashAggregate" not in plan
 
 
 def test_link_unambiguous_and_nil(spark):

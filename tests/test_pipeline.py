@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,6 +50,63 @@ def test_resume_reads_run_no_job(spark, sf_dir, run_dir, per_stage_jobs):
             materialize.read_stage, "kg-read", jobs))
         run_pipeline(spark, sf_dir, run_dir)
     assert jobs == dict.fromkeys(WRITTEN, 0)
+
+
+def test_resume_compiles_no_generated_code(spark, sf_dir, tmp_path):
+    """The generated-code cache holds a full run's classes: a resume
+    that rebuilds every stage after ner_model compiles nothing."""
+    out = str(tmp_path / "codegen-run")
+    run_pipeline(spark, sf_dir, out)
+    for stage in ("mentions", "links", "canon", "triples_raw", "triples"):
+        shutil.rmtree(os.path.join(out, stage))
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    before = compiled.getCount()
+    m = run_pipeline(spark, sf_dir, out)
+    assert not m["triples"]["resumed"]
+    assert compiled.getCount() == before
+
+
+def _rebuild_stage(spark, run_dir, name, out, jobs_in_group) -> dict:
+    """Run kg_stages with every stage read from run_dir but `name`,
+    which is built and written under out. Returns its Spark jobs and
+    the DataFrame its stage runner wrote."""
+    got: dict = {}
+
+    def stage(s, build, partition_by=None):
+        if s != name:
+            return materialize.read_stage(spark, run_dir, s)
+
+        def write():
+            df = build()
+            got["written"] = (df.repartition(*partition_by)
+                              if partition_by else df)
+            materialize.write_stage(spark, got["written"], out, s,
+                                    partition_by=partition_by)
+        got["jobs"] = jobs_in_group(f"rebuild-{s}", write)
+        return materialize.read_stage(spark, out, s)
+    kg_stages(spark, stage, pages=None)
+    return got
+
+
+def test_links_stage_job_count(spark, run_dir, tmp_path, jobs_in_group):
+    """The gazetteer side of `links` is one collect on the driver: the
+    stage's build and write run at most four Spark jobs."""
+    got = _rebuild_stage(spark, run_dir, "links", str(tmp_path),
+                         jobs_in_group)
+    assert got["jobs"] <= 4
+
+
+def test_triples_stage_shuffles_once_on_pred(spark, run_dir, tmp_path,
+                                            jobs_in_group):
+    """The triple dedup reads the hash(pred) exchange the partitioned
+    write needs: one Exchange, at most two Spark jobs."""
+    got = _rebuild_stage(spark, run_dir, "triples", str(tmp_path),
+                         jobs_in_group)
+    plan = got["written"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(pred#" in plan, plan
+    assert got["jobs"] <= 2
 
 
 def _doc_ids(spark, sf_dir):
