@@ -188,9 +188,6 @@ def pixelate(img: np.ndarray, box_size: int,
     return out
 
 
-_SHAPE_2X2 = ((0, 2, 1, 3), (0, 1, 2, 3), (0, 3, 1, 2))
-
-
 def _code_block(block: list, section: int, palette,
                 block_size: str, number_of_colors: str,
                 number_of_colors_in_code: bool) -> str:

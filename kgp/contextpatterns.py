@@ -55,16 +55,6 @@ def strip_html_tags(text: str) -> str:
     return _STRIP_ALL_TAGS.sub("", text)
 
 
-def join_tags_and_remove_newlines(text: str | None) -> str | None:
-    """HtmlHelper.joinTagsAndRemoveNewLines (HtmlHelper.java:207-216):
-    collapse inter-tag whitespace (Java \\s is ASCII — re.ASCII), then
-    delete newlines."""
-    if text is None:
-        return None
-    text = re.sub(r">\s*?<", "><", text, flags=re.ASCII)
-    return text.replace("\n", "")
-
-
 def html_to_readable_text(html: str) -> str:
     """HtmlHelper.htmlToReadableText (HtmlHelper.java:380-385):
     <br>/<li> -> newline, </p> -> blank line, strip tags, trim."""

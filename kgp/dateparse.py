@@ -253,7 +253,6 @@ class ParsedDate(NamedTuple):
     time_zone: str | None
 
 
-
 def _java_int(s: str) -> int:
     """Integer.parseInt: digits with optional sign only -- Python's
     int() tolerates underscore separators ('06_30' -> 630), Java
@@ -682,23 +681,6 @@ def get_normalized_date_string(p: ParsedDate, time: bool = True) -> str:
     return s
 
 
-def get_long_date(p: ParsedDate) -> int:
-    """ExtractedDateImpl.getLongDate (:120-135) in fixed UTC: unset
-    fields default to year 0 -> here clamped to year 1 (Python's
-    datetime floor; only reachable for year-less dates, which the
-    raters never difference)."""
-    import datetime as _dt
-    year = p.year if p.year != -1 else 1
-    month = p.month if p.month != -1 else 1
-    day = p.day if p.day != -1 else 1
-    hour = p.hour if p.hour != -1 else 0
-    minute = p.minute if p.minute != -1 else 0
-    second = p.second if p.second != -1 else 0
-    dt = _dt.datetime(year, month, day, hour, minute, second,
-                      tzinfo=_dt.timezone.utc)
-    return int(dt.timestamp() * 1000)
-
-
 def get_difference_hours(a: ParsedDate, b: ParsedDate) -> float:
     """ExtractedDateImpl.getDifference(unit=HOURS) — the same
     common-exactness truncation + half-up rounding as
@@ -710,26 +692,6 @@ def get_difference_hours(a: ParsedDate, b: ParsedDate) -> float:
 
 def remove_double_whitespaces(text: str) -> str:
     return _MULTI_WS.sub(" ", text)
-
-
-def find_parsed_dates(text: str,
-                      formats: list[DateFormat]) -> list[ParsedDate]:
-    """DateParser.findDates(String, DateFormat...) (:196-254): per
-    format, all matches (period/digit-neighbour skips), each found
-    date string masked via the as-written
-    ``replaceFirst(dateString, xxx)`` where the date string acts as a
-    REGEX (quirk kept)."""
-    result: list[ParsedDate] = []
-    for fmt in formats:
-        for date in _find_parsed(text, fmt):
-            try:
-                text = re.sub(date.date_string,
-                              "x" * len(date.date_string), text,
-                              count=1)
-            except re.error:
-                pass  # Java would throw; none of the banks produce this
-            result.append(date)
-    return result
 
 
 def _find_parsed(text: str, fmt: DateFormat) -> list[ParsedDate]:

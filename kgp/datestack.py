@@ -23,14 +23,10 @@ Reference semantics:
   is tried against EVERY RegExp.HTTP_DATES format (no break -- one
   MetaDate per matching format, quirk kept).
 - Raters (palladian-experimental extraction/date/rater/*.java):
-  HeadDateRater/MetaDateRater (priority buckets 1/-1/-2, the bucket
-  cascade, the <12 h now-rule for low dates, age discount toward the
-  exactest oldest/youngest with the 4-decimal round),
-  StructureDateRater (buckets then group-share weighting over
-  minute-exactness clusters), UrlDateRater (format-keyed constants,
-  range check). ``getKeywordPriority``'s MODIFIED-class bug (kept in
-  kgp.contentdates.keyword_priority) makes the middle bucket
-  unreachable -- as in the reference.
+  UrlDateRater (format-keyed constants, range check), the HTTP rater
+  and the reference rate. ``getKeywordPriority``'s MODIFIED-class bug
+  (kept in kgp.contentdates.keyword_priority) makes the middle keyword
+  bucket unreachable -- as in the reference.
 - ``ReferenceDateGetter`` (ReferenceDateGetter.java:29-77) downloads
   every linked page; the crawl substitute ``reference_dates_df``
   joins the page-links table to the per-page best content dates of
@@ -52,7 +48,7 @@ from typing import NamedTuple
 from kgp.contentdates import keyword_priority, search_keyword
 from kgp.dateparse import (HTML_HEAD_DATES, HTTP_DATES, ParsedDate,
                            find_date, get_exactness,
-                           get_normalized_date_string, parse_date)
+                           get_normalized_date_string)
 from kgp.dates import (DATE_URL, DATE_URL_D, DATE_URL_SPLIT,
                        DATE_ISO8601_YMD_NO)
 from kgp import dateparse as _dp
@@ -231,7 +227,6 @@ def compare_dates(a: ParsedDate, b: ParsedDate,
     return 0
 
 
-
 def order_dates(dates: list, reverse: bool = False,
                 key=lambda d: d) -> list:
     """DateComparator.orderDates (:72-80): reverse=False -> OLDEST
@@ -266,7 +261,7 @@ def cluster_dates(dates: list[ParsedDate],
     return clusters
 
 
-# pinned "now" (isDateInRange upper bound / HeadDateRater now-rule);
+# pinned "now" (isDateInRange upper bound);
 # the reference uses the wall clock (DateExtractionHelper.java:134)
 CURRENT_DATE = ParsedDate("", "", 2026, 8, 20, 12, 0, 0, None)
 _RANGE_BEGIN = ParsedDate("", "", 1990, 11, 13, 0, 0, 0, None)
@@ -305,109 +300,6 @@ def url_date_rates(dates: list[ParsedDate]) -> list[float]:
                 rate = 0.88
         out.append(rate)
     return out
-
-
-def head_date_rates(dates: list[TechDate], *,
-                    publish: bool = True,
-                    current_date: ParsedDate = CURRENT_DATE
-                    ) -> list[RatedTechDate]:
-    """HeadDateRater.evaluateMetaDates (HeadDateRater.java:45-108) ==
-    MetaDateRater.rate: bucket rates, cascade, the <12 h now-rule,
-    and the final age-discount append -- the returned list keeps the
-    reference's duplicate entries (preliminary + cascade + discounted
-    per date)."""
-    high = 1 if publish else 2
-    middle = 2 if publish else 1
-    result: list[RatedTechDate] = []
-    for td in dates:
-        kp = keyword_priority(td.keyword)
-        if kp == high:
-            rate = 1.0
-        elif kp == middle:
-            rate = -1.0
-        else:
-            rate = -2.0
-        result.append(RatedTechDate(td, rate))
-    high_d = [r.td for r in result if r.rate == 1.0]
-    middle_d = [r.td for r in result if r.rate == -1.0]
-    low_d = [r.td for r in result if r.rate == -2.0]
-    if high_d:
-        result += [RatedTechDate(t, 0.0) for t in middle_d]
-        result += [RatedTechDate(t, 0.0) for t in low_d]
-    elif middle_d:
-        result += [RatedTechDate(t, 1.0) for t in middle_d]
-        result += [RatedTechDate(t, 0.0) for t in low_d]
-    else:
-        for t in low_d:
-            rate = 0.75
-            if _dp.get_difference_hours(current_date, t.date) < 12:
-                rate = 0.0
-            result.append(RatedTechDate(t, rate))
-    exact = filter_exactest([r.td.date for r in result])
-    ordered = order_dates(exact, reverse=not publish)
-    temp = ordered[0] if ordered else None
-    snapshot = order_dates(result, reverse=False, key=lambda r: r.td.date)
-    for r in snapshot:
-        diff = _dp.get_difference_hours(temp, r.td.date) \
-            if temp is not None else 0.0
-        if diff > 24:
-            diff = 24.0
-        new_rate = r.rate - r.rate * (diff / 24.0)
-        result.append(RatedTechDate(
-            r.td, round(new_rate * 10000) / 10000.0))
-    return result
-
-
-def structure_date_rates(dates: list[TechDate], *,
-                         publish: bool = True) -> list[RatedTechDate]:
-    """StructureDateRater.evaluateStructDate (:44-95): buckets, then
-    group-share weighting over minute-exactness clusters (rate =
-    cluster size / bucket size, 4-decimal round), zeros appended for
-    the losing buckets -- duplicates kept as in the reference."""
-    high = 1 if publish else 2
-    middle = 2 if publish else 1
-    result: list[RatedTechDate] = []
-    for td in dates:
-        kp = keyword_priority(td.keyword)
-        if kp == high:
-            rate = 1.0
-        elif kp == middle:
-            rate = -1.0
-        elif kp == 3:
-            rate = -2.0
-        else:
-            rate = 0.0
-        result.append(RatedTechDate(td, rate))
-    high_d = [r.td for r in result if r.rate == 1.0]
-    middle_d = [r.td for r in result if r.rate == -1.0]
-    low_d = [r.td for r in result if r.rate == -2.0]
-
-    def weight(bucket: list[TechDate]) -> None:
-        # cluster the TechDates by their date at minute exactness
-        clusters: list[list[TechDate]] = []
-        for td in bucket:
-            for c in clusters:
-                if compare_dates(c[0].date, td.date, 5) == 0:
-                    c.append(td)
-                    break
-            else:
-                clusters.append([td])
-        for c in clusters:
-            for td in c:
-                new_rate = 1.0 * len(c) / len(bucket)
-                result.append(RatedTechDate(
-                    td, round(new_rate * 10000) / 10000.0))
-
-    if high_d:
-        weight(high_d)
-        result += [RatedTechDate(t, 0.0) for t in middle_d]
-        result += [RatedTechDate(t, 0.0) for t in low_d]
-    elif middle_d:
-        weight(middle_d)
-        result += [RatedTechDate(t, 0.0) for t in low_d]
-    elif low_d:
-        weight(low_d)
-    return result
 
 
 # --------------------------------------------------------- Spark stage
@@ -504,57 +396,6 @@ def reference_dates_df(links, rated, *, src_col: str = "src",
 
 
 # --------------------------------------- WebPageDateEvaluator surface
-def evaluate_page_dates(root: Node) -> list[dict]:
-    """WebPageDateEvaluator.getDates/rate (WebPageDateEvaluator.java:
-    24-35, 100-117, PUBLISH): content-date candidates -> in-range
-    filter -> full-date filter -> ContentDateRater (the repo's
-    documented quickdt-substitute forest, kgp.contentdates.
-    gate_rater_forest) -> RatedDateComparator order (rate desc,
-    position asc, newest first). Returns the rated candidate dicts
-    with a ``rate`` key. The getter-side counts and the best dates
-    reproduce the reference's own WebPageDateEvaluatorTest goldens on
-    its fixture pages (tests/test_datestack.py)."""
-    from kgp.contentdates import (RATER_FEATURES,
-                                  content_date_candidates,
-                                  gate_rater_forest)
-    cands = content_date_candidates(root)
-    forest = gate_rater_forest()
-    rated = []
-    for c in cands:
-        if c["year"] == -1 or c["month"] == -1 or c["day"] == -1:
-            continue  # filterFullDate (DateExtractionHelper:40-49)
-        pd = ParsedDate("", "", c["year"], c["month"], c["day"],
-                        c["hour"], -1, -1, None)
-        if not is_date_in_range(pd):
-            continue  # filterByRange (:30-38)
-        attrs = {}
-        for k in RATER_FEATURES:
-            if k in c:
-                v = c[k]
-                attrs[k] = float(v) if not isinstance(v, bool) \
-                    else (1.0 if v else 0.0)
-        for flag, src in (("in_meta_d", "in_meta"),
-                          ("h_tag_d", "h_tag"),
-                          ("struct_d", "has_structure_date")):
-            if flag not in attrs:
-                attrs[flag] = 1.0 if c.get(src) else 0.0
-        rate = 1.0 if c.get("in_url") \
-            else round(forest.probability(attrs, "pos"), 9)
-        rated.append({**c, "rate": rate})
-    # RatedDateComparator.INSTANCE: rate desc, doc position asc,
-    # newest first (matches kgp.contentdates.best_content_dates)
-    rated.sort(key=lambda c: (
-        -c["rate"], c["abs_pos"], -c["year"], -c["month"], -c["day"],
-        -c["hour"], c["value"]))
-    return rated
-
-
-def best_page_date(root: Node) -> dict | None:
-    """WebPageDateEvaluator.getBestDate (:37-46)."""
-    rated = evaluate_page_dates(root)
-    return rated[0] if rated else None
-
-
 def best_pub_date_html5(root: Node) -> ParsedDate | None:
     """WebPageDateEvaluator.getBestPubDateHtml5 (:48-78): the first
     <time pubdate datetime=...> inside the LONGEST <article> (whole

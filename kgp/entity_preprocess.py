@@ -1,54 +1,17 @@
-"""EntityPreprocessingTagger port — case-dictionary candidate fix-up.
+"""EntityPreprocessingTagger helpers — the sentence-position test and
+quote normalization.
 
 Semantics re-derived from
-/root/reference/palladian-core/src/main/java/ws/palladian/extraction/location/EntityPreprocessingTagger.java:62-290
-(defaults LOWERCASE_THRESHOLD=2, LONG_ANNOTATION_SPLIT=2 from
-DefaultCandidateExtractor.java:19-22). The case dictionary maps
-token → total/uppercase-count ratio; tokens usually written lowercase
-get a high ratio. Sentence-START annotations whose leading tokens are
-usually-lowercase words are trimmed or dropped; long annotations are
-additionally split on usually-lowercase words and on -/&.
-
-Pure Python over StringTagger candidates — this is the candidate
-extractor of the reference's location stack (DefaultCandidateExtractor
-wraps StringTagger with exactly this preprocessing); the NER path's
-related passes (fixStartErrors / removeSentenceStartErrors) live in
-kgp.mentions.
+palladian-core/src/main/java/ws/palladian/extraction/location/EntityPreprocessingTagger.java:249-252
+and StringHelper.normalizeQuotes. `normalize_quotes` is shared by the
+context-pattern and Wikipedia case-dictionary stages.
 """
 
 from __future__ import annotations
 
-import math
 import re
 
-from kgp.mentions import Candidate, candidate_annotations
-
-LOWERCASE_THRESHOLD = 2.0
-LONG_ANNOTATION_SPLIT = 2
-
 _WITHIN = re.compile(r".*[A-Za-z0-9,]+\s")
-
-
-def load_case_ratio_csv(lines, lowercase_threshold: float =
-                        LOWERCASE_THRESHOLD) -> dict[str, float]:
-    """Parse the token\\ttotal\\tuppercase CSV (loadCaseDictionary,
-    :75-92): ratio = total/uppercase, entries below the threshold are
-    dropped; a zero uppercase count means infinity (Java double
-    division)."""
-    out: dict[str, float] = {}
-    for line in lines:
-        parts = line.rstrip("\n").split("\t")
-        if len(parts) < 3:
-            continue
-        total, upper = float(parts[1]), float(parts[2])
-        ratio = math.inf if upper == 0 else total / upper
-        if ratio >= lowercase_threshold:
-            out[parts[0]] = ratio
-    return out
-
-
-def get_lowercase_ratio(value: str, case_ratios: dict[str, float]) -> float:
-    return case_ratios.get(value.lower(), 0.0)
 
 
 def is_within_sentence(text: str, start: int) -> bool:
@@ -63,125 +26,3 @@ def normalize_quotes(text: str) -> str:
     text = re.sub("[„“”»«]", '"', text)
     text = re.sub("[’‘]", "'", text)
     return re.sub("[–—]", "-", text)
-
-
-def get_long_annotation_split(annotations: list[Candidate],
-                              length: int,
-                              case_ratios: dict[str, float],
-                              lowercase_threshold: float =
-                              LOWERCASE_THRESHOLD) -> list[Candidate]:
-    """getLongAnnotationSplit port (:180-223): annotations of >= length
-    tokens yield sub-annotations split on usually-lowercase words;
-    -/& compounds yield their uppercase-starting parts."""
-    out: list[Candidate] = []
-    for a in annotations:
-        parts = a.value.split(" ")
-        if len(parts) >= length:
-            cum: list[str] = []
-
-            def emit(require_differs: bool) -> None:
-                value = " ".join(cum)
-                if len(value) > 1 and not (require_differs
-                                           and value == a.value):
-                    out.append(Candidate(a.start + a.value.index(value),
-                                         value))
-
-            for token in parts:
-                if get_lowercase_ratio(token, case_ratios) \
-                        < lowercase_threshold:
-                    cum.append(token)
-                elif cum:
-                    emit(False)
-                    cum = []
-            if cum:
-                emit(True)
-        temp = normalize_quotes(a.value)
-        if "-" in temp or "&" in temp:
-            for part in re.split("[-&]", temp):
-                t = part.strip()
-                if t and t[0].isupper():
-                    out.append(Candidate(a.start + a.value.index(t), t))
-    return out
-
-
-def entity_preprocess_annotations(text: str,
-                                  annotations: list[Candidate],
-                                  case_ratios: dict[str, float],
-                                  lowercase_threshold: float =
-                                  LOWERCASE_THRESHOLD,
-                                  long_annotation_split: int =
-                                  LONG_ANNOTATION_SPLIT) -> list[Candidate]:
-    """getAnnotations port (:95-170): trim/drop sentence-start
-    annotations by lowercase ratio (unless the same value also occurs
-    mid-sentence), then add long-annotation splits."""
-    in_sentence = {a.value for a in annotations
-                   if is_within_sentence(text, a.start)}
-    in_sentence = {v for v in in_sentence
-                   if get_lowercase_ratio(v, case_ratios)
-                   <= lowercase_threshold}
-    if not in_sentence:   # no mid-sentence evidence at all (issue 294)
-        return list(annotations)
-
-    fixed: list[Candidate] = []
-    for a in annotations:
-        value = a.value
-        if is_within_sentence(text, a.start) or value in in_sentence:
-            fixed.append(a)
-            continue
-        parts = value.split(" ")
-        if len(parts) == 1:
-            if get_lowercase_ratio(value, case_ratios) \
-                    > lowercase_threshold:
-                continue  # drop usually-lowercase single token
-        else:
-            offset_cut = 0
-            new_value = value
-            for token in parts:
-                if get_lowercase_ratio(token, case_ratios) \
-                        <= lowercase_threshold:
-                    break
-                offset_cut += len(token) + 1
-                if offset_cut >= len(value):
-                    break
-                new_value = value[offset_cut:]
-                if new_value in in_sentence:
-                    break
-            if offset_cut >= len(value):
-                continue  # drop completely
-            if offset_cut > 0:
-                fixed.append(Candidate(a.start + offset_cut, new_value))
-                continue
-        fixed.append(a)
-    if long_annotation_split > 0:
-        fixed.extend(get_long_annotation_split(
-            fixed, long_annotation_split, case_ratios,
-            lowercase_threshold))
-    return fixed
-
-
-def location_candidates(text: str, case_ratios: dict[str, float],
-                        lowercase_threshold: float = LOWERCASE_THRESHOLD,
-                        long_annotation_split: int =
-                        LONG_ANNOTATION_SPLIT) -> list[Candidate]:
-    """DefaultCandidateExtractor equivalent: StringTagger + entity
-    preprocessing — the candidate stream the location linker consumes."""
-    return entity_preprocess_annotations(
-        text, candidate_annotations(text), case_ratios,
-        lowercase_threshold, long_annotation_split)
-
-
-def correct_capitalization(value: str, case_ratios: dict[str, float],
-                           lowercase_threshold: float =
-                           LOWERCASE_THRESHOLD) -> str:
-    """correctCapitalization port (:266-285): lowercase the words that
-    are usually written lowercase."""
-    split = value.split(" ")
-    out = []
-    for i, part in enumerate(split):
-        temp = part
-        if i == len(split) - 1 and part.endswith("."):
-            temp = part[:-1]
-        if get_lowercase_ratio(temp, case_ratios) > lowercase_threshold:
-            part = part.lower()
-        out.append(part)
-    return " ".join(out)

@@ -212,7 +212,6 @@ def _parse_iso(s):
 _RDF_NS = "{http://www.w3.org/1999/02/22-rdf-syntax-ns#}"
 _RSS10_NS = "{http://purl.org/rss/1.0/}"
 _DC_NS = "{http://purl.org/dc/elements/1.1/}"
-_CONTENT_NS = "{http://purl.org/rss/1.0/modules/content/}"
 
 # XML control characters the spec forbids (ROME-tolerated crawl-feed
 # damage — e.g. a 0x04 inside CDATA); tab/newline/CR stay
@@ -283,32 +282,6 @@ def _parse_feed_bytes(feed_url, fetched_ts, raw):
                    item.findtext(_RSS10_NS + "title"),
                    item.findtext(_RSS10_NS + "link"),
                    _parse_iso(item.findtext(_DC_NS + "date")))
-
-
-def feed_item_texts(raw) -> list[str]:
-    """Per-item body text the way FeedItem.getText resolves it:
-    content:encoded (RSS 1.0 content module) over description —
-    RomeFeedParser keeps the raw markup string."""
-    import xml.etree.ElementTree as ET
-    try:
-        root = ET.fromstring(bytes(raw))
-    except ET.ParseError:
-        return []
-    out: list[str] = []
-    if root.tag == "rss":
-        for item in root.iter("item"):
-            out.append(item.findtext("{%s}encoded" %
-                                     _CONTENT_NS.strip("{}"))
-                       or item.findtext("description"))
-    elif root.tag == _RDF_NS + "RDF":
-        for item in root.iter(_RSS10_NS + "item"):
-            out.append(item.findtext(_CONTENT_NS + "encoded")
-                       or item.findtext(_RSS10_NS + "description"))
-    elif root.tag == _ATOM_NS + "feed":
-        for entry in root.iter(_ATOM_NS + "entry"):
-            out.append(entry.findtext(_ATOM_NS + "content")
-                       or entry.findtext(_ATOM_NS + "summary"))
-    return out
 
 
 def parse_feed_stage(feeds: DataFrame) -> DataFrame:

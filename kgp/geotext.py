@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SUBSETS = {"TRAIN": (1, 2, 3), "DEV": (4,), "TEST": (5,)}
@@ -82,14 +82,6 @@ def geotext_docs(lines: DataFrame, subset: str | None = None,
     return combined.select(
         F.col("user_name").alias("doc_name"), "user_name", "fold",
         "lat", "lon", F.trim(F.col("_txt")).alias("text"))
-
-
-def read_geotext(spark: SparkSession, full_text_file: str,
-                 subset: str | None = None,
-                 combination: str = "SINGLE") -> DataFrame:
-    """The file-reading shell: one line-based text scan."""
-    return geotext_docs(spark.read.text(full_text_file), subset,
-                        combination)
 
 
 # ------------------------------------------------------------ twin

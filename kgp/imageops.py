@@ -308,45 +308,6 @@ def gaussian_blur(img: np.ndarray, width: int) -> np.ndarray:
     return ext[width:width + h, width:width + w]
 
 
-def cluster_images_pick_representatives(images) -> set:
-    """ImageHandler.clusterImagesAndPickRepresentatives
-    (ImageHandler.java:881-959): greedy leader clustering — each
-    not-yet-clustered image opens a cluster and captures every later
-    unclustered duplicate (isDuplicate), then each cluster elects its
-    highest-pixel-count member (strict >, first wins ties).
-
-    ``images`` is an iterable of (key, pixel-array) pairs in load
-    order; returns the set of representative keys. Driver-sized
-    helper (the reference operates on one page's image list); the
-    corpus-scale near-dup path is kgp.imagehash.phash_dup_pairs."""
-    loaded = list(images)
-    clustered: set[int] = set()
-    representatives: dict[int, list[int]] = {}
-    for i in range(len(loaded)):
-        if i in clustered:
-            continue
-        clustered.add(i)
-        representatives[i] = [i]
-        for j in range(i + 1, len(loaded)):
-            if j in clustered:
-                continue
-            if is_duplicate(loaded[i][1], loaded[j][1]):
-                representatives[i].append(j)
-                clustered.add(j)
-    selected = set()
-    for members in representatives.values():
-        highest = 0
-        best_key = ""
-        for idx in members:
-            img = loaded[idx][1]
-            pixel_count = img.shape[0] * img.shape[1]
-            if pixel_count > highest:
-                best_key = loaded[idx][0]
-                highest = pixel_count
-        selected.add(best_key)
-    return selected
-
-
 def gaussian_blur_stage(media: DataFrame, width: int = 2) -> DataFrame:
     """Distributed GaussianBlur over the media table's image rows:
     decode BMP -> the two float32 ConvolveOp passes -> one row per

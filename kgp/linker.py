@@ -117,8 +117,7 @@ LINK_COLUMNS = ["url", "sent_idx", "start", "end", "surface", "tag",
                 "link_score"]
 
 
-def link_mentions(mentions: DataFrame, gaz: DataFrame,
-                  num_buckets: int | None = None) -> DataFrame:
+def link_mentions(mentions: DataFrame, gaz: DataFrame) -> DataFrame:
     """mentions ⋈ broadcast(expanded gazetteer) → disambiguated links.
 
     mentions must carry (url, sent_idx, start, end, surface, tag,
@@ -436,14 +435,14 @@ def heuristic_disambiguate(groups: dict) -> dict:
     return result
 
 
-def link_mentions_reference(mentions: DataFrame, gaz: DataFrame,
-                            num_buckets: int | None = None) -> DataFrame:
+def link_mentions_reference(mentions: DataFrame,
+                            gaz: DataFrame) -> DataFrame:
     """link_mentions with the FAITHFUL coordinate-aware disambiguation:
     broadcast candidate join (same as the fast path), then one
     applyInPandas over document hash buckets running
     heuristic_disambiguate per url. Output columns = LINK_COLUMNS."""
     spark = mentions.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism * 4
+    n = spark.sparkContext.defaultParallelism * 4
     expanded = expand_gazetteer(gaz).select(
         "norm", "entity_id", "canon_name", "etype", "population",
         "ancestor_ids")

@@ -8,8 +8,7 @@ where a table-shaped form exists.
 - MathHelper.computeAveragePrecision (MathHelper.java:699-729):
   precision@k and running average precision over a ranked relevance
   list, divided by the given total-relevant count.
-- MathHelper.computePearsonCorrelationCoefficient (:751-787) and
-  performLinearRegression (:651-697, simple OLS alpha/beta).
+- MathHelper.computePearsonCorrelationCoefficient (:751-787).
 
 Spark shapes:
 - set similarities are pure JVM column expressions over array
@@ -74,18 +73,6 @@ def pearson(x: list[float], y: list[float]) -> float:
     num = sxy - sx * sy / n
     den = math.sqrt((sxx - sx * sx / n) * (syy - sy * sy / n))
     return num / den
-
-
-def linear_regression(x: list[float], y: list[float]
-                      ) -> tuple[float, float]:
-    """performLinearRegression twin: (alpha intercept, beta slope)."""
-    n = len(x)
-    sx, sy = sum(x), sum(y)
-    sxx = sum(a * a for a in x)
-    sxy = sum(a * b for a, b in zip(x, y))
-    beta = (sxy - sx * sy / n) / (sxx - sx * sx / n)
-    alpha = sy / n - beta * sx / n
-    return alpha, beta
 
 
 def token_similarity(s1: str, s2: str, kind: str = "jaccard") -> float:

@@ -1,7 +1,6 @@
 """Schema-agnostic blocking + meta-blocking for entity resolution at
 web scale — the SparkER / MinoanER recipe (SparkER: Scaling Entity
-Resolution in Spark, EDBT 2019; Schema-Agnostic Progressive Entity
-Resolution, ICDE 2018; both public), the candidate-generation stage
+Resolution in Spark, EDBT 2019; public), the candidate-generation stage
 that feeds the repo's existing verify (kgp.strsim) and
 connected-components canonicalization (kgp.canonicalize):
 
@@ -14,15 +13,13 @@ connected-components canonicalization (kgp.canonicalize):
    - CBS (common blocks scheme): weight = number of shared blocks;
    - JS (Jaccard scheme): shared / (|blocks(a)| + |blocks(b)| -
      shared);
-   edge pruning by a global weight threshold (WEP) or per-node
-   average (WNP — keep an edge iff its weight reaches the mean edge
-   weight of EITHER endpoint).
+   edge pruning by a global weight threshold (WEP).
 
 Spark shape: blocking is one explode + one aggregation (block
 purging); pair generation is a self-join ON THE BLOCK KEY ONLY
 (quadratic only within a purged block, never across the corpus);
-weights are one (a, b) hash aggregation; WNP adds one per-node
-average aggregation joined back — no windows over raw pairs.
+weights are one (a, b) hash aggregation — no windows over raw
+pairs.
 """
 
 from __future__ import annotations
@@ -83,23 +80,6 @@ def prune_wep(pairs: DataFrame, threshold: float) -> DataFrame:
     return pairs.where(F.col("weight") >= threshold)
 
 
-def prune_wnp(pairs: DataFrame) -> DataFrame:
-    """Weighted-node pruning: keep an edge iff its weight reaches the
-    MEAN edge weight of either endpoint — two node-average
-    aggregations joined back (never a window over the raw pairs)."""
-    ends = pairs.select(F.col("a").alias("node"), "weight") \
-        .unionByName(pairs.select(F.col("b").alias("node"), "weight"))
-    means = ends.groupBy("node").agg(F.avg("weight").alias("mean_w"))
-    return (pairs
-            .join(means.select(F.col("node").alias("a"),
-                               F.col("mean_w").alias("ma")), "a")
-            .join(means.select(F.col("node").alias("b"),
-                               F.col("mean_w").alias("mb")), "b")
-            .where((F.col("weight") >= F.col("ma"))
-                   | (F.col("weight") >= F.col("mb")))
-            .select("a", "b", "weight"))
-
-
 def er_candidates(entities: DataFrame, name_col: str = "name",
                   id_col: str = "entity_id",
                   scheme: str = "CBS", threshold: float = 2.0,
@@ -109,28 +89,3 @@ def er_candidates(entities: DataFrame, name_col: str = "name",
     blocks = token_blocks(entities, name_col, id_col, max_block_size)
     pairs = cbs_pairs(blocks) if scheme == "CBS" else js_pairs(blocks)
     return prune_wep(pairs, threshold)
-
-
-def arcs_pairs(blocks: DataFrame) -> DataFrame:
-    """(a, b, weight): ARCS (aggregate reciprocal comparisons scheme)
-    — each shared block contributes 1 / ||b|| where ||b|| is the
-    block's comparison count n(n-1)/2, discounting stop-word-like
-    blocks; one size aggregation + the block self-join."""
-    sizes = blocks.groupBy("block").agg(F.count("*").alias("nb")) \
-        .where(F.col("nb") > 1) \
-        .withColumn("w", 2.0 / (F.col("nb") * (F.col("nb") - 1)))
-    b = blocks.join(sizes, "block")
-    le, r = b.alias("l"), b.alias("r")
-    return (le.join(r, (F.col("l.block") == F.col("r.block"))
-                    & (F.col("l.entity_id") < F.col("r.entity_id")))
-            .groupBy(F.col("l.entity_id").alias("a"),
-                     F.col("r.entity_id").alias("b"))
-            .agg(F.sum(F.col("l.w")).alias("weight")))
-
-
-def progressive_pairs(pairs: DataFrame) -> DataFrame:
-    """Progressive ER (Schema-Agnostic Progressive Entity Resolution,
-    ICDE 2018): emit candidates best-first so a budgeted verifier
-    resolves the likeliest matches early — a weight-descending sort
-    with deterministic (a, b) ties."""
-    return pairs.orderBy(F.desc("weight"), "a", "b")

@@ -397,7 +397,7 @@ def knn_predict(df: DataFrame, model: KnnModel, id_col: str,
 # :20-27, ZeroRModel.java:25-32): train = one category count, classify
 # = the prior distribution for every instance. The reference sorts the
 # probability map descending with HashMap-order ties
-# (CollectionHelper.sortByValue); prediction ties break by ascending
+# (CollectionHelper.sortByValue); probability ties sort by ascending
 # category name here — the repo's standard deterministic substitute.
 
 def zeror_train(instances: DataFrame,
@@ -408,18 +408,6 @@ def zeror_train(instances: DataFrame,
     total = sum(r.n for r in counts)
     return sorted(((r.category, r.n / total) for r in counts),
                   key=lambda cp: (-cp[1], cp[0]))
-
-
-def zeror_predict(df: DataFrame, model: list[tuple[str, float]],
-                  id_col: str) -> DataFrame:
-    """(id, predicted, probability): the majority class for every row
-    (ZeroRClassifier.classify returns the same CategoryEntries for any
-    feature vector)."""
-    category, probability = model[0]
-    return df.select(id_col,
-                     F.lit(category).alias("predicted"),
-                     F.round(F.lit(float(probability)), 6)
-                     .alias("probability"))
 
 
 # ------------------------------------------- class-distribution resample

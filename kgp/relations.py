@@ -118,20 +118,19 @@ def match_sentence(sent_text: str, sent_start: int,
 
 
 def extract_relations(links: DataFrame,
-                      patterns: list[Pattern] | None = None,
-                      num_buckets: int | None = None) -> DataFrame:
+                      patterns: list[Pattern] | None = None) -> DataFrame:
     """links → triples(subj, pred, obj, subj_id, obj_id, url, sent_idx,
     conf).
 
     One `applyInPandas` over hash buckets of documents (NOT per-url
     groups — one Python call per document would be overhead-bound; each
-    bucket holds |corpus|/num_buckets docs and iterates them in
-    pandas). Sentences with <2 mentions are skipped in Python; the
-    filter that matters at scale is that unlinked/untagged text never
-    reaches this stage."""
+    of the 4·defaultParallelism buckets iterates its docs in pandas).
+    Sentences with <2 mentions are skipped in Python; the filter that
+    matters at scale is that unlinked/untagged text never reaches this
+    stage."""
     pats = patterns if patterns is not None else DEFAULT_PATTERNS
     spark = links.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism * 4
+    n = spark.sparkContext.defaultParallelism * 4
 
     def _rel(pdf: pd.DataFrame) -> pd.DataFrame:
         # single sorted pass over the bucket — no pandas groupby (one

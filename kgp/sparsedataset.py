@@ -15,7 +15,6 @@ null marker, ``#`` comment lines):
   the default chain (Boolean, Integer, Long, Float, Double,
   LocalDate, String — :160-162) that canParse the key's first-seen
   value; unseen-type fallback is String (:268-271).
-- size() counts lines whose first char is a digit (:225-229).
 
 Spark shape: the header lives in the leading comment block, so the
 driver reads ONLY comment-prefixed head lines; data lines stream
@@ -255,33 +254,6 @@ def read_sparse_dataset(spark: SparkSession, path: str) -> DataFrame:
         F.input_file_block_start().alias("block_start"))
     return parse_sparse_lines(raw, idx_to_category, idx_to_name,
                               parsers)
-
-
-def feature_information(spark: SparkSession, path: str,
-                        long: DataFrame | None = None) -> DataFrame:
-    """FeatureInformation twin: with a header, one row per DECLARED
-    value (the reference builds it from the parsers map, :316-325 —
-    count == header size, 5581 for the sample file, whether or not a
-    feature occurs in the data); headerless, one row per feature seen
-    in the data with its inferred parser."""
-    head = [r[0] for r in
-            spark.read.text(path).limit(10000).collect()
-            if r[0].startswith("#") or not r[0]]
-    idx_to_category, idx_to_name, parsers = parse_header(head)
-    if idx_to_category and idx_to_name:
-        rows = [(idx_to_name.get(idx, idx), kind)
-                for idx, kind in parsers.items()]
-        return spark.createDataFrame(rows, ["feature", "value_type"])
-    if long is None:
-        long = read_sparse_dataset(spark, path)
-    return (long.groupBy("feature")
-                .agg(F.first("value_type").alias("value_type")))
-
-
-def dataset_size(spark: SparkSession, path: str) -> int:
-    """size() twin (:225-229): lines whose first char is a digit."""
-    raw = spark.read.text(path)
-    return raw.filter(F.col("value").rlike("^[0-9]")).count()
 
 
 # ---------------------------------------------------- libsvm reader

@@ -203,9 +203,11 @@ def stream_triples(pages_stream: DataFrame, model_bc, gaz: DataFrame,
 
     Exactly-once: foreachBatch is at-least-once on retry, so each
     epoch OVERWRITES its own `epoch=<id>` directory — a replayed batch
-    rewrites the same path and the result is idempotent. The NER model
-    is trained ONCE on a bootstrap corpus and broadcast (a production
-    crawl retrains periodically and swaps the broadcast).
+    rewrites the same path and the result is idempotent. An epoch holds
+    raw triples; `kgp.materialize.finalize_triples` over all epoch
+    directories gives the canonical set. The NER model is trained ONCE
+    on a bootstrap corpus and broadcast (a production crawl retrains
+    periodically and swaps the broadcast).
 
     Batch/stream agreement is exact: every stage is per-document or a
     broadcast join against static tables, so draining N file drops
@@ -232,13 +234,3 @@ def stream_triples(pages_stream: DataFrame, model_bc, gaz: DataFrame,
          .start())
     q.awaitTermination()
     return q
-
-
-def read_stream_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The canonical triple set over everything streamed so far:
-    finalize (dedup + support) runs at read over the epoch
-    directories, so the canonical aggregate is always consistent even
-    though epochs append independently."""
-    from kgp.materialize import finalize_triples
-    raw = spark.read.option("basePath", out_dir).parquet(out_dir)
-    return finalize_triples(raw.drop("epoch"))

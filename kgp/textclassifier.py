@@ -350,13 +350,6 @@ LANG_FEATURE_SETTING = FeatureSetting(mode="char", min_ngram=4,
                                       max_ngram=7)
 
 
-def train_language_classifier(samples: list[tuple[str, str]],
-                              fs: FeatureSetting = LANG_FEATURE_SETTING
-                              ) -> DictModel:
-    """samples: (text, language) pairs → char-gram dictionary model."""
-    return train(samples, fs)
-
-
 def detect_language(text: str, model: DictModel,
                     fs: FeatureSetting = LANG_FEATURE_SETTING,
                     scorer=None) -> str:

@@ -55,10 +55,6 @@ from kgp.strsim import jaro_winkler_similarity, levenshtein_similarity
 from kgp.textclassifier import STOPWORDS, FeatureSetting, preprocess
 from kgp.tokenize import tokenize
 
-TF_STRATEGIES = ("binary", "raw_count", "term_frequency",
-                 "log_normalization", "double_normalization")
-IDF_STRATEGIES = ("unary", "idf", "idf_smooth", "idf_max")
-
 
 def simple_tokens(text: str) -> list[str]:
     """Pure twin of kgp.decontam.norm_tokens (lowercase,

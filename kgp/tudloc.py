@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgp.contextpatterns import strip_html_tags
 
 # TudLoc2013DatasetIterable.java:40
 MAIN_ROLE_RE = re.compile(

@@ -30,7 +30,7 @@ import re
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 ALL_OPTIONS = ("QUERY_TERM", "USER_NAMES", "LINKS",
@@ -100,10 +100,3 @@ def twitter_sentiment_stage(lines: DataFrame,
                 yield pd.DataFrame(rows, columns=["category", "text"])
 
     return lines.select(line_col).mapInPandas(scan, _SCHEMA)
-
-
-def read_twitter_sentiment(spark: SparkSession, path: str,
-                           options: tuple[str, ...] = ALL_OPTIONS
-                           ) -> DataFrame:
-    """The file shell: one line-based scan."""
-    return twitter_sentiment_stage(spark.read.text(path), options)

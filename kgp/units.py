@@ -51,7 +51,7 @@ import unicodedata
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from kgp.units_data import BASE_UNITS, TYPE_ORDER, UNITS
+from kgp.units_data import TYPE_ORDER, UNITS
 
 # ---------------------------------------------------------- the bank
 _TYPE_UNITS: dict[str, list[tuple[list[str], float | None]]] = {

@@ -5,7 +5,7 @@ Semantics re-derived from
 (brace-balanced named-template scan, top-level | splitting with
 bracket balance, key=value with bracket/tag-balanced keys, positional
 parameter numbering) and WikiPage.java:223-260 (infobox = templates
-named infobox/geobox; categories; redirects). Infoboxes are the
+named infobox/geobox; redirects). Infoboxes are the
 highest-precision triple source a web KG pipeline has — every
 (page, key, value) row is an assertion — so this feeds the relation
 stage next to the sentence pattern bank.
@@ -24,8 +24,6 @@ import pandas as pd
 _COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
 _OPEN_TAG = re.compile(r"<\w+[^>/]*>")
 _CLOSE_TAG = re.compile(r"</\w+[^>]*>")
-_CATEGORY = re.compile(
-    r"\[\[(?:Category|Kategorie):([^|\]]*)(?:\|[^|\]]*)?\]\]")
 _REDIRECT = re.compile(r"#REDIRECT\s*\[\[([^\]|]+)", re.IGNORECASE)
 
 
@@ -130,10 +128,6 @@ def get_infoboxes(markup: str) -> list[WikiTemplate]:
     """WikiPage.getInfoboxes port (:223-245)."""
     return [extract_template(m)
             for m in get_named_markup(markup, "infobox", "geobox")]
-
-
-def get_categories(markup: str) -> list[str]:
-    return [m.group(1).strip() for m in _CATEGORY.finditer(markup)]
 
 
 _HEADING = re.compile(r"^={1,6}\s*([^=]*)\s*={1,6}", re.MULTILINE)

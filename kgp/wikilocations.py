@@ -20,19 +20,13 @@ Per main-namespace, non-redirect page (titles matching the
    else the first infobox coordinate set.
 3. the location row is (location_id = page_id + id_offset,
    name = cleanTitle (parenthetical and ',...' tails removed),
-   type, lat, lng, population) — plus the ORIGINAL title so the
-   redirect pass can join.
+   type, lat, lng, population) — plus the ORIGINAL title.
 4. alternative names: PAGE mode takes the bold strings of the first
    section's first bold-carrying line via the SAME apostrophe-state
    formatting parser the reference walks (kgp.wikiformat, driven by
-   the getStringsInBold callback); REDIRECTS mode joins redirect
-   pages against the saved titles, skipping '#'-anchor targets and
-   'Target/Subpage' self-redirects.
+   the getStringsInBold callback).
 
-Spark shape: ONE Arrow pass per dump scan (locations; alternative
-names from redirects are a second scan like the reference's two-pass
-stream), the redirect match an equi-join against the (title,
-location_id) side — broadcast when the location set is dim-sized.
+Spark shape: ONE Arrow pass per dump scan.
 """
 
 from __future__ import annotations
@@ -43,7 +37,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kgp.wiki import (extract_coordinate_tags, get_infoboxes,
                       get_redirect_title, get_sections,
@@ -96,7 +89,6 @@ _REF = re.compile(r"<ref(?:\s[^>]*)?>[^<]*</ref>|<ref[^/>]*/>",
                   re.MULTILINE)
 _LANG = re.compile(r"\{\{(?:lang\|[^|]*|lang-\w{2})\|([^|]*)\}\}")
 _TAGS = re.compile(r"<[^>]+>")
-_BOLD = re.compile(r"'''((?:[^'\n]|'(?!''))+)'''")
 _INTERNAL_LINK = re.compile(r"\[\[([^|\]]*)(?:\|([^|\]]*))?\]\]")
 _EXTERNAL_LINK = re.compile(r"\[http([^\s]+)(?:\s([^\]]+))\]")
 
@@ -252,34 +244,3 @@ def wikipedia_locations_stage(pages: DataFrame,
 
     return pages.select("page_id", "namespace", "title", "text") \
         .mapInPandas(run, LOC_SCHEMA)
-
-
-def redirect_alternative_names(pages: DataFrame,
-                               locations: DataFrame) -> DataFrame:
-    """importAlternativeNames (:207-243): redirect pages whose target
-    is a saved location title contribute cleanTitle(redirect page) as
-    an alternative name; '#'-anchor targets and 'Target/Sub' self
-    redirects skipped. One Arrow pass for the redirect extraction +
-    an equi-join on the target title."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ns, ti, tx in zip(pdf["namespace"], pdf["title"],
-                                  pdf["text"]):
-                if int(ns) != 0 or ti is None or tx is None:
-                    continue
-                target = get_redirect_title(tx)
-                if target is None or "#" in target:
-                    continue
-                name = clean_title(ti)
-                if name.startswith(target + "/"):
-                    continue
-                rows.append((target, name))
-            yield pd.DataFrame(rows, columns=["target", "alt_name"])
-
-    redirects = pages.select("namespace", "title", "text") \
-        .mapInPandas(run, "target string, alt_name string")
-    return redirects.join(
-        locations.select(F.col("title").alias("target"),
-                         "location_id"),
-        "target").select("location_id", "alt_name").distinct()

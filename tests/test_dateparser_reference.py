@@ -18,8 +18,7 @@ import pytest
 
 from kgp import dateparse as dp
 from kgp import dates as dts
-from kgp.dateparse import (find_date, find_parsed_dates,
-                           find_relative_date,
+from kgp.dateparse import (find_date, find_relative_date,
                            get_normalized_date_string)
 
 _JAVA = ("/root/reference/palladian-commons/src/test/java/ws/"
@@ -145,53 +144,6 @@ def test_find_date2_explicit_formats():
     # 83 findDate calls upstream; 81 sit on harvestable single lines
     assert checked >= 80, checked
     assert not bad, bad
-
-
-def test_find_dates_all_vectors():
-    body = _method_body("testFindDates", "testFindRelativeDate")
-    pat = re.compile(
-        r'assertEquals\("([^"]+)",\s*DateParser\.findDates\('
-        r'"([^"]+)"\)\.get\(0\)\s*\.?\s*\.?getNormalizedDateString',
-        re.S)
-    pairs = pat.findall(body)
-    # the simple one-liner vectors
-    pat2 = re.compile(
-        r'date = DateParser\.findDates\("([^"]+)"\)\.get\(0\)'
-        r'\.getNormalizedDateString\(\);\s*\n\s*assertEquals\('
-        r'"([^"]+)", date\);')
-    pat2b = re.compile(
-        r'date = DateParser\.findDates\("([^"]+)"\)\.get\(0\)\s*\n'
-        r'\s*\.getNormalizedDateString\(\);\s*\n\s*assertEquals\('
-        r'"([^"]+)", date\);')
-    vectors = [(e, i) for e, i in pairs]
-    vectors += [(e, i) for i, e in pat2.findall(body)]
-    vectors += [(e, i) for i, e in pat2b.findall(body)]
-    assert len(vectors) >= 30
-    bad = []
-    for exp, inp in vectors:
-        dates = find_parsed_dates(_unescape(inp),
-                                  dp.REF_ALL_DATE_FORMATS)
-        got = get_normalized_date_string(dates[0]) if dates else None
-        if got != exp:
-            bad.append((inp, exp, got))
-    assert not bad, bad
-    # the multi-hit / count assertions, transcribed
-    two = find_parsed_dates("2007-12-06T17:37:45Z 2008-12-06T17:37:45Z",
-                            dp.REF_ALL_DATE_FORMATS)
-    assert [get_normalized_date_string(d) for d in two] == [
-        "2007-12-06 17:37:45", "2008-12-06 17:37:45"]
-    one = find_parsed_dates("Saturday, September 20, 2008",
-                            dp.REF_ALL_DATE_FORMATS)
-    assert len(one) == 1
-    assert get_normalized_date_string(one[0]) == "2008-09-20"
-    one = find_parsed_dates("Mon, 18 Apr 2011 09:16:00 GMT-0700",
-                            dp.REF_ALL_DATE_FORMATS)
-    assert len(one) == 1
-    assert get_normalized_date_string(one[0]) == "2011-04-18 16:16:00"
-    one = find_parsed_dates("Dienstag, 03. Mai 2011 um 05:13",
-                            dp.REF_ALL_DATE_FORMATS)
-    assert len(one) == 1
-    assert get_normalized_date_string(one[0]) == "2011-05-03"
 
 
 def test_find_relative_date():

@@ -162,30 +162,6 @@ def test_parse_quirks():
 
 
 def test_rater_semantics():
-    mk = lambda kw, y, m, d, h=-1, mi=-1: ds.TechDate(
-        "head", kw, None, -1,
-        dp.ParsedDate("", "", y, m, d, h, mi, -1, None))
-    # high bucket wins: published keyword -> 1.0, others zeroed
-    dates = [mk("published", 2010, 7, 18), mk("date", 2010, 7, 19)]
-    rated = ds.head_date_rates(dates)
-    by = {}
-    for r in rated:
-        by.setdefault(r.td.keyword, []).append(r.rate)
-    assert 1.0 in by["published"] and 0.0 in by["date"]
-    # low-only bucket: 0.75 unless within 12h of "now"
-    dates = [mk("date", 2010, 7, 18)]
-    rated = ds.head_date_rates(dates)
-    assert any(r.rate == 0.75 for r in rated)
-    near_now = [mk("date", 2026, 8, 20, 11, 0)]
-    rated = ds.head_date_rates(near_now)
-    assert not any(r.rate == 0.75 for r in rated)
-    # structure rater: group-share weighting
-    sdates = [mk("published", 2010, 7, 18), mk("published", 2010, 7, 18),
-              mk("published", 2010, 7, 19)]
-    rated = ds.structure_date_rates(sdates)
-    shares = sorted(r.rate for r in rated if 0 < r.rate < 1)
-    # reference rounds Math.round(rate * 10000) / 10000
-    assert shares == [0.3333, 0.6667, 0.6667]
     # url rater constants
     d1 = ds.url_date("http://x.com/2010/06/30/a.htm")
     d2 = ds.url_date("http://x.com/2010/06/a.htm")
@@ -214,22 +190,6 @@ def test_reference_dates_df(spark):
     assert out[(2, "10")] == (2020, 1, 0.95)
     # unset month sorts before set month (oldest-first quirk)
     assert out[(1, "11")] == (2016, -1, 0.5)
-
-
-# ------------------------------------------- WebPageDateEvaluatorTest
-def test_evaluator_reference_goldens():
-    # getDates counts (WebPageDateEvaluatorTest.testGetAllDates)
-    for f, want in [("dateExtraction/zeit2.htm", 2),
-                    ("dateExtraction/zeit1.htm", 5),
-                    ("dateExtraction/kullin.htm", 12)]:
-        rated = ds.evaluate_page_dates(_page(f))
-        assert len(rated) == want, (f, len(rated))
-    # best rated date (testGetBestRatedDate): zeit1 -> 2010-08-22
-    best = ds.best_page_date(_page("dateExtraction/zeit1.htm"))
-    assert (best["year"], best["month"], best["day"]) == (2010, 8, 22)
-    # the commented-out kullin golden's date part also holds
-    best = ds.best_page_date(_page("dateExtraction/kullin.htm"))
-    assert (best["year"], best["month"], best["day"]) == (2010, 5, 28)
 
 
 def test_best_pub_date_html5():

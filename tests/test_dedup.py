@@ -244,16 +244,20 @@ def test_near_dup_groups_transitive(spark):
     assert got[9].group_id == 9 and got[9].is_canonical
 
 
-def test_near_dup_groups_leaves_no_cache(spark, jobs_in_group):
-    """The edge cache lives for one call: a second call on the same docs
-    runs as many jobs as the first, and the session's persisted RDDs
-    are the same before and after a call."""
+def test_near_dup_groups_leaves_no_cache(spark):
+    """The edge cache lives for one call: the session's cache-manager
+    entries and its persisted RDDs are the same before and after a
+    call."""
     docs = _docs(spark)
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    runs = [jobs_in_group(f"near-dup-groups-{i}", lambda: near_dup_groups(
-        docs, threshold=0.8).collect()) for i in range(2)]
-    assert runs[0] == runs[1]
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+
+    def state():
+        return cache.numCachedEntries(), rdds().size()
+
+    before = state()
+    near_dup_groups(docs, threshold=0.8).collect()
+    assert state() == before
 
 
 def test_cross_doc_line_dedup(spark):

@@ -1,94 +1,9 @@
-"""EntityPreprocessingTagger parity — driven by the reference's OWN
-case dictionary and test text (read-only resources), goldens from
-EntityPreprocessingTaggerTest.java:34-89."""
+"""EntityPreprocessingTagger sentence-position parity
+(EntityPreprocessingTagger.java:249-252)."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
-from kgp.entity_preprocess import (correct_capitalization,
-                                   entity_preprocess_annotations,
-                                   get_long_annotation_split,
-                                   is_within_sentence,
-                                   load_case_ratio_csv,
-                                   location_candidates)
-from kgp.mentions import candidate_annotations
-
-CSV = ("/root/reference/palladian-core/src/main/resources/"
-       "caseDictionary.csv")
-TXT = ("/root/reference/palladian-core/src/test/resources/testText.txt")
-
-
-@pytest.fixture(scope="module")
-def ratios():
-    if not os.path.exists(CSV):
-        pytest.skip("reference case dictionary not available")
-    with open(CSV, encoding="utf-8") as f:
-        return load_case_ratio_csv(f, 2.0)
-
-
-def test_entity_preprocessor_reference_text(ratios):
-    # EntityPreprocessingTaggerTest.testEntityPreprocessor (:34-46)
-    if not os.path.exists(TXT):
-        pytest.skip("reference test text not available")
-    text = open(TXT, encoding="utf-8").read()
-    anns = entity_preprocess_annotations(
-        text, candidate_annotations(text), ratios, 2.0, 0)
-    assert len(anns) == 41
-    assert anns[0].value == "Clean Water Act"
-    assert anns[0].start == 31
-    assert anns[0].start + len(anns[0].value) == 46
-    assert anns[3].value == "Cleveland"
-    assert anns[33].value == "Bill Ruckelshaus"
-
-
-def test_short_phrase_issue294(ratios):
-    # no mid-sentence candidates at all -> nothing is "fixed"
-    anns = entity_preprocess_annotations(
-        "New York City", candidate_annotations("New York City"),
-        ratios, 2.0, 0)
-    assert [a.value for a in anns] == ["New York City"]
-
-
-def test_long_annotation_split(ratios):
-    # EntityPreprocessingTaggerTest.testLongAnnotationSplit (:71-89)
-    text = ("Rocky Hill Tax Credits Available. Jordan Elementary School "
-            "Principal Stacy DeCorsey shows her students an oversized "
-            "check made out to the school for $1,825.40. Former "
-            "Bloomfield Town Councilman Richard Days Dead At 79. Platte "
-            "County Attorney Sandra Allen Calls Tourism Australia "
-            "Managing Director Andrew McEvoy.")
-    anns = candidate_annotations(text)
-    got = get_long_annotation_split(anns, 3, ratios, 2.0)
-    assert len(got) == 9
-    assert got[0].value == "Rocky Hill"
-    assert got[0].start == 0
-    assert got[6].value == "Sandra Allen"
-    assert got[6].start == 242
-
-    anns2 = candidate_annotations("New York City-based")
-    got2 = get_long_annotation_split(anns2, 3, ratios, 2.0)
-    assert len(got2) == 2
-    assert got2[1].value == "New York City"
-
-
-def test_correct_capitalization(ratios):
-    # EntityPreprocessingTaggerTest.testCorrectCapitalization (:56-69)
-    cc = lambda s: correct_capitalization(s, ratios, 2.0)  # noqa: E731
-    assert cc("Senior U.S. Military Official Visits Georgia.") == \
-        "senior U.S. military official visits Georgia."
-    assert cc("BY RACHEL E. SHEELEY STAFF WRITER") == \
-        "by RACHEL E. SHEELEY staff writer"
-    assert cc("OSCE Envoy Condemns Dvani Attack that Killed One "
-              "Policeman.") == \
-        "OSCE envoy condemns Dvani attack that killed one policeman."
-    assert cc("Competitive Growth On Imposition Of Special Duties On "
-              "Importation Of Passenger Cars.") == \
-        "competitive growth on imposition of special duties on " \
-        "importation of passenger cars."
-    assert cc("AT MAGAZAN BEACH RESORT") == "at MAGAZAN BEACH resort"
+from kgp.entity_preprocess import is_within_sentence
 
 
 def test_within_sentence_window():
@@ -96,12 +11,3 @@ def test_within_sentence_window():
     assert not is_within_sentence(text, 0)
     assert not is_within_sentence(text, 11)     # after ". " boundary
     assert is_within_sentence(text, text.index("starts"))
-
-
-def test_location_candidates_trims_sentence_start(ratios):
-    # "The" is usually lowercase -> trimmed off the sentence-start
-    # candidate; the same surface mid-sentence is untouched
-    text = ("The Hague hosted the meeting. Delegates visited The Hague "
-            "again later.")
-    vals = [c.value for c in location_candidates(text, ratios)]
-    assert "The Hague" in vals  # mid-sentence occurrence protects it

@@ -20,9 +20,7 @@ import os
 
 import pytest
 
-from kgp.imageops import (box_crop, box_fit,
-                          cluster_images_pick_representatives,
-                          is_duplicate)
+from kgp.imageops import box_crop, box_fit, is_duplicate
 from kgp.multimodal import decode_image, detect_colors
 
 RES = "/root/reference/palladian-core/src/test/resources/images"
@@ -31,15 +29,6 @@ BANK = "/root/reference/palladian-core/src/main/resources/colors.csv"
 
 def _load(name):
     return decode_image(open(os.path.join(RES, name), "rb").read())
-
-
-def test_cluster_images():
-    names = ["imageA1.jpg", "imageA2.jpg", "imageB1.jpg",
-             "imageA3.jpg", "imageC1.jpg", "imageB2.jpg"]
-    images = [(n, _load(n)) for n in names]
-    representatives = cluster_images_pick_representatives(images)
-    assert representatives == \
-        {"imageA3.jpg", "imageB2.jpg", "imageC1.jpg"}
 
 
 def test_rescale_image():
@@ -94,4 +83,3 @@ def test_detect_colors(color_bank):
     # decoder-dependent third cluster (see module docstring)
     assert detected[2] in [("Carousel Pink", "Pink"),
                            ("gainsboro", "Gray")]
-

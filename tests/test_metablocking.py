@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgp.metablocking import (cbs_pairs, er_candidates, js_pairs,
-                              prune_wep, prune_wnp, token_blocks)
+                              prune_wep, token_blocks)
 
 
 def _entities(spark):
@@ -60,12 +60,6 @@ def test_prune_wep_and_wnp(spark):
     pairs = cbs_pairs(token_blocks(_entities(spark)))
     kept = {(r["a"], r["b"]) for r in prune_wep(pairs, 2).collect()}
     assert kept == {(1, 2)}
-    # WNP: node 1 has edges 2 and 1 -> mean 1.5; edge (1,2) weight 2
-    # passes, edge (1,3) weight 1 fails both endpoints' means unless
-    # node 3's mean is <= 1 (its only edges are weight 1 -> passes!)
-    wnp = {(r["a"], r["b"]) for r in prune_wnp(pairs).collect()}
-    assert (1, 2) in wnp
-    assert (1, 3) in wnp  # weight 1 >= node 3's mean (1.0)
 
 
 def test_er_candidates_end_to_end(spark):
@@ -91,24 +85,3 @@ def test_er_candidates_duckdb_parity(spark):
     for a, b, w in want:
         assert got[(a, b)] == w
 
-
-def test_arcs_weights(spark):
-    from kgp.metablocking import arcs_pairs
-    pairs = {(r["a"], r["b"]): r["weight"]
-             for r in arcs_pairs(token_blocks(_entities(spark)))
-             .collect()}
-    # 'acme' block has 2 entities -> ||b||=1 -> contributes 1.0;
-    # 'rocket' has 3 -> ||b||=3 -> contributes 1/3
-    assert pairs[(1, 2)] == pytest.approx(1.0 + 1 / 3)
-    assert pairs[(1, 3)] == pytest.approx(1 / 3)
-    # singleton blocks contribute nothing -> (x, 4) pairs absent
-    assert not any(4 in k for k in pairs)
-
-
-def test_progressive_pairs_order(spark):
-    from kgp.metablocking import cbs_pairs, progressive_pairs
-    rows = progressive_pairs(
-        cbs_pairs(token_blocks(_entities(spark)))).collect()
-    weights = [r["weight"] for r in rows]
-    assert weights == sorted(weights, reverse=True)
-    assert rows[0]["a"] == 1 and rows[0]["b"] == 2

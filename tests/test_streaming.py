@@ -65,29 +65,32 @@ def test_streaming_mentions_and_watermarked_rates(spark, tmp_path):
 
     pages_batch = synth_pages(spark, SF)
     docs_batch = extract_stage(pages_batch).persist()
-    model = _train(spark, docs_batch)
-    bc = spark.sparkContext.broadcast(model)
+    try:
+        model = _train(spark, docs_batch)
+        bc = spark.sparkContext.broadcast(model)
 
-    stream = stream_pages(spark, src)
-    mentions = stream_mentions(stream_docs(stream), bc)
-    assert mentions.isStreaming and "warc_ts" in mentions.columns
-    rates = mention_rates(mentions)
-    assert rates.isStreaming
+        stream = stream_pages(spark, src)
+        mentions = stream_mentions(stream_docs(stream), bc)
+        assert mentions.isStreaming and "warc_ts" in mentions.columns
+        rates = mention_rates(mentions)
+        assert rates.isStreaming
 
-    sink = str(tmp_path / "rates_out")
-    ckpt = str(tmp_path / "ckpt2")
-    # watermarked append-mode aggregation over a finite drain
-    run_stream(rates, sink, ckpt, output_mode="append")
-    # finalized windows may be empty with availableNow (watermark never
-    # advances past the single micro-batch) — rerun as complete into
-    # memory to check the aggregation itself
-    q = (rates.writeStream.format("memory").queryName("rates_mem")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from rates_mem").collect()
-    assert rows
-    assert {r.tag for r in rows} >= {"PER", "ORG", "CITY"}
-    assert all(r.n_mentions > 0 for r in rows)
+        sink = str(tmp_path / "rates_out")
+        ckpt = str(tmp_path / "ckpt2")
+        # watermarked append-mode aggregation over a finite drain
+        run_stream(rates, sink, ckpt, output_mode="append")
+        # finalized windows may be empty with availableNow (watermark never
+        # advances past the single micro-batch) — rerun as complete into
+        # memory to check the aggregation itself
+        q = (rates.writeStream.format("memory").queryName("rates_mem")
+             .outputMode("complete").trigger(availableNow=True).start())
+        q.awaitTermination()
+        rows = spark.sql("select * from rates_mem").collect()
+        assert rows
+        assert {r.tag for r in rows} >= {"PER", "ORG", "CITY"}
+        assert all(r.n_mentions > 0 for r in rows)
+    finally:
+        docs_batch.unpersist()
 
 
 def test_streaming_dedup_exact(spark, tmp_path):
@@ -242,42 +245,50 @@ def test_stream_triples_full_pipeline(spark, tmp_path):
     from kgp.materialize import finalize_triples
     from kgp.mentions import detect_mentions
     from kgp.relations import extract_relations
-    from kgp.streaming import (read_stream_triples, stream_pages,
-                               stream_triples)
+    from kgp.streaming import stream_pages, stream_triples
 
     src = str(tmp_path / "pages_t")
     out = str(tmp_path / "triples_t")
     ckpt = str(tmp_path / "ckpt_t")
 
-    # bootstrap: train the model once on the full static corpus
+    def read_triples():
+        # the canonical triple set over every epoch streamed so far
+        raw = spark.read.option("basePath", out).parquet(out)
+        return finalize_triples(raw.drop("epoch"))
+
+    gaz = gazetteer(spark)
     pages_all = synth_pages(spark, SF)
     docs_all = extract_stage(pages_all).persist()
-    model = _train(spark, docs_all)
-    bc = spark.sparkContext.broadcast(model)
-    gaz = gazetteer(spark)
     mapping = canonical_mapping(gaz).persist()
-    mapping.count()
+    try:
+        # bootstrap: train the model once on the full static corpus
+        model = _train(spark, docs_all)
+        bc = spark.sparkContext.broadcast(model)
+        mapping.count()
 
-    n1 = _write_batch(spark, src, 0, 25)
-    stream_triples(stream_pages(spark, src), bc, gaz, mapping,
-                   out, ckpt)
-    first = read_stream_triples(spark, out)
-    assert first.count() > 0
+        n1 = _write_batch(spark, src, 0, 25)
+        stream_triples(stream_pages(spark, src), bc, gaz, mapping,
+                       out, ckpt)
+        first = read_triples()
+        assert first.count() > 0
 
-    n2 = _write_batch(spark, src, 25, 50)
-    stream_triples(stream_pages(spark, src), bc, gaz, mapping,
-                   out, ckpt)
-    got = read_stream_triples(spark, out)
+        n2 = _write_batch(spark, src, 25, 50)
+        stream_triples(stream_pages(spark, src), bc, gaz, mapping,
+                       out, ckpt)
+        got = read_triples()
 
-    # batch twin over the union of both drops
-    sub = synth_pages(spark, SF, with_doc_id=True) \
-        .where("doc_id < 50").drop("doc_id")
-    docs = extract_stage(sub)
-    want = finalize_triples(extract_relations(canonicalize_links(
-        link_mentions(detect_mentions(docs, bc), gaz), mapping)))
-    g = {tuple(r) for r in got.collect()}
-    w = {tuple(r) for r in want.collect()}
-    assert g == w and len(g) > 0
+        # batch twin over the union of both drops
+        sub = synth_pages(spark, SF, with_doc_id=True) \
+            .where("doc_id < 50").drop("doc_id")
+        docs = extract_stage(sub)
+        want = finalize_triples(extract_relations(canonicalize_links(
+            link_mentions(detect_mentions(docs, bc), gaz), mapping)))
+        g = {tuple(r) for r in got.collect()}
+        w = {tuple(r) for r in want.collect()}
+        assert g == w and len(g) > 0
+    finally:
+        mapping.unpersist()
+        docs_all.unpersist()
 
 
 def test_streaming_extract_gate_removes_its_temp_dir(spark, tmp_path,

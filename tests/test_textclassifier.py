@@ -97,8 +97,8 @@ def test_term_length_filter():
 
 
 def test_language_classifier_chars():
-    from kgp.textclassifier import (detect_language,
-                                    train_language_classifier)
+    from kgp.textclassifier import (LANG_FEATURE_SETTING, detect_language,
+                                    train)
     samples = [
         ("the quick brown fox jumps over the lazy dog", "en"),
         ("she sells sea shells by the sea shore", "en"),
@@ -107,7 +107,7 @@ def test_language_classifier_chars():
         ("le renard brun rapide saute par dessus le chien", "fr"),
         ("tous les êtres humains naissent libres et égaux", "fr"),
     ]
-    model = train_language_classifier(samples)
+    model = train(samples, LANG_FEATURE_SETTING)
     assert detect_language("the dog was very lazy that day", model) == "en"
     assert detect_language("der hund springt über den zaun", model) == "de"
     assert detect_language("le chien saute par dessus la barrière",

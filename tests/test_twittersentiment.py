@@ -1,14 +1,12 @@
 """Twitter sentiment reader (kgp.twittersentiment) — Go et al. 2009
 normalization goldens, quote-aware split, option subsets, stage
-parity, file surface."""
+parity."""
 
 from __future__ import annotations
 
 import pytest
 
-from kgp.twittersentiment import (parse_tweet_line,
-                                  read_twitter_sentiment,
-                                  twitter_sentiment_stage)
+from kgp.twittersentiment import parse_tweet_line, twitter_sentiment_stage
 
 L0 = ('"0","1","Mon Apr 06","myterm","bob","@alice check '
       'http://t.co/xyz I am soooooo huuuuuungry for MyTerm now"')
@@ -46,13 +44,7 @@ def test_malformed_raises():
         parse_tweet_line('"a,b,c,d,e,f')
 
 
-def test_stage_and_file_surface(tmp_path, spark):
-    p = tmp_path / "tweets.csv"
-    p.write_text("\n".join(ALL) + "\n")
-    got = sorted(map(tuple,
-                     read_twitter_sentiment(spark, str(p)).collect()))
-    want = sorted(parse_tweet_line(l) for l in ALL)
-    assert got == want
+def test_stage_and_file_surface(spark):
     df = spark.createDataFrame([(l,) for l in ALL], "value string")
     got2 = sorted(map(tuple, twitter_sentiment_stage(
         df, ("USER_NAMES",)).collect()))

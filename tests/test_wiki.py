@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from kgp.wiki import (extract_template, get_categories, get_infoboxes,
+from kgp.wiki import (extract_template, get_infoboxes,
                       get_redirect_title, infobox_triples)
 
 WIKI_DIR = "/root/reference/palladian-core/src/test/resources/wikipedia"
@@ -77,9 +77,6 @@ def test_dry_fork_and_muskingum():
 def test_categories_and_redirect():
     assert get_redirect_title("#REDIRECT [[Los Angeles]]") == \
         "Los Angeles"
-    cats = get_categories("x [[Category:Rivers|sort]] y "
-                          "[[Category:Geography]]")
-    assert cats == ["Rivers", "Geography"]
 
 
 def test_infobox_triples_cleaned():

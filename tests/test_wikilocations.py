@@ -1,6 +1,6 @@
 """WikipediaLocationImporter port: infobox type mapping, clean title,
-alternative titles, title coordinate, per-page filters, and the two
-Spark passes."""
+alternative titles, title coordinate, per-page filters, and the
+Spark pass."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from kgp.wikilocations import (DEFAULT_INFOBOX_TYPES,
                                alternative_titles, clean_title,
                                load_infobox_type_mapping,
                                page_coordinate, parse_location_page,
-                               redirect_alternative_names,
                                wikipedia_locations_stage)
 
 DRESDEN = """'''Dresden''' ({{lang|de|Dräsdn}}), also '''Florence of \
@@ -118,10 +117,6 @@ def test_stages_end_to_end(spark):
     rows = {r["name"]: r for r in locs.collect()}
     assert set(rows) == {"Dresden", "Zugspitze"}
     assert rows["Dresden"]["type"] == "CITY"
-    alts = redirect_alternative_names(pages, locs).collect()
-    got = {(r["location_id"], r["alt_name"]) for r in alts}
-    # 'Dräsdn' joins; the anchor and the /subpage redirects are skipped
-    assert got == {(1, "Dräsdn")}
 
 
 def test_default_mapping_is_sane():
